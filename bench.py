@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Benchmark harness (driver contract + scaling evidence).
 
-Default: runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+Default: runs the flagship plus every registry entry at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[session.default_cpus()] and prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
    "queries": {...per-query sec...}, "sf": ..., "images_per_sec": ...}
 
@@ -23,6 +24,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from bioanalyzer_backend_spark.session import default_cpus  # noqa: E402
 
 BENCH_CACHE = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            ".bench_cache")
@@ -86,40 +89,8 @@ def run_flagship(spark, images_path: str) -> tuple[float, int]:
 
 def run_catalog_queries(spark, sf_dir: str) -> dict[str, float]:
     from bioanalyzer_backend_spark.plans.catalog_queries import registry
-    heads = ("qf_core_documents", "qf_scrub_documents", "dedup_exact_documents",
-             "minhash_lsh_pairs", "ngram_jaccard_top20",
-             "neardup_dedup_documents", "simhash16_documents",
-             "rolling_fp_documents", "embedding_neardup_pairs",
-             "keep_by_lang_salted", "lineitem_rollup",
-             "join_orders_nation", "window_top3_per_cust", "cosine_top10",
-             "ann_lsh_top10", "ann_ivf_top10", "audit_grouping_sets",
-             "events_summary", "langid_udf_documents",
-             "image_stats_multimodal", "zscore_quality_by_lang",
-             "stats_by_lang", "bpe_token_count_documents",
-             "dup_pixel_verify_images", "shipping_priority_top10",
-             "local_supplier_volume", "field_confidence_documents",
-             "methods_coverage_documents", "found_terms_documents",
-             "knn_join_top3", "stratified_sample_documents",
-             "report_parse_documents",
-             # round-2 additions, bench-tracked since round 3
-             "sessionize_events", "asof_join_events", "range_join_events",
-             "hypertable_rollup_events", "decontaminate_documents",
-             "simhash64_documents", "simhash_pairs_documents",
-             "dup_components_embeddings", "dedup_transitive_documents",
-             # round-3 additions
-             "simhash_pairs_wide_documents", "audio_stats_multimodal",
-             "video_frames_multimodal", "gopher_repetition_documents",
-             "tfidf_top_terms_documents",
-             # round-4 additions
-             "field_fallback_documents", "domain_normalize_documents",
-             "cache_search_events",
-             # round-5 additions
-             "ops_dashboard_events", "keep_threshold_sweep_documents",
-             "score_quantiles_by_lang")
-    reg = registry()
     times = {}
-    for name in heads:
-        fn, _sql = reg[name]
+    for name, (fn, _sql) in registry().items():
         # min of 2: this sandbox shows environmental stragglers (same plan
         # swinging 2-6x run to run); the min reflects the engine, not the
         # noisy neighbor
@@ -135,7 +106,7 @@ def run_catalog_queries(spark, sf_dir: str) -> dict[str, float]:
 
 def main_driver() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     images_path = _images_path()
     spark = _build(cpus)
     try:
@@ -308,7 +279,7 @@ if __name__ == "__main__":
     ap = argparse.ArgumentParser()
     ap.add_argument("--scaling", action="store_true")
     ap.add_argument("--flagship-only", action="store_true")
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--cpus", type=int, default=default_cpus())
     args = ap.parse_args()
     if args.scaling:
         main_scaling()

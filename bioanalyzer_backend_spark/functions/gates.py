@@ -2,9 +2,10 @@
 
 The two model stages consume the same truncated caption; evaluating them
 in ONE pandas UDF means one Arrow JVM->Python transfer and one pass over
-the batch instead of two (measured win on the flagship pipeline). The
-individual UDFs in langid.py / perplexity.py remain for standalone use
-(e.g. the langid_udf_documents registry entry).
+the batch instead of two (measured win on the flagship pipeline). It is
+the only Spark entry point to the two models; every caller (the pipeline,
+the langid_udf_documents registry entry) goes through
+pipeline.apply_langid_ppl.
 """
 
 from __future__ import annotations

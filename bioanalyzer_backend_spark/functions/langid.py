@@ -17,7 +17,6 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
 
 from .. import spec
 
@@ -129,19 +128,6 @@ def predict_batch(texts, logp: np.ndarray, langs: np.ndarray,
     conf = np.where(has, conf, 0.0)
     lang[conf < conf_min] = UNKNOWN
     return lang, conf
-
-
-def make_pandas_udf(artifact_path: str):
-    """pandas_udf(caption) -> struct<lang string, lang_conf double>."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("lang string, lang_conf double")
-    def langid_udf(caption: pd.Series) -> pd.DataFrame:
-        logp, langs = load_model(_resolve(artifact_path))
-        lang, conf = predict_batch(caption.fillna("").tolist(), logp, langs)
-        return pd.DataFrame({"lang": lang, "lang_conf": conf})
-
-    return langid_udf
 
 
 def _resolve(path: str) -> str:

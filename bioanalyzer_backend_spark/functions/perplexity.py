@@ -16,7 +16,6 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
 
 from .. import spec
 
@@ -75,16 +74,3 @@ def ppl_batch(texts, logp: np.ndarray) -> np.ndarray:
     mean_ll = np.where(has, ll / np.maximum(cnt, 1.0), 0.0)
     out = np.where(has, np.exp(-mean_ll), 1e9)
     return np.minimum(out, 1e9)
-
-
-def make_pandas_udf(artifact_path: str):
-    from pyspark.sql.functions import pandas_udf
-
-    from .langid import _resolve
-
-    @pandas_udf("double")
-    def ppl_udf(caption: pd.Series) -> pd.Series:
-        logp = load_model(_resolve(artifact_path))
-        return pd.Series(ppl_batch(caption.fillna("").tolist(), logp))
-
-    return ppl_udf

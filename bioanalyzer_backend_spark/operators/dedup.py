@@ -89,16 +89,6 @@ def shingles(df: DataFrame, text_col: str, id_col: str,
     return sh.select("_id", F.explode("sh").alias("shingle"))
 
 
-def release_cap_caches() -> int:
-    """Deprecated no-op, kept for API compatibility. cap_buckets now
-    snapshots via ``localCheckpoint`` instead of a module-global persist
-    registry: checkpoint blocks are owned by the returned DataFrames and
-    reclaimed by Spark's ContextCleaner when they go out of scope, so
-    there is no shared cache list for concurrent jobs to unpersist out
-    from under each other (round-2 advice, dedup.py:99)."""
-    return 0
-
-
 def cap_buckets(sig: DataFrame, keys: list[str],
                 max_bucket: int,
                 min_bucket: int = 0) -> tuple[DataFrame, DataFrame]:
@@ -575,25 +565,30 @@ def simhash_candidates(df: DataFrame, text_col: str = "caption",
 
 
 def dup_components(pairs: DataFrame, id_a: str = "id_a",
-                   id_b: str = "id_b", max_iters: int = 50,
-                   algorithm: str = "star") -> DataFrame:
+                   id_b: str = "id_b", max_iters: int = 50) -> DataFrame:
     """Connected components of an undirected near-dup pair graph:
     (id, component) where component = min id reachable — the
     canonicalization step after pairwise detection (pairs alone
     over-delete when dups chain: a~b, b~c must collapse to ONE keeper).
 
-    Default ``algorithm="star"`` is the large-star/small-star
-    alternation (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14): each round rewires every node toward the minimum
-    of its neighborhood, provably converging in O(log n) rounds on ANY
-    graph shape — chain-shaped components (crawl boilerplate drift) that
-    would take O(diameter) rounds of plain label propagation collapse
-    logarithmically. Each half-round is one groupBy-min + one equi-join
-    on slim (node, neighbor) pairs; no vectors, no text.
+    Large-star/small-star alternation (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14): each round rewires
+    every node toward the minimum of its neighborhood, provably
+    converging in O(log n) rounds on ANY graph shape — chain-shaped
+    components (crawl boilerplate drift) that would take O(diameter)
+    rounds of plain label propagation collapse logarithmically. Each
+    half-round is one groupBy-min + one equi-join on slim (node,
+    neighbor) pairs; no vectors, no text. Invariant: ``edges`` is a
+    forest-in-progress (v, p) with p < v after each small-star;
+    converged when it is a star forest (node -> component min). Not
+    converged within ``max_iters`` rounds RAISES: partially-propagated
+    labels would silently split true components.
 
-    ``algorithm="propagation"`` keeps the plain min-label propagation
-    (one join + groupBy per round, O(diameter) rounds) — retained for
-    A/B property tests and shallow star-shaped graphs.
+    localCheckpoint each round: it TRUNCATES lineage — with plain
+    persist the logical plan nests one level per round and Catalyst
+    analysis cost grows quadratically with iterations (measured 218 s vs
+    ~20 s checkpointed for 7 rounds at 5k nodes). Data stays
+    executor-resident; no cluster-wide checkpoint dir needed.
 
     The component label keeps the id column's NATIVE type (string ids
     label as min string id) — no BIGINT cast, which on string ids would
@@ -605,34 +600,6 @@ def dup_components(pairs: DataFrame, id_a: str = "id_a",
     Nodes outside any pair are absent from the output (no self-labeled
     singletons), matching the SQL twin.
     """
-    if algorithm == "star":
-        return _cc_star(pairs, id_a, id_b, max_iters)
-    if algorithm == "propagation":
-        return _cc_propagation(pairs, id_a, id_b, max_iters)
-    raise ValueError(f"unknown algorithm: {algorithm!r}")
-
-
-def _unconverged(max_iters: int) -> RuntimeError:
-    # Returning partially-propagated labels would silently split true
-    # components — loud failure beats a wrong answer (the bit-for-bit
-    # oracle invariant).
-    return RuntimeError(
-        f"dup_components did not converge in {max_iters} rounds; "
-        f"raise max_iters")
-
-
-def _cc_star(pairs: DataFrame, id_a: str, id_b: str,
-             max_iters: int) -> DataFrame:
-    """Large-star/small-star alternation. Invariant: ``edges`` is a
-    forest-in-progress (v, p) with p < v after each small-star; converged
-    when every parent is a root (no parent appears as a child), at which
-    point edges ARE the star forest (node -> component min).
-
-    localCheckpoint each half-round: it TRUNCATES lineage — with plain
-    persist the logical plan nests one level per round and Catalyst
-    analysis cost grows quadratically with iterations (measured 218 s vs
-    ~20 s checkpointed for 7 rounds at 5k nodes). Data stays
-    executor-resident; no cluster-wide checkpoint dir needed."""
     # snapshot the pair pipeline ONCE — nodes and edges both derive from
     # it, and the upstream plan (LSH candidates + verify) is expensive
     p = (pairs.selectExpr(f"{id_a} AS a", f"{id_b} AS b")
@@ -683,39 +650,5 @@ def _cc_star(pairs: DataFrame, id_a: str, id_b: str,
                      .select("id", F.col("id").alias("label")))
             return (labels.union(roots)
                     .selectExpr("id", "label AS component"))
-    raise _unconverged(max_iters)
-
-
-def _cc_propagation(pairs: DataFrame, id_a: str, id_b: str,
-                    max_iters: int) -> DataFrame:
-    """Plain min-label propagation: O(diameter) rounds (see
-    dup_components docstring; default is the star algorithm)."""
-    e = pairs.selectExpr(f"{id_a} AS a", f"{id_b} AS b")
-    edges = (e.union(e.selectExpr("b AS a", "a AS b")).distinct()
-             .persist())
-    labels = (edges.select(F.col("a").alias("id")).distinct()
-              .withColumn("label", F.col("id"))
-              .localCheckpoint(eager=True))
-    try:
-        for _ in range(max_iters):
-            nbr = (edges.join(labels.select(F.col("id").alias("b"),
-                                            F.col("label").alias("lb")),
-                              "b")
-                   .groupBy("a").agg(F.min("lb").alias("nl")))
-            new = (labels.join(nbr.withColumnRenamed("a", "id"), "id",
-                               "left")
-                   .select("id",
-                           F.least(F.col("label"),
-                                   F.coalesce("nl", "label"))
-                           .alias("label"))
-                   .localCheckpoint(eager=True))
-            changed = (new.alias("n")
-                       .join(labels.alias("o"), "id")
-                       .where(F.col("n.label") != F.col("o.label"))
-                       .limit(1).count())
-            labels = new
-            if changed == 0:
-                return labels.selectExpr("id", "label AS component")
-        raise _unconverged(max_iters)
-    finally:
-        edges.unpersist()
+    raise RuntimeError(f"dup_components did not converge in {max_iters} "
+                       f"rounds; raise max_iters")

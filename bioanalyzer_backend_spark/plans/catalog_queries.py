@@ -5,13 +5,13 @@ sqlgen, so the Spark plan and its DuckDB oracle cannot drift. Entries whose
 semantics need model artifacts or binary columns are oracled against
 precomputed ground truth instead (generator gt_* columns for the
 multimodal entries, the numpy-reference expected-label table for the
-flagship, numpy-twin expected tables for the standalone langid UDF and
-the approximate ANN paths) — since round 5 every entry carries an
+flagship, numpy-twin expected tables for the langid_udf_documents entry
+and the approximate ANN paths) — since round 5 every entry carries an
 oracle; the analytic numpy/pytest oracles in tests/ stay as the
 independent gate for the UDF surfaces.
 
 Registry contract (consumed by __spark_entry__):
-    REGISTRY[name] = (spark_fn(spark, sf_dir) -> DataFrame, duck_sql | None)
+    REGISTRY[name] = (spark_fn(spark, sf_dir) -> DataFrame, duck_sql)
 """
 
 from __future__ import annotations
@@ -67,10 +67,11 @@ def _q_threshold_sweep(d: str) -> str:
     evaluations), then pivoted to rows by joining the 1-row aggregate
     with the 5-row threshold dim (CASE picks the matching accumulator;
     the equality compares identical CAST(x AS DOUBLE) literals, so it
-    is exact in both dialects)."""
+    is exact in both dialects). COALESCE: over an empty table SUM is
+    NULL while the count is 0 — n_keep must read 0 there too."""
     accs = ",\n       ".join(
-        f"CAST(SUM(CASE WHEN quality_score >= {sqlgen.fmt(t)} "
-        f"THEN 1 ELSE 0 END) AS BIGINT) AS k{int(t * 10)}"
+        f"CAST(COALESCE(SUM(CASE WHEN quality_score >= {sqlgen.fmt(t)} "
+        f"THEN 1 ELSE 0 END), 0) AS BIGINT) AS k{int(t * 10)}"
         for t in _SWEEP_THRESHOLDS)
     picks = " ".join(
         f"WHEN t.threshold = {sqlgen.fmt(t)} THEN agg.k{int(t * 10)}"
@@ -1271,8 +1272,8 @@ def _q_dup_components(d: str) -> str:
     after pairwise near-dup detection — pairs alone over-delete when
     dups chain (a~b, b~c: keeping a and c double-counts b's content).
     DuckDB twin: WITH RECURSIVE min-label closure over the SAME pair SQL
-    the embedding_neardup_pairs oracle uses. The Spark side is iterative
-    label propagation (operators/dedup.dup_components)."""
+    the embedding_neardup_pairs oracle uses. The Spark side is the
+    iterative large-star/small-star loop (operators/dedup.dup_components)."""
     pairs = _q_embedding_neardup(d).strip().rstrip(";")
     return f"""
 WITH RECURSIVE pr AS ({pairs}),
@@ -1594,23 +1595,51 @@ def _q_ann_ivf_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _parity_sf_dir() -> str:
-    """The sf dir the driver's DuckDB oracle side runs against. The
-    driver contract fixes sf0.01; the deeper dev sweep overrides via
-    SPARK_GRAFT_PARITY_SF_DIR (scripts_dev_parity.py reads the same
-    variable, so the Spark and oracle sides always agree)."""
+    """The sf dir of the parity gate — the ONE source both sides read:
+    the numpy-twin expected tables below and the Spark side of
+    tests/test_oracle_parity.py. The driver contract fixes sf0.01; a
+    deeper sweep points SPARK_GRAFT_PARITY_SF_DIR at the sf0.1 dir and
+    runs ``pytest tests/test_oracle_parity.py`` (one entry: ``-k name``)."""
     import os
     return os.environ.get("SPARK_GRAFT_PARITY_SF_DIR",
                           "/root/testdata/sf0.01")
 
 
+# The modules the numpy-twin expected tables are computed by (the twins
+# themselves live in this module), relative to the package dir.
+_TWIN_MODULES = ("spec.py", "rules/reference_impl.py",
+                 "operators/similarity.py", "functions/langid.py",
+                 "functions/perplexity.py", "plans/catalog_queries.py")
+
+
+def _twin_key(*tags: str) -> str:
+    """Short sha256 over ``tags``, the model artifacts and the
+    _TWIN_MODULES sources: the expected-table cache key. A changed
+    constant, artifact or twin yields a new file name, so a stale table
+    is never read back."""
+    import hashlib
+    import os
+
+    from . import pipeline as P
+    art = P.ensure_artifacts()
+    pkg = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    h = hashlib.sha256("\0".join(tags).encode())
+    for path in ([os.path.join(art, a) for a in ("langid.npz", "lm.npz")]
+                 + [os.path.join(pkg, m) for m in _TWIN_MODULES]):
+        with open(path, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()[:16]
+
+
 def _expected_cache(name: str) -> tuple[str, bool]:
     """(path, exists) for a numpy-twin expected table, keyed by the
-    parity sf dir so the sf0.01 driver gate and the sf0.1 dev sweep
-    never read each other's values."""
+    parity sf dir (the sf0.01 gate and an sf0.1 sweep never read each
+    other's values) and by _twin_key's dependencies."""
     import os
     sf_tag = os.path.basename(os.path.normpath(_parity_sf_dir()))
     path = os.path.join(_bench_cache_dir(),
-                        f"expected_{name}_{sf_tag}_v1.parquet")
+                        f"expected_{name}_{sf_tag}_{_twin_key(sf_tag)}"
+                        f".parquet")
     return path, os.path.exists(path)
 
 
@@ -1739,7 +1768,7 @@ def _ann_ivf_expected_path() -> str:
 
 def _langid_udf_expected_path() -> str:
     """Numpy twin of _q_langid_udf_documents: the same numpy scorers the
-    standalone UDFs wrap, run driver-side over the parity-dir documents
+    fused gate UDF wraps, run driver-side over the parity-dir documents
     table with the pipeline's truncation — like the flagship's lang/ppl
     columns, this compare pins the distribution plumbing (truncation,
     NULL fill, Arrow transfer, per-batch invariance); the models' own
@@ -1780,11 +1809,14 @@ def _ann_exact_rerank(scored: DataFrame) -> DataFrame:
     oracle SQL (ORDER BY ROUND(cos_sim, 5) DESC, vec_id LIMIT 10). The
     operators rank on the UNROUNDED score; at the k-boundary two rows can
     round to the same 5-decimal value, so hash parity with the oracle
-    requires ranking on the rounded value itself."""
+    requires ranking on the rounded value itself. Zero-norm vectors
+    (NULL cos_sim) are dropped, like the numpy twin's dropna — under DESC
+    they sort last, but a sparse candidate set would keep them."""
     from pyspark.sql import functions as F
 
     return (scored
             .select("vec_id", F.round("cos_sim", 5).alias("cos_sim"))
+            .where(F.col("cos_sim").isNotNull())
             .orderBy(F.desc("cos_sim"), "vec_id").limit(10))
 
 
@@ -1826,11 +1858,11 @@ def _q_dedup_transitive_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_dup_components_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark side of dup_components_embeddings: iterative min-label
-    propagation (operators/dedup.dup_components) over the SAME near-dup
-    pair SQL the embedding_neardup_pairs oracle uses; the DuckDB twin is
-    a WITH RECURSIVE closure — an iterative DataFrame algorithm made
-    driver-oracle-checkable."""
+    """Spark side of dup_components_embeddings: iterative large-star/
+    small-star components (operators/dedup.dup_components) over the SAME
+    near-dup pair SQL the embedding_neardup_pairs oracle uses; the DuckDB
+    twin is a WITH RECURSIVE closure — an iterative DataFrame algorithm
+    made driver-oracle-checkable."""
     from ..operators import dedup as dd
     register_testdata_views(spark, sf_dir)
     pairs = spark.sql(_q_embedding_neardup(SPARK))
@@ -2017,9 +2049,9 @@ WHERE m.gt_in_dup_group
 
 def _qf_full_expected_path() -> str:
     """Numpy-reference expected-label table for the flagship oracle,
-    written once beside the generate-once corpus (_qfexp_v1 — bump the
-    suffix if any rule/spec constant or model artifact changes, like the
-    g2/g3/g4 corpus tags).
+    written once beside the generate-once corpus (suffix keyed by
+    _twin_key, so a rule/spec constant or model artifact change writes a
+    new table).
 
     The rule battery / scrub / dedup columns come from
     rules/reference_impl (the INDEPENDENT numpy implementation — the
@@ -2033,8 +2065,7 @@ def _qf_full_expected_path() -> str:
     Same accounting as the north-rule pytest (test_pipeline_oracle)."""
     import os
 
-    import numpy as np
-    import pyarrow as pa
+    import pandas as pd
     import pyarrow.parquet as pq
 
     from ..datagen import synth
@@ -2043,7 +2074,7 @@ def _qf_full_expected_path() -> str:
     from . import pipeline as P
 
     imgs_path = synth.write_images_parquet(_bench_cache_dir(), _SYNTH_ROWS)
-    path = imgs_path.replace(".parquet", "_qfexp_v1.parquet")
+    path = imgs_path.replace(".parquet", f"_qfexp_{_twin_key()}.parquet")
     if os.path.exists(path):
         return path
     art = P.ensure_artifacts()
@@ -2057,8 +2088,7 @@ def _qf_full_expected_path() -> str:
     lm = perplexity.load_model(os.path.join(art, "lm.npz"))
     ppl = perplexity.ppl_batch(texts, lm)
     keep_core = exp["keep"].to_numpy(dtype=bool)
-    tmp = path + ".tmp"
-    pq.write_table(pa.table({
+    _write_expected(path, pd.DataFrame({
         "image_id": exp["image_id"].tolist(),
         "lang": list(lang),
         "lang_conf": np.asarray(conf, dtype=np.float64),
@@ -2069,8 +2099,7 @@ def _qf_full_expected_path() -> str:
         "keep": keep_core & (lang != langid.UNKNOWN) & (ppl <= spec.PPL_MAX),
         "is_dup": exp["is_dup"].to_numpy(dtype=bool),
         "scrubbed_caption": exp["scrubbed_caption"].tolist(),
-    }), tmp)
-    os.replace(tmp, path)
+    }))
     return path
 
 
@@ -2197,12 +2226,6 @@ def _q_keep_by_lang_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.col("sum_present").cast("long"))
 
 
-# No Spark-only rows-checked entries remain: every registry entry now
-# carries a DuckDB-checkable oracle (SQL twin, generator ground truth,
-# or numpy-twin expected table).
-_SPARK_ONLY: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-
 # --------------------------------------------------------------------------
 # public registry
 # --------------------------------------------------------------------------
@@ -2326,116 +2349,9 @@ def _mk_spark_fn_mat_tf(builder: Callable[..., str]):
     return fn
 
 
-# Sweep priority: the driver's correctness sweep walks the registry in
-# insertion order and truncates at 50 entries, so the LEAST-PROVEN
-# entries must run first and the list ROTATES each round (round-3
-# verdict item 1): entries new this round, then entries whose newest
-# driver record is two rounds old (they fell below the r3 cut), then
-# entries whose CODE changed this round (re-proving value-identity of
-# plan changes), then the freshly-r3-recorded set. Names absent from
-# this list keep their builder-dict insertion order at the end.
-_SWEEP_PRIORITY: tuple[str, ...] = (
-    # --- new or re-oracled in round 5 (ops dashboard port; audio/video
-    # and the three image entries gained ground-truth DuckDB oracles;
-    # the flagship, the standalone langid UDF and the two approximate
-    # ANN paths gained numpy-twin expected-table oracles — zero
-    # rows-only entries remain) ---
-    "keep_threshold_sweep_documents",
-    "score_quantiles_by_lang",
-    "qf_full_images",
-    "langid_udf_documents",
-    "ann_lsh_top10",
-    "ann_ivf_top10",
-    "ops_dashboard_events",
-    "audio_stats_multimodal",
-    "video_frames_multimodal",
-    "image_stats_multimodal",
-    "resize_thumbs_multimodal",
-    "dup_pixel_verify_images",
-    # --- newest driver record is r3 (missed the 50-entry r4 cut) ---
-    "qf_core_documents",
-    "qf_scrub_documents",
-    "qf_keep_by_lang",
-    "tok_stats_documents",
-    "bpe_token_count_documents",
-    "fingerprint_documents",
-    "langid_marker_documents",
-    "ngram_jaccard_top20",
-    "simhash16_documents",
-    "rolling_fp_documents",
-    "embedding_neardup_pairs",
-    "neardup_dedup_documents",
-    "confidence_boost_documents",
-    "curation_summary_documents",
-    "zscore_quality_by_lang",
-    "stats_by_lang",
-    "audit_grouping_sets",
-    "inverted_index_top5",
-    "taxa_extract_documents",
-    "events_ttl_recent",
-    "events_summary",
-    "ann_lsh_exact_top10",
-    "ann_ivf_exact_top10",
-    # --- r4-recorded, rotated below the stale set ---
-    "field_fallback_documents",
-    "domain_normalize_documents",
-    "cache_search_events",
-    "lineitem_rollup",
-    "join_orders_nation",
-    "shipping_priority_top10",
-    "local_supplier_volume",
-    "antijoin_resume",
-    "topk_orders",
-    "window_top3_per_cust",
-    "union_distinct_keys",
-    "slice_first3_tokens",
-    "coalesce_priority",
-    "extract_props_k",
-    "pattern_extract_all",
-    "nonempty_filter",
-    "cosine_top10",
-    "groupmin_lineitem",
-    "error_rows_events",
-    "field_confidence_documents",
-    "methods_coverage_documents",
-    "condition_extract_documents",
-    "factor_score_documents",
-    "finding_confidence_documents",
-    "id_valid_documents",
-    "found_terms_documents",
-    "stratified_sample_documents",
-    "split_assign_documents",
-    "pack_sequences_documents",
-    "mixture_sample_documents",
-    "simhash_pairs_wide_documents",
-    "simhash_pairs_documents",
-    "minhash_lsh_pairs",
-    "dedup_exact_documents",
-    "gopher_repetition_documents",
-    "tfidf_top_terms_documents",
-    "decontaminate_documents",
-    "report_parse_documents",
-    "pivot_keep_by_lang",
-    "sessionize_events",
-    "asof_join_events",
-    "range_join_events",
-    "hypertable_rollup_events",
-    "keep_by_lang_salted",
-    "simhash64_documents",
-    "knn_join_top3",
-    "dup_components_embeddings",
-    "dedup_transitive_documents",
-)
-
-
-def _sweep_ordered(reg: dict[str, tuple]) -> dict[str, tuple]:
-    out = {n: reg[n] for n in _SWEEP_PRIORITY if n in reg}
-    out.update((n, v) for n, v in reg.items() if n not in out)
-    return out
-
-
-def registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]:
-    """Assemble the full (spark_fn, oracle_sql) registry.
+def registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]]:
+    """Assemble the full (spark_fn, oracle_sql) registry, in builder
+    order (the driver's sweep order is computed by __spark_entry__).
 
     Deliberate: the precomputed-ground-truth oracle builders below
     (generator corpora + expected tables) run EAGERLY here, so every
@@ -2509,11 +2425,9 @@ def registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str 
     # for what each column's compare does and does not bind).
     reg["qf_full_images"] = (_q_full_pipeline_images,
                              _qf_full_images_oracle())
-    # The last three former rows-only entries, oracled via numpy-twin
-    # expected tables (round 5): standalone langid/ppl UDFs and the two
-    # APPROXIMATE ANN paths (their exact-mode twins above remain — the
-    # approx entries now get their own value-hash gate instead of a
-    # rows-only count).
+    # Numpy-twin expected tables: the langid/ppl gate UDF on the
+    # documents table and the two APPROXIMATE ANN paths (their
+    # exact-mode twins above remain).
     reg["langid_udf_documents"] = (_q_langid_udf_documents,
                                    _read_expected_sql(
                                        _langid_udf_expected_path))
@@ -2521,6 +2435,4 @@ def registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str 
                             _read_expected_sql(_ann_lsh_expected_path))
     reg["ann_ivf_top10"] = (_q_ann_ivf_top10,
                             _read_expected_sql(_ann_ivf_expected_path))
-    for name, fn in _SPARK_ONLY.items():
-        reg[name] = (fn, None)
-    return _sweep_ordered(reg)
+    return reg

@@ -167,16 +167,12 @@ def apply_dedup_flag(df: DataFrame, key: str = "phash",
 
 
 def quality_filter(df: DataFrame, artifact_dir: str | None = None,
-                   with_udf_gates: bool = True,
                    with_dedup: bool = True) -> DataFrame:
     """Full pipeline; returns the input columns + all rule/label columns."""
     out = apply_core_rules(df)
     out = apply_scrub(out)
-    if with_udf_gates:
-        out = apply_langid_ppl(out, artifact_dir)
-        out = apply_final_keep(out)
-    else:
-        out = out.withColumn("keep", F.col("keep_core"))
+    out = apply_langid_ppl(out, artifact_dir)
+    out = apply_final_keep(out)
     if with_dedup:
         out = apply_dedup_flag(out)
     return out

@@ -38,13 +38,6 @@ from . import pipeline as pipe
 from .audit import audit_rows
 
 
-def group_of(id_col: str, n_groups: int):
-    """Deterministic group id: stable across runs/restarts. Delegates to
-    operators/skew.stable_salt so the deterministic-partitioning primitive
-    lives in exactly one place."""
-    return stable_salt(id_col, n_groups)
-
-
 def committed_groups(spark: SparkSession, ckpt: LocalSnapshotTable) -> set[int]:
     df = ckpt.read(spark)
     if df is None:
@@ -154,7 +147,7 @@ def stage_input(spark: SparkSession, images: DataFrame, stage_path: str,
         raise ValueError("stage_input reserves the column name 'part_id'; "
                          "rename it on the input")
     tagged = pipe.apply_dedup_flag(images) \
-        .withColumn("part_id", group_of("image_id", n_groups))
+        .withColumn("part_id", stable_salt("image_id", n_groups))
     tagged.write.mode("overwrite").partitionBy("part_id").parquet(stage_path)
     return spark.read.parquet(stage_path)
 
@@ -350,7 +343,7 @@ def run_with_resume(spark: SparkSession, images: DataFrame,
                     f"injected failure after {n_committed} groups")
         if stage_path is not None:
             # crash paths skip this on purpose: a resumed run re-stages
-            # under its own run_id (deterministic group_of => identical
+            # under its own run_id (deterministic stable_salt => identical
             # content); the liveness lock file goes with the dir
             shutil.rmtree(stage_path, ignore_errors=True)
     finally:

@@ -19,17 +19,19 @@ TESTDATA_TABLES = (
 )
 
 
+def default_cpus() -> int:
+    """Local parallelism: $SPARK_GRAFT_CPUS, else every core of the box."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+
+
 def build_session(app_name: str = "bioanalyzer-spark",
                   master: str | None = None,
                   shuffle_partitions: int | None = None,
                   extra_conf: dict[str, str] | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        try:
-            shuffle_partitions = max(8, int(cpus))
-        except ValueError:
-            shuffle_partitions = 32
+        shuffle_partitions = max(8, cpus)
 
     b = (SparkSession.builder.appName(app_name).master(master)
          .config("spark.sql.shuffle.partitions", str(shuffle_partitions))

@@ -6,13 +6,6 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# The parity-dir override must not leak into pytest: test_oracle_parity
-# hardcodes SF01 for the Spark side, while registry() bakes the numpy-twin
-# expected-table paths from this variable at import — a shell that
-# exported it for a scripts_dev_parity.py sf0.1 sweep would pit sf0.01
-# Spark output against sf0.1 expected values.
-os.environ.pop("SPARK_GRAFT_PARITY_SF_DIR", None)
-
 from bioanalyzer_backend_spark.datagen import synth
 from bioanalyzer_backend_spark.plans import pipeline as P
 from bioanalyzer_backend_spark.session import build_session

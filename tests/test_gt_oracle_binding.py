@@ -315,16 +315,26 @@ def test_ann_ivf_twin_catches_probe_off_by_one():
     assert _ivf_top10(16) != ref
 
 
-def test_expected_cache_keyed_by_parity_dir(monkeypatch):
+def test_expected_cache_keyed_by_parity_dir(monkeypatch, tmp_path):
     """The numpy-twin expected tables are keyed by the parity sf dir so
     the sf0.01 driver gate and the sf0.1 dev sweep never read each
-    other's values."""
+    other's values — and by the bytes of what the twins are computed
+    from, so a changed dependency never reads back a stale table."""
     from bioanalyzer_backend_spark.plans import catalog_queries as CQ
 
     p1, _ = CQ._expected_cache("ann_lsh")
     monkeypatch.setenv("SPARK_GRAFT_PARITY_SF_DIR", "/root/testdata/sf0.1")
     p2, _ = CQ._expected_cache("ann_lsh")
     assert p1 != p2 and "sf0.1" in p2 and "sf0.01" in p1
+
+    dep = tmp_path / "dep.py"
+    dep.write_text("X = 1\n")
+    monkeypatch.setattr(CQ, "_TWIN_MODULES", CQ._TWIN_MODULES + (str(dep),))
+    p3, _ = CQ._expected_cache("ann_lsh")
+    assert p3 == CQ._expected_cache("ann_lsh")[0]    # stable when unchanged
+    dep.write_text("X = 2\n")
+    p4, _ = CQ._expected_cache("ann_lsh")
+    assert len({p2, p3, p4}) == 3 and "sf0.1" in p4
 
 
 # --------------------------------------------------------------------------

@@ -50,12 +50,12 @@ def test_empty_inputs():
 
 
 def test_fused_gates_equals_split_udfs(spark, artifacts_dir):
-    """functions/gates.py must agree with the standalone UDFs exactly."""
-    import os
-
+    """The fused gate UDF (functions/gates.py) must agree exactly with
+    the two numpy scorers it wraps, called directly."""
     import pandas as pd
+    from pyspark.sql import functions as F
 
-    from bioanalyzer_backend_spark.functions import gates, langid, perplexity
+    from bioanalyzer_backend_spark.functions import gates
 
     texts = ["the quick brown fox", "el rapido zorro marron", "",
              "!!! ### $$$", "数据 质量", "mixed text with la de en words"]
@@ -64,16 +64,11 @@ def test_fused_gates_equals_split_udfs(spark, artifacts_dir):
     lp = os.path.join(artifacts_dir, "langid.npz")
     pp = os.path.join(artifacts_dir, "lm.npz")
     g = gates.make_pandas_udf(lp, pp)
-    lu = langid.make_pandas_udf(lp)
-    pu = perplexity.make_pandas_udf(pp)
-    from pyspark.sql import functions as F
     got = (df.withColumn("_g", g(F.col("caption")))
-           .withColumn("_l", lu(F.col("caption")))
-           .withColumn("_p", pu(F.col("caption")))
-           .selectExpr("id", "_g.lang AS gl", "_l.lang AS ll",
-                       "_g.lang_conf AS gc", "_l.lang_conf AS lc",
-                       "_g.ppl AS gp", "_p AS pp")
+           .selectExpr("id", "_g.lang", "_g.lang_conf", "_g.ppl")
            .toPandas().sort_values("id"))
-    assert (got.gl == got.ll).all()
-    assert (got.gc == got.lc).all()
-    assert (got.gp == got.pp).all()
+    lang, conf = langid.predict_batch(texts, *langid.load_model(lp))
+    ppl = perplexity.ppl_batch(texts, perplexity.load_model(pp))
+    assert got["lang"].tolist() == list(lang)
+    assert np.array_equal(got["lang_conf"].to_numpy(), conf)
+    assert np.array_equal(got["ppl"].to_numpy(), ppl)

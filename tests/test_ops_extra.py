@@ -229,6 +229,30 @@ def test_lsh_topk_pruned_finds_neardup(spark, emb_df):
     assert rows and rows[0].vec_id == 5       # near-dup shares the bucket
 
 
+def test_ann_rerank_drops_zero_norm_like_numpy_twin(spark):
+    """A zero-norm embedding has an undefined (NULL) cosine. In a sparse
+    candidate set (fewer than 10 survivors) the Spark re-rank must drop
+    it exactly as the numpy twin's dropna does — sorting it last is not
+    enough when the top-10 has room for it."""
+    from bioanalyzer_backend_spark.plans import catalog_queries as CQ
+
+    vecs = np.array([[1.0, 0.5, 0.0, 0.25], [0.5, 1.0, 0.0, 0.0],
+                     [0.0, 0.0, 0.0, 0.0], [0.25, 0.0, 1.0, 0.5],
+                     [1.0, 0.5, 0.25, 0.0]])
+    ids = np.arange(len(vecs), dtype=np.int64)
+    df = spark.createDataFrame(
+        [(int(i), v.tolist()) for i, v in zip(ids, vecs)],
+        "vec_id long, embedding array<float>")
+    scored = similarity.lsh_cosine_topk(
+        df.where("vec_id != 0"), vecs[0].tolist(), k=1 << 30,
+        n_planes=16, hamming_radius=16)
+    got = CQ._ann_exact_rerank(scored).toPandas()
+    want = CQ._ann_rounded_topk_np(ids, vecs, vecs[0], ids != 0)
+    assert 2 not in got["vec_id"].tolist()
+    pd.testing.assert_frame_equal(got, want, check_dtype=False,
+                                  check_exact=True)
+
+
 def test_ivf_topk_full_probe_equals_bruteforce(spark, emb_df):
     df, vecs = emb_df
     q = vecs[0].tolist()
@@ -679,9 +703,6 @@ def test_jaccard_verify_hot_shingle_cap_bounds_pairs(spark):
     report = {r["shingle"]: r["bucket_n"] for r in hot.collect()}
     assert any(n == 30 for n in report.values())
     assert all(n > 5 for n in report.values())
-    # deprecated no-op: cap_buckets snapshots are ContextCleaner-owned
-    # (no module-global cache registry to release since round 3)
-    assert dedup.release_cap_caches() == 0
 
     # no cap requested -> empty report, same schema
     ver2, hot2 = dedup.jaccard_verify(df, all_pairs, threshold=0.5,
@@ -816,17 +837,12 @@ def test_knn_join_plan_broadcasts_queries(spark, emb_df):
 def test_dup_components_collapses_chains(spark):
     """Transitive chains collapse to one component (a~b, b~c => {a,b,c}
     share min-id canon) — the over-delete case pairwise dedup misses;
-    disjoint pairs stay separate; nodes outside any pair are absent.
-    Both algorithms (default large-star/small-star AND plain
-    propagation) must produce the identical labeling."""
+    disjoint pairs stay separate; nodes outside any pair are absent."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 9), (20, 21), (40, 7)],
         "id_a long, id_b long")
-    want = {1: 1, 2: 1, 3: 1, 9: 1, 20: 20, 21: 20, 7: 7, 40: 7}
-    for algo in ("star", "propagation"):
-        got = {r.id: r.component for r in
-               dedup.dup_components(pairs, algorithm=algo).collect()}
-        assert got == want, algo
+    got = {r.id: r.component for r in dedup.dup_components(pairs).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 9: 1, 20: 20, 21: 20, 7: 7, 40: 7}
 
 
 def test_dup_components_string_ids(spark):
@@ -836,26 +852,22 @@ def test_dup_components_string_ids(spark):
     pairs = spark.createDataFrame(
         [("img_b", "img_a"), ("img_b", "img_c"), ("zz_1", "zz_2")],
         "id_a string, id_b string")
-    for algo in ("star", "propagation"):
-        got = {r.id: r.component for r in
-               dedup.dup_components(pairs, algorithm=algo).collect()}
-        assert got == {"img_a": "img_a", "img_b": "img_a",
-                       "img_c": "img_a", "zz_1": "zz_1",
-                       "zz_2": "zz_1"}, algo
+    got = {r.id: r.component for r in dedup.dup_components(pairs).collect()}
+    assert got == {"img_a": "img_a", "img_b": "img_a", "img_c": "img_a",
+                   "zz_1": "zz_1", "zz_2": "zz_1"}
 
 
 def test_dup_components_deep_chain_star_converges(spark):
-    """Deep-chain graph (diameter 55 > default max_iters): plain
-    propagation moves the min label ONE hop per round, so the default
-    50-round budget must fail loudly — while the default large-star/
-    small-star path converges in O(log n) rounds with iterations to
-    spare and produces the exact labeling."""
+    """Deep-chain graph (diameter 55 > default max_iters): plain label
+    propagation would move the min label ONE hop per round and exhaust
+    the default 50-round budget, while large-star/small-star converges
+    in O(log n) rounds (6 here) and produces the exact labeling. A
+    2-round budget is too small even for star and must fail loudly."""
     chain = [(i, i + 1) for i in range(55)]
     pairs = spark.createDataFrame(chain, "id_a long, id_b long")
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.dup_components(pairs, algorithm="propagation",
-                             max_iters=12)
-    # the default path (star, max_iters=50) has no trouble
+        dedup.dup_components(pairs, max_iters=2)
+    # the default budget (max_iters=50) has no trouble
     got = {r.id: r.component for r in dedup.dup_components(pairs).collect()}
     assert got == {i: 0 for i in range(56)}
 
@@ -867,10 +879,8 @@ def test_dup_components_bridged_stars_not_premature(spark):
     one component."""
     pairs = spark.createDataFrame(
         [(10, 3), (11, 3), (10, 1), (11, 2)], "id_a long, id_b long")
-    for algo in ("star", "propagation"):
-        got = {r.id: r.component for r in
-               dedup.dup_components(pairs, algorithm=algo).collect()}
-        assert got == {1: 1, 2: 1, 3: 1, 10: 1, 11: 1}, algo
+    got = {r.id: r.component for r in dedup.dup_components(pairs).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 10: 1, 11: 1}
 
 
 def test_dup_components_random_graphs_match_union_find(spark):
@@ -916,7 +926,7 @@ def test_dup_components_raises_when_unconverged(spark):
     chain = [(i, i + 1) for i in range(8)]       # diameter 8 path
     pairs = spark.createDataFrame(chain, "id_a long, id_b long")
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.dup_components(pairs, algorithm="propagation", max_iters=2)
+        dedup.dup_components(pairs, max_iters=2)  # star needs 3 here
     got = {r.id: r.component
            for r in dedup.dup_components(pairs, max_iters=20).collect()}
     assert set(got.values()) == {0}              # one path component

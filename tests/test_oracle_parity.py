@@ -1,28 +1,30 @@
 """Driver-style correctness gate: Spark vs DuckDB for every registry query.
 
 Exact-value compare (the driver hashes values order-insensitively; we sort
-and require bit-exact equality, which is stricter).
+and require bit-exact equality, which is stricter). Both sides read
+catalog_queries._parity_sf_dir() — the same dir the numpy-twin expected
+tables are built from — so a deeper sweep is just this file with
+SPARK_GRAFT_PARITY_SF_DIR pointed at the sf0.1 dir; ``-k <name>`` runs
+one entry.
 """
 
 import duckdb
 import pandas as pd
 import pytest
 
-from bioanalyzer_backend_spark.plans.catalog_queries import registry
+from bioanalyzer_backend_spark.plans.catalog_queries import (_parity_sf_dir,
+                                                             registry)
+from bioanalyzer_backend_spark.session import TESTDATA_TABLES
 
-from .conftest import SF01
-
+SF = _parity_sf_dir()
 _REG = registry()
-_SQL_CASES = [(n, fn, sql) for n, (fn, sql) in _REG.items() if sql is not None]
-_ROWS_ONLY = [(n, fn) for n, (fn, sql) in _REG.items() if sql is None]
 
 
 @pytest.fixture(scope="module")
 def duck():
     con = duckdb.connect()
-    for t in ("documents", "events", "lineitem", "orders", "customer",
-              "nation", "region", "supplier", "part", "embeddings"):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF01}/{t}.parquet'")
+    for t in TESTDATA_TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
     return con
 
 
@@ -31,24 +33,12 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
-@pytest.mark.parametrize("name,spark_fn,duck_sql",
-                         _SQL_CASES, ids=[c[0] for c in _SQL_CASES])
-def test_sql_parity(spark, duck, name, spark_fn, duck_sql):
-    sdf = _canon(spark_fn(spark, SF01).toPandas())
+@pytest.mark.parametrize("name", list(_REG))
+def test_sql_parity(spark, duck, name):
+    spark_fn, duck_sql = _REG[name]
+    sdf = _canon(spark_fn(spark, SF).toPandas())
     ddf = _canon(duck.execute(duck_sql).df())
     assert list(sdf.columns) == list(ddf.columns)
     assert len(sdf) == len(ddf)
     pd.testing.assert_frame_equal(sdf, ddf, check_dtype=False,
                                   check_exact=True)
-
-
-# Empty since round 5 (every entry is oracled); kept for any future
-# rows-only entry — an empty parametrize list would otherwise collect
-# as a permanent skip.
-if _ROWS_ONLY:
-    @pytest.mark.parametrize("name,spark_fn", _ROWS_ONLY,
-                             ids=[c[0] for c in _ROWS_ONLY])
-    def test_rows_only_runs(spark, name, spark_fn):
-        df = spark_fn(spark, SF01)
-        assert df.count() > 0
-        assert len(df.schema.fields) > 0

@@ -314,3 +314,34 @@ def test_threshold_sweep_and_quantiles_duck_vs_numpy(captions):
             # same IEEE double n*p the SQL computes, then CEIL
             exp = vals[int(math.ceil(n * p)) - 1]
             assert row[col] == exp, (row["lang"], col)
+
+
+def test_threshold_sweep_empty_documents_keeps_zero(spark):
+    """Over an EMPTY documents table every sweep row must read n_docs = 0
+    and n_keep = 0 in both engines — a bare SUM over no rows is NULL,
+    which disagrees with the numpy definition int((scores >= t).sum())."""
+    import duckdb
+
+    from bioanalyzer_backend_spark.plans.catalog_queries import (
+        _q_threshold_sweep)
+    from bioanalyzer_backend_spark.session import invalidate_testdata_views
+    from bioanalyzer_backend_spark.sqlgen import DUCK, SPARK
+
+    empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
+                          "text": pd.Series([], dtype="object"),
+                          "lang": pd.Series([], dtype="object")})
+    con = duckdb.connect()
+    con.register("documents", empty)
+    duck = con.execute(_q_threshold_sweep(DUCK)).df()
+    spark.createDataFrame(
+        [], "doc_id long, text string, lang string"
+    ).createOrReplaceTempView("documents")
+    try:
+        sprk = spark.sql(_q_threshold_sweep(SPARK)).toPandas()
+    finally:
+        spark.catalog.dropTempView("documents")
+        invalidate_testdata_views(spark)
+    for got in (duck, sprk):
+        assert len(got) == 5
+        assert (got["n_docs"] == 0).all()
+        assert got["n_keep"].notna().all() and (got["n_keep"] == 0).all()

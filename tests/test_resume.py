@@ -294,6 +294,27 @@ def test_resume_rejects_changed_n_groups(spark, synth_images_df, tmp_path):
     assert stats["groups_done"] == 4
 
 
+def test_n_groups_guard_sees_mixed_schema_checkpoint(spark, synth_images_df,
+                                                    tmp_path):
+    """One checkpoint snapshot holding a pre-guard 4-column file (no
+    n_groups) AND a newer 5-column file that recorded n_groups=3: the
+    recorded modulus must stay visible whichever footer Spark samples,
+    so resuming with n_groups=4 raises."""
+    res, aud, ck = _tables(tmp_path / "mixed")
+    ck.append(spark.createDataFrame(
+        [(0, "old", 10, 1.0)],
+        "part_id int, run_id string, n_rows long, committed_at double"))
+    ck.append(spark.createDataFrame(
+        [(1, "new", 10, 2.0, 3)], resume._CKPT_SCHEMA))
+    assert len(ck.current_snapshot()["files"]) >= 2
+    with pytest.raises(ValueError, match="n_groups"):
+        resume.check_n_groups(spark, ck, 4)
+    with pytest.raises(ValueError, match="n_groups"):
+        run_with_resume(spark, synth_images_df.limit(40), res, aud, ck,
+                        n_groups=4)
+    resume.check_n_groups(spark, ck, 3)          # the recorded value passes
+
+
 def test_stage_input_rejects_part_id_clash(spark, synth_images_df, tmp_path):
     """Same clash discipline as apply_core_rules / salted aggs: a
     caller's pre-existing part_id column must raise, not silently
