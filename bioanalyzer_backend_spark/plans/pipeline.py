@@ -89,6 +89,14 @@ def apply_final_keep(df: DataFrame) -> DataFrame:
         & (F.col("ppl") <= F.lit(spec.PPL_MAX)))
 
 
+def binary_columns(df: DataFrame) -> list[str]:
+    """Names of df's BinaryType (pixel payload) columns."""
+    from pyspark.sql.types import BinaryType
+
+    return [f.name for f in df.schema.fields
+            if isinstance(f.dataType, BinaryType)]
+
+
 def apply_dedup_flag(df: DataFrame, key: str = "phash",
                      id_col: str = "image_id",
                      broadcast_hint: bool = False) -> DataFrame:
@@ -132,17 +140,13 @@ def apply_dedup_flag(df: DataFrame, key: str = "phash",
     shuffle files before the plan flips to a local shuffle read — disk,
     never the wire.
     """
-    from pyspark.sql.types import BinaryType
-
     if "_canon" in df.columns:
         # the post-join F.col('_canon') reference would be ambiguous
         # (two same-named columns after the left join) — the same
         # temp-column clash apply_core_rules raises on
         raise ValueError("apply_dedup_flag reserves the column name "
                          "'_canon'; rename it on the input")
-    has_bytes = any(isinstance(f.dataType, BinaryType)
-                    for f in df.schema.fields)
-    if has_bytes and not broadcast_hint:
+    if binary_columns(df) and not broadcast_hint:
         aqe = str(df.sparkSession.conf.get(
             "spark.sql.adaptive.enabled", "true")).lower()
         if aqe != "true":

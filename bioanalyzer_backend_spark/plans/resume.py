@@ -2,8 +2,8 @@
 
 Semantics inherited from the reference's cache-or-compute pattern
 (app/services/cache_manager.py:91-166: keyed lookup, else compute and
-upsert): work is split into deterministic id-hash groups; each group's
-results commit atomically (results + audit + checkpoint row); a re-run
+upsert): work is split into deterministic id-hash groups over a pixel-free staged
+copy of the input; each group's labels commit atomically (results + audit + checkpoint row); a re-run
 left-anti-joins the checkpoint table and processes only uncommitted
 groups.
 
@@ -123,13 +123,21 @@ def reconcile(spark: SparkSession, results: LocalSnapshotTable,
 
 def stage_input(spark: SparkSession, images: DataFrame, stage_path: str,
                 n_groups: int) -> DataFrame:
-    """Materialize the part_id-tagged input ONCE, partitioned by part_id,
-    and return a reader over it. Filtering the raw input per group would
-    re-scan the FULL table n_groups times (the group id is a computed
-    hash, so the filter can never push down to the source); the staged
-    layout turns each group's read into partition pruning — one input
-    scan total, one pruned directory per group. At warehouse scale this
-    staging step IS the bucket(image_id, N)-partitioned Iceberg table.
+    """Materialize the pixel-free, part_id-tagged input ONCE, partitioned
+    by part_id, and return a reader over it. Filtering the raw input per
+    group would re-scan the FULL table n_groups times (the group id is a
+    computed hash, so the filter can never push down to the source); the
+    staged layout turns each group's read into partition pruning — one
+    input scan total, one pruned directory per group. At warehouse scale
+    this staging step IS the bucket(image_id, N)-partitioned Iceberg
+    table.
+
+    Every BinaryType column is projected away first: the quality decision
+    reads only captions, phash and ids, so the stage — and the label
+    table the groups commit from it — never holds pixels. They stay in
+    the caller's input and join back by image_id on read. The dedup join
+    below therefore carries no bytes either, and needs no AQE broadcast
+    conversion to keep them off the wire.
 
     The GLOBAL dedup flag is stamped here, before the input is split:
     duplicates share a phash but have distinct image_ids, so a dup pair
@@ -138,7 +146,7 @@ def stage_input(spark: SparkSession, images: DataFrame, stage_path: str,
     canonical, disagreeing with the whole-table batch pipeline (the same
     reason streaming/ingest.py disables in-stream dedup). Computing
     is_dup over the full frame here makes the resumed run's flags
-    byte-identical to a plain quality_filter run, and does the dedup
+    identical to a plain quality_filter run, and does the dedup
     shuffle ONCE instead of once per group."""
     if "part_id" in images.columns:
         # same clash discipline as apply_core_rules' temp columns and
@@ -146,7 +154,8 @@ def stage_input(spark: SparkSession, images: DataFrame, stage_path: str,
         # dropping) a caller's part_id would vanish their column
         raise ValueError("stage_input reserves the column name 'part_id'; "
                          "rename it on the input")
-    tagged = pipe.apply_dedup_flag(images) \
+    slim = images.drop(*pipe.binary_columns(images))
+    tagged = pipe.apply_dedup_flag(slim) \
         .withColumn("part_id", stable_salt("image_id", n_groups))
     tagged.write.mode("overwrite").partitionBy("part_id").parquet(stage_path)
     return spark.read.parquet(stage_path)
@@ -249,6 +258,17 @@ def run_with_resume(spark: SparkSession, images: DataFrame,
                     sweep_stale_stages: bool = True) -> dict:
     """Process all uncommitted groups; returns run stats.
 
+    ``results`` becomes a label table keyed by ``image_id``: the input's
+    non-binary columns, every rule/label/gate column, ``scrubbed_caption``,
+    ``is_dup`` and ``part_id`` — no pixels (stage_input drops them).
+    Readers that need the pixels join ``images`` back on ``image_id``.
+    A warehouse that earlier code left half-committed with byte-bearing
+    rows still resumes: reconcile rolls those rows forward as they are,
+    new groups append slim rows, and LocalSnapshotTable's mergeSchema
+    read yields one row per image_id (NULL ``bytes`` on the slim rows).
+    The same mixed-schema case on IcebergTable is untested (no runtime
+    jar in the test environment).
+
     ``fail_after`` aborts after that many group commits; with
     ``fail_between_commits`` the abort fires BETWEEN the results append
     and the audit append; with ``fail_after_audit`` it fires between the
@@ -300,10 +320,10 @@ def run_with_resume(spark: SparkSession, images: DataFrame,
             # Sweep stale stage-* dirs before staging anew: crash paths
             # deliberately skip their own cleanup (a killed JVM cannot),
             # and a resumed run stages under its OWN run_id — so a
-            # crashed run's staged copy (a full input copy, image bytes
-            # included) would otherwise accumulate per crash/resume
-            # cycle (round-2 advice, resume.py:168). Dead-vs-live is
-            # decided by the flock probe, not by naming or age.
+            # crashed run's staged copy (every input row, pixels
+            # projected away) would otherwise accumulate per
+            # crash/resume cycle. Dead-vs-live is decided by the flock
+            # probe, not by naming or age.
             if sweep_stale_stages:
                 _sweep_dead_stages(stage_root, keep=stage_path)
             staged = stage_input(spark, images, stage_path, n_groups)

@@ -20,6 +20,12 @@ image+caption table instead, for smoke runs with no external data.
 Re-running with the same --warehouse resumes: committed id-hash groups
 are skipped via the checkpoint table (plans/resume.py).
 
+``<warehouse>/results`` is a label table keyed by ``image_id``: the
+input's non-binary columns, every rule/label/gate column,
+``scrubbed_caption``, ``is_dup`` and ``part_id``. It holds no pixels —
+they stay in the input (``--input``, or the ``--synth`` parquet
+under the warehouse); join them back on ``image_id`` to read them.
+
 Prints ONE JSON line: run stats + per-table snapshot ids.
 """
 
@@ -100,9 +106,10 @@ def main(argv: list[str] | None = None) -> None:
                                 n_groups=args.n_groups)
         wall = time.time() - t0
         res_df = results.read(spark)
-        n_rows = res_df.count() if res_df is not None else 0
-        n_kept = (res_df.where("keep").count()
-                  if res_df is not None else 0)
+        n_rows = n_kept = 0
+        if res_df is not None:
+            n_rows, n_kept = res_df.selectExpr(
+                "count(*)", "coalesce(sum(int(keep)), 0)").first()
         # throughput counts only rows committed by THIS run (checkpoint
         # rows carry run_id + n_rows) — a resumed run that skipped
         # already-committed groups must not claim their rows against its

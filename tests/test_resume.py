@@ -6,6 +6,7 @@ import time
 import pytest
 
 from bioanalyzer_backend_spark.plans import resume
+from bioanalyzer_backend_spark.plans.pipeline import binary_columns
 from bioanalyzer_backend_spark.plans.resume import run_with_resume
 from bioanalyzer_backend_spark.sources.catalog import LocalSnapshotTable
 
@@ -14,6 +15,17 @@ def _tables(tmp_path):
     return (LocalSnapshotTable(str(tmp_path / "results")),
             LocalSnapshotTable(str(tmp_path / "audit")),
             LocalSnapshotTable(str(tmp_path / "ckpt")))
+
+
+def _assert_same_rows(got, want):
+    """Row-for-row equality of two frames on want's columns, sorted by
+    image_id (pandas compare: NaN equals NaN, floats exact)."""
+    import pandas as pd
+    cols = want.columns
+    g = got.select(*cols).toPandas().sort_values("image_id") \
+        .reset_index(drop=True)
+    w = want.toPandas().sort_values("image_id").reset_index(drop=True)
+    pd.testing.assert_frame_equal(g, w, check_exact=True)
 
 
 def _collect_sorted(spark, tbl):
@@ -57,6 +69,11 @@ def test_resume_after_injected_failure(spark, synth_images_df, tmp_path,
         run_with_resume(spark, df, c_res, c_aud, c_ck, n_groups=4,
                         fail_after=2)
     assert len(resume.committed_groups(spark, c_ck)) == 2
+    # the crash leaves its staged copy behind: it must hold no pixels
+    import glob
+    import os
+    (stage,) = glob.glob(os.path.join(c_res.root, "stage-*"))
+    assert binary_columns(spark.read.parquet(stage)) == []
 
     # restart: must process ONLY the 2 remaining groups
     stats2 = run_with_resume(spark, df, c_res, c_aud, c_ck, n_groups=4)
@@ -67,6 +84,18 @@ def test_resume_after_injected_failure(spark, synth_images_df, tmp_path,
     stats3 = run_with_resume(spark, df, c_res, c_aud, c_ck, n_groups=4)
     assert stats3["newly_committed"] == 0
     assert _collect_sorted(spark, c_res) == expected
+
+    # the crashed-then-resumed results are a pixel-free label table that
+    # equals the whole-table pipeline on EVERY column: row for row on the
+    # non-binary ones, and with bytes once the input's pixels are joined
+    # back by image_id
+    got = c_res.read(spark)
+    assert binary_columns(got) == []
+    full = P.quality_filter(df)
+    assert binary_columns(full) == ["bytes"]
+    _assert_same_rows(got, full.drop("bytes"))
+    _assert_same_rows(got.join(df.select("image_id", "bytes"), "image_id"),
+                      full)
 
     # audit rows exist with positive counts
     aud = c_aud.read(spark).toPandas()
@@ -217,8 +246,8 @@ def test_stale_stage_dirs_swept_on_resume(spark, synth_images_df, tmp_path,
                                           artifacts_dir):
     """A crashed run leaves its staged input copy behind (a killed JVM
     cannot clean up); the NEXT run must sweep stale stage-* dirs before
-    staging anew, or full input copies — image bytes included —
-    accumulate per crash/resume cycle."""
+    staging anew, or staged copies — one pixel-free row per input image
+    each — accumulate per crash/resume cycle."""
     import glob
     import os
 
@@ -355,3 +384,64 @@ def test_merge_by_key_with_extra_target_columns(spark, tmp_path):
         "k")
     rows = {r["k"]: (r["v"], r["_batch_id"]) for r in tbl.read(spark).collect()}
     assert rows == {1: ("a", 10), 2: ("B", None), 3: ("C", None)}
+
+
+def test_job_runs_with_aqe_off(spark, synth_images_df, tmp_path,
+                               artifacts_dir):
+    """Staging drops the pixels before the dedup join, so the job never
+    needs AQE's broadcast conversion to keep bytes off the wire — it
+    must run (not raise) with adaptive execution disabled and agree with
+    the whole-table pipeline on every non-binary column."""
+    from bioanalyzer_backend_spark.plans import pipeline as P
+
+    df = synth_images_df.limit(400)
+    res, aud, ck = _tables(tmp_path / "noaqe")
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        stats = run_with_resume(spark, df, res, aud, ck, n_groups=2)
+    finally:
+        spark.conf.set(key, prev)
+    assert stats["newly_committed"] == 2
+    _assert_same_rows(res.read(spark), P.quality_filter(df).drop("bytes"))
+
+
+def test_resume_over_byte_bearing_half_commit(spark, synth_images_df,
+                                              tmp_path, artifacts_dir):
+    """A warehouse that earlier (pixel-carrying) code half-committed:
+    group 0's byte-bearing result rows are published with no checkpoint
+    row. Resuming must roll group 0 forward as it is, append the other
+    groups' slim label rows, and a mergeSchema read must hold exactly
+    one row per image_id, equal to the whole-table pipeline."""
+    from pyspark.sql import functions as F
+
+    from bioanalyzer_backend_spark.operators.skew import stable_salt
+    from bioanalyzer_backend_spark.plans import pipeline as P
+
+    df = synth_images_df.limit(300)
+    res, aud, ck = _tables(tmp_path / "legacy")
+    # what the pixel-carrying job committed for group 0: the dedup flag
+    # stamped over the full byte-bearing frame, then the group's
+    # pipeline with part_id appended
+    tagged = P.apply_dedup_flag(df) \
+        .withColumn("part_id", stable_salt("image_id", 4))
+    g0 = P.quality_filter(tagged.where("part_id = 0").drop("part_id"),
+                          with_dedup=False).withColumn("part_id", F.lit(0))
+    res.append(g0)
+    assert binary_columns(res.read(spark)) == ["bytes"]
+    n_g0 = res.read(spark).count()
+    assert 0 < n_g0 < 300
+
+    stats = run_with_resume(spark, df, res, aud, ck, n_groups=4)
+    assert stats["repaired_groups"] == [0]
+    assert stats["newly_committed"] == 3
+
+    got = res.read(spark)
+    assert got.count() == 300
+    assert got.select("image_id").distinct().count() == 300
+    # only the legacy group carries pixels; the new groups are slim
+    assert got.where("bytes IS NOT NULL").count() == n_g0
+    assert {r[0] for r in got.where("bytes IS NOT NULL")
+            .select("part_id").distinct().collect()} == {0}
+    _assert_same_rows(got, P.quality_filter(df).drop("bytes"))
