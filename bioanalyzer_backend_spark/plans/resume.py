@@ -7,6 +7,10 @@ copy of the input; each group's labels commit atomically (results + audit + chec
 left-anti-joins the checkpoint table and processes only uncommitted
 groups.
 
+One writer per warehouse, like the reference's single-writer SQLite
+cache: a run holds ``<results.root>/.run.lock`` from its first read to
+its last commit, and stages its input at ``<results.root>/_stage``.
+
 Crash-window discipline: a group commit is three single-table snapshot
 commits in the order results -> audit -> checkpoint, and each table's
 commit is atomic (sources/catalog.py). A crash BETWEEN them leaves the
@@ -23,7 +27,6 @@ becomes sequential staged jobs over bucket(image_id, N).
 
 from __future__ import annotations
 
-import glob
 import os
 import shutil
 import time
@@ -38,16 +41,11 @@ from . import pipeline as pipe
 from .audit import audit_rows
 
 
-def committed_groups(spark: SparkSession, ckpt: LocalSnapshotTable) -> set[int]:
-    df = ckpt.read(spark)
-    if df is None:
-        return set()
-    return {r["part_id"] for r in df.select("part_id").distinct().collect()}
-
-
-def _published_groups(spark: SparkSession,
-                      results: LocalSnapshotTable) -> set[int]:
-    df = results.read(spark)
+def committed_groups(spark: SparkSession,
+                     table: LocalSnapshotTable) -> set[int]:
+    """The ``part_id`` values in *table*: the committed groups of the
+    checkpoint table, or the published groups of the results table."""
+    df = table.read(spark)
     if df is None or "part_id" not in df.columns:
         return set()
     return {r["part_id"] for r in df.select("part_id").distinct().collect()}
@@ -80,16 +78,15 @@ def check_n_groups(spark: SparkSession, ckpt: LocalSnapshotTable,
 
 def reconcile(spark: SparkSession, results: LocalSnapshotTable,
               audit: LocalSnapshotTable, ckpt: LocalSnapshotTable,
-              run_id: str, n_groups: int | None = None) -> list[int]:
+              run_id: str, n_groups: int) -> list[int]:
     """Roll forward half-committed groups (rows published, checkpoint row
     missing after a crash): regenerate their audit rows from the published
     results and append the checkpoint row. Returns the groups repaired.
 
-    Assumes no SIBLING run is concurrently mid-commit on this warehouse:
-    a live sibling sitting between its results append and its ckpt
-    append is indistinguishable from a crash, and repairing it here
-    races its own audit append (doubled lineage rows). See
-    run_with_resume's concurrency note.
+    A crash before the first checkpoint row leaves check_n_groups nothing
+    to read, so each half-committed group's rows are checked against
+    ``n_groups`` here, before anything is written: rows published under
+    another modulus raise instead of being stamped with this one.
 
     Idempotent per group: the crash may have happened AFTER the group's
     audit append (commit order is results -> audit -> ckpt), so the
@@ -99,7 +96,7 @@ def reconcile(spark: SparkSession, results: LocalSnapshotTable,
     crashed run did that processing, and throughput metrics that sum
     n_rows for run_id == this run must not claim it (jobs/
     quality_filter.py rows_this_run)."""
-    half = sorted(_published_groups(spark, results)
+    half = sorted(committed_groups(spark, results)
                   - committed_groups(spark, ckpt))
     if not half:
         return half
@@ -107,12 +104,21 @@ def reconcile(spark: SparkSession, results: LocalSnapshotTable,
     for g in half:
         out = full.where(F.col("part_id") == g).persist()
         try:
+            # one pass fills the cache the audit aggregation reads
+            n_rows, n_moved = out.select(F.count("*"), F.count(F.when(
+                stable_salt("image_id", n_groups) != F.col("part_id"),
+                1))).first()
+            if n_moved:
+                raise ValueError(
+                    f"group {g} was published under another n_groups: "
+                    f"{n_moved} of its {n_rows} rows do not hash to it "
+                    f"with n_groups={n_groups} — rerun with the original "
+                    f"value")
             # SQL-string predicate so BOTH table backends accept it
             # (IcebergTable.delete_where interpolates into DELETE FROM ...
             # WHERE, which cannot take a Column object)
             audit.delete_where(spark, f"group_id = {int(g)}")
             audit.append(audit_rows(out, run_id, None, group_id=g))
-            n_rows = out.count()    # cached — audit agg materialized it
         finally:
             out.unpersist()
         ckpt.append(spark.createDataFrame(
@@ -161,101 +167,30 @@ def stage_input(spark: SparkSession, images: DataFrame, stage_path: str,
     return spark.read.parquet(stage_path)
 
 
-def _stage_lock_path(stage_path: str) -> str:
-    """Liveness lock file for a stage dir: a DOTFILE sibling
-    (``.stage-<run_id>.lock``) so ``stage-*`` globs — the sweep's own,
-    and any operator tooling counting staged copies — see only real
-    stage dirs, never lock files."""
-    d, b = os.path.split(stage_path)
-    return os.path.join(d, f".{b}.lock")
-
-
-def _acquire_stage_lock(stage_path: str, timeout_s: float = 5.0) -> int:
-    """Create + flock(LOCK_EX) the run's liveness lock file (the
-    ``.stage-<run_id>.lock`` dotfile from _stage_lock_path), returning
-    the held fd. The kernel releases the lock on process death (no
-    stale-lock break protocol needed — same rationale as
-    sources/catalog._commit_lock); run_with_resume closes the fd in a
-    finally so an injected in-process failure also frees it. Fresh
-    run_id => uncontended; the short retry window only matters when a
-    caller REUSES a crashed run_id while a sibling's sweep transiently
-    holds the dead lock for its liveness probe. Still held after the
-    timeout => a live run owns this run_id, a caller bug worth
-    raising."""
+def _lock_run(root: str) -> int:
+    """flock(LOCK_EX | LOCK_NB) on the persistent ``<root>/.run.lock``
+    and return the held fd; raise if another process or fd holds it.
+    The kernel releases the lock on process death and the file is never
+    unlinked (the sources/catalog._commit_lock idiom)."""
     import fcntl
-    os.makedirs(os.path.dirname(stage_path), exist_ok=True)
-    fd = os.open(_stage_lock_path(stage_path),
-                 os.O_CREAT | os.O_RDWR, 0o644)
-    deadline = time.monotonic() + timeout_s
-    while True:
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-            return fd
-        except OSError:
-            if time.monotonic() >= deadline:
-                os.close(fd)
-                raise RuntimeError(
-                    f"stage lock for {stage_path} is held by a live "
-                    f"run (duplicate run_id?)")
-            time.sleep(0.05)
-
-
-def _sweep_dead_stages(stage_root: str, keep: str,
-                       lockless_grace_s: float = 900.0) -> None:
-    """Remove stage-* dirs whose owning run is DEAD — decided by probing
-    each dir's ``.stage-<run_id>.lock`` dotfile sibling with a
-    non-blocking flock: a live owner holds its lock (probe fails ->
-    skip), a dead owner's lock was kernel-released (probe succeeds ->
-    safe to delete). Dirs with no lock file at all (pre-liveness-lock
-    layouts) count as dead ONLY once older than ``lockless_grace_s``
-    by mtime (round-4 advice): in a mixed-version deploy a LIVE run on
-    the pre-lock code version shares this stage_root with no lock to
-    probe, and sweeping its fresh dir would yank staged input mid-run.
-    The grace covers the staging-to-read window; pre-lock runs expected
-    to exceed it must not share a stage_root with post-lock runs.
-    ``keep`` is this run's own stage path, always skipped.
-
-    Lock FILES are never unlinked — only the stage DIR is removed
-    (CLAUDE.md's _commit_lock discipline): unlinking would re-open the
-    open/unlink race where a run re-acquiring the same run_id opens the
-    inode, the sweeper locks + unlinks it, and the run ends up holding
-    an orphaned inode while its on-disk lock path is gone — a later
-    sweep would then see its stage dir as lockless and delete the LIVE
-    run's staged input. The cost is one empty dotfile per historical
-    run_id under the stage root."""
-    import fcntl
-    for stale in glob.glob(os.path.join(stage_root, "stage-*")):
-        if stale == keep or not os.path.isdir(stale):
-            continue
-        lock_path = _stage_lock_path(stale)
-        fd = None
-        try:
-            if os.path.exists(lock_path):
-                fd = os.open(lock_path, os.O_RDWR)
-                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-            else:
-                # no lock to probe (pre-lock code version): only a dir
-                # past the grace window counts as dead
-                if time.time() - os.path.getmtime(stale) < lockless_grace_s:
-                    continue
-            # lock acquired (or lockless past grace): owner is dead
-            shutil.rmtree(stale, ignore_errors=True)
-        except OSError:
-            continue   # lock held -> live sibling, leave it alone
-        finally:
-            if fd is not None:
-                os.close(fd)
+    fd = os.open(os.path.join(root, ".run.lock"), os.O_CREAT | os.O_RDWR,
+                 0o644)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    except OSError:
+        os.close(fd)
+        raise RuntimeError(
+            f"another run holds {root}: run one writer at a time per "
+            f"warehouse") from None
+    return fd
 
 
 def run_with_resume(spark: SparkSession, images: DataFrame,
                     results: LocalSnapshotTable, audit: LocalSnapshotTable,
                     ckpt: LocalSnapshotTable, n_groups: int = 8,
-                    run_id: str | None = None,
                     fail_after: int | None = None,
                     fail_between_commits: bool = False,
-                    fail_after_audit: bool = False,
-                    stage_dir: str | None = None,
-                    sweep_stale_stages: bool = True) -> dict:
+                    fail_after_audit: bool = False) -> dict:
     """Process all uncommitted groups; returns run stats.
 
     ``results`` becomes a label table keyed by ``image_id``: the input's
@@ -275,57 +210,27 @@ def run_with_resume(spark: SparkSession, images: DataFrame,
     audit append and the checkpoint append (test hooks for the
     kill/restart scenarios of SURVEY.md section 5.5).
 
-    ``sweep_stale_stages`` (default on) removes crashed runs' stage-*
-    dirs under the stage root before staging anew. Live siblings'
-    STAGED INPUT is protected by a per-run flock liveness lock (the
-    ``.stage-<run_id>.lock`` dotfile beside the stage dir, held for the
-    run's duration, kernel-released on process death — the
-    sources/catalog.py _commit_lock pattern): the sweep only removes a
-    stage dir whose lock it can acquire. The lock file sits BESIDE the
-    dir (not inside: Spark's overwrite write recreates the stage dir,
-    which would drop an in-dir lock file) and is never unlinked (see
-    _sweep_dead_stages).
-
-    Concurrency contract (be precise about what is and is not safe):
-    crash/RESTART sequences are exactly-once (the checkpoint anti-join +
-    reconcile roll-forward), and SIMULTANEOUS runs can never corrupt a
-    table (every append is an atomic snapshot commit) or yank each
-    other's staged input (the liveness lock) — but group processing
-    across simultaneous runs is AT-LEAST-ONCE: two runs that both read
-    committed_groups before either commits group g will both process
-    and append g (duplicate rows), and a sibling mid-commit can be
-    "repaired" by the other's reconcile (doubled audit rows). Run one
-    writer at a time per warehouse; concurrency belongs BETWEEN
-    warehouses, or inside a run via Spark's own parallelism.
+    The run holds ``<results.root>/.run.lock`` throughout, so a second
+    run on the same warehouse raises. A crash leaves at most one staged
+    copy, ``<results.root>/_stage``, which the next run overwrites and
+    removes.
     """
-    run_id = run_id or uuid.uuid4().hex[:12]
-    check_n_groups(spark, ckpt, n_groups)
-    repaired = reconcile(spark, results, audit, ckpt, run_id, n_groups)
-    done = committed_groups(spark, ckpt)
-    todo = [g for g in range(n_groups) if g not in done]
+    if n_groups < 1:
+        raise ValueError(f"n_groups must be >= 1, got {n_groups}")
+    root = getattr(results, "root", None)
+    if root is None:
+        raise ValueError("run_with_resume needs a results table with a "
+                         "local root (LocalSnapshotTable)")
+    run_id = uuid.uuid4().hex[:12]
+    stage_path = os.path.join(root, "_stage")
     n_committed = 0
-    stage_path = None
-    stage_lock_fd = None
+    lock_fd = _lock_run(root)
     try:
+        check_n_groups(spark, ckpt, n_groups)
+        repaired = reconcile(spark, results, audit, ckpt, run_id, n_groups)
+        done = committed_groups(spark, ckpt)
+        todo = [g for g in range(n_groups) if g not in done]
         if todo:
-            stage_root = stage_dir or getattr(results, "root", None)
-            if stage_root is None:
-                raise ValueError(
-                    "stage_dir is required when the results table has no "
-                    "local root (e.g. IcebergTable)")
-            stage_path = os.path.join(stage_root, f"stage-{run_id}")
-            # Own liveness lock FIRST (before the sweep, before the dir
-            # exists) so a concurrent sweeper already sees this run live.
-            stage_lock_fd = _acquire_stage_lock(stage_path)
-            # Sweep stale stage-* dirs before staging anew: crash paths
-            # deliberately skip their own cleanup (a killed JVM cannot),
-            # and a resumed run stages under its OWN run_id — so a
-            # crashed run's staged copy (every input row, pixels
-            # projected away) would otherwise accumulate per
-            # crash/resume cycle. Dead-vs-live is decided by the flock
-            # probe, not by naming or age.
-            if sweep_stale_stages:
-                _sweep_dead_stages(stage_root, keep=stage_path)
             staged = stage_input(spark, images, stage_path, n_groups)
         for g in todo:
             t0 = time.time()
@@ -361,16 +266,11 @@ def run_with_resume(spark: SparkSession, images: DataFrame,
                     and not fail_after_audit and n_committed >= fail_after:
                 raise RuntimeError(
                     f"injected failure after {n_committed} groups")
-        if stage_path is not None:
-            # crash paths skip this on purpose: a resumed run re-stages
-            # under its own run_id (deterministic stable_salt => identical
-            # content); the liveness lock file goes with the dir
-            shutil.rmtree(stage_path, ignore_errors=True)
+        # crash paths skip this on purpose (a killed JVM cannot clean
+        # up); the next run's overwrite replaces the leftover
+        shutil.rmtree(stage_path, ignore_errors=True)
     finally:
-        if stage_lock_fd is not None:
-            os.close(stage_lock_fd)   # releases the flock; crash paths
-            # leave the DIR behind on purpose but must free the lock so
-            # the next run's sweep sees the owner dead
+        os.close(lock_fd)
     return {"run_id": run_id, "groups_done": len(done) + n_committed,
             "groups_total": n_groups, "newly_committed": n_committed,
             "repaired_groups": repaired}

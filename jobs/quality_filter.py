@@ -18,7 +18,8 @@ runtime jar is on the classpath — sources/catalog.open_table switches
 automatically). ``--synth N`` generates the deterministic synthetic
 image+caption table instead, for smoke runs with no external data.
 Re-running with the same --warehouse resumes: committed id-hash groups
-are skipped via the checkpoint table (plans/resume.py).
+are skipped via the checkpoint table (plans/resume.py). One run at a
+time per warehouse: a second, simultaneous run raises.
 
 ``<warehouse>/results`` is a label table keyed by ``image_id``: the
 input's non-binary columns, every rule/label/gate column,

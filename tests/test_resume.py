@@ -1,8 +1,6 @@
 """Checkpoint/resume semantics: kill mid-run, restart, byte-identical result
 (SURVEY.md section 5.5; cache_manager.py keyed-upsert semantics)."""
 
-import time
-
 import pytest
 
 from bioanalyzer_backend_spark.plans import resume
@@ -70,9 +68,8 @@ def test_resume_after_injected_failure(spark, synth_images_df, tmp_path,
                         fail_after=2)
     assert len(resume.committed_groups(spark, c_ck)) == 2
     # the crash leaves its staged copy behind: it must hold no pixels
-    import glob
     import os
-    (stage,) = glob.glob(os.path.join(c_res.root, "stage-*"))
+    stage = os.path.join(c_res.root, "_stage")
     assert binary_columns(spark.read.parquet(stage)) == []
 
     # restart: must process ONLY the 2 remaining groups
@@ -242,45 +239,58 @@ def test_delete_where_keeps_null_predicate_rows(spark, tmp_path):
     assert got == [(4, "other"), (None, "lineage")]
 
 
-def test_stale_stage_dirs_swept_on_resume(spark, synth_images_df, tmp_path,
-                                          artifacts_dir):
+def test_crashes_leave_one_stage_copy(spark, synth_images_df, tmp_path,
+                                      artifacts_dir):
     """A crashed run leaves its staged input copy behind (a killed JVM
-    cannot clean up); the NEXT run must sweep stale stage-* dirs before
-    staging anew, or staged copies — one pixel-free row per input image
-    each — accumulate per crash/resume cycle."""
-    import glob
+    cannot clean up). Every run stages at the one ``_stage`` dir, so two
+    crashes leave one staged copy, not two, and a clean resume removes
+    it."""
     import os
 
     df = synth_images_df.limit(150)
     res, aud, ck = _tables(tmp_path / "sweep")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_with_resume(spark, df, res, aud, ck, n_groups=4, fail_after=1)
-    assert len(glob.glob(os.path.join(res.root, "stage-*"))) == 1
+    for _ in range(2):
+        with pytest.raises(RuntimeError, match="injected failure"):
+            run_with_resume(spark, df, res, aud, ck, n_groups=4,
+                            fail_after=1)
+    assert len(resume.committed_groups(spark, ck)) == 2
+    assert [d for d in os.listdir(res.root) if "stage" in d] == ["_stage"]
 
     run_with_resume(spark, df, res, aud, ck, n_groups=4)
-    assert glob.glob(os.path.join(res.root, "stage-*")) == []
+    assert [d for d in os.listdir(res.root) if "stage" in d] == []
 
 
-def test_lockless_stage_dir_gets_mtime_grace(tmp_path):
-    """Mixed-version guard (round-4 advice): a stage dir with NO
-    liveness-lock sibling may belong to a LIVE run on pre-lock code —
-    it is only swept once older than the grace window; a fresh one is
-    left alone. Lock-bearing dirs keep pure flock-probe semantics."""
+def test_second_run_on_warehouse_raises(spark, synth_images_df, tmp_path):
+    """One writer per warehouse: while another process or fd holds
+    ``<results.root>/.run.lock``, a run raises before reading or writing
+    any table."""
+    import fcntl
     import os
 
-    from bioanalyzer_backend_spark.plans.resume import _sweep_dead_stages
+    df = synth_images_df.limit(40)
+    res, aud, ck = _tables(tmp_path / "lock")
+    fd = os.open(os.path.join(res.root, ".run.lock"),
+                 os.O_CREAT | os.O_RDWR)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        with pytest.raises(RuntimeError, match="another run"):
+            run_with_resume(spark, df, res, aud, ck, n_groups=2)
+    finally:
+        os.close(fd)
+    for t in (res, aud, ck):
+        assert t.read(spark) is None
+    assert not os.path.exists(os.path.join(res.root, "_stage"))
 
-    root = str(tmp_path)
-    fresh = os.path.join(root, "stage-fresh")
-    old = os.path.join(root, "stage-old")
-    os.makedirs(fresh)
-    os.makedirs(old)
-    past = time.time() - 3600
-    os.utime(old, (past, past))
-    _sweep_dead_stages(root, keep=os.path.join(root, "stage-self"),
-                       lockless_grace_s=900.0)
-    assert os.path.isdir(fresh)        # inside grace -> possibly live
-    assert not os.path.exists(old)     # past grace -> dead, swept
+
+def test_n_groups_below_one_raises(spark, synth_images_df, tmp_path):
+    """range(0) is empty: without the guard n_groups=0 commits nothing
+    and reports success."""
+    res, aud, ck = _tables(tmp_path / "zero")
+    for n in (0, -1):
+        with pytest.raises(ValueError, match="n_groups"):
+            run_with_resume(spark, synth_images_df.limit(20), res, aud, ck,
+                            n_groups=n)
+    assert res.read(spark) is None
 
 
 def test_input_scanned_once_via_staging(spark, synth_images_df, tmp_path,
@@ -321,6 +331,32 @@ def test_resume_rejects_changed_n_groups(spark, synth_images_df, tmp_path):
     # the original value still resumes fine
     stats = run_with_resume(spark, df, res, aud, ck, n_groups=4)
     assert stats["groups_done"] == 4
+
+
+def test_changed_n_groups_before_first_checkpoint_raises(spark,
+                                                         synth_images_df,
+                                                         tmp_path):
+    """A crash between the results and audit appends of the FIRST group
+    leaves no checkpoint row for check_n_groups to read. Resuming under
+    another modulus must still raise, before reconcile touches audit or
+    checkpoint — rolling the group forward under n_groups=8 and then
+    processing groups 0-7 published some ids twice."""
+    df = synth_images_df.limit(400)
+    res, aud, ck = _tables(tmp_path / "ng0")
+    with pytest.raises(RuntimeError, match="between commits"):
+        run_with_resume(spark, df, res, aud, ck, n_groups=4,
+                        fail_between_commits=True, fail_after=1)
+    assert ck.read(spark) is None
+    with pytest.raises(ValueError, match="n_groups"):
+        run_with_resume(spark, df, res, aud, ck, n_groups=8)
+    assert ck.read(spark) is None and aud.read(spark) is None
+    # the original value still resumes, one row per image_id
+    stats = run_with_resume(spark, df, res, aud, ck, n_groups=4)
+    assert len(stats["repaired_groups"]) == 1
+    assert stats["groups_done"] == 4
+    got = res.read(spark)
+    assert got.count() == 400
+    assert got.select("image_id").distinct().count() == 400
 
 
 def test_n_groups_guard_sees_mixed_schema_checkpoint(spark, synth_images_df,
