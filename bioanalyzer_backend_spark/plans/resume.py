@@ -46,7 +46,7 @@ def committed_groups(spark: SparkSession,
     """The ``part_id`` values in *table*: the committed groups of the
     checkpoint table, or the published groups of the results table."""
     df = table.read(spark)
-    if df is None or "part_id" not in df.columns:
+    if df is None:
         return set()
     return {r["part_id"] for r in df.select("part_id").distinct().collect()}
 
@@ -61,14 +61,11 @@ def check_n_groups(spark: SparkSession, ckpt: LocalSnapshotTable,
     checkpoint rows were committed with: part_id is a hash MODULO
     n_groups, so reinterpreting committed ids under a new modulus
     silently reprocesses already-published rows (duplicates) and/or
-    skips unprocessed ones. Pre-guard checkpoint rows (no n_groups
-    column / NULL) are tolerated — they cannot be distinguished, which
-    is exactly why new rows record it."""
+    skips unprocessed ones."""
     df = ckpt.read(spark)
-    if df is None or "n_groups" not in df.columns:
+    if df is None:
         return
-    rec = {r[0] for r in df.select("n_groups")
-           .where(F.col("n_groups").isNotNull()).distinct().collect()}
+    rec = {r[0] for r in df.select("n_groups").distinct().collect()}
     if rec and rec != {n_groups}:
         raise ValueError(
             f"checkpoint table was committed with n_groups={sorted(rec)}; "
@@ -92,14 +89,15 @@ def reconcile(spark: SparkSession, results: LocalSnapshotTable,
     audit append (commit order is results -> audit -> ckpt), so the
     group's audit rows are deleted by group_id before re-appending —
     blind re-append would double the lineage hit counts. The repaired
-    checkpoint row is stamped ``repair:<run_id>``, not ``run_id``: the
-    crashed run did that processing, and throughput metrics that sum
-    n_rows for run_id == this run must not claim it (jobs/
+    checkpoint and audit rows are stamped ``repair:<run_id>``, not
+    ``run_id``: the crashed run did that processing, and metrics that sum
+    rows for run_id == this run must not claim it (jobs/
     quality_filter.py rows_this_run)."""
     half = sorted(committed_groups(spark, results)
                   - committed_groups(spark, ckpt))
     if not half:
         return half
+    stamp = f"repair:{run_id}"
     full = results.read(spark)     # one table open for all repaired groups
     for g in half:
         out = full.where(F.col("part_id") == g).persist()
@@ -118,12 +116,11 @@ def reconcile(spark: SparkSession, results: LocalSnapshotTable,
             # (IcebergTable.delete_where interpolates into DELETE FROM ...
             # WHERE, which cannot take a Column object)
             audit.delete_where(spark, f"group_id = {int(g)}")
-            audit.append(audit_rows(out, run_id, None, group_id=g))
+            audit.append(audit_rows(out, stamp, None, group_id=g))
         finally:
             out.unpersist()
         ckpt.append(spark.createDataFrame(
-            [(g, f"repair:{run_id}", n_rows, float(time.time()),
-              n_groups)], _CKPT_SCHEMA))
+            [(g, stamp, n_rows, float(time.time()), n_groups)], _CKPT_SCHEMA))
     return half
 
 
@@ -197,12 +194,8 @@ def run_with_resume(spark: SparkSession, images: DataFrame,
     non-binary columns, every rule/label/gate column, ``scrubbed_caption``,
     ``is_dup`` and ``part_id`` — no pixels (stage_input drops them).
     Readers that need the pixels join ``images`` back on ``image_id``.
-    A warehouse that earlier code left half-committed with byte-bearing
-    rows still resumes: reconcile rolls those rows forward as they are,
-    new groups append slim rows, and LocalSnapshotTable's mergeSchema
-    read yields one row per image_id (NULL ``bytes`` on the slim rows).
-    The same mixed-schema case on IcebergTable is untested (no runtime
-    jar in the test environment).
+    A warehouse whose manifests lack ``sources.catalog.FORMAT`` raises at
+    the first table read, before anything is written.
 
     ``fail_after`` aborts after that many group commits; with
     ``fail_between_commits`` the abort fires BETWEEN the results append

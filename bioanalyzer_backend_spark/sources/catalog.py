@@ -11,7 +11,11 @@ so this module implements the same COMMIT semantics on a parquet directory:
   * ``HEAD`` names the current snapshot and is replaced atomically
     (os.replace — POSIX rename atomicity);
   * readers resolve HEAD -> manifest -> exact file list, so a killed
-    writer can never half-publish (exact-resume requirement).
+    writer can never half-publish (exact-resume requirement);
+  * every manifest carries ``"format": FORMAT`` (Iceberg's
+    ``format-version``), and every manifest read checks it: a table
+    written by older code raises instead of being read through per-column
+    tolerances. Change the on-disk layout -> bump ``FORMAT``.
 
 With a real cluster + Iceberg jar, ``IcebergTable`` below routes the same
 calls through ``df.writeTo(...)`` / MERGE INTO; selection is automatic.
@@ -25,6 +29,8 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+FORMAT = 2
 
 
 class LocalSnapshotTable:
@@ -42,6 +48,17 @@ class LocalSnapshotTable:
     def _head_path(self) -> str:
         return os.path.join(self.meta_dir, "HEAD")
 
+    def _manifest(self, name: str) -> dict:
+        """The manifest *name*, refusing any layout but ``FORMAT``."""
+        with open(os.path.join(self.meta_dir, name)) as f:
+            snap = json.load(f)
+        if snap.get("format") != FORMAT:
+            raise RuntimeError(
+                f"snapshot table {self.root}: manifest {name} has format "
+                f"{snap.get('format')!r}, not {FORMAT} — written by older "
+                f"code; use a fresh warehouse")
+        return snap
+
     def current_snapshot(self) -> dict | None:
         """HEAD manifest, or None for a genuinely empty table (no HEAD).
 
@@ -58,8 +75,7 @@ class LocalSnapshotTable:
         except FileNotFoundError:
             return None
         try:
-            with open(os.path.join(self.meta_dir, name)) as f:
-                return json.load(f)
+            return self._manifest(name)
         except FileNotFoundError:
             raise RuntimeError(
                 f"snapshot table {self.root} is corrupt: HEAD names "
@@ -70,7 +86,7 @@ class LocalSnapshotTable:
     def _commit(self, files: list[str], parent: str | None,
                 operation: str) -> str:
         snap_id = f"snap-{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}.json"
-        manifest = {"snapshot": snap_id, "parent": parent,
+        manifest = {"format": FORMAT, "snapshot": snap_id, "parent": parent,
                     "operation": operation, "files": sorted(files)}
         path = os.path.join(self.meta_dir, snap_id)
         tmp = path + ".tmp"
@@ -146,8 +162,7 @@ class LocalSnapshotTable:
             parent = snap.get("parent")
             if parent is None:
                 break
-            with open(os.path.join(self.meta_dir, parent)) as f:
-                snap = json.load(f)
+            snap = self._manifest(parent)
         return out
 
     # -- operations ------------------------------------------------------------
@@ -303,11 +318,8 @@ class LocalSnapshotTable:
         """Read HEAD, or any retained snapshot by id (time travel —
         Iceberg ``VERSION AS OF`` analogue; snapshots stay readable until
         ``expire_snapshots`` reclaims their files)."""
-        if snapshot_id is None:
-            snap = self.current_snapshot()
-        else:
-            with open(os.path.join(self.meta_dir, snapshot_id)) as f:
-                snap = json.load(f)
+        snap = (self.current_snapshot() if snapshot_id is None
+                else self._manifest(snapshot_id))
         if snap is None or not snap["files"]:
             return None
         # mergeSchema: a snapshot can span appends with evolving schemas
@@ -355,16 +367,14 @@ class LocalSnapshotTable:
             keep_snaps = chain[:keep]
             live: set[str] = set()
             for name in keep_snaps:
-                with open(os.path.join(self.meta_dir, name)) as f:
-                    live.update(json.load(f)["files"])
+                live.update(self._manifest(name)["files"])
             gone: set[str] = set()
             for name in chain[keep:]:
-                with open(os.path.join(self.meta_dir, name)) as f:
-                    for path in json.load(f)["files"]:
-                        if path not in live and path not in gone \
-                                and os.path.exists(path):
-                            os.remove(path)
-                            gone.add(path)
+                for path in self._manifest(name)["files"]:
+                    if path not in live and path not in gone \
+                            and os.path.exists(path):
+                        os.remove(path)
+                        gone.add(path)
             return len(gone)
 
 
@@ -406,13 +416,11 @@ def streaming_query_id(checkpoint_dir: str) -> str:
     ``metadata`` json. This is THE id Spark keeps stable across restarts
     from the same checkpoint and regenerates for a fresh checkpoint —
     exactly the dedup scope the docs' (queryId, epochId) exactly-once
-    recipe needs. '' when the query hasn't started yet (metadata is
-    written at query start, before batch 0 fires)."""
-    try:
-        with open(os.path.join(checkpoint_dir, "metadata")) as f:
-            return json.load(f).get("id", "")
-    except (FileNotFoundError, json.JSONDecodeError):
-        return ""
+    recipe needs. Spark writes the metadata at query start, before batch
+    0 fires, so a missing file or id raises: there is no query to scope
+    by."""
+    with open(os.path.join(checkpoint_dir, "metadata")) as f:
+        return json.load(f)["id"]
 
 
 class IdempotentBatchAppender:
@@ -427,15 +435,13 @@ class IdempotentBatchAppender:
 
     Dedup is keyed on (query id, batch id) — Spark's documented
     exactly-once recipe — not batch id alone: epoch ids restart at 0
-    for a new checkpoint, so with ``checkpoint_dir`` given, a
-    checkpoint reset (new query id) correctly re-admits batch ids an
-    OLD incarnation committed, and two different queries can share one
-    results table without eating each other's epochs. The query id is
-    read lazily from the checkpoint's metadata at first append (it
-    exists once the query is running). Without ``checkpoint_dir`` the
-    namespace is '' — the pre-round-4 single-query behavior."""
+    for a new checkpoint, so a checkpoint reset (new query id) correctly
+    re-admits batch ids an OLD incarnation committed, and two different
+    queries can share one results table without eating each other's
+    epochs. The query id is read lazily from ``checkpoint_dir``'s
+    metadata at first append (it exists once the query is running)."""
 
-    def __init__(self, table, checkpoint_dir: str | None = None):
+    def __init__(self, table, checkpoint_dir: str):
         self.table = table
         self._ckpt = checkpoint_dir
         self._ns: str | None = None
@@ -443,8 +449,7 @@ class IdempotentBatchAppender:
 
     def _namespace(self) -> str:
         if self._ns is None:
-            self._ns = (streaming_query_id(self._ckpt)
-                        if self._ckpt else "")
+            self._ns = streaming_query_id(self._ckpt)
         return self._ns
 
     def _seed(self, spark: SparkSession) -> set[int]:
@@ -452,25 +457,7 @@ class IdempotentBatchAppender:
         if df is None or "_batch_id" not in df.columns:
             return set()
         from pyspark.sql import functions as F
-        if "_query_id" in df.columns:
-            # rows from tables predating the query-id column carry NULL
-            # after the mergeSchema read; they belong to namespace ''
-            df = df.where(F.coalesce(F.col("_query_id"), F.lit(""))
-                          == self._namespace())
-        # A table with NO _query_id column anywhere predates the
-        # namespace scheme entirely (single-query batch-id-only dedup).
-        # Seed its batch ids into THIS namespace as a one-time upgrade
-        # migration: a crash-restart of the same query straddling the
-        # code upgrade must not re-append batches the old incarnation
-        # committed (round-4 advice). The legacy-wide seed applies until
-        # the first post-upgrade append introduces _query_id (mergeSchema
-        # then maps legacy rows to namespace '' above). Attribution of
-        # legacy rows is inherently ambiguous, so a CHECKPOINT RESET
-        # performed in the same window as the code upgrade must pair with
-        # a fresh/compacted results table — otherwise the new query's low
-        # batch ids collide with legacy ids and are skipped as replays
-        # (we bias toward no-duplicates; the reset+upgrade combination is
-        # the operator-documented exception).
+        df = df.where(F.col("_query_id") == self._namespace())
         return {r[0] for r in df.select("_batch_id").distinct().collect()}
 
     def append(self, batch_df: DataFrame, batch_id: int) -> bool:

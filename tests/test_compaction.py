@@ -127,6 +127,8 @@ def test_appender_scopes_dedup_by_query_id(spark, tmp_path):
     an old incarnation's batch 0 — that was silent data loss."""
     import json as _json
 
+    import pytest as _pytest
+
     from bioanalyzer_backend_spark.sources.catalog import (
         IdempotentBatchAppender, LocalSnapshotTable)
 
@@ -153,36 +155,14 @@ def test_appender_scopes_dedup_by_query_id(spark, tmp_path):
     assert out.count() == 6                     # q-1 batch0 + q-2 batch0
     assert {r["_query_id"] for r in out.select("_query_id").collect()} \
         == {"q-1", "q-2"}
-
-
-def test_appender_seeds_from_legacy_table_without_query_id(spark, tmp_path):
-    """Upgrade-boundary migration (round-4 advice): a table written by
-    pre-namespace code has NO _query_id column anywhere. A crash-restart
-    of the SAME query straddling the code upgrade must not re-append
-    batches the old incarnation committed — the legacy batch ids seed
-    the new namespace once. Post-migration appends carry _query_id, so
-    a later checkpoint reset gets the normal per-namespace scoping."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    from bioanalyzer_backend_spark.sources.catalog import (
-        IdempotentBatchAppender, LocalSnapshotTable)
-
-    tbl = LocalSnapshotTable(str(tmp_path / "tbl"))
-    df = spark.range(3).toDF("v")
-    # legacy writer: batch-id column only, no namespace column
-    tbl.append(df.withColumn("_batch_id", F.lit(0)))
-    tbl.append(df.withColumn("_batch_id", F.lit(1)))
-
-    ck = tmp_path / "ck"
-    ck.mkdir()
-    (ck / "metadata").write_text(_json.dumps({"id": "q-1"}))
-    a = IdempotentBatchAppender(tbl, checkpoint_dir=str(ck))
-    assert a.append(df, 0) is False             # replay of legacy batch
-    assert a.append(df, 1) is False
-    assert a.append(df, 2) is True              # genuinely new batch
-    assert tbl.read(spark).count() == 9
+    # a checkpoint with no query id has no namespace: append raises and
+    # writes nothing (batches are never namespaced under '')
+    head = tbl.current_snapshot()["snapshot"]
+    (tmp_path / "c4").mkdir()
+    a4 = IdempotentBatchAppender(tbl, checkpoint_dir=str(tmp_path / "c4"))
+    with _pytest.raises(FileNotFoundError):
+        a4.append(df, 1)
+    assert tbl.current_snapshot()["snapshot"] == head
 
 
 def test_open_table_rejects_uri_schemes(spark):

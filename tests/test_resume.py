@@ -9,6 +9,20 @@ from bioanalyzer_backend_spark.plans.resume import run_with_resume
 from bioanalyzer_backend_spark.sources.catalog import LocalSnapshotTable
 
 
+def _strip_format(tbl, name=None):
+    """Rewrite manifest *name* (default: HEAD's) as older code wrote it:
+    no ``format`` stamp."""
+    import json
+    import os
+    path = os.path.join(tbl.meta_dir,
+                        name or open(tbl._head_path()).read().strip())
+    with open(path) as f:
+        snap = json.load(f)
+    del snap["format"]
+    with open(path, "w") as f:
+        json.dump(snap, f)
+
+
 def _tables(tmp_path):
     return (LocalSnapshotTable(str(tmp_path / "results")),
             LocalSnapshotTable(str(tmp_path / "audit")),
@@ -145,11 +159,17 @@ def test_crash_between_commits_rolls_forward(spark, synth_images_df,
     got = res.read(spark)
     assert got.count() == df.count()
     assert got.select("image_id").distinct().count() == df.count()
-    # the repaired group's audit rows were regenerated under the
-    # repairing run's id (audit part_id is the PHYSICAL partition id,
-    # not the group id — see plans/audit.py)
+    # the repaired group's audit rows were regenerated under
+    # 'repair:<run_id>' and the new groups' under the plain run id
+    # (audit group_id is the group; its part_id is the PHYSICAL partition
+    # id — see plans/audit.py)
     rid = stats["run_id"]
-    assert aud.read(spark).where(f"run_id = '{rid}'").count() > 0
+    repaired = set(stats["repaired_groups"])
+    aud_rows = aud.read(spark).select("run_id", "group_id").collect()
+    assert {r["run_id"] for r in aud_rows
+            if r["group_id"] in repaired} == {"repair:" + rid}
+    assert {r["group_id"] for r in aud_rows if r["run_id"] == rid} \
+        == {0, 1, 2, 3} - repaired
     # repaired checkpoint rows are stamped 'repair:<run_id>', so a
     # throughput metric filtering run_id == rid cannot claim the crashed
     # run's rows (jobs/quality_filter.py rows_this_run)
@@ -359,27 +379,6 @@ def test_changed_n_groups_before_first_checkpoint_raises(spark,
     assert got.select("image_id").distinct().count() == 400
 
 
-def test_n_groups_guard_sees_mixed_schema_checkpoint(spark, synth_images_df,
-                                                    tmp_path):
-    """One checkpoint snapshot holding a pre-guard 4-column file (no
-    n_groups) AND a newer 5-column file that recorded n_groups=3: the
-    recorded modulus must stay visible whichever footer Spark samples,
-    so resuming with n_groups=4 raises."""
-    res, aud, ck = _tables(tmp_path / "mixed")
-    ck.append(spark.createDataFrame(
-        [(0, "old", 10, 1.0)],
-        "part_id int, run_id string, n_rows long, committed_at double"))
-    ck.append(spark.createDataFrame(
-        [(1, "new", 10, 2.0, 3)], resume._CKPT_SCHEMA))
-    assert len(ck.current_snapshot()["files"]) >= 2
-    with pytest.raises(ValueError, match="n_groups"):
-        resume.check_n_groups(spark, ck, 4)
-    with pytest.raises(ValueError, match="n_groups"):
-        run_with_resume(spark, synth_images_df.limit(40), res, aud, ck,
-                        n_groups=4)
-    resume.check_n_groups(spark, ck, 3)          # the recorded value passes
-
-
 def test_stage_input_rejects_part_id_clash(spark, synth_images_df, tmp_path):
     """Same clash discipline as apply_core_rules / salted aggs: a
     caller's pre-existing part_id column must raise, not silently
@@ -395,17 +394,43 @@ def test_stage_input_rejects_part_id_clash(spark, synth_images_df, tmp_path):
 def test_corrupt_head_raises_not_empty(spark, tmp_path):
     """HEAD naming a missing manifest is corruption: reading it as an
     empty table would let the next append permanently publish the
-    truncation of all prior contents."""
+    truncation of all prior contents. A HEAD manifest without the format
+    stamp was written by older code and is refused the same way, by
+    every read path and by append before it publishes anything."""
     import os
 
+    for damage, match in (("missing", "corrupt"),
+                          ("formatless", "older code")):
+        tbl = LocalSnapshotTable(str(tmp_path / damage))
+        tbl.append(spark.range(5).toDF("x"))
+        snap = tbl.current_snapshot()
+        if damage == "missing":
+            os.remove(os.path.join(tbl.meta_dir, snap["snapshot"]))
+        else:
+            _strip_format(tbl)
+        head = open(tbl._head_path()).read()
+        data_dirs = set(os.listdir(tbl.data_dir))
+        for call in (tbl.current_snapshot, lambda: tbl.read(spark),
+                     tbl.history,
+                     lambda: tbl.append(spark.range(3).toDF("x"))):
+            with pytest.raises(RuntimeError, match=match):
+                call()
+        assert open(tbl._head_path()).read() == head
+        assert set(os.listdir(tbl.data_dir)) == data_dirs
+
+
+def test_formatless_parent_snapshot_raises(spark, tmp_path):
+    """A format-less manifest behind HEAD is refused too: reading it by
+    snapshot id, and walking the chain through it."""
     tbl = LocalSnapshotTable(str(tmp_path / "t"))
-    tbl.append(spark.range(5).toDF("x"))
-    snap = tbl.current_snapshot()
-    os.remove(os.path.join(tbl.meta_dir, snap["snapshot"]))
-    with pytest.raises(RuntimeError, match="corrupt"):
-        tbl.current_snapshot()
-    with pytest.raises(RuntimeError, match="corrupt"):
-        tbl.read(spark)
+    s1 = tbl.append(spark.range(5).toDF("x"))
+    tbl.append(spark.range(5, 8).toDF("x"))
+    _strip_format(tbl, s1)
+    assert tbl.read(spark).count() == 8          # HEAD itself is stamped
+    with pytest.raises(RuntimeError, match="older code"):
+        tbl.read(spark, snapshot_id=s1)
+    with pytest.raises(RuntimeError, match="older code"):
+        tbl.history()
 
 
 def test_merge_by_key_with_extra_target_columns(spark, tmp_path):
@@ -443,20 +468,21 @@ def test_job_runs_with_aqe_off(spark, synth_images_df, tmp_path,
     _assert_same_rows(res.read(spark), P.quality_filter(df).drop("bytes"))
 
 
-def test_resume_over_byte_bearing_half_commit(spark, synth_images_df,
-                                              tmp_path, artifacts_dir):
+def test_resume_refuses_warehouse_from_older_code(spark, synth_images_df,
+                                                 tmp_path):
     """A warehouse that earlier (pixel-carrying) code half-committed:
     group 0's byte-bearing result rows are published with no checkpoint
-    row. Resuming must roll group 0 forward as it is, append the other
-    groups' slim label rows, and a mergeSchema read must hold exactly
-    one row per image_id, equal to the whole-table pipeline."""
+    row, under a manifest without the format stamp. Resuming must raise
+    before writing anything: no checkpoint, audit or stage."""
+    import os
+
     from pyspark.sql import functions as F
 
     from bioanalyzer_backend_spark.operators.skew import stable_salt
     from bioanalyzer_backend_spark.plans import pipeline as P
 
     df = synth_images_df.limit(300)
-    res, aud, ck = _tables(tmp_path / "legacy")
+    res, aud, ck = _tables(tmp_path / "old")
     # what the pixel-carrying job committed for group 0: the dedup flag
     # stamped over the full byte-bearing frame, then the group's
     # pipeline with part_id appended
@@ -466,18 +492,10 @@ def test_resume_over_byte_bearing_half_commit(spark, synth_images_df,
                           with_dedup=False).withColumn("part_id", F.lit(0))
     res.append(g0)
     assert binary_columns(res.read(spark)) == ["bytes"]
-    n_g0 = res.read(spark).count()
-    assert 0 < n_g0 < 300
+    _strip_format(res)
 
-    stats = run_with_resume(spark, df, res, aud, ck, n_groups=4)
-    assert stats["repaired_groups"] == [0]
-    assert stats["newly_committed"] == 3
-
-    got = res.read(spark)
-    assert got.count() == 300
-    assert got.select("image_id").distinct().count() == 300
-    # only the legacy group carries pixels; the new groups are slim
-    assert got.where("bytes IS NOT NULL").count() == n_g0
-    assert {r[0] for r in got.where("bytes IS NOT NULL")
-            .select("part_id").distinct().collect()} == {0}
-    _assert_same_rows(got, P.quality_filter(df).drop("bytes"))
+    with pytest.raises(RuntimeError, match="older code"):
+        run_with_resume(spark, df, res, aud, ck, n_groups=4)
+    assert ck.read(spark) is None
+    assert aud.read(spark) is None
+    assert not os.path.exists(os.path.join(res.root, "_stage"))
