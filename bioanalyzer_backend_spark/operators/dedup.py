@@ -10,8 +10,9 @@ Four families over the image+caption table (and any text table):
 All are DataFrame-native where possible; SimHash uses one Arrow-batched
 pandas UDF (variable-length token sets don't vectorize as Columns).
 Shuffle hygiene: every operator shuffles only (id, key/signature)
-projections, never the binary ``bytes`` column; callers re-attach flags by
-id (broadcast-able) — see plans/pipeline.apply_dedup_flag.
+projections, never the binary ``bytes`` column; flags re-attach by id or
+key — the exact rule is dup_groups + apply_dedup_flag below, behind the
+one AQE guard for byte-bearing frames.
 """
 
 from __future__ import annotations
@@ -20,64 +21,110 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType
 
 from .. import sqlgen
 
 
+def binary_columns(df: DataFrame) -> list[str]:
+    """Names of df's BinaryType (pixel payload) columns."""
+    return [f.name for f in df.schema.fields
+            if isinstance(f.dataType, BinaryType)]
+
+
+def dup_groups(df: DataFrame, key: str = "phash",
+               id_col: str = "image_id") -> DataFrame:
+    """``(key, _canon, _n)`` for every multi-member key group: canonical
+    = min id, ``_n`` = member count. The ONE dup-group set of the exact
+    rule (apply_dedup_flag, exact_dedup, multimodal.verify_dup_groups).
+
+    Computed from the slim (id, key) projection, so the binary ``bytes``
+    column never enters its shuffle (SURVEY.md section 4, "binary-column
+    hygiene"). groupBy+min instead of a window: the algebraic aggregate
+    gets map-side partial combine, so a hot key (mass-duplicated image)
+    reduces to one row per map task instead of concentrating every
+    duplicate row in a single window reducer. A NULL key forms a group
+    here but never equi-joins back, so NULL-key rows are never dups (an
+    undecodable image's phash is NULL, error-row semantics)."""
+    return (df.select(id_col, key).groupBy(key)
+            .agg(F.min(id_col).alias("_canon"), F.count("*").alias("_n"))
+            .where(F.col("_n") > 1))
+
+
+def apply_dedup_flag(df: DataFrame, key: str = "phash",
+                     id_col: str = "image_id") -> DataFrame:
+    """is_dup: non-canonical rows of a key group (canonical = min id).
+
+    Two-phase so the binary `bytes` column never enters a network
+    shuffle: the dup_groups aggregate reads a two-column projection, and
+    is_dup falls out as ``id != canonical`` on the probe side of one
+    left join, so no second pass over the input exists at all. The join
+    is per key: an id canonical for key B does not rescue that id's
+    non-canonical membership of key A.
+
+    Join-strategy gating (the 10^12-row case): the dup-group set is a
+    few % of a crawl, but at 10^12 rows that can still be billions of
+    (phash, canon) pairs, so an unconditional broadcast hint would OOM
+    the driver. There is therefore NO hint: AQE measures the
+    materialized build side at runtime and picks broadcast when it is
+    actually small (and a local shuffle read on the probe side, so
+    small-scale plans stay bytes-shuffle-free — asserted in
+    tests/test_plans_explain.py). At warehouse scale the input is
+    bucketed by bucket(phash, N), making the agg shuffle-free and the
+    probe a bucket-local join with no exchange on either side.
+
+    The bytes-never-network-shuffled property is therefore CONDITIONAL,
+    and the guard below closes only the CONFIGURED-off hole: a
+    byte-bearing frame with AQE disabled is rejected loudly (round-2
+    advice). Two residual cases remain, by design rather than
+    oversight: (1) even under AQE, if the measured dup-group side
+    exceeds the adaptive broadcast threshold the join stays sort-merge
+    and bytes DO shuffle — at that dup density no driver-side strategy
+    is safe, and the warehouse answer is the bucket(phash, N) layout
+    (shuffle-free agg + bucket-local probe, tests/test_bucketing.py);
+    (2) under AQE's broadcast conversion the probe side's shuffle-map
+    stage still spills its batches to LOCAL shuffle files before the
+    plan flips to a local shuffle read — disk, never the wire.
+    """
+    if "_canon" in df.columns:
+        # the post-join F.col('_canon') reference would be ambiguous
+        # (two same-named columns after the left join) — the same
+        # temp-column clash apply_core_rules raises on
+        raise ValueError("apply_dedup_flag reserves the column name "
+                         "'_canon'; rename it on the input")
+    if binary_columns(df):
+        aqe = str(df.sparkSession.conf.get(
+            "spark.sql.adaptive.enabled", "true")).lower()
+        if aqe != "true":
+            raise ValueError(
+                "apply_dedup_flag on a byte-bearing frame needs AQE "
+                "(spark.sql.adaptive.enabled=true) — otherwise the probe "
+                "join network-shuffles the binary column")
+    out = df.join(dup_groups(df, key, id_col).select(key, "_canon"), key,
+                  "left")
+    return (out
+            .withColumn("is_dup",
+                        F.col("_canon").isNotNull()
+                        & (F.col(id_col) != F.col("_canon")))
+            .drop("_canon"))
+
+
 def exact_dedup(df: DataFrame, key: str = "phash",
                 id_col: str = "image_id") -> DataFrame:
-    """Keep only canonical rows (min id per key group) — A7 semantics.
-
-    groupBy+min instead of a window: the algebraic aggregate gets
-    map-side partial combine, so a mass-duplicated key reduces to one row
-    per map task instead of concentrating all rows in one window reducer
-    (same rationale as plans/pipeline.apply_dedup_flag).
-
-    NULL keys are NOT duplicates of each other (an undecodable image's
-    phash is NULL, error-row semantics): those rows pass through
-    untouched — grouping them would silently keep only one of n distinct
-    broken rows, and apply_dedup_flag's join-based twin already leaves
-    NULL keys non-dup (NULL never equi-matches).
-
-    One pass over *df* for the keep decision (keep iff key IS NULL or id
-    is a canonical min-id): a previous version unioned a not-null semi-
-    join branch with an is-null branch, scanning *df*'s full width twice
-    — cheap on a parquet scan, but with an expensive upstream lineage
-    (UDF pipeline) the whole input pipeline re-executed for the second
-    branch. The slim keeper-id aggregate still reads its own (id, key)
-    projection, which column-prunes at the source."""
-    if "_canonical" in df.columns:
+    """Keep only canonical rows (min id per key group) — A7 semantics:
+    the rows apply_dedup_flag leaves ``is_dup = false``, in *df*'s column
+    order. NULL-key rows pass through untouched (grouping them would
+    silently keep only one of n distinct broken rows), and a byte-bearing
+    frame with AQE off raises like apply_dedup_flag."""
+    if "is_dup" in df.columns:
         raise ValueError("exact_dedup reserves the column name "
-                         "'_canonical'; rename it on the input")
-    # Join on (id, key), not id alone: when the INPUT carries duplicate
-    # ids across keys, an id that is canonical for key B must not rescue
-    # that same id's non-canonical membership of key A — an id-only
-    # marker join kept (id=2, key=A) because min(B)=2 (caught by a
-    # round-5 review; the per-key twin apply_dedup_flag always had the
-    # per-key semantics). The (min-id, key) pairs are unique per key, so
-    # no distinct is needed to guard the left join against fan-out.
-    slim = (df.where(F.col(key).isNotNull())
-            .select(id_col, key)
-            .groupBy(key).agg(F.min(id_col).alias(id_col))
-            .withColumn("_canonical", F.lit(True)))
-    return (df.join(slim, [id_col, key], "left")
-            .where(F.col(key).isNull() | F.col("_canonical").isNotNull())
-            .drop("_canonical"))
+                         "'is_dup'; rename it on the input")
+    return (apply_dedup_flag(df, key, id_col)
+            .where(~F.col("is_dup")).select(*df.columns))
 
 
 def _tokens_col(text_col: str):
     return F.expr(sqlgen.tokens_expr(text_col, sqlgen.SPARK))
-
-
-def _shingle_array_expr(n: int = 3) -> str:
-    """Distinct word n-gram shingle ARRAY over a ``toks`` column — the
-    ONE definition both the exploded shingles() view and the minhash
-    signature pipeline build from (two hand-kept copies previously
-    risked silently diverging the Spark/DuckDB bit-for-bit agreement)."""
-    parts = ", ".join(f"element_at(toks, i + {j})" for j in range(n))
-    seq = sqlgen.int_seq("1", f"size(toks) - {n - 1}", sqlgen.SPARK)
-    return (f"array_distinct(transform({seq}, "
-            f"i -> concat_ws(' ', {parts})))")
 
 
 def shingles(df: DataFrame, text_col: str, id_col: str,
@@ -85,7 +132,8 @@ def shingles(df: DataFrame, text_col: str, id_col: str,
     """(id, shingle) pairs: distinct word n-gram shingles."""
     toks = df.select(F.col(id_col).alias("_id"),
                      _tokens_col(text_col).alias("toks"))
-    sh = toks.selectExpr("_id", f"{_shingle_array_expr(n)} AS sh")
+    sh = toks.selectExpr(
+        "_id", f"{sqlgen.shingle_array('toks', n, sqlgen.SPARK)} AS sh")
     return sh.select("_id", F.explode("sh").alias("shingle"))
 
 
@@ -151,10 +199,9 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "caption",
     ``n_rows`` minhashes per band (default b=4, r=4 — candidate
     threshold (1/b)^(1/r) ~= 0.71, matched to the 0.8 Jaccard verify
     bar; r=1 admits candidates from s ~= 0.16, exploding the candidate
-    volume quadratically at 10^12 rows). Deterministic hash family:
-    4-hex-char slices of seeded md5 digests (8 slices/digest, hash ONCE
-    per digest then slice — md5 inside interpreted HOF lambdas is the
-    expensive part); a band signature concatenates its r slice-mins.
+    volume quadratically at 10^12 rows). Shingles, md5 digests and band
+    signatures render through sqlgen (shingle_array, minhash_hash_exprs,
+    minhash_band_exprs), the same renderers as the SQL twin.
     All signature work is a NATIVE per-row expression, no explode, no
     groupBy: the only shuffle in the candidates plan is the final bucket
     join on (band, signature), which carries two short strings per row —
@@ -174,23 +221,12 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "caption",
     """
     toks = df.select(F.col(id_col).alias("_id"),
                      _tokens_col(text_col).alias("toks"))
-    sh = toks.selectExpr("_id", f"{_shingle_array_expr(3)} AS sh")
-    n_digests = -(-(n_bands * n_rows) // 8)
-    sh = sh.selectExpr("_id", *[
-        (f"transform(sh, g -> md5('{'~' * k}' || g)) AS hs{k}" if k
-         else "transform(sh, g -> md5(g)) AS hs0")
-        for k in range(n_digests)])
-
-    def _min_slice(i: int) -> str:
-        dig, off = divmod(i, 8)
-        return (f"array_min(transform(hs{dig}, "
-                f"h -> substring(h, {4 * off + 1}, 4)))")
-
-    mins = [F.expr(" || ".join(_min_slice(b * n_rows + r)
-                               for r in range(n_rows))).alias(f"mh{b}")
-            for b in range(n_bands)]
+    d = sqlgen.SPARK
+    sh = toks.selectExpr("_id", f"{sqlgen.shingle_array('toks', 3, d)} AS sh")
     stack_args = ", ".join(f"{b}, mh{b}" for b in range(n_bands))
-    sig = (sh.select("_id", *mins)
+    sig = (sh.selectExpr("_id", *sqlgen.minhash_hash_exprs(
+               "sh", n_bands, n_rows, d))
+           .selectExpr("_id", *sqlgen.minhash_band_exprs(n_bands, n_rows, d))
            .selectExpr("_id", f"stack({n_bands}, {stack_args}) AS (band, sig)")
            .where(F.col("sig").isNotNull()))
     if max_bucket == "auto":

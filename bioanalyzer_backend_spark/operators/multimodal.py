@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..datagen import imgcodec
+from .dedup import dup_groups
 
 IMAGE_STATS_SCHEMA = ("image_id string, ok boolean, err string, "
                       "mean_r double, mean_g double, mean_b double, "
@@ -128,8 +129,7 @@ DUP_VERIFY_SCHEMA = ("phash long, image_id string, canonical_id string, "
 
 
 def verify_dup_groups(df: DataFrame, psnr_min: float = 40.0,
-                      max_group: int = 1024,
-                      broadcast_hint: bool = False) -> DataFrame:
+                      max_group: int = 1024) -> DataFrame:
     """Pixel-level verification of phash dup groups via grouped-map
     ``applyInPandas`` — a phash collision is only a CANDIDATE duplicate;
     the keep/drop decision needs the decoded-pixel invariant
@@ -138,8 +138,9 @@ def verify_dup_groups(df: DataFrame, psnr_min: float = 40.0,
 
     Binary-column hygiene note: this is the one operator that must
     co-locate image bytes by key, so it shuffles bytes — but only for
-    rows inside multi-member phash groups (the broadcast semi-join below
-    prunes singletons first, i.e. a few % of a crawl), never the full
+    rows inside multi-member phash groups (dedup.dup_groups, the exact
+    rule's own group set, prunes singletons first, i.e. a few % of a
+    crawl; an inner join whose strategy AQE picks), never the full
     table. A degenerate hot phash (solid-color/template images) would put
     every member's bytes into ONE Python worker, so groups larger than
     ``max_group`` are excluded here and belong to the batch dedup path,
@@ -149,19 +150,12 @@ def verify_dup_groups(df: DataFrame, psnr_min: float = 40.0,
     (error-row semantics, F6)."""
     import pyspark.sql.functions as F
 
-    slim = df.select("phash", "image_id", "bytes", "fmt")
-    multi = (slim.groupBy("phash").agg(F.count("*").alias("_n"))
-             .where((F.col("_n") > 1) & (F.col("_n") <= max_group))
-             .select("phash"))
-    # No broadcast hint by default: ``multi`` is the set of multi-member
-    # phash groups, unbounded at crawl scale (billions of rows at 10^12
-    # images would OOM the driver under a forced broadcast). AQE measures
-    # the materialized set at runtime and broadcasts only when it is
-    # actually small; callers that know the group count is bounded may
-    # force the hint.
-    if broadcast_hint:
-        multi = F.broadcast(multi)
-    cand = slim.join(multi, "phash")
+    # No broadcast hint: the multi-member group set is unbounded at crawl
+    # scale (billions of rows at 10^12 images would OOM the driver under
+    # a forced broadcast). AQE measures the materialized set at runtime
+    # and broadcasts only when it is actually small.
+    multi = dup_groups(df).where(F.col("_n") <= max_group).select("phash")
+    cand = df.select("phash", "image_id", "bytes", "fmt").join(multi, "phash")
 
     def gp(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("image_id").reset_index(drop=True)

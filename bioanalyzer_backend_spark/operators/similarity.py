@@ -18,11 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _dot_expr(a: str, b: str) -> str:
-    return (f"aggregate(zip_with({a}, {b}, (x, y) -> "
-            f"CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-            f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
+from ..sqlgen import SPARK, dot
 
 
 def cosine_topk(df: DataFrame, query_vec, k: int = 10,
@@ -35,8 +31,8 @@ def cosine_topk(df: DataFrame, query_vec, k: int = 10,
     qlit = "array(" + ", ".join(f"CAST({x!r} AS FLOAT)" for x in q) + ")"
     scored = df.selectExpr(
         id_col,
-        f"{_dot_expr(vec_col, qlit)} AS dp",
-        f"{_dot_expr(vec_col, vec_col)} AS nn",
+        f"{dot(vec_col, qlit, SPARK)} AS dp",
+        f"{dot(vec_col, vec_col, SPARK)} AS nn",
     ).selectExpr(
         id_col,
         # NULLIF guards zero-norm junk vectors: 0/0 = NaN and Spark
@@ -257,7 +253,7 @@ def embedding_neardup_pairs(df: DataFrame, dim: int, threshold: float = 0.95,
                     F.col("b._id").alias("id_b")))
     vecs = df.select(F.col(id_col).alias("_vid"),
                      F.col(vec_col).alias("_v")) \
-        .withColumn("_n", F.expr(f"SQRT({_dot_expr('_v', '_v')})"))
+        .withColumn("_n", F.expr(f"SQRT({dot('_v', '_v', SPARK)})"))
     pairs = (cand
              .join(vecs.selectExpr("_vid AS id_a", "_v AS va", "_n AS na"),
                    "id_a")
@@ -270,7 +266,7 @@ def embedding_neardup_pairs(df: DataFrame, dim: int, threshold: float = 0.95,
         # junk pairs would surface as confirmed near-dups. NULL fails
         # the filter instead, matching the _q_embedding_neardup SQL
         # twin's NULLIF(a.nrm * b.nrm, 0.0) and cosine_topk's guard.
-        f"{_dot_expr('va', 'vb')} / "
+        f"{dot('va', 'vb', SPARK)} / "
         f"NULLIF(na * nb, CAST(0.0 AS DOUBLE)) AS cos_sim")
     return scored.where(F.col("cos_sim") >= threshold)
 
@@ -281,7 +277,7 @@ def _with_norm(df: DataFrame, id_alias: str, vec_alias: str,
     per-pair work downstream is one dot product, not three."""
     return df.selectExpr(
         f"{id_col} AS {id_alias}", f"{vec_col} AS {vec_alias}",
-        f"SQRT({_dot_expr(vec_col, vec_col)}) AS {norm_alias}")
+        f"SQRT({dot(vec_col, vec_col, SPARK)}) AS {norm_alias}")
 
 
 def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
@@ -311,7 +307,7 @@ def knn_join(corpus: DataFrame, queries: DataFrame, k: int = 3,
     c = _with_norm(corpus, "cid", "ce", "cn", vec_col, id_col)
     scored = (c.crossJoin(F.broadcast(q))
               .selectExpr("qid", "cid",
-                          f"ROUND({_dot_expr('ce', 'qe')} / "
+                          f"ROUND({dot('ce', 'qe', SPARK)} / "
                           f"NULLIF(cn * qn, CAST(0.0 AS DOUBLE)), 5)"
                           f" AS cos_sim"))
     return _topk_per_query(scored, k)
@@ -354,7 +350,7 @@ def knn_join_lsh(corpus: DataFrame, queries: DataFrame, k: int = 3,
     q = _with_norm(queries, "qid", "qe", "qn", vec_col, id_col)
     scored = (cand.join(c, "cid").join(F.broadcast(q), "qid")
               .selectExpr("qid", "cid",
-                          f"ROUND({_dot_expr('ce', 'qe')} / "
+                          f"ROUND({dot('ce', 'qe', SPARK)} / "
                           f"NULLIF(cn * qn, CAST(0.0 AS DOUBLE)), 5)"
                           f" AS cos_sim"))
     return _topk_per_query(scored, k)

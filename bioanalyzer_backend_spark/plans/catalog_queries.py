@@ -17,6 +17,7 @@ Registry contract (consumed by __spark_entry__):
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -185,13 +186,8 @@ SELECT row_id, n_en, n_es, n_de, n_fr, {guess} AS lang_guess FROM h
 def _shingles(d: str, text_col: str = "text") -> str:
     """Word 3-gram shingles of the token stream."""
     toks = sqlgen.tokens_expr(text_col, d)
-    n = sqlgen.arr_len("toks", d)
-    seq = sqlgen.int_seq("1", f"{n} - 2", d)
-    mk = (f"i -> concat_ws(' ', {sqlgen.arr_get('toks', 'i', d)}, "
-          f"{sqlgen.arr_get('toks', 'i + 1', d)}, "
-          f"{sqlgen.arr_get('toks', 'i + 2', d)})")
     return (f"SELECT doc_id AS row_id, toks, "
-            f"{sqlgen.arr_distinct(sqlgen.arr_transform(seq, mk, d), d)} AS sh "
+            f"{sqlgen.shingle_array('toks', 3, d)} AS sh "
             f"FROM (SELECT doc_id, {toks} AS toks FROM documents)")
 
 
@@ -251,14 +247,10 @@ def _minhash_sig_ctes_inline(d: str, n_bands: int = 4, n_rows: int = 4,
     Banded MinHash with ``n_rows`` rows per band (default b=4, r=4 —
     candidate threshold (1/b)^(1/r) ~= 0.71, matched to the 0.8 Jaccard
     verify bar; r=1 admits candidates from s ~= 0.16, which explodes the
-    candidate volume quadratically at 10^12 rows). Each band signature is
-    the ``||``-concat of r independent minhashes; the hash family is
-    4-hex-char slices of seeded md5 digests (8 slices per digest,
-    ceil(b*r/8) digests per shingle — hash ONCE per digest then slice:
-    md5 inside interpreted HOF lambdas is the expensive part). ``||``
-    rather than concat(): DuckDB's concat() skips NULL args while
-    Spark's returns NULL — ``||`` null-propagates identically in both,
-    so short docs (<3 tokens) get NULL signatures in both dialects.
+    candidate volume quadratically at 10^12 rows). The digests and band
+    signatures render in sqlgen (minhash_hash_exprs / minhash_band_exprs,
+    shared with operators/dedup.minhash_lsh_candidates); short docs (<3
+    tokens) get NULL signatures in both dialects.
 
     Everything is a NATIVE per-row expression — no explode, no groupBy:
     the only shuffle in the whole candidates plan is the final slim
@@ -269,21 +261,8 @@ def _minhash_sig_ctes_inline(d: str, n_bands: int = 4, n_rows: int = 4,
     the projection by both optimizers, re-evaluating the whole
     shingle+md5 expression a second time per branch (measured 10x
     slowdown in Spark)."""
-    n_digests = -(-(n_bands * n_rows) // 8)
-    hashes = ", ".join(
-        sqlgen.arr_transform("sh", f"g -> md5({sqlgen.slit('~' * k)} || g)"
-                             if k else "g -> md5(g)", d) + f" AS hs{k}"
-        for k in range(n_digests))
-
-    def _min_slice(i: int) -> str:
-        dig, off = divmod(i, 8)
-        return sqlgen.arr_min(
-            sqlgen.arr_transform(f"hs{dig}",
-                                 f"h -> substring(h, {4 * off + 1}, 4)", d), d)
-
-    mins = ", ".join(
-        " || ".join(_min_slice(b * n_rows + r) for r in range(n_rows))
-        + f" AS mh{b}" for b in range(n_bands))
+    hashes = ", ".join(sqlgen.minhash_hash_exprs("sh", n_bands, n_rows, d))
+    mins = ", ".join(sqlgen.minhash_band_exprs(n_bands, n_rows, d))
     unions = " UNION ALL ".join(
         f"SELECT row_id, {b} AS band, mh{b} AS mh FROM m" for b in range(n_bands))
     return f"""s AS ({shingle_src or _shingles(d)}),
@@ -474,8 +453,8 @@ def _q_embedding_neardup(d: str) -> str:
     bucket = " + ".join(
         f"CASE WHEN {sqlgen.arr_get('embedding', str(j + 1), d)} > 0 "
         f"THEN {1 << j} ELSE 0 END" for j in range(8))
-    dot_ab = _dot("a.embedding", "b.embedding", d)
-    dot_self = _dot("embedding", "embedding", d)
+    dot_ab = sqlgen.dot("a.embedding", "b.embedding", d)
+    dot_self = sqlgen.dot("embedding", "embedding", d)
     # norm computed ONCE per vector before the join — per-pair work is a
     # single dot product, not three (O(pairs*dim) saved)
     return f"""
@@ -1014,24 +993,13 @@ def _q_nonempty_filter(d: str) -> str:
             f"AND lower(trim(text)) NOT IN ({sentinels})")
 
 
-def _dot(a: str, b: str, d: str) -> str:
-    """Deterministic left-to-right double dot product of float arrays."""
-    if d == SPARK:
-        return (f"aggregate(zip_with({a}, {b}, (x, y) -> "
-                f"CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-                f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
-    return (f"list_sum(list_transform(range(1, CAST(len({a}) AS BIGINT) + 1), "
-            f"i -> CAST(list_extract({a}, i) AS DOUBLE) * "
-            f"CAST(list_extract({b}, i) AS DOUBLE)))")
-
-
 def _q_cosine_topk(d: str) -> str:
     """Similarity search: brute-force cosine top-10 vs anchor vec_id=0.
     The query vector's norm is computed once in the (broadcast) single-row
     CTE, so the per-row work is one dot product + one self-norm."""
-    dot_ab = _dot("a.embedding", "q.qe", d)
-    dot_aa = _dot("a.embedding", "a.embedding", d)
-    dot_qq = _dot("embedding", "embedding", d)
+    dot_ab = sqlgen.dot("a.embedding", "q.qe", d)
+    dot_aa = sqlgen.dot("a.embedding", "a.embedding", d)
+    dot_qq = sqlgen.dot("embedding", "embedding", d)
     return f"""
 WITH q AS (SELECT embedding AS qe, SQRT({dot_qq}) AS qn
            FROM embeddings WHERE vec_id = 0),
@@ -1295,8 +1263,8 @@ def _q_knn_join(d: str) -> str:
     Exactly mirrors operators/similarity.knn_join: norms hoisted into
     the per-side CTEs, ROUND(...,5), NULLS LAST so zero-norm junk sorts
     out of the top-k identically in both dialects."""
-    dot_qq = _dot("embedding", "embedding", d)
-    dot_cq = _dot("ce", "qe", d)
+    dot_qq = sqlgen.dot("embedding", "embedding", d)
+    dot_cq = sqlgen.dot("ce", "qe", d)
     return f"""
 WITH q AS (SELECT vec_id AS qid, embedding AS qe, SQRT({dot_qq}) AS qn
            FROM embeddings WHERE vec_id < 20),
@@ -1562,7 +1530,7 @@ def _q_ann_lsh_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact cosine re-rank on survivors (operators/similarity.py).
     DuckDB-oracled since round 5 against a numpy twin that shares only
     the hyperplane matrix and re-implements probe + re-rank
-    (_ann_lsh_expected_path); output uses the same rounded-rerank
+    (_ann_expected_path); output uses the same rounded-rerank
     convention as the exact-mode entries (k-boundary rounding ties)."""
     from pyspark.sql import functions as F
 
@@ -1581,7 +1549,7 @@ def _q_ann_ivf_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 4 nearest of 16 centroid lists, exact cosine re-rank on survivors
     (operators/similarity.py ivf_cosine_topk). DuckDB-oracled since
     round 5 against a numpy twin that shares only the quantizer and
-    re-implements assignment + probe + re-rank (_ann_ivf_expected_path);
+    re-implements assignment + probe + re-rank (_ann_expected_path);
     rounded-rerank output convention like the exact-mode entries."""
     from pyspark.sql import functions as F
 
@@ -1733,36 +1701,23 @@ def _write_expected(path: str, pdf) -> None:
     os.replace(tmp, path)
 
 
-def _ann_lsh_expected_path() -> str:
-    """Numpy twin of _q_ann_lsh_top10: shares only the hyperplane matrix
-    (similarity._planes — an algorithm parameter, like spec constants)
-    and re-implements signature packing, the Hamming-radius probe, the
-    cosine, and the rounded re-rank independently of the Spark plan
-    (pandas-UDF matmul + bit_count + HOF fold + TakeOrdered). A weight
-    regression, int wrap, radius off-by-one, or NULLIF loss diverges."""
-    path, ok = _expected_cache("ann_lsh")
+def _ann_expected_path(tag: str,
+                       mask: Callable[..., np.ndarray]) -> str:
+    """Numpy twin of an approximate ANN entry (query = vec_id 0):
+    ``mask(ids, mat, q)`` is its candidate set (_lsh_candidate_mask
+    shares only the hyperplane matrix, _ivf_candidate_mask only the
+    quantizer — algorithm parameters, like spec constants), and the
+    cosine plus rounded re-rank are re-implemented independently of the
+    Spark plan (pandas-UDF matmul + bit_count / list assignment + HOF
+    fold + TakeOrdered). A weight regression, int wrap, radius or probe
+    off-by-one, assignment bug or NULLIF loss diverges."""
+    path, ok = _expected_cache(tag)
     if ok:
         return path
     ids, mat = _load_embeddings_np()
     q = mat[ids == 0][0]
-    keep = _lsh_candidate_mask(ids, mat, q, radius=4)
-    _write_expected(path, _ann_rounded_topk_np(ids, mat, q, keep))
-    return path
-
-
-def _ann_ivf_expected_path() -> str:
-    """Numpy twin of _q_ann_ivf_top10: shares the quantizer
-    (similarity._kmeans_core on the identically-constructed id-ordered
-    sample) and re-implements list assignment, probe selection, and the
-    rounded re-rank. An assignment bug, probe off-by-one, or candidate
-    filter regression diverges."""
-    path, ok = _expected_cache("ann_ivf")
-    if ok:
-        return path
-    ids, mat = _load_embeddings_np()
-    q = mat[ids == 0][0]
-    keep = _ivf_candidate_mask(ids, mat, q, n_probe=4)
-    _write_expected(path, _ann_rounded_topk_np(ids, mat, q, keep))
+    _write_expected(path, _ann_rounded_topk_np(ids, mat, q,
+                                               mask(ids, mat, q)))
     return path
 
 
@@ -1800,8 +1755,8 @@ def _langid_udf_expected_path() -> str:
     return path
 
 
-def _read_expected_sql(builder) -> str:
-    return f"SELECT * FROM read_parquet('{builder()}')"
+def _read_expected_sql(path: str) -> str:
+    return f"SELECT * FROM read_parquet('{path}')"
 
 
 def _ann_exact_rerank(scored: DataFrame) -> DataFrame:
@@ -2430,9 +2385,11 @@ def registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]
     # exact-mode twins above remain).
     reg["langid_udf_documents"] = (_q_langid_udf_documents,
                                    _read_expected_sql(
-                                       _langid_udf_expected_path))
-    reg["ann_lsh_top10"] = (_q_ann_lsh_top10,
-                            _read_expected_sql(_ann_lsh_expected_path))
-    reg["ann_ivf_top10"] = (_q_ann_ivf_top10,
-                            _read_expected_sql(_ann_ivf_expected_path))
+                                       _langid_udf_expected_path()))
+    reg["ann_lsh_top10"] = (_q_ann_lsh_top10, _read_expected_sql(
+        _ann_expected_path("ann_lsh", partial(_lsh_candidate_mask,
+                                              radius=4))))
+    reg["ann_ivf_top10"] = (_q_ann_ivf_top10, _read_expected_sql(
+        _ann_expected_path("ann_ivf", partial(_ivf_candidate_mask,
+                                              n_probe=4))))
     return reg

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import spec, sqlgen
+# binary_columns: re-exported for resume.stage_input's pixel projection
+from ..operators.dedup import apply_dedup_flag, binary_columns  # noqa: F401
 
 _TEMP_COLS = ("t", "toks", "n", "n_tok", "n_utok", "n_stop", "n_alpha",
               "n_nonspace", "is_sentinel")
@@ -87,87 +89,6 @@ def apply_final_keep(df: DataFrame) -> DataFrame:
         F.col("keep_core")
         & (F.col("lang") != F.lit("und"))
         & (F.col("ppl") <= F.lit(spec.PPL_MAX)))
-
-
-def binary_columns(df: DataFrame) -> list[str]:
-    """Names of df's BinaryType (pixel payload) columns."""
-    from pyspark.sql.types import BinaryType
-
-    return [f.name for f in df.schema.fields
-            if isinstance(f.dataType, BinaryType)]
-
-
-def apply_dedup_flag(df: DataFrame, key: str = "phash",
-                     id_col: str = "image_id",
-                     broadcast_hint: bool = False) -> DataFrame:
-    """is_dup: non-canonical rows of a phash group (canonical = min id).
-
-    Two-phase so the binary `bytes` column never enters a network shuffle
-    (SURVEY.md section 4, "binary-column hygiene"): canonical ids come
-    from ``groupBy(phash).min(id)`` over a two-column projection — an
-    algebraic aggregate with map-side partial combine, so a hot phash
-    (mass-duplicated image) reduces to one row per map task instead of
-    concentrating every duplicate row in a single window reducer.
-
-    Join-strategy gating (the 10^12-row case): ``dup_groups`` is the set
-    of multi-member phash groups — a few % of a crawl, but at 10^12 rows
-    that can still be billions of (phash, canon) pairs, so an
-    UNCONDITIONAL broadcast hint would OOM the driver. Default is
-    therefore NO hint: AQE measures the materialized build side at
-    runtime and picks broadcast when it is actually small (and a local
-    shuffle read on the probe side, so small-scale plans stay
-    bytes-shuffle-free — asserted in tests/test_plans_explain.py). At
-    warehouse scale the input is bucketed by bucket(phash, N), making
-    the agg shuffle-free and the probe a bucket-local join with no
-    exchange on either side. Callers that KNOW the group set is bounded
-    (e.g. post-cap pipelines) may force the hint with
-    ``broadcast_hint=True``.
-
-    is_dup falls out as ``id != canonical`` on the probe side, so no
-    second pass over the input exists at all.
-
-    The bytes-never-network-shuffled property is therefore CONDITIONAL,
-    and the guard below closes only the CONFIGURED-off hole: a
-    byte-bearing frame with AQE disabled and no hint is rejected loudly
-    (round-2 advice, pipeline.py:128). Two residual cases remain, by
-    design rather than oversight: (1) even under AQE, if the measured
-    dup-group side exceeds the adaptive broadcast threshold the join
-    stays sort-merge and bytes DO shuffle — at that dup density no
-    driver-side strategy is safe, and the warehouse answer is the
-    bucket(phash, N) layout (shuffle-free agg + bucket-local probe,
-    tests/test_bucketing.py); (2) under AQE's broadcast conversion the
-    probe side's shuffle-map stage still spills its batches to LOCAL
-    shuffle files before the plan flips to a local shuffle read — disk,
-    never the wire.
-    """
-    if "_canon" in df.columns:
-        # the post-join F.col('_canon') reference would be ambiguous
-        # (two same-named columns after the left join) — the same
-        # temp-column clash apply_core_rules raises on
-        raise ValueError("apply_dedup_flag reserves the column name "
-                         "'_canon'; rename it on the input")
-    if binary_columns(df) and not broadcast_hint:
-        aqe = str(df.sparkSession.conf.get(
-            "spark.sql.adaptive.enabled", "true")).lower()
-        if aqe != "true":
-            raise ValueError(
-                "apply_dedup_flag on a byte-bearing frame needs AQE "
-                "(spark.sql.adaptive.enabled=true) or broadcast_hint=True "
-                "— otherwise the probe join network-shuffles the binary "
-                "column")
-    slim = df.select(id_col, key)
-    dup_groups = (slim.groupBy(key)
-                  .agg(F.min(id_col).alias("_canon"), F.count("*").alias("_n"))
-                  .where(F.col("_n") > 1)
-                  .select(key, "_canon"))
-    if broadcast_hint:
-        dup_groups = F.broadcast(dup_groups)
-    out = df.join(dup_groups, key, "left")
-    return (out
-            .withColumn("is_dup",
-                        F.col("_canon").isNotNull()
-                        & (F.col(id_col) != F.col("_canon")))
-            .drop("_canon"))
 
 
 def quality_filter(df: DataFrame, artifact_dir: str | None = None,

@@ -236,6 +236,55 @@ def tokens_expr(col: str, d: str) -> str:
     return arr_filter(trimmed, "x -> x != ''", d)
 
 
+def shingle_array(toks: str, n: int, d: str) -> str:
+    """Distinct word n-gram shingles of the token array *toks* — the ONE
+    rendering the registry SQL and the dedup operators both build on."""
+    parts = ", ".join(arr_get(toks, f"i + {j}" if j else "i", d)
+                      for j in range(n))
+    seq = int_seq("1", f"{arr_len(toks, d)} - {n - 1}", d)
+    return arr_distinct(
+        arr_transform(seq, f"i -> concat_ws(' ', {parts})", d), d)
+
+
+def minhash_hash_exprs(sh: str, n_bands: int, n_rows: int,
+                       d: str) -> list[str]:
+    """``hs{k}``: per-shingle md5 digests of the shingle array *sh*, one
+    seeded digest per 8 minhashes (``'~' * k`` salts digest k). Hash ONCE
+    per digest, slice many (minhash_band_exprs): md5 inside interpreted
+    HOF lambdas is the expensive part."""
+    n_digests = -(-(n_bands * n_rows) // 8)
+    return [arr_transform(sh, f"g -> md5({slit('~' * k)} || g)"
+                          if k else "g -> md5(g)", d) + f" AS hs{k}"
+            for k in range(n_digests)]
+
+
+def minhash_band_exprs(n_bands: int, n_rows: int, d: str) -> list[str]:
+    """``mh{b}``: band b's signature over the ``hs{k}`` digest columns —
+    the ``||``-concat of ``n_rows`` minhashes, each the min of one 4-hex
+    slice of a digest. ``||`` rather than concat(): DuckDB's concat()
+    skips NULL args while Spark's returns NULL; ``||`` null-propagates
+    identically in both, so a doc with no shingle gets a NULL band."""
+
+    def _min_slice(i: int) -> str:
+        dig, off = divmod(i, 8)
+        return arr_min(arr_transform(
+            f"hs{dig}", f"h -> substring(h, {4 * off + 1}, 4)", d), d)
+
+    return [" || ".join(_min_slice(b * n_rows + r) for r in range(n_rows))
+            + f" AS mh{b}" for b in range(n_bands)]
+
+
+def dot(a: str, b: str, d: str) -> str:
+    """Deterministic left-to-right double dot product of float arrays."""
+    if d == SPARK:
+        return (f"aggregate(zip_with({a}, {b}, (x, y) -> "
+                f"CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+                f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
+    return (f"list_sum(list_transform(range(1, CAST(len({a}) AS BIGINT) + 1), "
+            f"i -> CAST(list_extract({a}, i) AS DOUBLE) * "
+            f"CAST(list_extract({b}, i) AS DOUBLE)))")
+
+
 def scrub_expr(col: str, d: str) -> str:
     """The ordered PII/noise scrub chain (text_processing.py:110-125 style).
 

@@ -13,7 +13,7 @@ applyInPandasWithState for custom stateful operators):
   ``applyInPandasWithState``: the first arrival of a phash becomes
   canonical, every later arrival (any micro-batch) is flagged
   ``is_dup``. This is the streaming twin of the batch
-  ``plans/pipeline.apply_dedup_flag`` (which is per-job); an optional
+  ``operators/dedup.apply_dedup_flag`` (which is per-job); an optional
   processing-time TTL bounds state the same way the reference expires
   its cache rows (app/services/cache_manager.py:296-307, 24 h TTL).
 

@@ -168,6 +168,10 @@ def test_exact_dedup_keeps_min_id(spark):
     df = spark.createDataFrame(rows, "image_id string, phash long")
     kept = sorted(r.image_id for r in dedup.exact_dedup(df).collect())
     assert kept == ["i1", "i2"]
+    # is_dup is the flag exact_dedup filters on: an input one would be
+    # silently overwritten, so it raises instead
+    with pytest.raises(ValueError, match="is_dup"):
+        dedup.exact_dedup(df.withColumn("is_dup", F.lit(False)))
 
 
 def test_exact_dedup_null_keys_pass_through(spark):
@@ -662,6 +666,25 @@ def test_minhash_cap_report_surfaces_dropped_buckets(spark):
     # without a cap the report is an empty frame with the same schema
     pairs2, hot2 = dedup.minhash_lsh_candidates(df, return_report=True)
     assert hot2.count() == 0 and "bucket_n" in hot2.columns
+
+
+def test_minhash_operator_matches_sql_twin(spark):
+    """Operator == SQL twin: at the twin's cap (32) the DataFrame
+    operator and _q_minhash_bands render the same shingles, digests and
+    band signatures (sqlgen) and keep band buckets of size 2..32, so on
+    the parity corpus both return the same candidate pair set."""
+    from bioanalyzer_backend_spark.plans import catalog_queries as cq
+    from bioanalyzer_backend_spark.session import register_testdata_views
+    from bioanalyzer_backend_spark.sqlgen import SPARK
+
+    register_testdata_views(spark, cq._parity_sf_dir())
+    op = dedup.minhash_lsh_candidates(spark.table("documents"),
+                                      text_col="text", id_col="doc_id",
+                                      max_bucket=32)
+    got = {(r.id_a, r.id_b) for r in op.collect()}
+    want = {(r.ra, r.rb) for r in spark.sql(cq._q_minhash_bands(SPARK))
+            .collect()}
+    assert want and got == want
 
 
 def test_simhash_cap_report_surfaces_dropped_buckets(spark):

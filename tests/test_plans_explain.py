@@ -74,11 +74,10 @@ def test_dedup_probe_never_shuffles_bytes(spark, synth_images_df):
 
 
 def test_dedup_broadcast_hint_is_gated(spark, synth_images_df):
-    """Default = NO broadcast hint (AQE decides from the measured size —
-    an unconditional hint OOMs the driver at 10^12 rows);
-    broadcast_hint=True forces it. Proven by disabling auto-broadcast:
-    the default plan falls back to a non-broadcast join, the hinted one
-    still broadcasts."""
+    """NO broadcast hint (AQE decides from the measured size — an
+    unconditional hint OOMs the driver at 10^12 rows). Proven by
+    disabling auto-broadcast: the plan falls back to a non-broadcast
+    join, so the code adds no hint of its own."""
     old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -86,27 +85,28 @@ def test_dedup_broadcast_hint_is_gated(spark, synth_images_df):
     try:
         df = synth_images_df.select("image_id", "phash")
         plain = _plan(P.apply_dedup_flag(df))
-        hinted = _plan(P.apply_dedup_flag(df, broadcast_hint=True))
         assert "BroadcastHashJoin" not in plain
-        assert "BroadcastHashJoin" in hinted
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
 
 
 def test_dedup_flag_rejects_bytes_without_aqe(spark, synth_images_df):
-    """The bytes-never-network-shuffled invariant is conditional on AQE
-    (or an explicit broadcast hint); that configuration hole must fail
-    loudly, not silently sort-merge-shuffle the binary column."""
+    """The bytes-never-network-shuffled invariant is conditional on AQE;
+    that configuration hole must fail loudly, not silently
+    sort-merge-shuffle the binary column — for exact_dedup too, which
+    goes through the same dup-group join."""
     import pytest
+
+    from bioanalyzer_backend_spark.operators import dedup
 
     old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         with pytest.raises(ValueError, match="AQE"):
             P.apply_dedup_flag(synth_images_df)
-        # explicit hint: allowed (caller asserts the build side is small)
-        P.apply_dedup_flag(synth_images_df, broadcast_hint=True)
+        with pytest.raises(ValueError, match="AQE"):
+            dedup.exact_dedup(synth_images_df)
         # slim non-binary projection: allowed (nothing to protect)
         P.apply_dedup_flag(synth_images_df.select("image_id", "phash"))
     finally:
