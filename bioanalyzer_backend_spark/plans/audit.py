@@ -27,11 +27,9 @@ def audit_rows(result: DataFrame, run_id: str,
     """Melt per-rule PRESENT hits into long-form audit rows.
 
     ``group_id`` stamps the resume commit unit (NOT part_id, which is
-    the physical task partition): crash repair deletes-then-reappends by
-    group_id, making the audit roll-forward idempotent — without the
-    stamp, a crash between the audit append and the checkpoint append
-    would leave rows that a later repair duplicates under a new
-    run_id."""
+    the physical task partition), so a group's audit rows can be told
+    apart from other groups'; crash repair regenerates them only for a
+    group whose audit commit is missing (plans/resume.reconcile)."""
     lang = F.col("lang") if "lang" in result.columns else F.lit("all")
     base = result.select(
         F.spark_partition_id().alias("part_id"),

@@ -2,10 +2,13 @@
 
 Semantics inherited from the reference's cache-or-compute pattern
 (app/services/cache_manager.py:91-166: keyed lookup, else compute and
-upsert): work is split into deterministic id-hash groups over a pixel-free staged
-copy of the input; each group's labels commit atomically (results + audit + checkpoint row); a re-run
-left-anti-joins the checkpoint table and processes only uncommitted
-groups.
+upsert): work is split into deterministic id-hash groups over a
+pixel-free staged copy of the input. Each group's facts
+``{group, n_groups, run_id, n_rows, n_kept}`` are decided once and
+recorded in the snapshot summary of each of its commits (results rows,
+audit rows, a metadata-only checkpoint commit). A re-run reads the
+summaries at HEAD — a key probe, no Spark job — and processes only the
+groups without a checkpoint summary. All three tables are append-only.
 
 One writer per warehouse, like the reference's single-writer SQLite
 cache: a run holds ``<results.root>/.run.lock`` from its first read to
@@ -14,12 +17,12 @@ its last commit, and stages its input at ``<results.root>/_stage``.
 Crash-window discipline: a group commit is three single-table snapshot
 commits in the order results -> audit -> checkpoint, and each table's
 commit is atomic (sources/catalog.py). A crash BETWEEN them leaves the
-group's rows published without its checkpoint row; re-running the group
-would duplicate those rows, so ``reconcile`` ROLLS THE COMMIT FORWARD
-instead: a group whose rows are already in the results table gets its
-audit rows regenerated (audit_rows is a pure function of the result
-rows) and its checkpoint row appended — never reprocessed, never
-duplicated.
+group's rows published without its checkpoint commit; re-running the
+group would duplicate those rows, so ``reconcile`` ROLLS THE COMMIT
+FORWARD instead: a group with a results summary gets its audit rows
+regenerated if its audit summary is missing (audit_rows is a pure
+function of the result rows) and its checkpoint commit appended — never
+reprocessed, never duplicated.
 
 At warehouse scale, groups map to Iceberg partitions and the driver loop
 becomes sequential staged jobs over bucket(image_id, N).
@@ -41,86 +44,54 @@ from . import pipeline as pipe
 from .audit import audit_rows
 
 
-def committed_groups(spark: SparkSession,
-                     table: LocalSnapshotTable) -> set[int]:
-    """The ``part_id`` values in *table*: the committed groups of the
-    checkpoint table, or the published groups of the results table."""
-    df = table.read(spark)
-    if df is None:
-        return set()
-    return {r["part_id"] for r in df.select("part_id").distinct().collect()}
+def committed_groups(table: LocalSnapshotTable) -> set[int]:
+    """The groups whose commit to *table* carried a summary: the
+    committed groups of the checkpoint table, or the published groups of
+    the results table. One manifest read, no Spark job."""
+    return {s["group"] for s in table.summaries()}
 
 
-_CKPT_SCHEMA = ("part_id int, run_id string, n_rows long, "
-                "committed_at double, n_groups int")
-
-
-def check_n_groups(spark: SparkSession, ckpt: LocalSnapshotTable,
-                   n_groups: int) -> None:
+def check_n_groups(results: LocalSnapshotTable, n_groups: int) -> None:
     """Refuse to resume under a different group count than the one the
-    checkpoint rows were committed with: part_id is a hash MODULO
-    n_groups, so reinterpreting committed ids under a new modulus
-    silently reprocesses already-published rows (duplicates) and/or
-    skips unprocessed ones."""
-    df = ckpt.read(spark)
-    if df is None:
-        return
-    rec = {r[0] for r in df.select("n_groups").distinct().collect()}
+    results were published with: part_id is a hash MODULO n_groups, so
+    reinterpreting committed ids under a new modulus silently reprocesses
+    already-published rows (duplicates) and/or skips unprocessed ones.
+    Every group ever published has a results summary, so this covers a
+    crash before the first checkpoint commit too."""
+    rec = {s["n_groups"] for s in results.summaries()}
     if rec and rec != {n_groups}:
         raise ValueError(
-            f"checkpoint table was committed with n_groups={sorted(rec)}; "
+            f"results table was committed with n_groups={sorted(rec)}; "
             f"resuming with n_groups={n_groups} would duplicate and/or "
             f"skip rows — rerun with the original value")
 
 
 def reconcile(spark: SparkSession, results: LocalSnapshotTable,
               audit: LocalSnapshotTable, ckpt: LocalSnapshotTable,
-              run_id: str, n_groups: int) -> list[int]:
-    """Roll forward half-committed groups (rows published, checkpoint row
-    missing after a crash): regenerate their audit rows from the published
-    results and append the checkpoint row. Returns the groups repaired.
+              run_id: str) -> list[int]:
+    """Roll forward half-committed groups (rows published, checkpoint
+    commit missing after a crash): append the group's audit rows if the
+    crash came before them, then its checkpoint commit. Returns the
+    groups repaired.
 
-    A crash before the first checkpoint row leaves check_n_groups nothing
-    to read, so each half-committed group's rows are checked against
-    ``n_groups`` here, before anything is written: rows published under
-    another modulus raise instead of being stamped with this one.
-
-    Idempotent per group: the crash may have happened AFTER the group's
-    audit append (commit order is results -> audit -> ckpt), so the
-    group's audit rows are deleted by group_id before re-appending —
-    blind re-append would double the lineage hit counts. The repaired
-    checkpoint and audit rows are stamped ``repair:<run_id>``, not
-    ``run_id``: the crashed run did that processing, and metrics that sum
-    rows for run_id == this run must not claim it (jobs/
-    quality_filter.py rows_this_run)."""
-    half = sorted(committed_groups(spark, results)
-                  - committed_groups(spark, ckpt))
-    if not half:
-        return half
+    Idempotent per group: an append is atomic, so a group with an audit
+    summary has its audit rows, and they are kept as the crashed run
+    wrote them. Missing audit rows are regenerated from the published
+    results (audit_rows is a pure function of the result rows). The
+    repaired checkpoint fact, and any regenerated audit rows, are stamped
+    ``repair:<run_id>``, not ``run_id``: the crashed run did that
+    processing, and metrics that sum rows for run_id == this run must not
+    claim it (jobs/quality_filter.py rows_this_run)."""
+    facts = {s["group"]: s for s in results.summaries()}
+    half = sorted(set(facts) - committed_groups(ckpt))
     stamp = f"repair:{run_id}"
-    full = results.read(spark)     # one table open for all repaired groups
+    audited = committed_groups(audit)
     for g in half:
-        out = full.where(F.col("part_id") == g).persist()
-        try:
-            # one pass fills the cache the audit aggregation reads
-            n_rows, n_moved = out.select(F.count("*"), F.count(F.when(
-                stable_salt("image_id", n_groups) != F.col("part_id"),
-                1))).first()
-            if n_moved:
-                raise ValueError(
-                    f"group {g} was published under another n_groups: "
-                    f"{n_moved} of its {n_rows} rows do not hash to it "
-                    f"with n_groups={n_groups} — rerun with the original "
-                    f"value")
-            # SQL-string predicate so BOTH table backends accept it
-            # (IcebergTable.delete_where interpolates into DELETE FROM ...
-            # WHERE, which cannot take a Column object)
-            audit.delete_where(spark, f"group_id = {int(g)}")
-            audit.append(audit_rows(out, stamp, None, group_id=g))
-        finally:
-            out.unpersist()
-        ckpt.append(spark.createDataFrame(
-            [(g, stamp, n_rows, float(time.time()), n_groups)], _CKPT_SCHEMA))
+        fact = {**facts[g], "run_id": stamp}
+        if g not in audited:
+            out = results.read(spark).where(F.col("part_id") == g)
+            audit.append(audit_rows(out, stamp, None, group_id=g), fact)
+        ckpt.append(None, fact)
     return half
 
 
@@ -195,7 +166,9 @@ def run_with_resume(spark: SparkSession, images: DataFrame,
     ``is_dup`` and ``part_id`` — no pixels (stage_input drops them).
     Readers that need the pixels join ``images`` back on ``image_id``.
     A warehouse whose manifests lack ``sources.catalog.FORMAT`` raises at
-    the first table read, before anything is written.
+    the first table read, before anything is written. All three tables
+    must be ``LocalSnapshotTable``: the commit facts live in their
+    snapshot summaries.
 
     ``fail_after`` aborts after that many group commits; with
     ``fail_between_commits`` the abort fires BETWEEN the results append
@@ -210,27 +183,28 @@ def run_with_resume(spark: SparkSession, images: DataFrame,
     """
     if n_groups < 1:
         raise ValueError(f"n_groups must be >= 1, got {n_groups}")
-    root = getattr(results, "root", None)
-    if root is None:
-        raise ValueError("run_with_resume needs a results table with a "
-                         "local root (LocalSnapshotTable)")
+    if not all(isinstance(t, LocalSnapshotTable)
+               for t in (results, audit, ckpt)):
+        raise ValueError("run_with_resume records its commits in snapshot "
+                         "summaries: results, audit and checkpoint must "
+                         "all be LocalSnapshotTable")
     run_id = uuid.uuid4().hex[:12]
-    stage_path = os.path.join(root, "_stage")
+    stage_path = os.path.join(results.root, "_stage")
     n_committed = 0
-    lock_fd = _lock_run(root)
+    lock_fd = _lock_run(results.root)
     try:
-        check_n_groups(spark, ckpt, n_groups)
-        repaired = reconcile(spark, results, audit, ckpt, run_id, n_groups)
-        done = committed_groups(spark, ckpt)
+        check_n_groups(results, n_groups)
+        repaired = reconcile(spark, results, audit, ckpt, run_id)
+        done = committed_groups(ckpt)
         todo = [g for g in range(n_groups) if g not in done]
         if todo:
             staged = stage_input(spark, images, stage_path, n_groups)
         for g in todo:
             t0 = time.time()
             sub = staged.where(F.col("part_id") == g).drop("part_id")
-            # one materialization feeds all three consumers (results
-            # sink, audit aggregation, row count) — uncached, the
-            # UDF-gated pipeline would execute three times per group.
+            # one materialization feeds the group's fact, the results
+            # sink and the audit aggregation — uncached, the UDF-gated
+            # pipeline would execute three times per group.
             # with_dedup=False: is_dup was stamped GLOBALLY at staging
             # (stage_input) — a per-group dedup here would miss dup pairs
             # split across id-hash groups
@@ -238,20 +212,24 @@ def run_with_resume(spark: SparkSession, images: DataFrame,
                 .withColumn("part_id", F.lit(g))
             out = out.persist()
             try:
-                results.append(out)
+                n_rows, n_kept = out.select(   # this pass fills the cache
+                    F.count("*"),
+                    F.coalesce(F.sum(F.col("keep").cast("int")), F.lit(0))
+                ).first()
+                fact = {"group": g, "n_groups": n_groups, "run_id": run_id,
+                        "n_rows": n_rows, "n_kept": n_kept}
+                results.append(out, fact)
                 if fail_between_commits \
                         and n_committed + 1 >= (fail_after or 1):
                     raise RuntimeError(
                         f"injected failure between commits of group {g}")
                 wall_ms = (time.time() - t0) * 1000.0
-                audit.append(audit_rows(out, run_id, wall_ms, group_id=g))
+                audit.append(audit_rows(out, run_id, wall_ms, group_id=g),
+                             fact)
                 if fail_after_audit and n_committed + 1 >= (fail_after or 1):
                     raise RuntimeError(
                         f"injected failure after audit of group {g}")
-                n_rows = out.count()          # cached — no recomputation
-                ckpt.append(spark.createDataFrame(
-                    [(g, run_id, n_rows, float(time.time()), n_groups)],
-                    _CKPT_SCHEMA))
+                ckpt.append(None, fact)
             finally:
                 out.unpersist()
             n_committed += 1

@@ -1,12 +1,13 @@
 """Bucketed-table layout for shuffle-free dedup/join at warehouse scale.
 
 The flagship's only wide operations are keyed by ``phash`` (dedup agg,
-near-dup joins) and ``image_id`` (checkpoint anti-join). At 10^12 rows a
-shuffle of even the slim (id, phash) projection is petabyte-class over the
-whole corpus lifetime, so the warehouse layout buckets the results table by
-its join key once at write time and every later agg/join on that key reads
-co-located, pre-hashed buckets — Spark plans them with NO Exchange (the
-scan's outputPartitioning already satisfies the required distribution).
+near-dup joins) and ``image_id`` (joining pixels back to labels). At
+10^12 rows a shuffle of even the slim (id, phash) projection is
+petabyte-class over the whole corpus lifetime, so the warehouse layout
+buckets the results table by its join key once at write time and every
+later agg/join on that key reads co-located, pre-hashed buckets — Spark
+plans them with NO Exchange (the scan's outputPartitioning already
+satisfies the required distribution).
 
 This is the parquet analogue of Iceberg's ``bucket(N, phash)`` partition
 transform (SURVEY.md section 1.4: SQLite cache tables -> Iceberg tables);
@@ -16,7 +17,7 @@ the sort. Tests assert the no-Exchange property from the physical plan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(df: DataFrame, table: str, key: str, n_buckets: int,
@@ -56,6 +57,3 @@ def plan_has_exchange(df: DataFrame) -> bool:
             return True
     return False
 
-
-def bucketed_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)

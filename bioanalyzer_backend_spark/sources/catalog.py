@@ -7,7 +7,9 @@ The sandbox's PySpark bundles no Iceberg runtime jar (SURVEY.md section 7),
 so this module implements the same COMMIT semantics on a parquet directory:
 
   * data files are written to ``data/`` with unique names (write-once);
-  * a snapshot is a JSON manifest listing its data files;
+  * a snapshot is a JSON manifest listing its data files and the
+    cumulative ``summaries`` of its appends (Iceberg's snapshot summary:
+    commit facts kept apart from the payload, read without a scan);
   * ``HEAD`` names the current snapshot and is replaced atomically
     (os.replace — POSIX rename atomicity);
   * readers resolve HEAD -> manifest -> exact file list, so a killed
@@ -30,7 +32,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-FORMAT = 2
+FORMAT = 3
 
 
 class LocalSnapshotTable:
@@ -83,11 +85,18 @@ class LocalSnapshotTable:
                 f"treat the table as empty (restore the metadata dir or "
                 f"repoint HEAD at a surviving snap-*.json)") from None
 
-    def _commit(self, files: list[str], parent: str | None,
-                operation: str) -> str:
+    def _commit(self, cur: dict | None, files: list[str], operation: str,
+                summary: dict | None = None) -> str:
+        """Publish a snapshot on parent manifest *cur* (None: first commit)
+        listing *files*; it carries the parent's summaries forward, plus
+        *summary* when given."""
         snap_id = f"snap-{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}.json"
-        manifest = {"format": FORMAT, "snapshot": snap_id, "parent": parent,
-                    "operation": operation, "files": sorted(files)}
+        summaries = (cur["summaries"] if cur else []) \
+            + ([summary] if summary is not None else [])
+        manifest = {"format": FORMAT, "snapshot": snap_id,
+                    "parent": cur["snapshot"] if cur else None,
+                    "operation": operation, "files": sorted(files),
+                    "summaries": summaries}
         path = os.path.join(self.meta_dir, snap_id)
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
@@ -154,6 +163,12 @@ class LocalSnapshotTable:
         cur = self.current_snapshot()
         return cur["snapshot"] if cur else None
 
+    def summaries(self) -> list[dict]:
+        """HEAD's summaries: one dict per append that was given one, in
+        commit order. One manifest read, no Spark job."""
+        cur = self.current_snapshot()
+        return cur["summaries"] if cur else []
+
     def history(self) -> list[str]:
         out = []
         snap = self.current_snapshot()
@@ -167,20 +182,21 @@ class LocalSnapshotTable:
 
     # -- operations ------------------------------------------------------------
 
-    def _write_batch(self, df: DataFrame | None) -> tuple[str, list[str]]:
+    def _write_batch(self, df: DataFrame | None
+                     ) -> tuple[str | None, list[str]]:
         """Write *df* to a fresh uuid dir under data/, returning
-        ``(batch_dir, parquet_files)``; ``df=None`` yields an empty dir
-        (the racer-emptied-table arm of delete/compact). The ONE copy of
+        ``(batch_dir, parquet_files)``; ``df=None`` writes nothing and
+        returns ``(None, [])`` (a metadata-only append, or the
+        racer-emptied-table arm of delete/compact). The ONE copy of
         the write-then-list block (was pasted into append/merge/delete/
         compact, which had started to diverge). A failed Spark write
         removes its own partial dir — unreferenced data dirs must never
         outlive the call that created them (see append/_commit_rewrite
         for the commit-phase counterpart)."""
         import shutil
-        batch_dir = os.path.join(self.data_dir, uuid.uuid4().hex)
         if df is None:
-            os.makedirs(batch_dir, exist_ok=True)
-            return batch_dir, []
+            return None, []
+        batch_dir = os.path.join(self.data_dir, uuid.uuid4().hex)
         try:
             df.write.mode("overwrite").parquet(batch_dir)
         except Exception:
@@ -190,23 +206,25 @@ class LocalSnapshotTable:
                            for f in os.listdir(batch_dir)
                            if f.endswith(".parquet")]
 
-    def append(self, df: DataFrame) -> str:
-        """Write df as new data files, then atomically extend the manifest.
-        The (slow) data write happens unlocked — unique dirs can't clash;
-        only the read-parent -> publish-HEAD section is exclusive. If the
-        commit phase fails (lock timeout), the just-written orphan dir is
-        reclaimed — no manifest references it, so nothing else ever
-        would."""
+    def append(self, df: DataFrame | None,
+               summary: dict | None = None) -> str:
+        """Write df as new data files, then atomically extend the manifest
+        (and its summaries, with *summary* when given). ``df=None`` is a
+        metadata-only commit: it writes no data. The (slow) data write
+        happens unlocked — unique dirs can't clash; only the read-parent
+        -> publish-HEAD section is exclusive. If the commit phase fails
+        (lock timeout), the just-written orphan dir is reclaimed — no
+        manifest references it, so nothing else ever would."""
         import shutil
         batch_dir, new_files = self._write_batch(df)
         try:
             with self._commit_lock():
                 cur = self.current_snapshot()
-                files = (cur["files"] if cur else []) + new_files
-                return self._commit(files, cur["snapshot"] if cur else None,
-                                    "append")
+                return self._commit(cur, (cur["files"] if cur else [])
+                                    + new_files, "append", summary)
         except Exception:
-            shutil.rmtree(batch_dir, ignore_errors=True)
+            if batch_dir is not None:
+                shutil.rmtree(batch_dir, ignore_errors=True)
             raise
 
     def _commit_rewrite(self, df_fn, operation: str,
@@ -218,7 +236,7 @@ class LocalSnapshotTable:
         writer committed meanwhile, discard the orphan files and redo the
         rewrite against the new HEAD — never hold the lock across a Spark
         job (a long rewrite would look like a stale lock to waiters and
-        get broken).
+        get broken). The rewrite keeps the parent's summaries.
 
         A write-phase FAILURE is also retried when HEAD moved since the
         parent was read: a concurrent expire_snapshots may have reclaimed
@@ -236,8 +254,9 @@ class LocalSnapshotTable:
             try:
                 batch_dir, new_files = self._write_batch(df_fn())
                 with self._commit_lock():
-                    if self._head_snapshot_id() == parent:
-                        return self._commit(new_files, parent, operation)
+                    cur = self.current_snapshot()
+                    if (cur["snapshot"] if cur else None) == parent:
+                        return self._commit(cur, new_files, operation)
             except Exception as exc:
                 if batch_dir is not None:
                     shutil.rmtree(batch_dir, ignore_errors=True)
@@ -245,7 +264,8 @@ class LocalSnapshotTable:
                     raise          # genuine failure, not a commit race
                 last_exc = exc     # HEAD moved — retry, but keep the cause
             else:
-                shutil.rmtree(batch_dir, ignore_errors=True)  # lost race
+                if batch_dir is not None:                   # lost race
+                    shutil.rmtree(batch_dir, ignore_errors=True)
             # linear backoff desynchronizes contending writers (every
             # loser otherwise re-reads HEAD at the same instant and the
             # same writer can starve repeatedly)

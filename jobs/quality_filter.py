@@ -3,7 +3,8 @@
 
 North-rule packaging (BASELINE.json): the engine ships as a zip via
 ``--py-files`` and the langid/LM model artifacts via ``--files`` +
-SparkFiles; the job is resumable from its checkpoint table.
+SparkFiles; the job resumes from the commit facts its tables' snapshot
+summaries record.
 
     python scripts/build_dist.py
     spark-submit --master local[32] \
@@ -17,9 +18,9 @@ SparkFiles; the job is resumable from its checkpoint table.
 runtime jar is on the classpath — sources/catalog.open_table switches
 automatically). ``--synth N`` generates the deterministic synthetic
 image+caption table instead, for smoke runs with no external data.
-Re-running with the same --warehouse resumes: committed id-hash groups
-are skipped via the checkpoint table (plans/resume.py). One run at a
-time per warehouse: a second, simultaneous run raises.
+Re-running with the same --warehouse resumes: id-hash groups with a
+checkpoint summary are skipped (plans/resume.py). One run at a time per
+warehouse: a second, simultaneous run raises.
 
 ``<warehouse>/results`` is a label table keyed by ``image_id``: the
 input's non-binary columns, every rule/label/gate column,
@@ -27,7 +28,8 @@ input's non-binary columns, every rule/label/gate column,
 they stay in the input (``--input``, or the ``--synth`` parquet
 under the warehouse); join them back on ``image_id`` to read them.
 
-Prints ONE JSON line: run stats + per-table snapshot ids.
+Prints ONE JSON line: run stats, with row counts summed from the
+tables' snapshot summaries (no Spark read after the run).
 """
 
 from __future__ import annotations
@@ -106,26 +108,18 @@ def main(argv: list[str] | None = None) -> None:
         stats = run_with_resume(spark, images, results, audit, ckpt,
                                 n_groups=args.n_groups)
         wall = time.time() - t0
-        res_df = results.read(spark)
-        n_rows = n_kept = 0
-        if res_df is not None:
-            n_rows, n_kept = res_df.selectExpr(
-                "count(*)", "coalesce(sum(int(keep)), 0)").first()
-        # throughput counts only rows committed by THIS run (checkpoint
-        # rows carry run_id + n_rows) — a resumed run that skipped
-        # already-committed groups must not claim their rows against its
-        # own wall time; roll-forward repairs are stamped
-        # 'repair:<run_id>' by reconcile, so the equality filter below
-        # excludes rows the CRASHED run actually processed too
-        ck_df = ckpt.read(spark)
-        rows_this_run = 0
-        if ck_df is not None:
-            got = (ck_df.where(ck_df.run_id == stats["run_id"])
-                   .agg({"n_rows": "sum"}).collect()[0][0])
-            rows_this_run = int(got or 0)
+        published = results.summaries()
+        # throughput counts only rows committed by THIS run — a resumed
+        # run that skipped already-committed groups must not claim their
+        # rows against its own wall time; roll-forward repairs are
+        # stamped 'repair:<run_id>' by reconcile, so the equality filter
+        # below excludes rows the CRASHED run actually processed too
+        rows_this_run = sum(s["n_rows"] for s in ckpt.summaries()
+                            if s["run_id"] == stats["run_id"])
         print(json.dumps({
             "input": src, "wall_sec": round(wall, 2),
-            "rows_total": n_rows, "rows_kept": n_kept,
+            "rows_total": sum(s["n_rows"] for s in published),
+            "rows_kept": sum(s["n_kept"] for s in published),
             "rows_this_run": rows_this_run,
             "images_per_sec": (round(rows_this_run / wall, 1)
                                if wall > 0 else None),

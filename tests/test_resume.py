@@ -9,16 +9,19 @@ from bioanalyzer_backend_spark.plans.resume import run_with_resume
 from bioanalyzer_backend_spark.sources.catalog import LocalSnapshotTable
 
 
-def _strip_format(tbl, name=None):
+def _strip_format(tbl, name=None, stamp=None):
     """Rewrite manifest *name* (default: HEAD's) as older code wrote it:
-    no ``format`` stamp."""
+    no ``format`` stamp, or the older *stamp*."""
     import json
     import os
     path = os.path.join(tbl.meta_dir,
                         name or open(tbl._head_path()).read().strip())
     with open(path) as f:
         snap = json.load(f)
-    del snap["format"]
+    if stamp is None:
+        del snap["format"]
+    else:
+        snap["format"] = stamp
     with open(path, "w") as f:
         json.dump(snap, f)
 
@@ -80,7 +83,7 @@ def test_resume_after_injected_failure(spark, synth_images_df, tmp_path,
     with pytest.raises(RuntimeError, match="injected failure"):
         run_with_resume(spark, df, c_res, c_aud, c_ck, n_groups=4,
                         fail_after=2)
-    assert len(resume.committed_groups(spark, c_ck)) == 2
+    assert len(resume.committed_groups(c_ck)) == 2
     # the crash leaves its staged copy behind: it must hold no pixels
     import os
     stage = os.path.join(c_res.root, "_stage")
@@ -125,6 +128,68 @@ def test_snapshot_atomicity(spark, tmp_path):
     assert len(tbl.history()) == 2
 
 
+def test_metadata_only_append(spark, tmp_path):
+    """``append(None, summary)`` moves HEAD and records the summary
+    without writing data: no dir under ``data/``, and the table still
+    reads as empty. Summaries accumulate in commit order."""
+    import os
+
+    tbl = LocalSnapshotTable(str(tmp_path / "meta"))
+    assert tbl.summaries() == []
+    s1 = tbl.append(None, {"group": 0})
+    s2 = tbl.append(None, {"group": 1})
+    assert tbl.history() == [s2, s1]
+    assert os.listdir(tbl.data_dir) == []
+    assert tbl.read(spark) is None
+    assert tbl.summaries() == [{"group": 0}, {"group": 1}]
+    tbl.append(spark.range(2).toDF("x"))          # no summary: none added
+    assert tbl.summaries() == [{"group": 0}, {"group": 1}]
+    assert tbl.read(spark).count() == 2
+
+
+def test_summaries_survive_rewrites(spark, tmp_path):
+    """compact, delete_where and merge_by_key rewrite the data files but
+    carry the parent's summaries forward unchanged."""
+    tbl = LocalSnapshotTable(str(tmp_path / "rw"))
+    tbl.append(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"),
+               {"group": 0})
+    tbl.append(spark.createDataFrame([(3, "c")], "k int, v string"),
+               {"group": 1})
+    want = [{"group": 0}, {"group": 1}]
+    tbl.compact(spark, target_files=1)
+    assert tbl.current_snapshot()["operation"] == "compact"
+    assert tbl.summaries() == want
+    tbl.delete_where(spark, "k = 2")
+    assert tbl.current_snapshot()["operation"] == "delete"
+    assert tbl.summaries() == want
+    tbl.merge_by_key(
+        spark, spark.createDataFrame([(3, "C")], "k int, v string"), "k")
+    assert tbl.current_snapshot()["operation"] == "merge"
+    assert tbl.summaries() == want
+    assert sorted((r["k"], r["v"]) for r in tbl.read(spark).collect()) \
+        == [(1, "a"), (3, "C")]
+
+
+def test_noop_resume_runs_no_spark_job(spark, synth_images_df, tmp_path,
+                                       artifacts_dir):
+    """A resume over a fully committed warehouse answers every
+    bookkeeping question from the snapshot summaries at HEAD: it runs no
+    Spark job at all."""
+    df = synth_images_df.limit(100)
+    res, aud, ck = _tables(tmp_path / "noop")
+    assert run_with_resume(spark, df, res, aud, ck,
+                           n_groups=2)["newly_committed"] == 2
+    sc = spark.sparkContext
+    group = "noop-resume-" + tmp_path.name
+    sc.setJobGroup(group, "no-op resume")
+    try:
+        stats = run_with_resume(spark, df, res, aud, ck, n_groups=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stats["newly_committed"] == 0 and stats["groups_done"] == 2
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_merge_by_key_upsert(spark, tmp_path):
     """INSERT OR REPLACE semantics of cache_manager.py:100-111."""
     tbl = LocalSnapshotTable(str(tmp_path / "m"))
@@ -149,7 +214,7 @@ def test_crash_between_commits_rolls_forward(spark, synth_images_df,
                         fail_between_commits=True, fail_after=1)
     # rows of the crashed group ARE published, checkpoint row is NOT
     assert res.read(spark) is not None
-    assert len(resume.committed_groups(spark, ck)) == 0
+    assert len(resume.committed_groups(ck)) == 0
 
     stats = run_with_resume(spark, df, res, aud, ck, n_groups=4)
     assert len(stats["repaired_groups"]) == 1
@@ -170,19 +235,20 @@ def test_crash_between_commits_rolls_forward(spark, synth_images_df,
             if r["group_id"] in repaired} == {"repair:" + rid}
     assert {r["group_id"] for r in aud_rows if r["run_id"] == rid} \
         == {0, 1, 2, 3} - repaired
-    # repaired checkpoint rows are stamped 'repair:<run_id>', so a
+    # repaired checkpoint facts are stamped 'repair:<run_id>', so a
     # throughput metric filtering run_id == rid cannot claim the crashed
     # run's rows (jobs/quality_filter.py rows_this_run)
-    repaired_ck = ck.read(spark).where("run_id like 'repair:%'").collect()
-    assert {r["part_id"] for r in repaired_ck} == set(stats["repaired_groups"])
+    repaired_ck = [s for s in ck.summaries()
+                   if s["run_id"].startswith("repair:")]
+    assert {s["group"] for s in repaired_ck} == set(stats["repaired_groups"])
 
 
 def test_crash_after_audit_repair_is_idempotent(spark, synth_images_df,
                                                 tmp_path, artifacts_dir):
-    """Crash AFTER the audit append but BEFORE the checkpoint row: the
-    group's audit rows are already committed, so the roll-forward must
-    delete-then-reappend by group_id — a blind re-append would double the
-    lineage hit counts."""
+    """Crash AFTER the audit append but BEFORE the checkpoint commit: the
+    group's audit rows are already committed (its audit summary says so),
+    so the roll-forward must keep them as the crashed run wrote them — a
+    blind re-append would double the lineage hit counts."""
     df = synth_images_df.limit(300)
     res, aud, ck = _tables(tmp_path / "aud")
 
@@ -192,7 +258,7 @@ def test_crash_after_audit_repair_is_idempotent(spark, synth_images_df,
     # rows AND audit are published; checkpoint row is not
     assert res.read(spark) is not None
     assert aud.read(spark) is not None
-    assert len(resume.committed_groups(spark, ck)) == 0
+    assert len(resume.committed_groups(ck)) == 0
     crashed_group = res.read(spark).select("part_id").distinct().collect()
     g = crashed_group[0]["part_id"]
 
@@ -207,6 +273,14 @@ def test_crash_after_audit_repair_is_idempotent(spark, synth_images_df,
     assert per_rule, "repaired group has audit rows"
     for r in per_rule:
         assert r["sum(n_in)"] == group_rows
+    # the crashed run computed those rows: they keep its run_id and
+    # wall_ms, while the checkpoint fact is stamped 'repair:<run_id>'
+    kept = aud.read(spark).where(f"group_id = {g}") \
+        .select("run_id", "wall_ms").collect()
+    assert {r["run_id"] for r in kept} != {"repair:" + stats["run_id"]}
+    assert all(r["wall_ms"] is not None for r in kept)
+    assert [s["run_id"] for s in ck.summaries() if s["group"] == g] \
+        == ["repair:" + stats["run_id"]]
 
 
 def test_open_table_routing_matches_classpath(spark, tmp_path):
@@ -246,9 +320,9 @@ def test_delete_where_keeps_null_predicate_rows(spark, tmp_path):
     """Standard SQL DELETE semantics (Iceberg-compatible): a row whose
     predicate evaluates NULL — e.g. a NULL group_id under
     ``group_id = 3`` — must be KEPT, not swept away by a naive
-    ``where(~cond)`` rewrite. The audit table mixes resume-stamped rows
-    (group_id set) with plain lineage appends (group_id NULL); a crash
-    repair that deletes one group must not eat the NULL rows."""
+    ``where(~cond)`` rewrite: deleting one group of a table that mixes
+    group-stamped rows with NULL-group rows (the audit table's shape)
+    must not eat the NULL rows."""
     tbl = LocalSnapshotTable(str(tmp_path / "n"))
     tbl.append(spark.createDataFrame(
         [(3, "stamped"), (None, "lineage"), (4, "other")],
@@ -273,7 +347,7 @@ def test_crashes_leave_one_stage_copy(spark, synth_images_df, tmp_path,
         with pytest.raises(RuntimeError, match="injected failure"):
             run_with_resume(spark, df, res, aud, ck, n_groups=4,
                             fail_after=1)
-    assert len(resume.committed_groups(spark, ck)) == 2
+    assert len(resume.committed_groups(ck)) == 2
     assert [d for d in os.listdir(res.root) if "stage" in d] == ["_stage"]
 
     run_with_resume(spark, df, res, aud, ck, n_groups=4)
@@ -298,7 +372,7 @@ def test_second_run_on_warehouse_raises(spark, synth_images_df, tmp_path):
     finally:
         os.close(fd)
     for t in (res, aud, ck):
-        assert t.read(spark) is None
+        assert t.read(spark) is None and t.summaries() == []
     assert not os.path.exists(os.path.join(res.root, "_stage"))
 
 
@@ -366,10 +440,10 @@ def test_changed_n_groups_before_first_checkpoint_raises(spark,
     with pytest.raises(RuntimeError, match="between commits"):
         run_with_resume(spark, df, res, aud, ck, n_groups=4,
                         fail_between_commits=True, fail_after=1)
-    assert ck.read(spark) is None
+    assert ck.summaries() == []
     with pytest.raises(ValueError, match="n_groups"):
         run_with_resume(spark, df, res, aud, ck, n_groups=8)
-    assert ck.read(spark) is None and aud.read(spark) is None
+    assert ck.summaries() == [] and aud.read(spark) is None
     # the original value still resumes, one row per image_id
     stats = run_with_resume(spark, df, res, aud, ck, n_groups=4)
     assert len(stats["repaired_groups"]) == 1
@@ -395,23 +469,26 @@ def test_corrupt_head_raises_not_empty(spark, tmp_path):
     """HEAD naming a missing manifest is corruption: reading it as an
     empty table would let the next append permanently publish the
     truncation of all prior contents. A HEAD manifest without the format
-    stamp was written by older code and is refused the same way, by
-    every read path and by append before it publishes anything."""
+    stamp, or with format 2 (no summaries: its committed groups would
+    look absent and be reprocessed), was written by older code and is
+    refused the same way, by every read path and by append before it
+    publishes anything."""
     import os
 
     for damage, match in (("missing", "corrupt"),
-                          ("formatless", "older code")):
+                          ("formatless", "older code"),
+                          ("format2", "older code")):
         tbl = LocalSnapshotTable(str(tmp_path / damage))
         tbl.append(spark.range(5).toDF("x"))
         snap = tbl.current_snapshot()
         if damage == "missing":
             os.remove(os.path.join(tbl.meta_dir, snap["snapshot"]))
         else:
-            _strip_format(tbl)
+            _strip_format(tbl, stamp=2 if damage == "format2" else None)
         head = open(tbl._head_path()).read()
         data_dirs = set(os.listdir(tbl.data_dir))
         for call in (tbl.current_snapshot, lambda: tbl.read(spark),
-                     tbl.history,
+                     tbl.history, tbl.summaries,
                      lambda: tbl.append(spark.range(3).toDF("x"))):
             with pytest.raises(RuntimeError, match=match):
                 call()
@@ -496,6 +573,6 @@ def test_resume_refuses_warehouse_from_older_code(spark, synth_images_df,
 
     with pytest.raises(RuntimeError, match="older code"):
         run_with_resume(spark, df, res, aud, ck, n_groups=4)
-    assert ck.read(spark) is None
+    assert ck.summaries() == []
     assert aud.read(spark) is None
     assert not os.path.exists(os.path.join(res.root, "_stage"))
