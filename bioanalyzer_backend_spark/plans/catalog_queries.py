@@ -16,6 +16,7 @@ Registry contract (consumed by __spark_entry__):
 
 from __future__ import annotations
 
+import inspect
 from collections.abc import Callable
 from functools import partial
 
@@ -2192,18 +2193,6 @@ def _mk_spark_fn(builder: Callable[[str], str]):
     return fn
 
 
-# Near-dup queries reference the shingle set from several join branches;
-# inlining it re-runs the tokenize+shingle pipeline once per branch. The
-# Spark path materializes it ONCE as a cached view (at warehouse scale:
-# a staged shingle/signature table) — the DuckDB oracle keeps the inline
-# CTE, and both render from the same builder so results stay identical.
-_MAT_SHINGLE_BUILDERS: dict[str, Callable[..., str]] = {
-    "ngram_jaccard_top20": _q_ngram_jaccard,
-    "neardup_dedup_documents": _q_neardup_dedup,
-    "decontaminate_documents": _q_decontaminate,
-}
-
-
 MAT_SHINGLE_SRC = "SELECT * FROM shingles_v"
 
 # Per-view (applicationId -> sf_dir) memos for the cached intermediate
@@ -2304,6 +2293,20 @@ def _mk_spark_fn_mat_tf(builder: Callable[..., str]):
     return fn
 
 
+# Near-dup and TF-IDF queries reference an expensive intermediate (the
+# shingle set, the MinHash signatures, the term frequencies) from several
+# join branches; inlining it re-runs its pipeline once per branch. The
+# Spark path materializes it ONCE as a cached view (at warehouse scale: a
+# staged table) and passes the view to the builder's ``*_src`` keyword;
+# the DuckDB oracle keeps the inline CTEs, and both render from the same
+# builder so results stay identical. The first keyword a builder takes,
+# in this order, picks its view: a signature builder also takes
+# ``shingle_src``, and the signature view sits on the shingle view.
+_MAT_SPARK_FNS = (("sig_src", _mk_spark_fn_mat_sig),
+                  ("tf_src", _mk_spark_fn_mat_tf),
+                  ("shingle_src", _mk_spark_fn_mat_shingles))
+
+
 def registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]]:
     """Assemble the full (spark_fn, oracle_sql) registry, in builder
     order (the driver's sweep order is computed by __spark_entry__).
@@ -2319,16 +2322,10 @@ def registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]
     break the runs-DuckDB-first contract.)"""
     reg: dict[str, tuple] = {}
     for name, builder in _SQL_BUILDERS.items():
-        if name == "minhash_lsh_pairs":
-            # Spark side scans the cached signature view (computed once);
-            # DuckDB oracle keeps the inline CTEs from the same builder.
-            reg[name] = (_mk_spark_fn_mat_sig(builder), builder(DUCK))
-        elif name == "tfidf_top_terms_documents":
-            reg[name] = (_mk_spark_fn_mat_tf(builder), builder(DUCK))
-        elif name in _MAT_SHINGLE_BUILDERS:
-            reg[name] = (_mk_spark_fn_mat_shingles(builder), builder(DUCK))
-        else:
-            reg[name] = (_mk_spark_fn(builder), builder(DUCK))
+        params = inspect.signature(builder).parameters
+        mk = next((mk for src, mk in _MAT_SPARK_FNS if src in params),
+                  _mk_spark_fn)
+        reg[name] = (mk(builder), builder(DUCK))
     # Salted two-phase agg vs the plain-groupBy oracle SQL: result parity
     # IS the skew-defusal equivalence proof.
     reg["keep_by_lang_salted"] = (_q_keep_by_lang_salted,

@@ -32,7 +32,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-FORMAT = 3
+FORMAT = 4
 
 
 class LocalSnapshotTable:
@@ -288,8 +288,8 @@ class LocalSnapshotTable:
         optimistic retry (see _commit_rewrite).
 
         Schema: allowMissingColumns=True because the target's merged
-        schema may carry columns the source lacks (e.g. the appender's
-        _batch_id/_query_id bookkeeping) — inserted/kept rows get NULL
+        schema may carry columns the source lacks (e.g. an earlier append
+        with a wider schema) — inserted/kept rows get NULL
         for the other side's missing columns, exactly like SQL MERGE's
         unset columns. Key semantics follow SQL MERGE / Iceberg, not a
         unique index: a NULL source key never matches (SQL NULL
@@ -318,7 +318,8 @@ class LocalSnapshotTable:
         ``DELETE FROM`` behaves, so the two backends stay interchangeable
         (a bare ``where(~cond)`` would silently delete NULL-predicate
         rows)."""
-        if self.read(spark) is None:
+        cur = self.current_snapshot()
+        if cur is None or not cur["files"]:
             return None
 
         def df_fn():
@@ -343,10 +344,9 @@ class LocalSnapshotTable:
         if snap is None or not snap["files"]:
             return None
         # mergeSchema: a snapshot can span appends with evolving schemas
-        # (e.g. the streaming appender's _query_id/_batch_id columns next
-        # to a plain batch append); without it Spark infers from ONE
-        # sampled footer and silently drops the other files' columns —
-        # which would break the appender's replay probe, among others.
+        # (e.g. a later append that adds a column); without it Spark
+        # infers from ONE sampled footer and silently drops the other
+        # files' columns.
         return (spark.read.option("mergeSchema", "true")
                 .parquet(*snap["files"]))
 
@@ -431,72 +431,45 @@ class IcebergTable:
         return spark.read.format("iceberg").load(self.identifier)
 
 
-def streaming_query_id(checkpoint_dir: str) -> str:
-    """The StreamingQuery's persistent id, read from the checkpoint's
-    ``metadata`` json. This is THE id Spark keeps stable across restarts
-    from the same checkpoint and regenerates for a fresh checkpoint —
-    exactly the dedup scope the docs' (queryId, epochId) exactly-once
-    recipe needs. Spark writes the metadata at query start, before batch
-    0 fires, so a missing file or id raises: there is no query to scope
-    by."""
-    with open(os.path.join(checkpoint_dir, "metadata")) as f:
-        return json.load(f)["id"]
-
-
 class IdempotentBatchAppender:
     """At-least-once -> exactly-once adapter for foreachBatch sinks.
 
     foreachBatch replays a micro-batch after a crash between the table
-    append and the streaming checkpoint commit. Appending blindly
-    duplicates that batch; re-reading the whole table per batch to probe
-    the committed set costs O(files) per trigger. This helper seeds the
-    seen set from the table ONCE (covers crash-restart replays, the only
-    case an in-memory set misses) and answers later batches from memory.
+    append and the streaming checkpoint commit; appending blindly
+    duplicates that batch. Each append records ``{query_id, batch_id}``
+    in its snapshot summary — the resumable job's protocol
+    (plans/resume.py) — so a replay is answered by one manifest read,
+    with no Spark job, and the rows carry no bookkeeping columns.
 
     Dedup is keyed on (query id, batch id) — Spark's documented
     exactly-once recipe — not batch id alone: epoch ids restart at 0
     for a new checkpoint, so a checkpoint reset (new query id) correctly
     re-admits batch ids an OLD incarnation committed, and two different
     queries can share one results table without eating each other's
-    epochs. The query id is read lazily from ``checkpoint_dir``'s
-    metadata at first append (it exists once the query is running)."""
+    epochs. The query id is read from ``checkpoint_dir``'s ``metadata``
+    json at each append: it is THE id Spark keeps stable across restarts
+    from one checkpoint and regenerates for a fresh one. Spark writes it
+    at query start, before batch 0 fires, so a missing file or id
+    raises: there is no query to scope by."""
 
-    def __init__(self, table, checkpoint_dir: str):
+    def __init__(self, table: LocalSnapshotTable, checkpoint_dir: str):
+        if not isinstance(table, LocalSnapshotTable):
+            raise ValueError("IdempotentBatchAppender records its commits "
+                             "in snapshot summaries: the table must be "
+                             "LocalSnapshotTable")
         self.table = table
         self._ckpt = checkpoint_dir
-        self._ns: str | None = None
-        self._seen: set[int] | None = None
-
-    def _namespace(self) -> str:
-        if self._ns is None:
-            self._ns = streaming_query_id(self._ckpt)
-        return self._ns
-
-    def _seed(self, spark: SparkSession) -> set[int]:
-        df = self.table.read(spark)
-        if df is None or "_batch_id" not in df.columns:
-            return set()
-        from pyspark.sql import functions as F
-        df = df.where(F.col("_query_id") == self._namespace())
-        return {r[0] for r in df.select("_batch_id").distinct().collect()}
 
     def append(self, batch_df: DataFrame, batch_id: int) -> bool:
         """Append unless (query id, batch id) already committed; True if
-        written. The seen-check runs BEFORE isEmpty so a replayed batch
+        written. The summary check runs BEFORE isEmpty so a replayed batch
         skips without evaluating the (possibly UDF-heavy) batch plan at
         all."""
-        if self._seen is None:
-            self._seen = self._seed(batch_df.sparkSession)
-        if batch_id in self._seen:
+        with open(os.path.join(self._ckpt, "metadata")) as f:
+            fact = {"query_id": json.load(f)["id"], "batch_id": batch_id}
+        if fact in self.table.summaries() or batch_df.isEmpty():
             return False
-        if batch_df.isEmpty():
-            return False
-        from pyspark.sql import functions as F
-        self.table.append(batch_df
-                          .withColumn("_batch_id", F.lit(batch_id))
-                          .withColumn("_query_id",
-                                      F.lit(self._namespace())))
-        self._seen.add(batch_id)
+        self.table.append(batch_df, fact)
         return True
 
 

@@ -6,38 +6,26 @@ battery is stateless per row, so the SAME pipeline (plans/pipeline.py)
 runs unchanged on a stream: readStream -> quality_filter -> sink.
 
 Sink = foreachBatch appending to a snapshot table (sources/catalog.py):
-each micro-batch commits atomically with its batch id recorded, giving
-the streaming path the same exact-resume guarantee as the batch
-checkpoint (Spark's own streaming checkpoint handles source offsets;
-epoch-id dedup makes the append idempotent on replays).
+each micro-batch commits atomically with ``{query_id, batch_id}`` in its
+snapshot summary, the same exactly-once protocol as the resumable job
+(Spark's own streaming checkpoint handles source offsets; the summary
+check makes the append idempotent on replays). The results table holds
+exactly the pipeline's columns.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
+from ..datagen import synth
 from ..plans import pipeline as pipe
-from ..sources.catalog import LocalSnapshotTable
+from ..sources.catalog import IdempotentBatchAppender, LocalSnapshotTable
 
-
-def _ddl_of(pa_schema) -> str:
-    """Spark DDL string derived from the ONE pyarrow writer schema
-    (datagen/synth.IMAGES_SCHEMA) — a hand-kept string twin silently
-    nulls any column added to the writer but missed here (an explicit
-    stream schema is never reconciled against the files)."""
-    _PA2DDL = {"string": "string", "binary": "binary", "int32": "int",
-               "int64": "long", "double": "double", "float": "float"}
-    return ", ".join(f"{f.name} {_PA2DDL[str(f.type)]}"
-                     for f in pa_schema)
-
-
-def _images_ddl() -> str:
-    from ..datagen.synth import IMAGES_SCHEMA as PA_IMAGES
-    return _ddl_of(PA_IMAGES)
-
-
-IMAGES_SCHEMA = _images_ddl()
+# derived from the ONE pyarrow writer schema: an explicit stream schema is
+# never reconciled against the files, so a hand-kept twin would silently
+# null any column added to the writer but missed here
+IMAGES_SCHEMA = from_arrow_schema(synth.IMAGES_SCHEMA)
 
 
 def read_image_stream(spark: SparkSession, input_dir: str,
@@ -46,6 +34,19 @@ def read_image_stream(spark: SparkSession, input_dir: str,
     return (spark.readStream.schema(IMAGES_SCHEMA)
             .option("maxFilesPerTrigger", max_files_per_trigger)
             .parquet(input_dir))
+
+
+def start_sink(df: DataFrame, sink, checkpoint_dir: str,
+               output_mode: str = "append", available_now: bool = True):
+    """Start *df* streaming into the foreachBatch function *sink* under
+    ``checkpoint_dir``; ``available_now`` drains the source, then stops."""
+    writer = (df.writeStream
+              .outputMode(output_mode)
+              .foreachBatch(sink)
+              .option("checkpointLocation", checkpoint_dir))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def start_quality_filter_stream(stream_df: DataFrame,
@@ -62,17 +63,11 @@ def start_quality_filter_stream(stream_df: DataFrame,
     (first-arrival-wins with bounded TTL state) or the batch compaction
     pass — mirroring the reference's cache-then-recompute split.
     """
-    from ..sources.catalog import IdempotentBatchAppender
-    appender = IdempotentBatchAppender(results,
-                                       checkpoint_dir=checkpoint_dir)
+    appender = IdempotentBatchAppender(results, checkpoint_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         appender.append(pipe.quality_filter(batch_df, with_dedup=False),
                         batch_id)
 
-    writer = (stream_df.writeStream
-              .foreachBatch(sink)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(stream_df, sink, checkpoint_dir,
+                      available_now=available_now)

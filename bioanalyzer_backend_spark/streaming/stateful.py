@@ -33,7 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..plans import pipeline as pipe
-from ..sources.catalog import LocalSnapshotTable
+from ..sources.catalog import IdempotentBatchAppender, LocalSnapshotTable
+from .ingest import start_sink
 
 # --------------------------------------------------------------------------
 # watermarked windowed aggregation
@@ -84,13 +85,7 @@ def start_windowed_stats_stream(stream_df: DataFrame,
             return
         results.merge_by_key(batch_df.sparkSession, batch_df, "wkey")
 
-    writer = (stats.writeStream
-              .outputMode("update")
-              .foreachBatch(sink)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(stats, sink, checkpoint_dir, "update", available_now)
 
 
 # --------------------------------------------------------------------------
@@ -172,18 +167,9 @@ def start_stateful_dedup(stream_df: DataFrame,
                          checkpoint_dir: str,
                          state_ttl_ms: int = 0,
                          available_now: bool = True):
-    from ..sources.catalog import IdempotentBatchAppender
-    flags = stateful_dedup(stream_df, state_ttl_ms)
-    appender = IdempotentBatchAppender(results,
-                                       checkpoint_dir=checkpoint_dir)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        appender.append(batch_df, batch_id)
-
-    writer = (flags.writeStream
-              .outputMode("update")
-              .foreachBatch(sink)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    """Stream ``stateful_dedup``'s flags into *results*, one
+    exactly-once append per micro-batch (IdempotentBatchAppender)."""
+    appender = IdempotentBatchAppender(results, checkpoint_dir)
+    return start_sink(stateful_dedup(stream_df, state_ttl_ms),
+                      appender.append, checkpoint_dir, "update",
+                      available_now)

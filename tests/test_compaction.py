@@ -147,14 +147,11 @@ def test_appender_scopes_dedup_by_query_id(spark, tmp_path):
     a2 = IdempotentBatchAppender(tbl, checkpoint_dir=mk_ckpt("c2", "q-2"))
     assert a2.append(df, 0) is True
     # crash-restart of q-2 (fresh appender, same checkpoint): replay skips
-    a3 = IdempotentBatchAppender(tbl, checkpoint_dir=mk_ckpt("c3", "q-2"))
-    a3._ckpt = str(tmp_path / "c2")             # same checkpoint on disk
-    a3._ns = None
+    a3 = IdempotentBatchAppender(tbl, checkpoint_dir=str(tmp_path / "c2"))
     assert a3.append(df, 0) is False
     out = tbl.read(spark)
     assert out.count() == 6                     # q-1 batch0 + q-2 batch0
-    assert {r["_query_id"] for r in out.select("_query_id").collect()} \
-        == {"q-1", "q-2"}
+    assert {s["query_id"] for s in tbl.summaries()} == {"q-1", "q-2"}
     # a checkpoint with no query id has no namespace: append raises and
     # writes nothing (batches are never namespaced under '')
     head = tbl.current_snapshot()["snapshot"]
@@ -163,6 +160,52 @@ def test_appender_scopes_dedup_by_query_id(spark, tmp_path):
     with _pytest.raises(FileNotFoundError):
         a4.append(df, 1)
     assert tbl.current_snapshot()["snapshot"] == head
+
+
+def test_appender_replay_runs_no_spark_job(spark, tmp_path):
+    """The commit facts live in the snapshot summaries, so a fresh
+    appender (a restarted query) skips a committed batch with one
+    manifest read: no Spark job, and the rows carry only their own
+    columns."""
+    import json as _json
+
+    from bioanalyzer_backend_spark.sources.catalog import (
+        IdempotentBatchAppender, LocalSnapshotTable)
+
+    ckpt = tmp_path / "ck"
+    ckpt.mkdir()
+    (ckpt / "metadata").write_text(_json.dumps({"id": "q-1"}))
+    tbl = LocalSnapshotTable(str(tmp_path / "tbl"))
+    a1 = IdempotentBatchAppender(tbl, checkpoint_dir=str(ckpt))
+    for b in range(5):
+        assert a1.append(spark.range(b, b + 1).toDF("v"), b) is True
+    assert tbl.read(spark).columns == ["v"]
+    assert tbl.summaries() == [{"query_id": "q-1", "batch_id": b}
+                               for b in range(5)]
+
+    replay = spark.range(3, 4).toDF("v")
+    a2 = IdempotentBatchAppender(tbl, checkpoint_dir=str(ckpt))
+    sc = spark.sparkContext
+    group = "appender-replay-" + tmp_path.name
+    sc.setJobGroup(group, "appender replay")
+    try:
+        assert a2.append(replay, 3) is False
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert len(tbl.summaries()) == 5
+
+
+def test_appender_needs_snapshot_table(tmp_path):
+    """Batch facts live in snapshot summaries, which only
+    LocalSnapshotTable keeps: any other table is refused up front."""
+    import pytest as _pytest
+
+    from bioanalyzer_backend_spark.sources.catalog import (
+        IcebergTable, IdempotentBatchAppender)
+
+    with _pytest.raises(ValueError, match="LocalSnapshotTable"):
+        IdempotentBatchAppender(IcebergTable("cat.db.t"), str(tmp_path))
 
 
 def test_open_table_rejects_uri_schemes(spark):

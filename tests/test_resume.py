@@ -469,22 +469,24 @@ def test_corrupt_head_raises_not_empty(spark, tmp_path):
     """HEAD naming a missing manifest is corruption: reading it as an
     empty table would let the next append permanently publish the
     truncation of all prior contents. A HEAD manifest without the format
-    stamp, or with format 2 (no summaries: its committed groups would
-    look absent and be reprocessed), was written by older code and is
-    refused the same way, by every read path and by append before it
-    publishes anything."""
+    stamp, with format 2 (no summaries: its committed groups would look
+    absent and be reprocessed) or with format 3 (stream batches recorded
+    in row columns, not summaries: a replayed batch would be re-admitted)
+    was written by older code and is refused the same way, by every read
+    path and by append before it publishes anything."""
     import os
 
     for damage, match in (("missing", "corrupt"),
                           ("formatless", "older code"),
-                          ("format2", "older code")):
+                          ("format2", "older code"),
+                          ("format3", "older code")):
         tbl = LocalSnapshotTable(str(tmp_path / damage))
         tbl.append(spark.range(5).toDF("x"))
         snap = tbl.current_snapshot()
         if damage == "missing":
             os.remove(os.path.join(tbl.meta_dir, snap["snapshot"]))
         else:
-            _strip_format(tbl, stamp=2 if damage == "format2" else None)
+            _strip_format(tbl, stamp={"format2": 2, "format3": 3}.get(damage))
         head = open(tbl._head_path()).read()
         data_dirs = set(os.listdir(tbl.data_dir))
         for call in (tbl.current_snapshot, lambda: tbl.read(spark),
@@ -511,8 +513,8 @@ def test_formatless_parent_snapshot_raises(spark, tmp_path):
 
 
 def test_merge_by_key_with_extra_target_columns(spark, tmp_path):
-    """A target that carries bookkeeping columns the source lacks (the
-    appender's _batch_id/_query_id shape) must merge, with NULLs for the
+    """A target that carries columns the source lacks (here an earlier
+    append's extra ``_batch_id`` column) must merge, with NULLs for the
     source side's missing columns — previously unionByName crashed."""
     tbl = LocalSnapshotTable(str(tmp_path / "mx"))
     tbl.append(spark.createDataFrame(

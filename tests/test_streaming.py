@@ -36,9 +36,13 @@ def test_stream_matches_batch(spark, stream_input, tmp_path, artifacts_dir):
            .toPandas().sort_values("image_id").reset_index(drop=True))
 
     batch_df = spark.read.parquet(stream_input)
-    want = (P.quality_filter(batch_df, with_dedup=False)
+    want_df = P.quality_filter(batch_df, with_dedup=False)
+    want = (want_df
             .select("image_id", "keep", "quality_score", "scrubbed_caption")
             .toPandas().sort_values("image_id").reset_index(drop=True))
+    # exactly the pipeline's columns: the commit facts live in the
+    # snapshot summaries, not in the rows
+    assert results.read(spark).columns == want_df.columns
 
     assert len(got) == len(want) > 0
     pd.testing.assert_frame_equal(got, want)
@@ -119,5 +123,5 @@ def test_checkpoint_reset_reprocesses_instead_of_silent_drop(
         results, ckpt).awaitTermination(120)
     out = results.read(spark)
     assert out.count() == 2 * n1              # replay ADMITTED, not eaten
-    qids = [r[0] for r in out.select("_query_id").distinct().collect()]
+    qids = {s["query_id"] for s in results.summaries()}
     assert len(qids) == 2 and all(q for q in qids)   # two real query ids

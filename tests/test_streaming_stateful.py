@@ -121,6 +121,7 @@ def test_stateful_dedup_across_batches(spark, tmp_path):
                                       str(tmp_path / "ckpt"))
     q.awaitTermination(180)
 
+    assert results.read(spark).columns == ["image_id", "phash", "is_dup"]
     got = (results.read(spark).select("image_id", "phash", "is_dup")
            .toPandas().set_index("image_id").sort_index())
     assert len(got) == 5
