@@ -1,57 +1,50 @@
-"""Lineage + rule-hit audit rows (FIXTURES.md section 4).
+"""Lineage + rule-hit audit (FIXTURES.md section 4).
 
 Re-expression of the reference's structured performance log
-(app/utils/performance_logger.py:36-123: query start/end, per-step
-durations, success/failure, cache ops) as queryable rows in an audit
-table: one row per (run_id, part_id, lang, rule) with hit counts and
-per-partition in/kept tallies — computed declaratively from the result
-DataFrame (no second pass over the data; Catalyst fuses it with the
-pipeline when both sinks share the cached plan).
+(app/utils/performance_logger.py:36-123: one structured record per step)
+as one record per committed group: the group's per-language tallies are
+decided once (``group_tallies``) and kept in its commits' snapshot
+summaries, like Iceberg's queryable snapshot metadata. The audit commit
+writes no data; ``audit_rows`` renders the long-form rows, one per
+(run_id, group_id, lang, rule), from those summaries on demand — no
+table scan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import spec
+from ..sources.catalog import LocalSnapshotTable
 
-AUDIT_SCHEMA = ("run_id string, part_id int, lang string, rule string, "
-                "hits bigint, n_in bigint, n_kept bigint, wall_ms double, "
-                "group_id int")
+AUDIT_SCHEMA = ("run_id string, group_id int, lang string, rule string, "
+                "hits bigint, n_in bigint, n_kept bigint, wall_ms double")
 
 
-def audit_rows(result: DataFrame, run_id: str,
-               wall_ms: float | None = None,
-               group_id: int | None = None) -> DataFrame:
-    """Melt per-rule PRESENT hits into long-form audit rows.
+def group_tallies(result: DataFrame) -> list[dict]:
+    """One ``{lang, n_in, n_kept, hits: {rule: n}}`` per lang of
+    *result*, sorted by lang: its rows in, rows kept, and PRESENT hits of
+    each ``spec.RULE_NAMES`` rule. One aggregate job."""
+    def n_where(cond):
+        return F.count(F.when(cond, 1))
 
-    ``group_id`` stamps the resume commit unit (NOT part_id, which is
-    the physical task partition), so a group's audit rows can be told
-    apart from other groups'; crash repair regenerates them only for a
-    group whose audit commit is missing (plans/resume.reconcile)."""
-    lang = F.col("lang") if "lang" in result.columns else F.lit("all")
-    base = result.select(
-        F.spark_partition_id().alias("part_id"),
-        lang.alias("lang"),
-        F.col("keep").cast("int").alias("_keep"),
-        *[(F.col(f"status_{r}") == spec.STATUS_PRESENT).cast("int")
-          .alias(f"_hit_{r}") for r in spec.RULE_NAMES])
-    agg = base.groupBy("part_id", "lang").agg(
+    rows = result.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_in"),
-        F.sum("_keep").alias("n_kept"),
-        *[F.sum(f"_hit_{r}").alias(f"hits_{r}") for r in spec.RULE_NAMES])
-    stack = ", ".join(f"'{r}', hits_{r}" for r in spec.RULE_NAMES)
-    long = agg.selectExpr(
-        "part_id", "lang", "n_in", "n_kept",
-        f"stack({len(spec.RULE_NAMES)}, {stack}) AS (rule, hits)")
-    return long.select(
-        F.lit(run_id).alias("run_id"),
-        F.col("part_id").cast("int"),
-        "lang", "rule",
-        F.col("hits").cast("long"),
-        F.col("n_in").cast("long"),
-        F.col("n_kept").cast("long"),
-        F.lit(float(wall_ms) if wall_ms is not None else None)
-        .cast("double").alias("wall_ms"),
-        F.lit(group_id).cast("int").alias("group_id"))
+        n_where(F.col("keep")).alias("n_kept"),
+        *[n_where(F.col(f"status_{r}") == spec.STATUS_PRESENT).alias(r)
+          for r in spec.RULE_NAMES]).collect()
+    return sorted(({"lang": r["lang"], "n_in": r["n_in"],
+                    "n_kept": r["n_kept"],
+                    "hits": {k: r[k] for k in spec.RULE_NAMES}}
+                   for r in rows), key=lambda t: t["lang"])
+
+
+def audit_rows(spark: SparkSession, audit: LocalSnapshotTable) -> DataFrame:
+    """The audit rows of *audit*, rendered from its summaries: one row
+    per (group commit, lang, rule)."""
+    return spark.createDataFrame(
+        [(s["run_id"], s["group"], t["lang"], rule, t["hits"][rule],
+          t["n_in"], t["n_kept"], s["wall_ms"])
+         for s in audit.summaries() for t in s["by_lang"]
+         for rule in spec.RULE_NAMES], AUDIT_SCHEMA)

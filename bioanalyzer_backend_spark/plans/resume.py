@@ -3,12 +3,14 @@
 Semantics inherited from the reference's cache-or-compute pattern
 (app/services/cache_manager.py:91-166: keyed lookup, else compute and
 upsert): work is split into deterministic id-hash groups over a
-pixel-free staged copy of the input. Each group's facts
-``{group, n_groups, run_id, n_rows, n_kept}`` are decided once and
-recorded in the snapshot summary of each of its commits (results rows,
-audit rows, a metadata-only checkpoint commit). A re-run reads the
-summaries at HEAD — a key probe, no Spark job — and processes only the
-groups without a checkpoint summary. All three tables are append-only.
+pixel-free staged copy of the input. Each group's fact
+``{group, n_groups, run_id, n_rows, n_kept, by_lang}`` (``by_lang``: the
+per-language rule-hit tallies of plans/audit.group_tallies) is decided
+once and recorded in the snapshot summary of each of its commits
+(results rows, then metadata-only audit and checkpoint commits). A
+re-run reads the summaries at HEAD — a key probe, no Spark job — and
+processes only the groups without a checkpoint summary. All three tables
+are append-only.
 
 One writer per warehouse, like the reference's single-writer SQLite
 cache: a run holds ``<results.root>/.run.lock`` from its first read to
@@ -19,10 +21,10 @@ commits in the order results -> audit -> checkpoint, and each table's
 commit is atomic (sources/catalog.py). A crash BETWEEN them leaves the
 group's rows published without its checkpoint commit; re-running the
 group would duplicate those rows, so ``reconcile`` ROLLS THE COMMIT
-FORWARD instead: a group with a results summary gets its audit rows
-regenerated if its audit summary is missing (audit_rows is a pure
-function of the result rows) and its checkpoint commit appended — never
-reprocessed, never duplicated.
+FORWARD instead: a group with a results summary gets that fact appended
+as its audit commit if the audit summary is missing, then as its
+checkpoint commit — never reprocessed, never duplicated, and no Spark
+job.
 
 At warehouse scale, groups map to Iceberg partitions and the driver loop
 becomes sequential staged jobs over bucket(image_id, N).
@@ -41,7 +43,7 @@ from pyspark.sql import functions as F
 from ..operators.skew import stable_salt
 from ..sources.catalog import LocalSnapshotTable
 from . import pipeline as pipe
-from .audit import audit_rows
+from .audit import group_tallies
 
 
 def committed_groups(table: LocalSnapshotTable) -> set[int]:
@@ -66,22 +68,20 @@ def check_n_groups(results: LocalSnapshotTable, n_groups: int) -> None:
             f"skip rows — rerun with the original value")
 
 
-def reconcile(spark: SparkSession, results: LocalSnapshotTable,
-              audit: LocalSnapshotTable, ckpt: LocalSnapshotTable,
-              run_id: str) -> list[int]:
+def reconcile(results: LocalSnapshotTable, audit: LocalSnapshotTable,
+              ckpt: LocalSnapshotTable, run_id: str) -> list[int]:
     """Roll forward half-committed groups (rows published, checkpoint
-    commit missing after a crash): append the group's audit rows if the
-    crash came before them, then its checkpoint commit. Returns the
-    groups repaired.
+    commit missing after a crash): append the group's audit commit if the
+    crash came before it, then its checkpoint commit. Returns the groups
+    repaired. Runs no Spark job: both commits are metadata-only and carry
+    the group's results summary.
 
     Idempotent per group: an append is atomic, so a group with an audit
-    summary has its audit rows, and they are kept as the crashed run
-    wrote them. Missing audit rows are regenerated from the published
-    results (audit_rows is a pure function of the result rows). The
-    repaired checkpoint fact, and any regenerated audit rows, are stamped
-    ``repair:<run_id>``, not ``run_id``: the crashed run did that
-    processing, and metrics that sum rows for run_id == this run must not
-    claim it (jobs/quality_filter.py rows_this_run)."""
+    summary keeps it as the crashed run wrote it. The repaired facts are
+    stamped ``repair:<run_id>``, not ``run_id`` (and a missing audit
+    fact gets ``wall_ms: None``): the crashed run did that processing,
+    and metrics that count rows for run_id == this run must not claim it
+    (jobs/quality_filter.py rows_this_run)."""
     facts = {s["group"]: s for s in results.summaries()}
     half = sorted(set(facts) - committed_groups(ckpt))
     stamp = f"repair:{run_id}"
@@ -89,8 +89,7 @@ def reconcile(spark: SparkSession, results: LocalSnapshotTable,
     for g in half:
         fact = {**facts[g], "run_id": stamp}
         if g not in audited:
-            out = results.read(spark).where(F.col("part_id") == g)
-            audit.append(audit_rows(out, stamp, None, group_id=g), fact)
+            audit.append(None, {**fact, "wall_ms": None})
         ckpt.append(None, fact)
     return half
 
@@ -194,7 +193,7 @@ def run_with_resume(spark: SparkSession, images: DataFrame,
     lock_fd = _lock_run(results.root)
     try:
         check_n_groups(results, n_groups)
-        repaired = reconcile(spark, results, audit, ckpt, run_id)
+        repaired = reconcile(results, audit, ckpt, run_id)
         done = committed_groups(ckpt)
         todo = [g for g in range(n_groups) if g not in done]
         if todo:
@@ -202,9 +201,9 @@ def run_with_resume(spark: SparkSession, images: DataFrame,
         for g in todo:
             t0 = time.time()
             sub = staged.where(F.col("part_id") == g).drop("part_id")
-            # one materialization feeds the group's fact, the results
-            # sink and the audit aggregation — uncached, the UDF-gated
-            # pipeline would execute three times per group.
+            # one materialization feeds the group's fact and the results
+            # sink — uncached, the UDF-gated pipeline would execute twice
+            # per group.
             # with_dedup=False: is_dup was stamped GLOBALLY at staging
             # (stage_input) — a per-group dedup here would miss dup pairs
             # split across id-hash groups
@@ -212,20 +211,18 @@ def run_with_resume(spark: SparkSession, images: DataFrame,
                 .withColumn("part_id", F.lit(g))
             out = out.persist()
             try:
-                n_rows, n_kept = out.select(   # this pass fills the cache
-                    F.count("*"),
-                    F.coalesce(F.sum(F.col("keep").cast("int")), F.lit(0))
-                ).first()
+                by_lang = group_tallies(out)   # this pass fills the cache
                 fact = {"group": g, "n_groups": n_groups, "run_id": run_id,
-                        "n_rows": n_rows, "n_kept": n_kept}
+                        "n_rows": sum(t["n_in"] for t in by_lang),
+                        "n_kept": sum(t["n_kept"] for t in by_lang),
+                        "by_lang": by_lang}
                 results.append(out, fact)
                 if fail_between_commits \
                         and n_committed + 1 >= (fail_after or 1):
                     raise RuntimeError(
                         f"injected failure between commits of group {g}")
                 wall_ms = (time.time() - t0) * 1000.0
-                audit.append(audit_rows(out, run_id, wall_ms, group_id=g),
-                             fact)
+                audit.append(None, {**fact, "wall_ms": wall_ms})
                 if fail_after_audit and n_committed + 1 >= (fail_after or 1):
                     raise RuntimeError(
                         f"injected failure after audit of group {g}")

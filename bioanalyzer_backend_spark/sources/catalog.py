@@ -32,7 +32,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-FORMAT = 4
+FORMAT = 5
 
 
 class LocalSnapshotTable:
@@ -353,10 +353,10 @@ class LocalSnapshotTable:
     def compact(self, spark: SparkSession, target_files: int = 8) -> str:
         """Small-file compaction (Iceberg ``rewrite_data_files`` analogue).
 
-        Streaming micro-batch appends and per-partition audit writes leave
-        a long tail of small files; at warehouse scale that tail dominates
-        scan planning time. Rewrites the current snapshot into
-        ``target_files`` files and commits the new list atomically —
+        Streaming micro-batch appends leave a long tail of small files;
+        at warehouse scale that tail dominates scan planning time.
+        Rewrites the current snapshot into ``target_files`` files and
+        commits the new list atomically —
         readers see either the old file set or the new one, never a mix.
         Old files stay on disk for time-travel until expired."""
         def df_fn():

@@ -4,6 +4,7 @@
 import pytest
 
 from bioanalyzer_backend_spark.plans import resume
+from bioanalyzer_backend_spark.plans.audit import audit_rows
 from bioanalyzer_backend_spark.plans.pipeline import binary_columns
 from bioanalyzer_backend_spark.plans.resume import run_with_resume
 from bioanalyzer_backend_spark.sources.catalog import LocalSnapshotTable
@@ -112,7 +113,7 @@ def test_resume_after_injected_failure(spark, synth_images_df, tmp_path,
                       full)
 
     # audit rows exist with positive counts
-    aud = c_aud.read(spark).toPandas()
+    aud = audit_rows(spark, c_aud).toPandas()
     assert set(aud["rule"]) == {"len", "word", "rep", "alpha", "stop"}
     assert (aud["n_in"] > 0).all()
 
@@ -204,8 +205,9 @@ def test_merge_by_key_upsert(spark, tmp_path):
 def test_crash_between_commits_rolls_forward(spark, synth_images_df,
                                              tmp_path, artifacts_dir):
     """Crash AFTER results.append but BEFORE the checkpoint row: the
-    restart must roll the half-committed group forward (regenerate audit,
-    append checkpoint) — NOT reprocess it, which would duplicate rows."""
+    restart must roll the half-committed group forward (append its audit
+    and checkpoint commits) — NOT reprocess it, which would duplicate
+    rows."""
     df = synth_images_df.limit(300)
     res, aud, ck = _tables(tmp_path / "half")
 
@@ -224,13 +226,11 @@ def test_crash_between_commits_rolls_forward(spark, synth_images_df,
     got = res.read(spark)
     assert got.count() == df.count()
     assert got.select("image_id").distinct().count() == df.count()
-    # the repaired group's audit rows were regenerated under
-    # 'repair:<run_id>' and the new groups' under the plain run id
-    # (audit group_id is the group; its part_id is the PHYSICAL partition
-    # id — see plans/audit.py)
+    # the repaired group's audit rows are stamped 'repair:<run_id>' and
+    # the new groups' the plain run id
     rid = stats["run_id"]
     repaired = set(stats["repaired_groups"])
-    aud_rows = aud.read(spark).select("run_id", "group_id").collect()
+    aud_rows = audit_rows(spark, aud).select("run_id", "group_id").collect()
     assert {r["run_id"] for r in aud_rows
             if r["group_id"] in repaired} == {"repair:" + rid}
     assert {r["group_id"] for r in aud_rows if r["run_id"] == rid} \
@@ -257,7 +257,7 @@ def test_crash_after_audit_repair_is_idempotent(spark, synth_images_df,
                         fail_after_audit=True, fail_after=1)
     # rows AND audit are published; checkpoint row is not
     assert res.read(spark) is not None
-    assert aud.read(spark) is not None
+    assert audit_rows(spark, aud).count() > 0
     assert len(resume.committed_groups(ck)) == 0
     crashed_group = res.read(spark).select("part_id").distinct().collect()
     g = crashed_group[0]["part_id"]
@@ -268,19 +268,65 @@ def test_crash_after_audit_repair_is_idempotent(spark, synth_images_df,
     # per-rule input counts for the repaired group equal the group's row
     # count EXACTLY once — doubling would make this 2x
     group_rows = res.read(spark).where(f"part_id = {g}").count()
-    per_rule = (aud.read(spark).where(f"group_id = {g}")
+    per_rule = (audit_rows(spark, aud).where(f"group_id = {g}")
                 .groupBy("rule").sum("n_in").collect())
     assert per_rule, "repaired group has audit rows"
     for r in per_rule:
         assert r["sum(n_in)"] == group_rows
     # the crashed run computed those rows: they keep its run_id and
     # wall_ms, while the checkpoint fact is stamped 'repair:<run_id>'
-    kept = aud.read(spark).where(f"group_id = {g}") \
+    kept = audit_rows(spark, aud).where(f"group_id = {g}") \
         .select("run_id", "wall_ms").collect()
     assert {r["run_id"] for r in kept} != {"repair:" + stats["run_id"]}
     assert all(r["wall_ms"] is not None for r in kept)
     assert [s["run_id"] for s in ck.summaries() if s["group"] == g] \
         == ["repair:" + stats["run_id"]]
+
+
+def test_reconcile_runs_no_spark_job(spark, synth_images_df, tmp_path,
+                                     artifacts_dir):
+    """Rolling a half-committed group forward reads and writes snapshot
+    summaries only: the repair runs no Spark job."""
+    df = synth_images_df.limit(100)
+    res, aud, ck = _tables(tmp_path / "rc")
+    with pytest.raises(RuntimeError, match="between commits"):
+        run_with_resume(spark, df, res, aud, ck, n_groups=2,
+                        fail_between_commits=True, fail_after=1)
+    sc = spark.sparkContext
+    group = "reconcile-" + tmp_path.name
+    sc.setJobGroup(group, "reconcile")
+    try:
+        repaired = resume.reconcile(res, aud, ck, "rid")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert repaired == [0]
+    assert resume.committed_groups(aud) == resume.committed_groups(ck) \
+        == {0}
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_repaired_audit_equals_clean_run(spark, synth_images_df, tmp_path,
+                                         artifacts_dir):
+    """A group repaired after a crash between its commits records the
+    same audit rows as a clean run on a fresh warehouse records for it,
+    on every column but run_id and wall_ms."""
+    df = synth_images_df.limit(300)
+    res, aud, ck = _tables(tmp_path / "crash")
+    with pytest.raises(RuntimeError, match="between commits"):
+        run_with_resume(spark, df, res, aud, ck, n_groups=4,
+                        fail_between_commits=True, fail_after=1)
+    assert run_with_resume(spark, df, res, aud, ck,
+                           n_groups=4)["repaired_groups"] == [0]
+    c_res, c_aud, c_ck = _tables(tmp_path / "clean")
+    run_with_resume(spark, df, c_res, c_aud, c_ck, n_groups=4)
+
+    def group0(tbl):
+        return sorted(tuple(r) for r in audit_rows(spark, tbl)
+                      .where("group_id = 0").drop("run_id", "wall_ms")
+                      .collect())
+
+    got = group0(aud)
+    assert got and got == group0(c_aud)
 
 
 def test_open_table_routing_matches_classpath(spark, tmp_path):
@@ -321,8 +367,8 @@ def test_delete_where_keeps_null_predicate_rows(spark, tmp_path):
     predicate evaluates NULL — e.g. a NULL group_id under
     ``group_id = 3`` — must be KEPT, not swept away by a naive
     ``where(~cond)`` rewrite: deleting one group of a table that mixes
-    group-stamped rows with NULL-group rows (the audit table's shape)
-    must not eat the NULL rows."""
+    group-stamped rows with NULL-group rows must not eat the NULL
+    rows."""
     tbl = LocalSnapshotTable(str(tmp_path / "n"))
     tbl.append(spark.createDataFrame(
         [(3, "stamped"), (None, "lineage"), (4, "other")],
@@ -443,7 +489,7 @@ def test_changed_n_groups_before_first_checkpoint_raises(spark,
     assert ck.summaries() == []
     with pytest.raises(ValueError, match="n_groups"):
         run_with_resume(spark, df, res, aud, ck, n_groups=8)
-    assert ck.summaries() == [] and aud.read(spark) is None
+    assert ck.summaries() == [] and aud.summaries() == []
     # the original value still resumes, one row per image_id
     stats = run_with_resume(spark, df, res, aud, ck, n_groups=4)
     assert len(stats["repaired_groups"]) == 1
@@ -470,23 +516,27 @@ def test_corrupt_head_raises_not_empty(spark, tmp_path):
     empty table would let the next append permanently publish the
     truncation of all prior contents. A HEAD manifest without the format
     stamp, with format 2 (no summaries: its committed groups would look
-    absent and be reprocessed) or with format 3 (stream batches recorded
+    absent and be reprocessed), with format 3 (stream batches recorded
     in row columns, not summaries: a replayed batch would be re-admitted)
-    was written by older code and is refused the same way, by every read
-    path and by append before it publishes anything."""
+    or with format 4 (audit facts in data rows, summaries without
+    ``by_lang``: audit_rows would fail on them) was written by older code
+    and is refused the same way, by every read path and by append before
+    it publishes anything."""
     import os
 
     for damage, match in (("missing", "corrupt"),
                           ("formatless", "older code"),
                           ("format2", "older code"),
-                          ("format3", "older code")):
+                          ("format3", "older code"),
+                          ("format4", "older code")):
         tbl = LocalSnapshotTable(str(tmp_path / damage))
         tbl.append(spark.range(5).toDF("x"))
         snap = tbl.current_snapshot()
         if damage == "missing":
             os.remove(os.path.join(tbl.meta_dir, snap["snapshot"]))
         else:
-            _strip_format(tbl, stamp={"format2": 2, "format3": 3}.get(damage))
+            _strip_format(tbl, stamp={"format2": 2, "format3": 3,
+                                      "format4": 4}.get(damage))
         head = open(tbl._head_path()).read()
         data_dirs = set(os.listdir(tbl.data_dir))
         for call in (tbl.current_snapshot, lambda: tbl.read(spark),
@@ -576,5 +626,5 @@ def test_resume_refuses_warehouse_from_older_code(spark, synth_images_df,
     with pytest.raises(RuntimeError, match="older code"):
         run_with_resume(spark, df, res, aud, ck, n_groups=4)
     assert ck.summaries() == []
-    assert aud.read(spark) is None
+    assert aud.summaries() == []
     assert not os.path.exists(os.path.join(res.root, "_stage"))
