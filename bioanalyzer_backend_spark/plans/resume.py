@@ -14,7 +14,14 @@ are append-only.
 
 One writer per warehouse, like the reference's single-writer SQLite
 cache: a run holds ``<results.root>/.run.lock`` from its first read to
-its last commit, and stages its input at ``<results.root>/_stage``.
+its last commit, and stages its input at ``<results.root>/stage``.
+
+The stage is the largest intermediate, and it is cached the same
+keyed way: a completed stage carries a ``_STAGED`` stamp (format,
+n_groups, slim input schema, input files). A resume whose stamp matches
+reads the crashed run's stage instead of re-reading the input, redoing
+the global dedup and rewriting it; a stage made for other work is
+replaced, or refused once groups from it are published.
 
 Crash-window discipline: a group commit is three single-table snapshot
 commits in the order results -> audit -> checkpoint, and each table's
@@ -32,6 +39,8 @@ becomes sequential staged jobs over bucket(image_id, N).
 
 from __future__ import annotations
 
+import json
+import logging
 import os
 import shutil
 import time
@@ -41,9 +50,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.skew import stable_salt
-from ..sources.catalog import LocalSnapshotTable
+from ..sources.catalog import FORMAT, LocalSnapshotTable
 from . import pipeline as pipe
 from .audit import group_tallies
+
+log = logging.getLogger(__name__)
+
+STAMP = "_STAGED"
 
 
 def committed_groups(table: LocalSnapshotTable) -> set[int]:
@@ -91,7 +104,32 @@ def reconcile(results: LocalSnapshotTable, audit: LocalSnapshotTable,
         if g not in audited:
             audit.append(None, {**fact, "wall_ms": None})
         ckpt.append(None, fact)
+    if half:
+        log.warning("rolled forward half-committed groups %s (rows "
+                    "published, checkpoint commit missing)", half)
     return half
+
+
+def stage_stamp(images: DataFrame, n_groups: int) -> dict:
+    """What a stage of *images* under *n_groups* was made from: the table
+    format, the group count, the pixel-free schema and the input files.
+    All driver-side; no Spark job. An in-memory frame has no files, so
+    only its schema and n_groups are compared."""
+    slim = images.drop(*pipe.binary_columns(images))
+    return {"format": FORMAT, "n_groups": n_groups,
+            "schema": slim.schema.toDDL(),
+            "inputs": sorted(images.inputFiles())}
+
+
+def read_stamp(stage_path: str) -> dict | None:
+    """The stamp of a completed stage, or None (no stage, or one whose
+    write never finished: the stamp is written last, by an atomic
+    rename)."""
+    try:
+        with open(os.path.join(stage_path, STAMP)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
 
 
 def stage_input(spark: SparkSession, images: DataFrame, stage_path: str,
@@ -120,7 +158,12 @@ def stage_input(spark: SparkSession, images: DataFrame, stage_path: str,
     reason streaming/ingest.py disables in-stream dedup). Computing
     is_dup over the full frame here makes the resumed run's flags
     identical to a plain quality_filter run, and does the dedup
-    shuffle ONCE instead of once per group."""
+    shuffle ONCE instead of once per group.
+
+    A stage whose ``_STAGED`` stamp equals this call's (``stage_stamp``)
+    is returned as it is, with no Spark job: a crashed run's stage is
+    complete, because the stamp is written only after the stage write
+    commits. Any other stage is overwritten, and stamped anew."""
     if "part_id" in images.columns:
         # same clash discipline as apply_core_rules' temp columns and
         # skew._check_no_salt_col: silently overwriting (and later
@@ -130,8 +173,23 @@ def stage_input(spark: SparkSession, images: DataFrame, stage_path: str,
     slim = images.drop(*pipe.binary_columns(images))
     tagged = pipe.apply_dedup_flag(slim) \
         .withColumn("part_id", stable_salt("image_id", n_groups))
-    tagged.write.mode("overwrite").partitionBy("part_id").parquet(stage_path)
-    return spark.read.parquet(stage_path)
+    stamp = stage_stamp(images, n_groups)
+    found = read_stamp(stage_path)
+    stamp_path = os.path.join(stage_path, STAMP)
+    if found == stamp:
+        log.info("reusing the staged input at %s", stage_path)
+    else:
+        if found is not None:
+            log.warning("replacing the staged input at %s: it was staged "
+                        "from other input or n_groups", stage_path)
+            os.remove(stamp_path)
+        tagged.write.mode("overwrite").partitionBy("part_id") \
+            .parquet(stage_path)
+        with open(stamp_path + ".tmp", "w") as f:
+            json.dump(stamp, f)
+        os.replace(stamp_path + ".tmp", stamp_path)
+    # the known schema spares the read parquet's schema-inference job
+    return spark.read.schema(tagged.schema).parquet(stage_path)
 
 
 def _lock_run(root: str) -> int:
@@ -177,8 +235,20 @@ def run_with_resume(spark: SparkSession, images: DataFrame,
 
     The run holds ``<results.root>/.run.lock`` throughout, so a second
     run on the same warehouse raises. A crash leaves at most one staged
-    copy, ``<results.root>/_stage``, which the next run overwrites and
-    removes.
+    copy, ``<results.root>/stage``, which the next run removes once every
+    group is committed.
+
+    A resume finishes the input it staged: when the crashed run's stage
+    carries this run's ``stage_stamp``, the groups left to do read it
+    and the input is not read again. A stage stamped for other input or
+    another n_groups is staged again while no group is published, and
+    raises ``ValueError`` once one is (its rows would mix two inputs in
+    one results table). An in-memory frame has no files to compare, so
+    rows that change between the crash and the resume are not seen.
+
+    The returned stats carry ``staged``: ``"written"`` or ``"reused"``
+    for the stage the groups read, or None when no group was left to
+    do.
     """
     if n_groups < 1:
         raise ValueError(f"n_groups must be >= 1, got {n_groups}")
@@ -188,16 +258,29 @@ def run_with_resume(spark: SparkSession, images: DataFrame,
                          "summaries: results, audit and checkpoint must "
                          "all be LocalSnapshotTable")
     run_id = uuid.uuid4().hex[:12]
-    stage_path = os.path.join(results.root, "_stage")
+    stage_path = os.path.join(results.root, "stage")
     n_committed = 0
+    how = None
     lock_fd = _lock_run(results.root)
     try:
         check_n_groups(results, n_groups)
+        found = read_stamp(stage_path)
+        if found is not None and results.summaries() \
+                and found != stage_stamp(images, n_groups):
+            raise ValueError(
+                f"the stage at {stage_path} was made from other input "
+                f"than this run's, and groups from it are published: "
+                f"resume with the original input, or use a fresh "
+                f"warehouse")
         repaired = reconcile(results, audit, ckpt, run_id)
         done = committed_groups(ckpt)
         todo = [g for g in range(n_groups) if g not in done]
         if todo:
             staged = stage_input(spark, images, stage_path, n_groups)
+            # stage_input restamps whatever it writes, so an unchanged
+            # stamp means it read the stage as it found it
+            how = "reused" if found == read_stamp(stage_path) \
+                else "written"
         for g in todo:
             t0 = time.time()
             sub = staged.where(F.col("part_id") == g).drop("part_id")
@@ -235,10 +318,10 @@ def run_with_resume(spark: SparkSession, images: DataFrame,
                 raise RuntimeError(
                     f"injected failure after {n_committed} groups")
         # crash paths skip this on purpose (a killed JVM cannot clean
-        # up); the next run's overwrite replaces the leftover
+        # up); the next run reads the leftover if its stamp matches
         shutil.rmtree(stage_path, ignore_errors=True)
     finally:
         os.close(lock_fd)
     return {"run_id": run_id, "groups_done": len(done) + n_committed,
             "groups_total": n_groups, "newly_committed": n_committed,
-            "repaired_groups": repaired}
+            "repaired_groups": repaired, "staged": how}

@@ -87,7 +87,7 @@ def test_resume_after_injected_failure(spark, synth_images_df, tmp_path,
     assert len(resume.committed_groups(c_ck)) == 2
     # the crash leaves its staged copy behind: it must hold no pixels
     import os
-    stage = os.path.join(c_res.root, "_stage")
+    stage = os.path.join(c_res.root, "stage")
     assert binary_columns(spark.read.parquet(stage)) == []
 
     # restart: must process ONLY the 2 remaining groups
@@ -382,7 +382,7 @@ def test_delete_where_keeps_null_predicate_rows(spark, tmp_path):
 def test_crashes_leave_one_stage_copy(spark, synth_images_df, tmp_path,
                                       artifacts_dir):
     """A crashed run leaves its staged input copy behind (a killed JVM
-    cannot clean up). Every run stages at the one ``_stage`` dir, so two
+    cannot clean up). Every run stages at the one ``stage`` dir, so two
     crashes leave one staged copy, not two, and a clean resume removes
     it."""
     import os
@@ -394,7 +394,7 @@ def test_crashes_leave_one_stage_copy(spark, synth_images_df, tmp_path,
             run_with_resume(spark, df, res, aud, ck, n_groups=4,
                             fail_after=1)
     assert len(resume.committed_groups(ck)) == 2
-    assert [d for d in os.listdir(res.root) if "stage" in d] == ["_stage"]
+    assert [d for d in os.listdir(res.root) if "stage" in d] == ["stage"]
 
     run_with_resume(spark, df, res, aud, ck, n_groups=4)
     assert [d for d in os.listdir(res.root) if "stage" in d] == []
@@ -419,7 +419,7 @@ def test_second_run_on_warehouse_raises(spark, synth_images_df, tmp_path):
         os.close(fd)
     for t in (res, aud, ck):
         assert t.read(spark) is None and t.summaries() == []
-    assert not os.path.exists(os.path.join(res.root, "_stage"))
+    assert not os.path.exists(os.path.join(res.root, "stage"))
 
 
 def test_n_groups_below_one_raises(spark, synth_images_df, tmp_path):
@@ -456,6 +456,161 @@ def test_input_scanned_once_via_staging(spark, synth_images_df, tmp_path,
     assert acc.value == 200, (
         f"input lineage ran {acc.value / 200:.1f}x per row; staging "
         "must evaluate it exactly once")
+
+
+def _marked(spark, df):
+    """*df* with a marker column whose UDF counts each evaluation of the
+    input lineage; returns (frame, accumulator)."""
+    from pyspark.sql import functions as F
+
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf("int")
+    def marker(_):
+        acc.add(1)
+        return 1
+
+    return df.withColumn("_scan_marker", marker("image_id")), acc
+
+
+def test_resume_reads_the_crashed_runs_stage(spark, synth_images_df,
+                                             tmp_path, artifacts_dir,
+                                             caplog):
+    """A crashed run's stage carries the stamp the resume computes, so
+    the resume reads it instead of staging again: the input lineage runs
+    once per row across the crash and the resume, the resume's
+    stage_input runs no Spark job, and the results equal a clean run's
+    row for row."""
+    import logging
+
+    df, acc = _marked(spark, synth_images_df.limit(200))
+    res, aud, ck = _tables(tmp_path / "crash")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_with_resume(spark, df, res, aud, ck, n_groups=4, fail_after=1)
+    assert acc.value == 200
+    stage = str(tmp_path / "crash" / "results" / "stage")
+    assert resume.read_stamp(stage) == resume.stage_stamp(df, 4)
+
+    sc = spark.sparkContext
+    group = "restage-" + tmp_path.name
+    sc.setJobGroup(group, "stage_input over a stamped stage")
+    try:
+        with caplog.at_level(logging.INFO, logger=resume.__name__):
+            resume.stage_input(spark, df, stage, 4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert f"reusing the staged input at {stage}" in caplog.text
+
+    stats = run_with_resume(spark, df, res, aud, ck, n_groups=4)
+    assert stats["staged"] == "reused" and stats["newly_committed"] == 3
+    assert acc.value == 200, (
+        f"input lineage ran {acc.value / 200:.1f}x per row across the "
+        "crash and the resume; the resume must read the crashed stage")
+    assert run_with_resume(spark, df, res, aud, ck,
+                           n_groups=4)["staged"] is None
+
+    clean = _tables(tmp_path / "clean")
+    assert run_with_resume(spark, df, *clean,
+                           n_groups=4)["staged"] == "written"
+    _assert_same_rows(res.read(spark), clean[0].read(spark))
+
+
+def test_stage_for_other_n_groups_is_staged_again(spark, synth_images_df,
+                                                  tmp_path, artifacts_dir,
+                                                  caplog):
+    """A stage stamped for n_groups=4 is not read by a run at
+    n_groups=8 that has nothing published: its part_ids are a hash
+    modulo 4. The run stages again, says so, and publishes each id
+    once."""
+    import logging
+
+    df = synth_images_df.limit(200)
+    res, aud, ck = _tables(tmp_path / "ng")
+    stage = str(tmp_path / "ng" / "results" / "stage")
+    resume.stage_input(spark, df, stage, 4)
+    assert resume.read_stamp(stage)["n_groups"] == 4
+
+    with caplog.at_level(logging.WARNING, logger=resume.__name__):
+        with pytest.raises(RuntimeError, match="injected failure"):
+            run_with_resume(spark, df, res, aud, ck, n_groups=8,
+                            fail_after=1)
+    assert f"replacing the staged input at {stage}" in caplog.text
+    assert resume.read_stamp(stage)["n_groups"] == 8
+
+    stats = run_with_resume(spark, df, res, aud, ck, n_groups=8)
+    assert stats["staged"] == "reused" and stats["groups_done"] == 8
+    got = res.read(spark)
+    assert got.count() == 200
+    assert got.select("image_id").distinct().count() == 200
+
+
+def test_resume_on_other_input_raises(spark, synth_images_df, tmp_path,
+                                      artifacts_dir):
+    """A resume finishes the input it staged. Crashed on one parquet
+    input with a group published, a resume on another raises before any
+    commit (staging again would mix two inputs in one results table),
+    and the original input still resumes."""
+    a, b = str(tmp_path / "a.parquet"), str(tmp_path / "b.parquet")
+    synth_images_df.limit(120).write.parquet(a)
+    synth_images_df.limit(160).write.parquet(b)
+    res, aud, ck = _tables(tmp_path / "wh")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_with_resume(spark, spark.read.parquet(a), res, aud, ck,
+                        n_groups=4, fail_after=1)
+    before = [t.summaries() for t in (res, aud, ck)]
+    assert before[0]
+
+    with pytest.raises(ValueError, match="original input"):
+        run_with_resume(spark, spark.read.parquet(b), res, aud, ck,
+                        n_groups=4)
+    assert [t.summaries() for t in (res, aud, ck)] == before
+
+    stats = run_with_resume(spark, spark.read.parquet(a), res, aud, ck,
+                            n_groups=4)
+    assert stats["staged"] == "reused" and stats["groups_done"] == 4
+    assert res.read(spark).count() == 120
+
+
+def test_unstamped_stage_is_staged_again(spark, synth_images_df, tmp_path,
+                                         artifacts_dir):
+    """A stage without its stamp (a half-written one, or one older code
+    left) is not trusted: the resume stages again, and the results stay
+    a clean run's."""
+    import os
+
+    df, acc = _marked(spark, synth_images_df.limit(200))
+    res, aud, ck = _tables(tmp_path / "crash")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_with_resume(spark, df, res, aud, ck, n_groups=4, fail_after=1)
+    os.remove(os.path.join(res.root, "stage", resume.STAMP))
+
+    stats = run_with_resume(spark, df, res, aud, ck, n_groups=4)
+    assert stats["staged"] == "written" and stats["groups_done"] == 4
+    assert acc.value == 400
+    clean = _tables(tmp_path / "clean")
+    run_with_resume(spark, df, *clean, n_groups=4)
+    _assert_same_rows(res.read(spark), clean[0].read(spark))
+
+
+def test_reconcile_logs_rolled_forward_groups(spark, synth_images_df,
+                                              tmp_path, artifacts_dir,
+                                              caplog):
+    """A roll-forward is a WARNING that names the groups it repaired; a
+    reconcile with nothing to repair says nothing."""
+    import logging
+
+    res, aud, ck = _tables(tmp_path / "log")
+    with pytest.raises(RuntimeError, match="between commits"):
+        run_with_resume(spark, synth_images_df.limit(100), res, aud, ck,
+                        n_groups=2, fail_between_commits=True,
+                        fail_after=1)
+    with caplog.at_level(logging.WARNING, logger=resume.__name__):
+        assert resume.reconcile(res, aud, ck, "r1") == [0]
+        assert resume.reconcile(res, aud, ck, "r2") == []
+    assert [(r.levelname, r.getMessage()) for r in caplog.records] == [
+        ("WARNING", "rolled forward half-committed groups [0] (rows "
+                    "published, checkpoint commit missing)")]
 
 
 def test_resume_rejects_changed_n_groups(spark, synth_images_df, tmp_path):
@@ -627,4 +782,4 @@ def test_resume_refuses_warehouse_from_older_code(spark, synth_images_df,
         run_with_resume(spark, df, res, aud, ck, n_groups=4)
     assert ck.summaries() == []
     assert aud.summaries() == []
-    assert not os.path.exists(os.path.join(res.root, "_stage"))
+    assert not os.path.exists(os.path.join(res.root, "stage"))
