@@ -24,8 +24,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import spec, sqlgen
-# binary_columns: re-exported for resume.stage_input's pixel projection
-from ..operators.dedup import apply_dedup_flag, binary_columns  # noqa: F401
+from ..operators.dedup import apply_dedup_flag
+
+# the input columns the quality decision reads; the label tables (the
+# job's results, the stream's) keep only the key of these, and readers
+# join every input column back by it
+DECISION_INPUTS = ("image_id", "caption", "phash")
 
 _TEMP_COLS = ("t", "toks", "n", "n_tok", "n_utok", "n_stop", "n_alpha",
               "n_nonspace", "is_sentinel")

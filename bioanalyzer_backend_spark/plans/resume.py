@@ -2,15 +2,16 @@
 
 Semantics inherited from the reference's cache-or-compute pattern
 (app/services/cache_manager.py:91-166: keyed lookup, else compute and
-upsert): work is split into deterministic id-hash groups over a
-pixel-free staged copy of the input. Each group's fact
+upsert): work is split into deterministic id-hash groups over a staged
+copy of what the decision reads (``pipeline.DECISION_INPUTS``). Each
+group writes its label rows once, and its fact
 ``{group, n_groups, run_id, n_rows, n_kept, by_lang}`` (``by_lang``: the
 per-language rule-hit tallies of plans/audit.group_tallies) is decided
-once and recorded in the snapshot summary of each of its commits
-(results rows, then metadata-only audit and checkpoint commits). A
-re-run reads the summaries at HEAD — a key probe, no Spark job — and
-processes only the groups without a checkpoint summary. All three tables
-are append-only.
+from the files just written and recorded in the snapshot summary of each
+of its commits (results rows, then metadata-only audit and checkpoint
+commits). A re-run reads the summaries at HEAD — a key probe, no Spark
+job — and processes only the groups without a checkpoint summary. All
+three tables are append-only.
 
 One writer per warehouse, like the reference's single-writer SQLite
 cache: a run holds ``<results.root>/.run.lock`` from its first read to
@@ -39,6 +40,7 @@ becomes sequential staged jobs over bucket(image_id, N).
 
 from __future__ import annotations
 
+import functools
 import json
 import logging
 import os
@@ -112,10 +114,11 @@ def reconcile(results: LocalSnapshotTable, audit: LocalSnapshotTable,
 
 def stage_stamp(images: DataFrame, n_groups: int) -> dict:
     """What a stage of *images* under *n_groups* was made from: the table
-    format, the group count, the pixel-free schema and the input files.
+    format, the group count, the schema of the decision inputs and the
+    input files.
     All driver-side; no Spark job. An in-memory frame has no files, so
     only its schema and n_groups are compared."""
-    slim = images.drop(*pipe.binary_columns(images))
+    slim = images.select(*pipe.DECISION_INPUTS)
     return {"format": FORMAT, "n_groups": n_groups,
             "schema": slim.schema.toDDL(),
             "inputs": sorted(images.inputFiles())}
@@ -134,7 +137,7 @@ def read_stamp(stage_path: str) -> dict | None:
 
 def stage_input(spark: SparkSession, images: DataFrame, stage_path: str,
                 n_groups: int) -> DataFrame:
-    """Materialize the pixel-free, part_id-tagged input ONCE, partitioned
+    """Materialize the decision inputs, part_id-tagged, ONCE, partitioned
     by part_id, and return a reader over it. Filtering the raw input per
     group would re-scan the FULL table n_groups times (the group id is a
     computed hash, so the filter can never push down to the source); the
@@ -143,12 +146,13 @@ def stage_input(spark: SparkSession, images: DataFrame, stage_path: str,
     this staging step IS the bucket(image_id, N)-partitioned Iceberg
     table.
 
-    Every BinaryType column is projected away first: the quality decision
-    reads only captions, phash and ids, so the stage — and the label
-    table the groups commit from it — never holds pixels. They stay in
-    the caller's input and join back by image_id on read. The dedup join
-    below therefore carries no bytes either, and needs no AQE broadcast
-    conversion to keep them off the wire.
+    The input is projected to ``pipeline.DECISION_INPUTS`` (image_id,
+    caption, phash) first: that is all the quality decision reads, so the
+    stage never holds pixels or the other input columns. The groups
+    commit only image_id of these; the rest stay in the caller's input
+    and join back by image_id on read. The dedup join below therefore
+    carries no bytes either, and needs no AQE broadcast conversion to
+    keep them off the wire.
 
     The GLOBAL dedup flag is stamped here, before the input is split:
     duplicates share a phash but have distinct image_ids, so a dup pair
@@ -166,11 +170,11 @@ def stage_input(spark: SparkSession, images: DataFrame, stage_path: str,
     commits. Any other stage is overwritten, and stamped anew."""
     if "part_id" in images.columns:
         # same clash discipline as apply_core_rules' temp columns and
-        # skew._check_no_salt_col: silently overwriting (and later
-        # dropping) a caller's part_id would vanish their column
+        # skew._check_no_salt_col: the results carry part_id, so a
+        # caller's part_id would clash when readers join the input back
         raise ValueError("stage_input reserves the column name 'part_id'; "
                          "rename it on the input")
-    slim = images.drop(*pipe.binary_columns(images))
+    slim = images.select(*pipe.DECISION_INPUTS)
     tagged = pipe.apply_dedup_flag(slim) \
         .withColumn("part_id", stable_salt("image_id", n_groups))
     stamp = stage_stamp(images, n_groups)
@@ -190,6 +194,16 @@ def stage_input(spark: SparkSession, images: DataFrame, stage_path: str,
         os.replace(stamp_path + ".tmp", stamp_path)
     # the known schema spares the read parquet's schema-inference job
     return spark.read.schema(tagged.schema).parquet(stage_path)
+
+
+def _decide(fact: dict, written: DataFrame) -> dict:
+    """Complete a group's *fact* from its *written* results rows (the
+    summary function of its results append): rows in, rows kept and the
+    per-language tallies of ``group_tallies``. One aggregate job."""
+    by_lang = group_tallies(written)
+    fact.update(n_rows=sum(t["n_in"] for t in by_lang),
+                n_kept=sum(t["n_kept"] for t in by_lang), by_lang=by_lang)
+    return fact
 
 
 def _lock_run(root: str) -> int:
@@ -218,10 +232,18 @@ def run_with_resume(spark: SparkSession, images: DataFrame,
                     fail_after_audit: bool = False) -> dict:
     """Process all uncommitted groups; returns run stats.
 
-    ``results`` becomes a label table keyed by ``image_id``: the input's
-    non-binary columns, every rule/label/gate column, ``scrubbed_caption``,
-    ``is_dup`` and ``part_id`` — no pixels (stage_input drops them).
-    Readers that need the pixels join ``images`` back on ``image_id``.
+    ``results`` becomes a label table keyed by ``image_id``: ``image_id``,
+    every rule/label/gate column, ``scrubbed_caption``, ``is_dup`` and
+    ``part_id`` — what the job decided, and no input column but the key.
+    Readers join every input column (``caption``, ``phash``, the pixels)
+    back from ``images`` on ``image_id``.
+
+    Each group's UDF plan runs once, with no cache: the results append
+    writes the group's rows, then decides its fact with
+    ``audit.group_tallies`` over the files just written (a columnar scan
+    of ``lang``, ``keep`` and ``status_*``) and commits with it. Each
+    committed group logs one INFO line from its fact.
+
     A warehouse whose manifests lack ``sources.catalog.FORMAT`` raises at
     the first table read, before anything is written. All three tables
     must be ``LocalSnapshotTable``: the commit facts live in their
@@ -284,34 +306,26 @@ def run_with_resume(spark: SparkSession, images: DataFrame,
         for g in todo:
             t0 = time.time()
             sub = staged.where(F.col("part_id") == g).drop("part_id")
-            # one materialization feeds the group's fact and the results
-            # sink — uncached, the UDF-gated pipeline would execute twice
-            # per group.
             # with_dedup=False: is_dup was stamped GLOBALLY at staging
             # (stage_input) — a per-group dedup here would miss dup pairs
-            # split across id-hash groups
+            # split across id-hash groups. Of the decision inputs only
+            # the key is committed.
             out = pipe.quality_filter(sub, with_dedup=False) \
+                .drop(*pipe.DECISION_INPUTS[1:]) \
                 .withColumn("part_id", F.lit(g))
-            out = out.persist()
-            try:
-                by_lang = group_tallies(out)   # this pass fills the cache
-                fact = {"group": g, "n_groups": n_groups, "run_id": run_id,
-                        "n_rows": sum(t["n_in"] for t in by_lang),
-                        "n_kept": sum(t["n_kept"] for t in by_lang),
-                        "by_lang": by_lang}
-                results.append(out, fact)
-                if fail_between_commits \
-                        and n_committed + 1 >= (fail_after or 1):
-                    raise RuntimeError(
-                        f"injected failure between commits of group {g}")
-                wall_ms = (time.time() - t0) * 1000.0
-                audit.append(None, {**fact, "wall_ms": wall_ms})
-                if fail_after_audit and n_committed + 1 >= (fail_after or 1):
-                    raise RuntimeError(
-                        f"injected failure after audit of group {g}")
-                ckpt.append(None, fact)
-            finally:
-                out.unpersist()
+            fact = {"group": g, "n_groups": n_groups, "run_id": run_id}
+            results.append(out, functools.partial(_decide, fact))
+            if fail_between_commits and n_committed + 1 >= (fail_after or 1):
+                raise RuntimeError(
+                    f"injected failure between commits of group {g}")
+            wall_ms = (time.time() - t0) * 1000.0
+            audit.append(None, {**fact, "wall_ms": wall_ms})
+            if fail_after_audit and n_committed + 1 >= (fail_after or 1):
+                raise RuntimeError(
+                    f"injected failure after audit of group {g}")
+            ckpt.append(None, fact)
+            log.info("committed group %d: n_rows=%d n_kept=%d wall_ms=%.0f",
+                     g, fact["n_rows"], fact["n_kept"], wall_ms)
             n_committed += 1
             if fail_after is not None and not fail_between_commits \
                     and not fail_after_audit and n_committed >= fail_after:

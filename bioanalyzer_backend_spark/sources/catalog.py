@@ -26,13 +26,17 @@ calls through ``df.writeTo(...)`` / MERGE INTO; selection is automatic.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-FORMAT = 5
+FORMAT = 6
+
+log = logging.getLogger(__name__)
 
 
 class LocalSnapshotTable:
@@ -207,17 +211,30 @@ class LocalSnapshotTable:
                            if f.endswith(".parquet")]
 
     def append(self, df: DataFrame | None,
-               summary: dict | None = None) -> str:
+               summary: dict | Callable[[DataFrame], dict] | None = None
+               ) -> str:
         """Write df as new data files, then atomically extend the manifest
         (and its summaries, with *summary* when given). ``df=None`` is a
-        metadata-only commit: it writes no data. The (slow) data write
-        happens unlocked — unique dirs can't clash; only the read-parent
-        -> publish-HEAD section is exclusive. If the commit phase fails
-        (lock timeout), the just-written orphan dir is reclaimed — no
-        manifest references it, so nothing else ever would."""
+        metadata-only commit: it writes no data.
+
+        *summary* may be a function of the written files instead: it is
+        called with a reader over just this batch (``df``'s schema, so no
+        inference job) and its result is committed. A fact decided that
+        way counts what was published, and *df*'s plan runs once with
+        no cache.
+
+        The (slow) data write happens unlocked — unique dirs can't
+        clash; only the read-parent -> publish-HEAD section is
+        exclusive. If anything fails after the write (the summary
+        function, a lock timeout), the just-written orphan dir is
+        reclaimed — no manifest references it, so nothing else ever
+        would."""
         import shutil
         batch_dir, new_files = self._write_batch(df)
         try:
+            if callable(summary):
+                summary = summary(df.sparkSession.read.schema(df.schema)
+                                  .parquet(batch_dir))
             with self._commit_lock():
                 cur = self.current_snapshot()
                 return self._commit(cur, (cur["files"] if cur else [])
@@ -467,7 +484,12 @@ class IdempotentBatchAppender:
         all."""
         with open(os.path.join(self._ckpt, "metadata")) as f:
             fact = {"query_id": json.load(f)["id"], "batch_id": batch_id}
-        if fact in self.table.summaries() or batch_df.isEmpty():
+        if fact in self.table.summaries():
+            log.info("skipped replayed batch %d of query %s: already "
+                     "committed to %s", batch_id, fact["query_id"],
+                     self.table.root)
+            return False
+        if batch_df.isEmpty():
             return False
         self.table.append(batch_df, fact)
         return True

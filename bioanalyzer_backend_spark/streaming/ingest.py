@@ -9,8 +9,10 @@ Sink = foreachBatch appending to a snapshot table (sources/catalog.py):
 each micro-batch commits atomically with ``{query_id, batch_id}`` in its
 snapshot summary, the same exactly-once protocol as the resumable job
 (Spark's own streaming checkpoint handles source offsets; the summary
-check makes the append idempotent on replays). The results table holds
-exactly the pipeline's columns.
+check makes the append idempotent on replays). Like the job's results
+(plans/resume.py), the table holds what the pipeline decided: image_id
+and every rule/label/gate column, no other input column — readers join
+those back from the source by image_id.
 """
 
 from __future__ import annotations
@@ -53,7 +55,9 @@ def start_quality_filter_stream(stream_df: DataFrame,
                                 results: LocalSnapshotTable,
                                 checkpoint_dir: str,
                                 available_now: bool = True):
-    """Run the full (UDF-gated) pipeline per micro-batch; atomic appends.
+    """Run the full (UDF-gated) pipeline per micro-batch over its
+    ``pipeline.DECISION_INPUTS``; atomic appends of image_id and the
+    label columns.
 
     NO dedup runs in-stream (``with_dedup=False``; the results table has
     no ``is_dup`` column): a global dedup window over an unbounded
@@ -66,8 +70,9 @@ def start_quality_filter_stream(stream_df: DataFrame,
     appender = IdempotentBatchAppender(results, checkpoint_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        appender.append(pipe.quality_filter(batch_df, with_dedup=False),
-                        batch_id)
+        out = pipe.quality_filter(batch_df.select(*pipe.DECISION_INPUTS),
+                                  with_dedup=False)
+        appender.append(out.drop(*pipe.DECISION_INPUTS[1:]), batch_id)
 
     return start_sink(stream_df, sink, checkpoint_dir,
                       available_now=available_now)

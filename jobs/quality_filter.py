@@ -22,11 +22,12 @@ Re-running with the same --warehouse resumes: id-hash groups with a
 checkpoint summary are skipped (plans/resume.py). One run at a time per
 warehouse: a second, simultaneous run raises.
 
-``<warehouse>/results`` is a label table keyed by ``image_id``: the
-input's non-binary columns, every rule/label/gate column,
-``scrubbed_caption``, ``is_dup`` and ``part_id``. It holds no pixels —
-they stay in the input (``--input``, or the ``--synth`` parquet
-under the warehouse); join them back on ``image_id`` to read them.
+``<warehouse>/results`` is a label table keyed by ``image_id``: every
+rule/label/gate column, ``scrubbed_caption``, ``is_dup`` and
+``part_id`` — what the job decided. It holds no input column but
+``image_id``: captions, phash, dimensions and pixels stay in the input
+(``--input``, or the ``--synth`` parquet under the warehouse); join them
+back on ``image_id`` to read them.
 
 Prints ONE JSON line: run stats, with row counts summed from the
 tables' snapshot summaries (no Spark read after the run).

@@ -162,13 +162,15 @@ def test_appender_scopes_dedup_by_query_id(spark, tmp_path):
     assert tbl.current_snapshot()["snapshot"] == head
 
 
-def test_appender_replay_runs_no_spark_job(spark, tmp_path):
+def test_appender_replay_runs_no_spark_job(spark, tmp_path, caplog):
     """The commit facts live in the snapshot summaries, so a fresh
     appender (a restarted query) skips a committed batch with one
-    manifest read: no Spark job, and the rows carry only their own
-    columns."""
+    manifest read: no Spark job, one INFO line, and the rows carry only
+    their own columns."""
     import json as _json
+    import logging
 
+    from bioanalyzer_backend_spark.sources import catalog as C
     from bioanalyzer_backend_spark.sources.catalog import (
         IdempotentBatchAppender, LocalSnapshotTable)
 
@@ -189,11 +191,15 @@ def test_appender_replay_runs_no_spark_job(spark, tmp_path):
     group = "appender-replay-" + tmp_path.name
     sc.setJobGroup(group, "appender replay")
     try:
-        assert a2.append(replay, 3) is False
+        with caplog.at_level(logging.INFO, logger=C.__name__):
+            assert a2.append(replay, 3) is False
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     assert len(tbl.summaries()) == 5
+    assert [(r.levelname, r.getMessage()) for r in caplog.records] == [
+        ("INFO", f"skipped replayed batch 3 of query q-1: already "
+                 f"committed to {tbl.root}")]
 
 
 def test_appender_needs_snapshot_table(tmp_path):

@@ -3,9 +3,9 @@
 
 import pytest
 
+from bioanalyzer_backend_spark.operators.dedup import binary_columns
 from bioanalyzer_backend_spark.plans import resume
 from bioanalyzer_backend_spark.plans.audit import audit_rows
-from bioanalyzer_backend_spark.plans.pipeline import binary_columns
 from bioanalyzer_backend_spark.plans.resume import run_with_resume
 from bioanalyzer_backend_spark.sources.catalog import LocalSnapshotTable
 
@@ -85,10 +85,12 @@ def test_resume_after_injected_failure(spark, synth_images_df, tmp_path,
         run_with_resume(spark, df, c_res, c_aud, c_ck, n_groups=4,
                         fail_after=2)
     assert len(resume.committed_groups(c_ck)) == 2
-    # the crash leaves its staged copy behind: it must hold no pixels
+    # the crash leaves its staged copy behind: it holds the decision
+    # inputs, the dedup flag and the group id, no pixels
     import os
     stage = os.path.join(c_res.root, "stage")
-    assert binary_columns(spark.read.parquet(stage)) == []
+    assert sorted(spark.read.parquet(stage).columns) \
+        == sorted([*P.DECISION_INPUTS, "is_dup", "part_id"])
 
     # restart: must process ONLY the 2 remaining groups
     stats2 = run_with_resume(spark, df, c_res, c_aud, c_ck, n_groups=4)
@@ -100,17 +102,14 @@ def test_resume_after_injected_failure(spark, synth_images_df, tmp_path,
     assert stats3["newly_committed"] == 0
     assert _collect_sorted(spark, c_res) == expected
 
-    # the crashed-then-resumed results are a pixel-free label table that
-    # equals the whole-table pipeline on EVERY column: row for row on the
-    # non-binary ones, and with bytes once the input's pixels are joined
-    # back by image_id
+    # the crashed-then-resumed results are a label table that holds no
+    # input column but image_id, and equals the whole-table pipeline on
+    # EVERY column once the input is joined back by image_id
     got = c_res.read(spark)
-    assert binary_columns(got) == []
+    assert set(got.columns) & set(df.columns) == {"image_id"}
     full = P.quality_filter(df)
     assert binary_columns(full) == ["bytes"]
-    _assert_same_rows(got, full.drop("bytes"))
-    _assert_same_rows(got.join(df.select("image_id", "bytes"), "image_id"),
-                      full)
+    _assert_same_rows(got.join(df, "image_id"), full)
 
     # audit rows exist with positive counts
     aud = audit_rows(spark, c_aud).toPandas()
@@ -439,17 +438,7 @@ def test_input_scanned_once_via_staging(spark, synth_images_df, tmp_path,
     lineage is evaluated ONCE — during staging — not once per group.
     A per-group filter on the computed hash would re-execute the input
     scan n_groups times (the marker UDF would fire 4x per row)."""
-    from pyspark.sql import functions as F
-
-    acc = spark.sparkContext.accumulator(0)
-
-    @F.udf("int")
-    def marker(_):
-        acc.add(1)
-        return 1
-
-    df = synth_images_df.limit(200).withColumn("_scan_marker",
-                                               marker("image_id"))
+    df, acc = _marked(spark, synth_images_df.limit(200))
     res, aud, ck = _tables(tmp_path / "scan")
     stats = run_with_resume(spark, df, res, aud, ck, n_groups=4)
     assert stats["newly_committed"] == 4
@@ -459,18 +448,20 @@ def test_input_scanned_once_via_staging(spark, synth_images_df, tmp_path,
 
 
 def _marked(spark, df):
-    """*df* with a marker column whose UDF counts each evaluation of the
-    input lineage; returns (frame, accumulator)."""
+    """*df* with its caption passed through a UDF that counts each
+    evaluation of the input lineage and returns its input; returns
+    (frame, accumulator). The caption is a decision input, so staging
+    cannot prune the marker away."""
     from pyspark.sql import functions as F
 
     acc = spark.sparkContext.accumulator(0)
 
-    @F.udf("int")
-    def marker(_):
+    @F.udf("string")
+    def marker(caption):
         acc.add(1)
-        return 1
+        return caption
 
-    return df.withColumn("_scan_marker", marker("image_id")), acc
+    return df.withColumn("caption", marker("caption")), acc
 
 
 def test_resume_reads_the_crashed_runs_stage(spark, synth_images_df,
@@ -672,18 +663,21 @@ def test_corrupt_head_raises_not_empty(spark, tmp_path):
     truncation of all prior contents. A HEAD manifest without the format
     stamp, with format 2 (no summaries: its committed groups would look
     absent and be reprocessed), with format 3 (stream batches recorded
-    in row columns, not summaries: a replayed batch would be re-admitted)
-    or with format 4 (audit facts in data rows, summaries without
-    ``by_lang``: audit_rows would fail on them) was written by older code
-    and is refused the same way, by every read path and by append before
-    it publishes anything."""
+    in row columns, not summaries: a replayed batch would be re-admitted),
+    with format 4 (audit facts in data rows, summaries without
+    ``by_lang``: audit_rows would fail on them) or with format 5 (results
+    rows repeat the input's caption and phash: a join-back by image_id
+    would carry them twice) was written by older code and is refused the
+    same way, by every read path and by append before it publishes
+    anything."""
     import os
 
     for damage, match in (("missing", "corrupt"),
                           ("formatless", "older code"),
                           ("format2", "older code"),
                           ("format3", "older code"),
-                          ("format4", "older code")):
+                          ("format4", "older code"),
+                          ("format5", "older code")):
         tbl = LocalSnapshotTable(str(tmp_path / damage))
         tbl.append(spark.range(5).toDF("x"))
         snap = tbl.current_snapshot()
@@ -691,7 +685,8 @@ def test_corrupt_head_raises_not_empty(spark, tmp_path):
             os.remove(os.path.join(tbl.meta_dir, snap["snapshot"]))
         else:
             _strip_format(tbl, stamp={"format2": 2, "format3": 3,
-                                      "format4": 4}.get(damage))
+                                      "format4": 4, "format5": 5}
+                          .get(damage))
         head = open(tbl._head_path()).read()
         data_dirs = set(os.listdir(tbl.data_dir))
         for call in (tbl.current_snapshot, lambda: tbl.read(spark),
@@ -736,7 +731,8 @@ def test_job_runs_with_aqe_off(spark, synth_images_df, tmp_path,
     """Staging drops the pixels before the dedup join, so the job never
     needs AQE's broadcast conversion to keep bytes off the wire — it
     must run (not raise) with adaptive execution disabled and agree with
-    the whole-table pipeline on every non-binary column."""
+    the whole-table pipeline on every column once the input is joined
+    back by image_id."""
     from bioanalyzer_backend_spark.plans import pipeline as P
 
     df = synth_images_df.limit(400)
@@ -749,15 +745,104 @@ def test_job_runs_with_aqe_off(spark, synth_images_df, tmp_path,
     finally:
         spark.conf.set(key, prev)
     assert stats["newly_committed"] == 2
-    _assert_same_rows(res.read(spark), P.quality_filter(df).drop("bytes"))
+    _assert_same_rows(res.read(spark).join(df, "image_id"),
+                      P.quality_filter(df))
+
+
+def _label_columns(df):
+    """The columns quality_filter adds to *df*'s decision inputs, in
+    order: every rule/label/gate column and scrubbed_caption."""
+    from bioanalyzer_backend_spark.plans import pipeline as P
+
+    decided = P.quality_filter(df.select(*P.DECISION_INPUTS),
+                               with_dedup=False)
+    return [c for c in decided.columns if c not in P.DECISION_INPUTS]
+
+
+def test_results_hold_only_the_decision(spark, synth_images_df, tmp_path,
+                                        artifacts_dir):
+    """The job's results hold image_id, the label columns, is_dup and
+    part_id: no other input column (caption, phash, w, h, fmt and the
+    pixels join back by image_id)."""
+    df = synth_images_df.limit(200)
+    res, aud, ck = _tables(tmp_path / "lbl")
+    run_with_resume(spark, df, res, aud, ck, n_groups=2)
+    got = res.read(spark)
+    assert sorted(got.columns) == sorted(
+        ["image_id", *_label_columns(df), "is_dup", "part_id"])
+
+
+def test_summaries_count_the_published_rows(spark, synth_images_df,
+                                            tmp_path, artifacts_dir):
+    """Each results summary's n_rows, n_kept and by_lang are
+    group_tallies over the rows that group published, across a crash
+    between commits and the resume that repairs it."""
+    from pyspark.sql import functions as F
+
+    from bioanalyzer_backend_spark.plans.audit import group_tallies
+
+    df = synth_images_df.limit(300)
+    res, aud, ck = _tables(tmp_path / "facts")
+    with pytest.raises(RuntimeError, match="between commits"):
+        run_with_resume(spark, df, res, aud, ck, n_groups=3,
+                        fail_between_commits=True, fail_after=1)
+    run_with_resume(spark, df, res, aud, ck, n_groups=3)
+    published = res.read(spark)
+    facts = res.summaries()
+    assert sorted(s["group"] for s in facts) == [0, 1, 2]
+    for s in facts:
+        rows = published.where(F.col("part_id") == s["group"])
+        assert s["by_lang"] == group_tallies(rows)
+        assert s["n_rows"] == rows.count() > 0
+        assert s["n_kept"] == rows.where("keep").count()
+    assert sum(s["n_rows"] for s in facts) == 300
+
+
+def test_groups_run_without_persist(spark, synth_images_df, tmp_path,
+                                    artifacts_dir, monkeypatch):
+    """No group caches its output: with DataFrame.persist and cache
+    raising, a crash-and-resume run still completes, one row per id."""
+    def refuse(self, *a, **k):
+        raise AssertionError("a group must not cache its output")
+
+    df = synth_images_df.limit(200)
+    # the concrete frame class: pyspark.sql.DataFrame is its abstract base
+    monkeypatch.setattr(type(df), "persist", refuse)
+    monkeypatch.setattr(type(df), "cache", refuse)
+    res, aud, ck = _tables(tmp_path / "nocache")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_with_resume(spark, df, res, aud, ck, n_groups=3, fail_after=1)
+    stats = run_with_resume(spark, df, res, aud, ck, n_groups=3)
+    assert stats["groups_done"] == 3 and stats["newly_committed"] == 2
+    got = res.read(spark)
+    assert got.count() == got.select("image_id").distinct().count() == 200
+
+
+def test_committed_groups_are_logged(spark, synth_images_df, tmp_path,
+                                     artifacts_dir, caplog):
+    """Each committed group logs one INFO line whose group, n_rows,
+    n_kept and wall_ms are those of its audit fact."""
+    import logging
+
+    res, aud, ck = _tables(tmp_path / "log")
+    with caplog.at_level(logging.INFO, logger=resume.__name__):
+        run_with_resume(spark, synth_images_df.limit(100), res, aud, ck,
+                        n_groups=2)
+    got = [r.getMessage() for r in caplog.records
+           if r.getMessage().startswith("committed group")]
+    assert got == [f"committed group {s['group']}: n_rows={s['n_rows']} "
+                   f"n_kept={s['n_kept']} wall_ms={s['wall_ms']:.0f}"
+                   for s in aud.summaries()]
+    assert len(got) == 2
 
 
 def test_resume_refuses_warehouse_from_older_code(spark, synth_images_df,
                                                  tmp_path):
-    """A warehouse that earlier (pixel-carrying) code half-committed:
-    group 0's byte-bearing result rows are published with no checkpoint
-    row, under a manifest without the format stamp. Resuming must raise
-    before writing anything: no checkpoint, audit or stage."""
+    """A warehouse that earlier code half-committed: group 0's result
+    rows are published with no checkpoint row, either byte-bearing under
+    a manifest without the format stamp, or carrying the input's
+    non-binary columns under ``"format": 5``. Resuming must raise before
+    writing anything: no checkpoint, audit or stage."""
     import os
 
     from pyspark.sql import functions as F
@@ -766,20 +851,22 @@ def test_resume_refuses_warehouse_from_older_code(spark, synth_images_df,
     from bioanalyzer_backend_spark.plans import pipeline as P
 
     df = synth_images_df.limit(300)
-    res, aud, ck = _tables(tmp_path / "old")
-    # what the pixel-carrying job committed for group 0: the dedup flag
-    # stamped over the full byte-bearing frame, then the group's
-    # pipeline with part_id appended
-    tagged = P.apply_dedup_flag(df) \
-        .withColumn("part_id", stable_salt("image_id", 4))
-    g0 = P.quality_filter(tagged.where("part_id = 0").drop("part_id"),
-                          with_dedup=False).withColumn("part_id", F.lit(0))
-    res.append(g0)
-    assert binary_columns(res.read(spark)) == ["bytes"]
-    _strip_format(res)
+    for stamp, inputs in ((None, df), (5, df.drop("bytes"))):
+        res, aud, ck = _tables(tmp_path / f"old{stamp}")
+        # what the older job committed for group 0: the dedup flag
+        # stamped over the full frame of its inputs, then the group's
+        # pipeline with part_id appended
+        tagged = P.apply_dedup_flag(inputs) \
+            .withColumn("part_id", stable_salt("image_id", 4))
+        g0 = P.quality_filter(tagged.where("part_id = 0").drop("part_id"),
+                              with_dedup=False) \
+            .withColumn("part_id", F.lit(0))
+        res.append(g0)
+        assert set(res.read(spark).columns) >= set(inputs.columns)
+        _strip_format(res, stamp=stamp)
 
-    with pytest.raises(RuntimeError, match="older code"):
-        run_with_resume(spark, df, res, aud, ck, n_groups=4)
-    assert ck.summaries() == []
-    assert aud.summaries() == []
-    assert not os.path.exists(os.path.join(res.root, "stage"))
+        with pytest.raises(RuntimeError, match="older code"):
+            run_with_resume(spark, df, res, aud, ck, n_groups=4)
+        assert ck.summaries() == []
+        assert aud.summaries() == []
+        assert not os.path.exists(os.path.join(res.root, "stage"))

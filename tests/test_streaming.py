@@ -31,21 +31,25 @@ def test_stream_matches_batch(spark, stream_input, tmp_path, artifacts_dir):
         stream, results, str(tmp_path / "ckpt"))
     q.awaitTermination(180)
 
-    got = (results.read(spark)
-           .select("image_id", "keep", "quality_score", "scrubbed_caption")
-           .toPandas().sort_values("image_id").reset_index(drop=True))
-
     batch_df = spark.read.parquet(stream_input)
     want_df = P.quality_filter(batch_df, with_dedup=False)
-    want = (want_df
-            .select("image_id", "keep", "quality_score", "scrubbed_caption")
-            .toPandas().sort_values("image_id").reset_index(drop=True))
-    # exactly the pipeline's columns: the commit facts live in the
-    # snapshot summaries, not in the rows
-    assert results.read(spark).columns == want_df.columns
+    # image_id and the label columns, as the job commits them without
+    # is_dup and part_id: no other input column, and the commit facts
+    # live in the snapshot summaries, not in the rows
+    labels = [c for c in want_df.columns if c not in batch_df.columns]
+    committed = results.read(spark)
+    assert committed.columns == ["image_id", *labels]
 
+    # with every input column joined back by image_id, the stream's rows
+    # equal the whole-batch pipeline's on every column
+    def rows(df):
+        return (df.select(*want_df.columns).toPandas()
+                .sort_values("image_id").reset_index(drop=True))
+
+    got = rows(committed.join(batch_df, "image_id"))
+    want = rows(want_df)
     assert len(got) == len(want) > 0
-    pd.testing.assert_frame_equal(got, want)
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
     # several atomic commits happened (one per micro-batch)
     assert len(results.history()) >= 2
     assert os.path.isdir(str(tmp_path / "ckpt"))
