@@ -138,7 +138,7 @@ def shingles(df: DataFrame, text_col: str, id_col: str,
 
 
 def cap_buckets(sig: DataFrame, keys: list[str],
-                max_bucket: int,
+                max_bucket: int | None,
                 min_bucket: int = 0) -> tuple[DataFrame, DataFrame]:
     """Mega-bucket defusal for LSH-style self-joins.
 
@@ -176,9 +176,15 @@ def cap_buckets(sig: DataFrame, keys: list[str],
     No broadcast hint on the hot-bucket anti-join: the over-cap bucket
     set is unbounded at 10^12 rows (up to rows/max_bucket entries), so
     AQE decides at runtime from the measured size.
+
+    ``max_bucket=None`` opts out of the cap: the snapshot comes back
+    whole (no singleton prune either) with an empty report of the same
+    ``keys + bucket_n`` schema, so every generator takes one path.
     """
     sig = sig.localCheckpoint(eager=True)
     counts = sig.groupBy(*keys).agg(F.count("*").alias("bucket_n"))
+    if max_bucket is None:
+        return sig, counts.limit(0)
     hot = counts.where(F.col("bucket_n") > max_bucket)
     if min_bucket > 1:
         ok = counts.where((F.col("bucket_n") >= min_bucket)
@@ -187,6 +193,21 @@ def cap_buckets(sig: DataFrame, keys: list[str],
     else:
         kept = sig.join(hot.select(*keys), keys, "left_anti")
     return kept, hot
+
+
+def _bucket_pairs(sig: DataFrame, keys: list[str],
+                  carry: tuple[str, ...] = ()) -> DataFrame:
+    """Distinct ``(id_a, id_b)`` pairs, ``id_a < id_b``, of *sig* rows
+    (``_id`` plus *keys*) that agree on every key: the one bucket
+    self-join of the near-dup generators. Each *carry* column ``c``
+    comes along as ``c_a`` and ``c_b``."""
+    a, b = sig.alias("a"), sig.alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    return (a.join(b, [*on, F.col("a._id") < F.col("b._id")])
+            .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"),
+                    *[F.col(f"{s}.{c}").alias(f"{c}_{s}")
+                      for c in carry for s in "ab"])
+            .distinct())
 
 
 def minhash_lsh_candidates(df: DataFrame, text_col: str = "caption",
@@ -238,35 +259,14 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "caption",
         max_bucket = (derived_bucket_cap(0, n_rows * 16)
                       if n_rows * 16 >= 64 else
                       derived_bucket_cap(df.count(), n_rows * 16))
-    hot = None
-    if max_bucket is not None:
-        # min_bucket=2: singleton band-buckets can't produce a pair, so
-        # pruning them before the self-join is value-identical and cuts
-        # the shuffled volume (see cap_buckets)
-        sig, hot = cap_buckets(sig, ["band", "sig"], max_bucket,
-                               min_bucket=2)
-    else:
-        # the capped branch gets its lineage snapshot inside cap_buckets;
-        # the explicit opt-out must snapshot too, or the a/b self-join
-        # re-executes the md5-per-shingle HOF pipeline once per side
-        # (the multi-branch CTE landmine — same fix as simhash_candidates)
-        sig = sig.localCheckpoint(eager=True)
-    a = sig.alias("a")
-    b = sig.alias("b")
-    pairs = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.sig") == F.col("b.sig"))
-                    & (F.col("a._id") < F.col("b._id")))
-             .select(F.col("a._id").alias("id_a"),
-                     F.col("b._id").alias("id_b"))
-             .distinct())
-    if return_report:
-        # no silent caps: hand the skipped-bucket rows to the caller for
-        # the audit table (empty frame when max_bucket is None)
-        if hot is None:
-            hot = sig.select(F.lit(0).alias("band"), F.col("sig"),
-                             F.lit(0).cast("long").alias("bucket_n")).limit(0)
-        return pairs, hot
-    return pairs
+    # min_bucket=2: singleton band-buckets can't produce a pair, so
+    # pruning them before the self-join is value-identical and cuts the
+    # shuffled volume (see cap_buckets); the snapshot inside cap_buckets
+    # keeps the a/b self-join from re-executing the md5-per-shingle HOF
+    # pipeline once per side (the multi-branch CTE landmine)
+    sig, hot = cap_buckets(sig, ["band", "sig"], max_bucket, min_bucket=2)
+    pairs = _bucket_pairs(sig, ["band", "sig"])
+    return (pairs, hot) if return_report else pairs
 
 
 def jaccard_verify(df: DataFrame, pairs: DataFrame, text_col: str = "caption",
@@ -286,14 +286,10 @@ def jaccard_verify(df: DataFrame, pairs: DataFrame, text_col: str = "caption",
     ``return_report`` the dropped shingles come back as an audit frame
     (shingle, bucket_n) — no silent truncation."""
     sh = shingles(df, text_col, id_col)
-    hot = None
-    if max_posting is not None:
-        sh, hot = cap_buckets(sh, ["shingle"], max_posting)
-    else:
-        # sh feeds THREE plan branches (sizes, x alias, y alias); the
-        # capped path snapshots inside cap_buckets, the default must too
-        # or tokenize+explode re-executes per branch
-        sh = sh.localCheckpoint(eager=True)
+    # sh feeds THREE plan branches (sizes, x alias, y alias): the
+    # snapshot inside cap_buckets keeps tokenize+explode from
+    # re-executing per branch, capped or not
+    sh, hot = cap_buckets(sh, ["shingle"], max_posting)
     # jaccard is only well-defined on a SET of pairs: a duplicate
     # (id_a, id_b) row would double inter while na/nb stay exact,
     # inflating the measure past 1.0 and falsely verifying pairs. The
@@ -317,12 +313,7 @@ def jaccard_verify(df: DataFrame, pairs: DataFrame, text_col: str = "caption",
                        / (F.col("na") + F.col("nb") - F.col("inter"))))
     verified = out.where(F.col("jaccard") >= threshold).select(
         "id_a", "id_b", "jaccard")
-    if return_report:
-        if hot is None:
-            hot = sh.select(F.col("shingle"),
-                            F.lit(0).cast("long").alias("bucket_n")).limit(0)
-        return verified, hot
-    return verified
+    return (verified, hot) if return_report else verified
 
 
 # --------------------------------------------------------------------------
@@ -566,7 +557,8 @@ def simhash_candidates(df: DataFrame, text_col: str = "caption",
         for i in combo:
             key = F.shiftleft(key, widths[i]).bitwiseOR(_block(i))
         tables.append(sig.select("_id", F.lit(ci).alias("block"),
-                                 key.alias("key"), "simhash"))
+                                 key.alias("key"),
+                                 F.col("simhash").alias("sig")))
     allb = tables[0]
     for t in tables[1:]:
         allb = allb.unionByName(t)
@@ -575,29 +567,13 @@ def simhash_candidates(df: DataFrame, text_col: str = "caption",
         # already materialized) — counting df would re-execute its whole
         # upstream plan a second time just to derive the cap
         max_bucket = derived_bucket_cap(sig.count(), key_bits)
-    hot = None
-    if max_bucket is not None:
-        # min_bucket=2: on real signature spaces MOST block-buckets are
-        # singletons (52% of wide-mode rows at sf0.1, measured), pure shuffle
-        # waste in the self-join — a one-row bucket can't make a pair,
-        # so the prune is value-identical (round-3 verdict item 5)
-        allb, hot = cap_buckets(allb, ["block", "key"], max_bucket,
-                                min_bucket=2)
-    a, b = allb.alias("a"), allb.alias("b")
-    pairs = (a.join(b, (F.col("a.block") == F.col("b.block"))
-                    & (F.col("a.key") == F.col("b.key"))
-                    & (F.col("a._id") < F.col("b._id")))
-             .select(F.col("a._id").alias("id_a"),
-                     F.col("b._id").alias("id_b"),
-                     F.col("a.simhash").alias("sig_a"),
-                     F.col("b.simhash").alias("sig_b"))
-             .distinct())
-    if return_report:
-        if hot is None:
-            hot = allb.select("block", "key",
-                              F.lit(0).cast("long").alias("bucket_n")).limit(0)
-        return pairs, hot
-    return pairs
+    # min_bucket=2: on real signature spaces MOST block-buckets are
+    # singletons (52% of wide-mode rows at sf0.1, measured), pure shuffle
+    # waste in the self-join — a one-row bucket can't make a pair, so
+    # the prune is value-identical (round-3 verdict item 5)
+    allb, hot = cap_buckets(allb, ["block", "key"], max_bucket, min_bucket=2)
+    pairs = _bucket_pairs(allb, ["block", "key"], carry=("sig",))
+    return (pairs, hot) if return_report else pairs
 
 
 def dup_components(pairs: DataFrame, id_a: str = "id_a",

@@ -17,7 +17,7 @@ becomes (ok=false, err=...) and the pipeline continues.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -31,38 +31,64 @@ IMAGE_STATS_SCHEMA = ("image_id string, ok boolean, err string, "
                       "decoded_w int, decoded_h int")
 
 
-def image_stats(df: DataFrame) -> DataFrame:
-    """Decode + per-channel stats; fmt-mismatch rows become error rows."""
+def _map_rows(df: DataFrame, cols: tuple[str, ...], schema: str,
+              decode: Callable, emit: Callable,
+              on_error: Callable | None = None) -> DataFrame:
+    """The one decode-or-error row map (mapInPandas over *cols*, the
+    first of which is the row key): per row, ``decode(*inputs)`` is the
+    guarded step, and ``emit(key, decoded)`` returns the row's output
+    dicts (keys missing from a dict are NULL). A row whose decode raises
+    becomes the one row ``on_error(key, exc)``, or no row when
+    *on_error* is None. Only decode is guarded: a fault in emit (an
+    encoder bug) fails the task instead of silently dropping rows."""
+    names = [c.split()[0] for c in schema.split(",")]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = {k: [] for k in ("image_id", "ok", "err", "mean_r",
-                                   "mean_g", "mean_b", "decoded_w",
-                                   "decoded_h")}
-            for iid, blob, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                      pdf["fmt"]):
-                out["image_id"].append(iid)
+            rows = []
+            for key, *inputs in zip(*(pdf[c] for c in cols)):
                 try:
-                    px = imgcodec.decode(bytes(blob), fmt)
-                    m = px.reshape(-1, 3).mean(axis=0)
-                    out["ok"].append(True)
-                    out["err"].append(None)
-                    out["mean_r"].append(float(m[0]))
-                    out["mean_g"].append(float(m[1]))
-                    out["mean_b"].append(float(m[2]))
-                    out["decoded_h"].append(px.shape[0])
-                    out["decoded_w"].append(px.shape[1])
-                except Exception as e:  # error-row materialization (F6)
-                    out["ok"].append(False)
-                    out["err"].append(f"{type(e).__name__}: {e}")
-                    for k in ("mean_r", "mean_g", "mean_b"):
-                        out[k].append(None)
-                    out["decoded_w"].append(None)
-                    out["decoded_h"].append(None)
-            yield pd.DataFrame(out)
+                    decoded = decode(*inputs)
+                except Exception as e:
+                    if on_error is not None:
+                        rows.append(on_error(key, e))
+                    continue
+                rows.extend(emit(key, decoded))
+            yield pd.DataFrame({k: [r.get(k) for r in rows] for k in names})
 
-    return (df.select("image_id", "bytes", "fmt")
-            .mapInPandas(gen, schema=IMAGE_STATS_SCHEMA))
+    return df.select(*cols).mapInPandas(gen, schema=schema)
+
+
+def _error_row(key_col: str) -> Callable:
+    """``on_error`` of the stats operators: error-row materialization
+    (F6), ``ok=false`` and ``err="<Type>: <msg>"``, features NULL."""
+    return lambda key, e: {key_col: key, "ok": False,
+                           "err": f"{type(e).__name__}: {e}"}
+
+
+def _ok_row(key_col: str) -> Callable:
+    """``emit`` of the stats operators: one ``ok=true`` row of the
+    decoded feature dict."""
+    return lambda key, feats: [{key_col: key, "ok": True, "err": None,
+                                **feats}]
+
+
+def _decode_image(blob, fmt) -> np.ndarray:
+    return imgcodec.decode(bytes(blob), fmt)
+
+
+def image_stats(df: DataFrame) -> DataFrame:
+    """Decode + per-channel stats; fmt-mismatch rows become error rows."""
+
+    def features(blob, fmt) -> dict:
+        px = _decode_image(blob, fmt)
+        m = px.reshape(-1, 3).mean(axis=0)
+        return {"mean_r": float(m[0]), "mean_g": float(m[1]),
+                "mean_b": float(m[2]), "decoded_w": px.shape[1],
+                "decoded_h": px.shape[0]}
+
+    return _map_rows(df, ("image_id", "bytes", "fmt"), IMAGE_STATS_SCHEMA,
+                     features, _ok_row("image_id"), _error_row("image_id"))
 
 
 def _nearest_index_resize(px: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
@@ -79,25 +105,13 @@ def resize_images(df: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame:
     """Thumbnail pass: decode -> nearest-index downsample -> re-encode BMP.
     Failed decodes are dropped (they surface via image_stats)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("image_id", "bytes", "w", "h", "fmt")}
-            for iid, blob, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                      pdf["fmt"]):
-                try:
-                    px = imgcodec.decode(bytes(blob), fmt)
-                except Exception:
-                    continue
-                small = _nearest_index_resize(px, out_h, out_w)
-                rows["image_id"].append(iid)
-                rows["bytes"].append(imgcodec.encode_bmp(small))
-                rows["w"].append(out_w)
-                rows["h"].append(out_h)
-                rows["fmt"].append("bmp")
-            yield pd.DataFrame(rows)
+    def thumb(iid, px: np.ndarray) -> list[dict]:
+        small = _nearest_index_resize(px, out_h, out_w)
+        return [{"image_id": iid, "bytes": imgcodec.encode_bmp(small),
+                 "w": out_w, "h": out_h, "fmt": "bmp"}]
 
-    return (df.select("image_id", "bytes", "fmt")
-            .mapInPandas(gen, schema=RESIZED_SCHEMA))
+    return _map_rows(df, ("image_id", "bytes", "fmt"), RESIZED_SCHEMA,
+                     _decode_image, thumb)
 
 
 def with_phash(df: DataFrame, bytes_col: str = "bytes",
@@ -262,30 +276,14 @@ def audio_features(df: DataFrame) -> DataFrame:
     this sandbox and surface as error rows (F6), keeping the production
     schema and batch shape real and tested."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("clip_id", "ok", "err", "duration_s",
-                                   "sample_rate", "rms")}
-            for cid, blob in zip(pdf["clip_id"], pdf["bytes"]):
-                out["clip_id"].append(cid)
-                try:
-                    pcm, rate = _decode_wav_pcm16(bytes(blob))
-                    out["ok"].append(True)
-                    out["err"].append(None)
-                    out["duration_s"].append(len(pcm) / rate)
-                    out["sample_rate"].append(rate)
-                    out["rms"].append(float(np.sqrt(np.mean(pcm ** 2)))
-                                      if len(pcm) else 0.0)
-                except Exception as e:
-                    out["ok"].append(False)
-                    out["err"].append(f"{type(e).__name__}: {e}")
-                    out["duration_s"].append(None)
-                    out["sample_rate"].append(None)
-                    out["rms"].append(None)
-            yield pd.DataFrame(out)
+    def features(blob) -> dict:
+        pcm, rate = _decode_wav_pcm16(bytes(blob))
+        return {"duration_s": len(pcm) / rate, "sample_rate": rate,
+                "rms": float(np.sqrt(np.mean(pcm ** 2))) if len(pcm)
+                else 0.0}
 
-    return (df.select("clip_id", "bytes")
-            .mapInPandas(gen, schema=AUDIO_FEATURES_SCHEMA))
+    return _map_rows(df, ("clip_id", "bytes"), AUDIO_FEATURES_SCHEMA,
+                     features, _ok_row("clip_id"), _error_row("clip_id"))
 
 
 def _parse_avi_rgb24(data: bytes):
@@ -370,26 +368,13 @@ def video_frame_sample(df: DataFrame, every_s: float = 1.0) -> DataFrame:
     Compressed codecs have no decoder in this sandbox; those rows are
     dropped (failures surface via a stats pass, mirroring resize)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("video_id", "frame_idx", "ts_s",
-                                    "bytes", "w", "h", "fmt")}
-            for vid, blob in zip(pdf["video_id"], pdf["bytes"]):
-                try:
-                    frames, spf = _parse_avi_rgb24(bytes(blob))
-                except Exception:
-                    continue
-                step = max(1, round(every_s / spf)) if spf > 0 else 1
-                for idx in range(0, len(frames), step):
-                    px = frames[idx]
-                    rows["video_id"].append(vid)
-                    rows["frame_idx"].append(idx)
-                    rows["ts_s"].append(idx * spf)
-                    rows["bytes"].append(imgcodec.encode_bmp(px))
-                    rows["h"].append(px.shape[0])
-                    rows["w"].append(px.shape[1])
-                    rows["fmt"].append("bmp")
-            yield pd.DataFrame(rows)
+    def sample(vid, parsed) -> list[dict]:
+        frames, spf = parsed
+        step = max(1, round(every_s / spf)) if spf > 0 else 1
+        return [{"video_id": vid, "frame_idx": idx, "ts_s": idx * spf,
+                 "bytes": imgcodec.encode_bmp(frames[idx]),
+                 "w": frames[idx].shape[1], "h": frames[idx].shape[0],
+                 "fmt": "bmp"} for idx in range(0, len(frames), step)]
 
-    return (df.select("video_id", "bytes")
-            .mapInPandas(gen, schema=VIDEO_FRAMES_SCHEMA))
+    return _map_rows(df, ("video_id", "bytes"), VIDEO_FRAMES_SCHEMA,
+                     lambda blob: _parse_avi_rgb24(bytes(blob)), sample)

@@ -78,6 +78,27 @@ def _batch_matrix(v: pd.Series, dim: int) -> np.ndarray | None:
         return None
 
 
+def _vector_udf(dim: int, score, out_type: str):
+    """Arrow-batched pandas UDF over one embedding column, the one
+    batch-at-a-time scoring path: a clean batch is scored as one
+    ``(n, dim)`` matrix by ``score`` (a ``(0, dim)`` matrix scores to an
+    empty result); a batch holding a NULL or ragged row is scored row by
+    row, and those rows get NULL."""
+
+    @F.pandas_udf(out_type)
+    def _udf(v: pd.Series) -> pd.Series:
+        mat = _batch_matrix(v, dim)
+        if mat is not None:
+            return pd.Series(score(mat))
+        out = []
+        for x in v.tolist():
+            arr = _row_vec(x, dim)
+            out.append(None if arr is None else score(arr[None, :])[0].item())
+        return pd.Series(out, dtype="object")
+
+    return _udf
+
+
 def with_lsh_bucket(df: DataFrame, dim: int, n_planes: int = 16,
                     vec_col: str = "embedding", seed: int = 97) -> DataFrame:
     """Append a LONG bucket = sign-bit signature of seeded hyperplanes.
@@ -90,23 +111,11 @@ def with_lsh_bucket(df: DataFrame, dim: int, n_planes: int = 16,
     planes = _planes(dim, n_planes, seed)
     weights = (1 << np.arange(n_planes)).astype(np.int64)
 
-    @F.pandas_udf("long")
-    def _bucket(v: pd.Series) -> pd.Series:
-        sigs = _batch_matrix(v, dim)
-        if sigs is None:                      # malformed rows present
-            vals = v.tolist()
-            out = []
-            for x in vals:
-                arr = _row_vec(x, dim)
-                out.append(None if arr is None else
-                           int(((arr @ planes) > 0) @ weights))
-            return pd.Series(pd.array(out, dtype="Int64"))
-        if sigs.shape[0] == 0:
-            return pd.Series(np.zeros(0, dtype=np.int64))
-        bits = (sigs @ planes) > 0
-        return pd.Series((bits @ weights).astype(np.int64))
+    def bucket(mat: np.ndarray) -> np.ndarray:
+        return (((mat @ planes) > 0) @ weights).astype(np.int64)
 
-    return df.withColumn("lsh_bucket", _bucket(F.col(vec_col)))
+    return df.withColumn("lsh_bucket",
+                         _vector_udf(dim, bucket, "long")(F.col(vec_col)))
 
 
 def lsh_cosine_topk(df: DataFrame, query_vec, k: int = 10,
@@ -179,28 +188,14 @@ def with_ivf_list(df: DataFrame, centroids: np.ndarray,
     """Append ivf_list = argmax-cosine centroid id. One matmul per Arrow
     batch against the broadcast centroid matrix (executor-side numpy)."""
     cent = centroids.copy()
-    dim = int(cent.shape[1])
 
-    @F.pandas_udf("int")
-    def _assign(v: pd.Series) -> pd.Series:
-        mat = _batch_matrix(v, dim)
-        if mat is None:                       # malformed rows -> NULL list
-            out = []
-            for x in v.tolist():
-                arr = _row_vec(x, dim)
-                if arr is None:
-                    out.append(None)
-                else:
-                    arr = arr / max(float(np.linalg.norm(arr)), 1e-12)
-                    out.append(int((cent @ arr).argmax()))
-            return pd.Series(pd.array(out, dtype="Int32"))
-        if mat.shape[0] == 0:
-            return pd.Series(np.zeros(0, dtype=np.int32))
+    def assign(mat: np.ndarray) -> np.ndarray:
         mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True),
                                1e-12)
-        return pd.Series((mat @ cent.T).argmax(axis=1).astype(np.int32))
+        return (mat @ cent.T).argmax(axis=1).astype(np.int32)
 
-    return df.withColumn("ivf_list", _assign(F.col(vec_col)))
+    return df.withColumn("ivf_list", _vector_udf(
+        int(cent.shape[1]), assign, "int")(F.col(vec_col)))
 
 
 def ivf_cosine_topk(df: DataFrame, query_vec, k: int = 10,
@@ -251,13 +246,9 @@ def embedding_neardup_pairs(df: DataFrame, dim: int, threshold: float = 0.95,
                    & (F.col("a._id") < F.col("b._id")))
             .select(F.col("a._id").alias("id_a"),
                     F.col("b._id").alias("id_b")))
-    vecs = df.select(F.col(id_col).alias("_vid"),
-                     F.col(vec_col).alias("_v")) \
-        .withColumn("_n", F.expr(f"SQRT({dot('_v', '_v', SPARK)})"))
-    pairs = (cand
-             .join(vecs.selectExpr("_vid AS id_a", "_v AS va", "_n AS na"),
-                   "id_a")
-             .join(vecs.selectExpr("_vid AS id_b", "_v AS vb", "_n AS nb"),
+    pairs = (cand.join(_with_norm(df, "id_a", "va", "na", vec_col, id_col),
+                       "id_a")
+             .join(_with_norm(df, "id_b", "vb", "nb", vec_col, id_col),
                    "id_b"))
     scored = pairs.selectExpr(
         "id_a", "id_b",

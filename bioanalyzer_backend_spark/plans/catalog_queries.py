@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import inspect
 from collections.abc import Callable
-from functools import partial
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -1574,16 +1573,58 @@ def _parity_sf_dir() -> str:
                           "/root/testdata/sf0.01")
 
 
-# The modules the numpy-twin expected tables are computed by (the twins
-# themselves live in this module), relative to the package dir.
+# The other modules the numpy-twin expected tables are computed by,
+# relative to the package dir (the twins' own code in this module is
+# keyed by _twin_sources).
 _TWIN_MODULES = ("spec.py", "rules/reference_impl.py",
                  "operators/similarity.py", "functions/langid.py",
-                 "functions/perplexity.py", "plans/catalog_queries.py")
+                 "functions/perplexity.py")
+
+
+def _source(fn: Callable) -> str:
+    """The source text of *fn*: what _twin_sources keys on."""
+    return inspect.getsource(fn)
+
+
+def _twin_sources() -> list[str]:
+    """The twin code of this module: every function that writes an
+    expected table (it calls ``_write_expected``) and every module-level
+    function or plain constant it reaches by name, transitively, in name
+    order, not descending into the key itself (_twin_key). Derived from
+    the code objects, so a registry SQL builder's edit leaves it
+    unchanged while a twin helper's edit does not."""
+    import types
+    g = globals()
+
+    def names(code: types.CodeType):
+        yield from code.co_names
+        for c in code.co_consts:
+            if isinstance(c, types.CodeType):
+                yield from names(c)
+
+    def own(v) -> bool:
+        return isinstance(v, types.FunctionType) and v.__module__ == __name__
+
+    todo = [f.__name__ for f in g.values()
+            if own(f) and "_write_expected" in set(names(f.__code__))]
+    seen: dict[str, str] = {}
+    while todo:
+        n = todo.pop()
+        if n in seen or n == "_twin_key":
+            continue
+        v = g[n]
+        if own(v):
+            seen[n] = _source(v)
+            todo += [m for m in names(v.__code__)
+                     if m in g and not m.startswith("__")]
+        elif isinstance(v, (bool, int, float, str, tuple)):
+            seen[n] = repr(v)
+    return [seen[n] for n in sorted(seen)]
 
 
 def _twin_key(*tags: str) -> str:
-    """Short sha256 over ``tags``, the model artifacts and the
-    _TWIN_MODULES sources: the expected-table cache key. A changed
+    """Short sha256 over ``tags``, the model artifacts, the _TWIN_MODULES
+    sources and _twin_sources: the expected-table cache key. A changed
     constant, artifact or twin yields a new file name, so a stale table
     is never read back."""
     import hashlib
@@ -1597,6 +1638,8 @@ def _twin_key(*tags: str) -> str:
                  + [os.path.join(pkg, m) for m in _TWIN_MODULES]):
         with open(path, "rb") as f:
             h.update(f.read())
+    for src in _twin_sources():
+        h.update(src.encode())
     return h.hexdigest()[:16]
 
 
@@ -1702,23 +1745,25 @@ def _write_expected(path: str, pdf) -> None:
     os.replace(tmp, path)
 
 
-def _ann_expected_path(tag: str,
-                       mask: Callable[..., np.ndarray]) -> str:
-    """Numpy twin of an approximate ANN entry (query = vec_id 0):
-    ``mask(ids, mat, q)`` is its candidate set (_lsh_candidate_mask
-    shares only the hyperplane matrix, _ivf_candidate_mask only the
-    quantizer — algorithm parameters, like spec constants), and the
-    cosine plus rounded re-rank are re-implemented independently of the
-    Spark plan (pandas-UDF matmul + bit_count / list assignment + HOF
-    fold + TakeOrdered). A weight regression, int wrap, radius or probe
+def _ann_expected_path(tag: str) -> str:
+    """Numpy twin of the approximate ANN entry *tag* (``ann_lsh`` or
+    ``ann_ivf``; query = vec_id 0): its candidate set is
+    _lsh_candidate_mask at the registered radius 4 or
+    _ivf_candidate_mask at the registered n_probe 4 (the first shares
+    only the hyperplane matrix, the second only the quantizer —
+    algorithm parameters, like spec constants), and the cosine plus
+    rounded re-rank are re-implemented independently of the Spark plan
+    (pandas-UDF matmul + bit_count / list assignment + HOF fold +
+    TakeOrdered). A weight regression, int wrap, radius or probe
     off-by-one, assignment bug or NULLIF loss diverges."""
     path, ok = _expected_cache(tag)
     if ok:
         return path
     ids, mat = _load_embeddings_np()
     q = mat[ids == 0][0]
-    _write_expected(path, _ann_rounded_topk_np(ids, mat, q,
-                                               mask(ids, mat, q)))
+    keep = (_lsh_candidate_mask(ids, mat, q, radius=4) if tag == "ann_lsh"
+            else _ivf_candidate_mask(ids, mat, q, n_probe=4))
+    _write_expected(path, _ann_rounded_topk_np(ids, mat, q, keep))
     return path
 
 
@@ -2383,10 +2428,8 @@ def registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]
     reg["langid_udf_documents"] = (_q_langid_udf_documents,
                                    _read_expected_sql(
                                        _langid_udf_expected_path()))
-    reg["ann_lsh_top10"] = (_q_ann_lsh_top10, _read_expected_sql(
-        _ann_expected_path("ann_lsh", partial(_lsh_candidate_mask,
-                                              radius=4))))
-    reg["ann_ivf_top10"] = (_q_ann_ivf_top10, _read_expected_sql(
-        _ann_expected_path("ann_ivf", partial(_ivf_candidate_mask,
-                                              n_probe=4))))
+    reg["ann_lsh_top10"] = (_q_ann_lsh_top10,
+                            _read_expected_sql(_ann_expected_path("ann_lsh")))
+    reg["ann_ivf_top10"] = (_q_ann_ivf_top10,
+                            _read_expected_sql(_ann_expected_path("ann_ivf")))
     return reg

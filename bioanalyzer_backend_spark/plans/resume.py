@@ -228,8 +228,7 @@ def run_with_resume(spark: SparkSession, images: DataFrame,
                     results: LocalSnapshotTable, audit: LocalSnapshotTable,
                     ckpt: LocalSnapshotTable, n_groups: int = 8,
                     fail_after: int | None = None,
-                    fail_between_commits: bool = False,
-                    fail_after_audit: bool = False) -> dict:
+                    fail_between_commits: bool = False) -> dict:
     """Process all uncommitted groups; returns run stats.
 
     ``results`` becomes a label table keyed by ``image_id``: ``image_id``,
@@ -251,9 +250,8 @@ def run_with_resume(spark: SparkSession, images: DataFrame,
 
     ``fail_after`` aborts after that many group commits; with
     ``fail_between_commits`` the abort fires BETWEEN the results append
-    and the audit append; with ``fail_after_audit`` it fires between the
-    audit append and the checkpoint append (test hooks for the
-    kill/restart scenarios of SURVEY.md section 5.5).
+    and the audit append (test hooks for the kill/restart scenarios of
+    SURVEY.md section 5.5).
 
     The run holds ``<results.root>/.run.lock`` throughout, so a second
     run on the same warehouse raises. A crash leaves at most one staged
@@ -287,8 +285,9 @@ def run_with_resume(spark: SparkSession, images: DataFrame,
     try:
         check_n_groups(results, n_groups)
         found = read_stamp(stage_path)
-        if found is not None and results.summaries() \
-                and found != stage_stamp(images, n_groups):
+        # decided once: a crashed run left a stage of this run's input
+        reuse = found is not None and found == stage_stamp(images, n_groups)
+        if found is not None and not reuse and results.summaries():
             raise ValueError(
                 f"the stage at {stage_path} was made from other input "
                 f"than this run's, and groups from it are published: "
@@ -298,11 +297,10 @@ def run_with_resume(spark: SparkSession, images: DataFrame,
         done = committed_groups(ckpt)
         todo = [g for g in range(n_groups) if g not in done]
         if todo:
+            # stage_input reads a stage stamped like this run's and
+            # rewrites any other
             staged = stage_input(spark, images, stage_path, n_groups)
-            # stage_input restamps whatever it writes, so an unchanged
-            # stamp means it read the stage as it found it
-            how = "reused" if found == read_stamp(stage_path) \
-                else "written"
+            how = "reused" if reuse else "written"
         for g in todo:
             t0 = time.time()
             sub = staged.where(F.col("part_id") == g).drop("part_id")
@@ -320,15 +318,12 @@ def run_with_resume(spark: SparkSession, images: DataFrame,
                     f"injected failure between commits of group {g}")
             wall_ms = (time.time() - t0) * 1000.0
             audit.append(None, {**fact, "wall_ms": wall_ms})
-            if fail_after_audit and n_committed + 1 >= (fail_after or 1):
-                raise RuntimeError(
-                    f"injected failure after audit of group {g}")
             ckpt.append(None, fact)
             log.info("committed group %d: n_rows=%d n_kept=%d wall_ms=%.0f",
                      g, fact["n_rows"], fact["n_kept"], wall_ms)
             n_committed += 1
             if fail_after is not None and not fail_between_commits \
-                    and not fail_after_audit and n_committed >= fail_after:
+                    and n_committed >= fail_after:
                 raise RuntimeError(
                     f"injected failure after {n_committed} groups")
         # crash paths skip this on purpose (a killed JVM cannot clean

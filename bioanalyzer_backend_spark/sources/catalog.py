@@ -120,7 +120,9 @@ class LocalSnapshotTable:
         """Exclusive lock around the (sub-second) read-parent ->
         publish-HEAD section ONLY — slow work (Spark writes) must happen
         outside it, which is why merge/compact use optimistic retry
-        instead of holding this across their rewrite.
+        instead of holding this across their rewrite: a live stream's
+        per-batch appends must not wait behind a long compaction, nor
+        give up after ``timeout_s`` behind it.
 
         flock(LOCK_EX) on a persistent lock file: the kernel releases
         the lock when the holder's fd closes — including process death —
@@ -252,8 +254,9 @@ class LocalSnapshotTable:
         only to check the parent is still HEAD and publish. If another
         writer committed meanwhile, discard the orphan files and redo the
         rewrite against the new HEAD — never hold the lock across a Spark
-        job (a long rewrite would look like a stale lock to waiters and
-        get broken). The rewrite keeps the parent's summaries.
+        job (a live stream's appends would wait behind a long rewrite,
+        and time out behind it after _commit_lock's ``timeout_s``). The
+        rewrite keeps the parent's summaries.
 
         A write-phase FAILURE is also retried when HEAD moved since the
         parent was read: a concurrent expire_snapshots may have reclaimed

@@ -126,16 +126,14 @@ def _make_dedup_state_fn(state_ttl_ms: int):
         chunks = list(pdfs)
         if not chunks:
             return
-        pdf = pd.concat(chunks, ignore_index=True).sort_values("image_id")
-        if len(pdf):
-            flags = []
-            for iid in pdf["image_id"]:
-                if canon is None:
-                    canon = iid
-                flags.append(iid != canon)
-            yield pd.DataFrame({"image_id": pdf["image_id"].to_numpy(),
-                                "phash": key[0],
-                                "is_dup": flags})
+        ids = pd.concat(chunks, ignore_index=True)["image_id"] \
+            .sort_values().to_numpy()
+        if len(ids):
+            # first arrival wins: the state's id, else this group's min
+            if canon is None:
+                canon = ids[0]
+            yield pd.DataFrame({"image_id": ids, "phash": key[0],
+                                "is_dup": ids != canon})
         state.update((canon,))
         if state_ttl_ms:
             state.setTimeoutDuration(state_ttl_ms)

@@ -337,6 +337,32 @@ def test_expected_cache_keyed_by_parity_dir(monkeypatch, tmp_path):
     assert len({p2, p3, p4}) == 3 and "sf0.1" in p4
 
 
+def test_expected_keys_follow_only_the_twin_code(monkeypatch):
+    """The expected-table keys hash the twin code itself (derived from
+    the twin builders' code objects), not the whole registry module: an
+    edit to any ``_q_*`` Spark/SQL builder keeps every key, an edit to
+    the ANN re-rank twin re-keys the ANN tables."""
+    from bioanalyzer_backend_spark.plans import catalog_queries as CQ
+
+    def keys():
+        return ([CQ._expected_cache(t)[0]
+                 for t in ("ann_lsh", "ann_ivf", "langid_udf")]
+                + [CQ._twin_key()])
+
+    real = CQ._source
+    base = keys()
+
+    def edit(pred):
+        monkeypatch.setattr(CQ, "_source", lambda fn: real(fn) + (
+            "# edited\n" if pred(fn.__name__) else ""))
+
+    edit(lambda name: name.startswith("_q_"))
+    assert keys() == base
+    edit(lambda name: name == "_ann_rounded_topk_np")
+    edited = keys()
+    assert edited[0] != base[0] and edited[1] != base[1]
+
+
 # --------------------------------------------------------------------------
 # cross-seed and batch-invariance pins (round 5): the gt technique must
 # hold beyond the registry corpora's fixed seeds, and the langid/ppl

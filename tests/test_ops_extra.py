@@ -346,6 +346,44 @@ def test_resize_images_roundtrip(spark, synth_images_df):
     assert px.shape == (8, 8, 3)
 
 
+def test_decode_failure_is_error_row_or_no_row(spark):
+    """One shared decode-or-error row map: in a batch mixing a good and
+    an undecodable image, image_stats turns the failure into an
+    ``ok=false`` row whose err names the exception type, and
+    resize_images emits no row for it."""
+    good = imgcodec.encode_bmp(np.full((4, 6, 3), 7, dtype=np.uint8))
+    df = spark.createDataFrame(
+        [("g", bytearray(good), "bmp"), ("b", bytearray(b"junk"), "bmp")],
+        "image_id string, bytes binary, fmt string").coalesce(1)
+    stats = {r.image_id: r for r in multimodal.image_stats(df).collect()}
+    assert stats["g"].ok and stats["g"].err is None
+    assert (stats["g"].decoded_w, stats["g"].decoded_h) == (6, 4)
+    assert stats["g"].mean_r == 7.0
+    assert not stats["b"].ok and stats["b"].mean_r is None
+    assert stats["b"].err.startswith("ValueError: ")
+    thumbs = multimodal.resize_images(df, 2, 2).collect()
+    assert [r.image_id for r in thumbs] == ["g"]
+
+
+def test_resize_encoder_fault_fails_the_job(spark, monkeypatch):
+    """Only the decode is guarded: a fault in the re-encode must fail
+    the task, not silently drop the row. The module is swapped for a
+    namespace (pickled with the task) because the Python workers import
+    their own copy of imgcodec."""
+    from types import SimpleNamespace
+
+    def boom(px):
+        raise RuntimeError("encoder fault")
+
+    monkeypatch.setattr(multimodal, "imgcodec", SimpleNamespace(
+        decode=imgcodec.decode, encode_bmp=boom))
+    good = imgcodec.encode_bmp(np.full((4, 4, 3), 1, dtype=np.uint8))
+    df = spark.createDataFrame([("g", bytearray(good), "bmp")],
+                               "image_id string, bytes binary, fmt string")
+    with pytest.raises(Exception, match="encoder fault"):
+        multimodal.resize_images(df).collect()
+
+
 def test_audio_features_wav_pcm16(spark):
     """WAV/PCM16 decodes with the pure-numpy RIFF parser: a known sine
     clip yields exact duration/rate and RMS ~ A/sqrt(2); compressed
@@ -438,6 +476,14 @@ def test_minhash_mega_bucket_cap(spark):
     assert kept.count() == 1
     h = hot.collect()[0]
     assert (h.band, h.sig, h.bucket_n) == (0, "k", 20)
+    # max_bucket=None is the generators' opt-out: every row comes back
+    # (no singleton prune, even with min_bucket=2) with an empty report
+    # of the counts aggregate's schema
+    kept, hot = dedup.cap_buckets(sig, ["band", "sig"], None, min_bucket=2)
+    assert kept.count() == 21
+    assert hot.columns == ["band", "sig", "bucket_n"]
+    assert hot.dtypes[-1] == ("bucket_n", "bigint")
+    assert hot.count() == 0
 
 
 def test_with_phash_matches_stamped(spark, synth_images, synth_images_df):
@@ -1024,6 +1070,16 @@ def test_lsh_bucket_tolerates_null_and_ragged(spark):
     clean_out = {r["vec_id"]: r["lsh_bucket"]
                  for r in similarity.with_lsh_bucket(clean, 8).collect()}
     assert clean_out == {1: out[1], 4: out[4]}
+    # the IVF assignment shares the same UDF path: NULL / ragged rows get
+    # a NULL list, clean rows the list of the clean batch
+    cent = np.vstack([np.eye(8)[0], np.full(8, 8 ** -0.5), np.eye(8)[2]])
+    ivf = {r["vec_id"]: r["ivf_list"]
+           for r in similarity.with_ivf_list(df, cent).collect()}
+    assert ivf[2] is None and ivf[3] is None
+    assert ivf[1] == 1 and ivf[4] == 1
+    clean_ivf = {r["vec_id"]: r["ivf_list"]
+                 for r in similarity.with_ivf_list(clean, cent).collect()}
+    assert clean_ivf == {1: ivf[1], 4: ivf[4]}
 
 
 def test_embedding_neardup_zero_norm_guarded(spark):

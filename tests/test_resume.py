@@ -249,11 +249,22 @@ def test_crash_after_audit_repair_is_idempotent(spark, synth_images_df,
     so the roll-forward must keep them as the crashed run wrote them — a
     blind re-append would double the lineage hit counts."""
     df = synth_images_df.limit(300)
-    res, aud, ck = _tables(tmp_path / "aud")
+    res, aud, _ = _tables(tmp_path / "aud")
 
+    class CrashOnce(LocalSnapshotTable):
+        """A checkpoint table whose first append raises: the crash
+        lands after the group's audit commit."""
+        crashed = False
+
+        def append(self, df, summary=None):
+            if not self.crashed:
+                self.crashed = True
+                raise RuntimeError("injected failure after audit")
+            return super().append(df, summary)
+
+    ck = CrashOnce(str(tmp_path / "aud" / "ckpt"))
     with pytest.raises(RuntimeError, match="after audit"):
-        run_with_resume(spark, df, res, aud, ck, n_groups=4,
-                        fail_after_audit=True, fail_after=1)
+        run_with_resume(spark, df, res, aud, ck, n_groups=4)
     # rows AND audit are published; checkpoint row is not
     assert res.read(spark) is not None
     assert audit_rows(spark, aud).count() > 0
