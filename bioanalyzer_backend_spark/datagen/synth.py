@@ -229,8 +229,7 @@ _MISMATCH_ERR = "ValueError: not a BMP"
 
 
 def _image_gt_columns(image_id: list[str], out_px: list[np.ndarray],
-                      out_ok: list[bool], out_ph: list[int],
-                      psnr_min: float = 40.0, max_group: int = 1024):
+                      out_ok: list[bool], out_ph: list[int]):
     """g4 generator ground truth for the three image registry oracles
     (image_stats / resize_thumbs / dup_pixel_verify), computed from the
     SOURCE pixel arrays and generation knowledge — never by calling the
@@ -239,13 +238,13 @@ def _image_gt_columns(image_id: list[str], out_px: list[np.ndarray],
     must match these values bit-for-bit; a codec/stats/psnr regression
     diverges and fails the DuckDB compare.
 
-    ``psnr_min``/``max_group`` mirror multimodal.verify_dup_groups'
-    DEFAULTS (the registry entry uses defaults) — change them together.
+    The PSNR bar and the group-size cap are spec.PSNR_MIN and
+    spec.MAX_DUP_GROUP, the constants multimodal.verify_dup_groups reads.
     Groups are keyed on the STAMPED phash column, exactly like the
     operator's groupBy; the self-row/undecodable/shape-mismatch ladder
-    replicates multimodal.py:179-196, and the PSNR arithmetic replicates
-    imgcodec.psnr inline (independent copy: a regression there is caught
-    too)."""
+    replicates verify_dup_groups' per-group ladder, and the PSNR
+    arithmetic replicates imgcodec.psnr inline (independent copy: a
+    regression there is caught too)."""
     from collections import defaultdict
 
     n = len(image_id)
@@ -278,7 +277,7 @@ def _image_gt_columns(image_id: list[str], out_px: list[np.ndarray],
     gt_psnr: list[float | None] = [None] * n
     gt_pd: list[bool | None] = [None] * n
     for idxs in by_ph.values():
-        if not 1 < len(idxs) <= max_group:
+        if not 1 < len(idxs) <= spec.MAX_DUP_GROUP:
             continue
         idxs = sorted(idxs, key=lambda i: image_id[i])
         canon_i = idxs[0]
@@ -300,7 +299,7 @@ def _image_gt_columns(image_id: list[str], out_px: list[np.ndarray],
                 p = (float("inf") if mse == 0
                      else float(10.0 * np.log10(255.0 ** 2 / mse)))
                 gt_psnr[i] = p
-                gt_pd[i] = bool(p >= psnr_min)
+                gt_pd[i] = bool(p >= spec.PSNR_MIN)
     return {
         "gt_ok": gt_ok, "gt_err": gt_err, "gt_mean_r": gt_mr,
         "gt_mean_g": gt_mg, "gt_mean_b": gt_mb, "gt_decoded_w": gt_dw,
@@ -338,8 +337,7 @@ VIDEO_SCHEMA = pa.schema([
 _NON_RIFF_ERR = "ValueError: not a RIFF/WAVE file"
 
 
-def write_audio_parquet(out_dir: str, n_rows: int, seed: int = 43,
-                        force: bool = False) -> str:
+def write_audio_parquet(out_dir: str, n_rows: int, seed: int = 43) -> str:
     """Deterministic synthetic audio table (clip_id, bytes, fmt):
     mono PCM16 WAV sine+noise clips of varying rate/length, plus ~5%
     compressed-container rows (MP3/FLAC magic bytes — no codec in this
@@ -356,7 +354,7 @@ def write_audio_parquet(out_dir: str, n_rows: int, seed: int = 43,
     (clip_id, bytes) so gt columns never reach the Spark path."""
     os.makedirs(out_dir, exist_ok=True)
     path = os.path.join(out_dir, f"audio_n{n_rows}_s{seed}_g3.parquet")
-    if os.path.exists(path) and not force:
+    if os.path.exists(path):
         return path
     rng = np.random.default_rng(seed)
     from ..operators.multimodal import encode_wav_pcm16
@@ -406,8 +404,7 @@ def write_audio_parquet(out_dir: str, n_rows: int, seed: int = 43,
     return path
 
 
-def write_video_parquet(out_dir: str, n_rows: int, seed: int = 44,
-                        every_s: float = 1.0, force: bool = False) -> str:
+def write_video_parquet(out_dir: str, n_rows: int, seed: int = 44) -> str:
     """Deterministic synthetic video table (video_id, bytes, fmt):
     uncompressed RGB24 AVI clips (4-16 frames at 4 fps, small dims),
     plus ~5% compressed-container rows (H.264-ish magic) that the frame
@@ -418,19 +415,20 @@ def write_video_parquet(out_dir: str, n_rows: int, seed: int = 44,
     computed from the generation parameters — frame count / dims / fps
     are knowns, seconds-per-frame mirrors the avih microsecond rounding,
     the sampling stride mirrors video_frame_sample's step formula at
-    ``every_s`` (the registry entry's setting — baked into gt_step), and
-    gt_frame_bytes is the BMP size formula (54-byte header + 4-aligned
-    rows), NOT a call to encode_bmp. A parser/sampler/encoder regression
-    diverges from gt and fails the compare."""
+    spec.VIDEO_EVERY_S (its default, which the registry entry uses —
+    baked into gt_step), and gt_frame_bytes is the BMP size formula
+    (54-byte header + 4-aligned rows), NOT a call to encode_bmp. A
+    parser/sampler/encoder regression diverges from gt and fails the
+    compare."""
     from ..operators.multimodal import encode_avi_rgb24
     os.makedirs(out_dir, exist_ok=True)
     path = os.path.join(out_dir, f"video_n{n_rows}_s{seed}_g3.parquet")
-    if os.path.exists(path) and not force:
+    if os.path.exists(path):
         return path
     rng = np.random.default_rng(seed)
     fps = 4
     spf = int(1e6 / fps) / 1e6            # avih stores integer microseconds
-    step = max(1, round(every_s / spf))
+    step = max(1, round(spec.VIDEO_EVERY_S / spf))
     ids, blobs, fmts = [], [], []
     gt_nf, gt_spf, gt_step, gt_w, gt_h, gt_fb = [], [], [], [], [], []
     for i in range(n_rows):
@@ -467,7 +465,7 @@ def write_video_parquet(out_dir: str, n_rows: int, seed: int = 44,
 
 
 def write_images_parquet(out_dir: str, n_rows: int, seed: int = 42,
-                         dims=(16, 32, 64), force: bool = False) -> str:
+                         dims=(16, 32, 64)) -> str:
     """Generate-once cache keyed by EVERY generation parameter —
     (n_rows, seed, dims) — so two callers with different dims can never
     silently serve each other the wrong corpus. The g4 tag is the
@@ -483,7 +481,7 @@ def write_images_parquet(out_dir: str, n_rows: int, seed: int = 42,
     path = os.path.join(out_dir,
                         f"images_n{n_rows}_s{seed}_d{dtag}_g4.parquet")
     meta_path = path.replace(".parquet", "_meta.parquet")
-    if os.path.exists(path) and os.path.exists(meta_path) and not force:
+    if os.path.exists(path) and os.path.exists(meta_path):
         return path
     table, meta = generate(n_rows, seed=seed, dims=dims)
     pq.write_table(pa.table(table, schema=IMAGES_SCHEMA), path,

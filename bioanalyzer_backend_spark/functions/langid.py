@@ -65,24 +65,24 @@ def _trigram_buckets(texts) -> tuple[np.ndarray, np.ndarray]:
 # training (deterministic: seeded corpus, fixed iteration order)
 # --------------------------------------------------------------------------
 
-def train(samples_per_lang: int = 3000, seed: int = 1234) -> dict[str, np.ndarray]:
+def train() -> dict[str, np.ndarray]:
     from ..datagen import corpus
 
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(1234)
     langs = list(spec.LANGS)
     counts = np.ones((N_BUCKETS, len(langs)), dtype=np.float64)  # Laplace
     for li, lang in enumerate(langs):
         texts = [corpus.sample_caption(rng, lang)
-                 for _ in range(samples_per_lang)]
+                 for _ in range(spec.GATE_TRAIN_SAMPLES)]
         _, buckets = _trigram_buckets(texts)
         np.add.at(counts[:, li], buckets, 1.0)
     logp = np.log(counts / counts.sum(axis=0, keepdims=True)).astype(np.float32)
     return {"logp": logp, "langs": np.array(langs)}
 
 
-def save_artifact(path: str, samples_per_lang: int = 3000) -> str:
+def save_artifact(path: str) -> str:
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    art = train(samples_per_lang)
+    art = train()
     np.savez_compressed(path, **art)
     return path
 

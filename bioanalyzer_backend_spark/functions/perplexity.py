@@ -34,23 +34,23 @@ def _bigrams(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return row_of[:-1][ok], buf[:-1][ok], buf[1:][ok]
 
 
-def train(samples_per_lang: int = 3000, seed: int = 5678) -> np.ndarray:
+def train() -> np.ndarray:
     from ..datagen import corpus
 
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(5678)
     counts = np.full((256, 256), 0.1, dtype=np.float64)   # smoothing floor
     for lang in spec.LANGS:
         texts = [corpus.sample_caption(rng, lang)
-                 for _ in range(samples_per_lang)]
+                 for _ in range(spec.GATE_TRAIN_SAMPLES)]
         _, a, b = _bigrams(texts)
         np.add.at(counts, (a, b), 1.0)
     logp = np.log(counts / counts.sum(axis=1, keepdims=True))
     return logp.astype(np.float32)
 
 
-def save_artifact(path: str, samples_per_lang: int = 3000) -> str:
+def save_artifact(path: str) -> str:
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    np.savez_compressed(path, logp=train(samples_per_lang))
+    np.savez_compressed(path, logp=train())
     return path
 
 

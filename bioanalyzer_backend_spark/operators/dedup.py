@@ -2,7 +2,7 @@
 
 Four families over the image+caption table (and any text table):
 
-  * exact      — hash-groupBy on a key (phash / content fingerprint);
+  * exact      — hash-groupBy on the image phash;
   * MinHash+LSH— shingle -> minhash -> band -> bucket-join candidates;
   * SimHash    — 64-bit near-dup signature, Hamming-bucket candidates;
   * n-gram Jaccard — verified similarity on candidate pairs.
@@ -32,28 +32,30 @@ def binary_columns(df: DataFrame) -> list[str]:
             if isinstance(f.dataType, BinaryType)]
 
 
-def dup_groups(df: DataFrame, key: str = "phash",
-               id_col: str = "image_id") -> DataFrame:
-    """``(key, _canon, _n)`` for every multi-member key group: canonical
-    = min id, ``_n`` = member count. The ONE dup-group set of the exact
-    rule (apply_dedup_flag, exact_dedup, multimodal.verify_dup_groups).
+def dup_groups(df: DataFrame) -> DataFrame:
+    """``(phash, _canon, _n)`` for every multi-member phash group:
+    canonical = min ``image_id``, ``_n`` = member count. The ONE
+    dup-group set of the exact rule (apply_dedup_flag, exact_dedup,
+    multimodal.verify_dup_groups).
 
-    Computed from the slim (id, key) projection, so the binary ``bytes``
-    column never enters its shuffle (SURVEY.md section 4, "binary-column
-    hygiene"). groupBy+min instead of a window: the algebraic aggregate
-    gets map-side partial combine, so a hot key (mass-duplicated image)
-    reduces to one row per map task instead of concentrating every
-    duplicate row in a single window reducer. A NULL key forms a group
-    here but never equi-joins back, so NULL-key rows are never dups (an
-    undecodable image's phash is NULL, error-row semantics)."""
-    return (df.select(id_col, key).groupBy(key)
-            .agg(F.min(id_col).alias("_canon"), F.count("*").alias("_n"))
+    Computed from the slim (image_id, phash) projection, so the binary
+    ``bytes`` column never enters its shuffle (SURVEY.md section 4,
+    "binary-column hygiene"). groupBy+min instead of a window: the
+    algebraic aggregate gets map-side partial combine, so a hot key
+    (mass-duplicated image) reduces to one row per map task instead of
+    concentrating every duplicate row in a single window reducer. A
+    NULL phash forms a group here but never equi-joins back, so its rows
+    are never dups (an undecodable image's phash is NULL, error-row
+    semantics)."""
+    return (df.select("image_id", "phash").groupBy("phash")
+            .agg(F.min("image_id").alias("_canon"),
+                 F.count("*").alias("_n"))
             .where(F.col("_n") > 1))
 
 
-def apply_dedup_flag(df: DataFrame, key: str = "phash",
-                     id_col: str = "image_id") -> DataFrame:
-    """is_dup: non-canonical rows of a key group (canonical = min id).
+def apply_dedup_flag(df: DataFrame) -> DataFrame:
+    """is_dup: non-canonical rows of a phash group (canonical = min
+    image_id).
 
     Two-phase so the binary `bytes` column never enters a network
     shuffle: the dup_groups aggregate reads a two-column projection, and
@@ -100,26 +102,25 @@ def apply_dedup_flag(df: DataFrame, key: str = "phash",
                 "apply_dedup_flag on a byte-bearing frame needs AQE "
                 "(spark.sql.adaptive.enabled=true) — otherwise the probe "
                 "join network-shuffles the binary column")
-    out = df.join(dup_groups(df, key, id_col).select(key, "_canon"), key,
-                  "left")
+    out = df.join(dup_groups(df).select("phash", "_canon"), "phash", "left")
     return (out
             .withColumn("is_dup",
                         F.col("_canon").isNotNull()
-                        & (F.col(id_col) != F.col("_canon")))
+                        & (F.col("image_id") != F.col("_canon")))
             .drop("_canon"))
 
 
-def exact_dedup(df: DataFrame, key: str = "phash",
-                id_col: str = "image_id") -> DataFrame:
-    """Keep only canonical rows (min id per key group) — A7 semantics:
-    the rows apply_dedup_flag leaves ``is_dup = false``, in *df*'s column
-    order. NULL-key rows pass through untouched (grouping them would
-    silently keep only one of n distinct broken rows), and a byte-bearing
-    frame with AQE off raises like apply_dedup_flag."""
+def exact_dedup(df: DataFrame) -> DataFrame:
+    """Keep only canonical rows (min image_id per phash group) — A7
+    semantics: the rows apply_dedup_flag leaves ``is_dup = false``, in
+    *df*'s column order. NULL-phash rows pass through untouched
+    (grouping them would silently keep only one of n distinct broken
+    rows), and a byte-bearing frame with AQE off raises like
+    apply_dedup_flag."""
     if "is_dup" in df.columns:
         raise ValueError("exact_dedup reserves the column name "
                          "'is_dup'; rename it on the input")
-    return (apply_dedup_flag(df, key, id_col)
+    return (apply_dedup_flag(df)
             .where(~F.col("is_dup")).select(*df.columns))
 
 
@@ -127,13 +128,13 @@ def _tokens_col(text_col: str):
     return F.expr(sqlgen.tokens_expr(text_col, sqlgen.SPARK))
 
 
-def shingles(df: DataFrame, text_col: str, id_col: str,
-             n: int = 3) -> DataFrame:
-    """(id, shingle) pairs: distinct word n-gram shingles."""
-    toks = df.select(F.col(id_col).alias("_id"),
-                     _tokens_col(text_col).alias("toks"))
+def shingles(df: DataFrame) -> DataFrame:
+    """(_id, shingle) pairs: distinct word 3-gram shingles of each
+    caption, keyed by image_id."""
+    toks = df.select(F.col("image_id").alias("_id"),
+                     _tokens_col("caption").alias("toks"))
     sh = toks.selectExpr(
-        "_id", f"{sqlgen.shingle_array('toks', n, sqlgen.SPARK)} AS sh")
+        "_id", f"{sqlgen.shingle_array('toks', sqlgen.SPARK)} AS sh")
     return sh.select("_id", F.explode("sh").alias("shingle"))
 
 
@@ -212,12 +213,13 @@ def _bucket_pairs(sig: DataFrame, keys: list[str],
 
 def minhash_lsh_candidates(df: DataFrame, text_col: str = "caption",
                            id_col: str = "image_id",
-                           n_bands: int = 4, n_rows: int = 4,
+                           n_rows: int = sqlgen.MINHASH_ROWS,
                            max_bucket: int | str | None = "auto",
                            return_report: bool = False):
     """Candidate near-dup pairs (id_a < id_b) via banded MinHash.
 
-    ``n_rows`` minhashes per band (default b=4, r=4 — candidate
+    sqlgen.MINHASH_BANDS bands of ``n_rows`` minhashes (by default
+    sqlgen.MINHASH_ROWS: b=4, r=4 — candidate
     threshold (1/b)^(1/r) ~= 0.71, matched to the 0.8 Jaccard verify
     bar; r=1 admits candidates from s ~= 0.16, exploding the candidate
     volume quadratically at 10^12 rows). Shingles, md5 digests and band
@@ -243,7 +245,8 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "caption",
     toks = df.select(F.col(id_col).alias("_id"),
                      _tokens_col(text_col).alias("toks"))
     d = sqlgen.SPARK
-    sh = toks.selectExpr("_id", f"{sqlgen.shingle_array('toks', 3, d)} AS sh")
+    sh = toks.selectExpr("_id", f"{sqlgen.shingle_array('toks', d)} AS sh")
+    n_bands = sqlgen.MINHASH_BANDS
     stack_args = ", ".join(f"{b}, mh{b}" for b in range(n_bands))
     sig = (sh.selectExpr("_id", *sqlgen.minhash_hash_exprs(
                "sh", n_bands, n_rows, d))
@@ -269,9 +272,7 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "caption",
     return (pairs, hot) if return_report else pairs
 
 
-def jaccard_verify(df: DataFrame, pairs: DataFrame, text_col: str = "caption",
-                   id_col: str = "image_id",
-                   threshold: float = 0.8,
+def jaccard_verify(df: DataFrame, pairs: DataFrame, threshold: float = 0.8,
                    max_posting: int | None = None,
                    return_report: bool = False):
     """Exact n-gram Jaccard on candidate pairs (verification stage).
@@ -285,7 +286,7 @@ def jaccard_verify(df: DataFrame, pairs: DataFrame, text_col: str = "caption",
     what keeps the verify stage linear in the candidate count. With
     ``return_report`` the dropped shingles come back as an audit frame
     (shingle, bucket_n) — no silent truncation."""
-    sh = shingles(df, text_col, id_col)
+    sh = shingles(df)
     # sh feeds THREE plan branches (sizes, x alias, y alias): the
     # snapshot inside cap_buckets keeps tokenize+explode from
     # re-executing per branch, capped or not
@@ -576,8 +577,7 @@ def simhash_candidates(df: DataFrame, text_col: str = "caption",
     return (pairs, hot) if return_report else pairs
 
 
-def dup_components(pairs: DataFrame, id_a: str = "id_a",
-                   id_b: str = "id_b", max_iters: int = 50) -> DataFrame:
+def dup_components(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
     """Connected components of an undirected near-dup pair graph:
     (id, component) where component = min id reachable — the
     canonicalization step after pairwise detection (pairs alone
@@ -614,7 +614,7 @@ def dup_components(pairs: DataFrame, id_a: str = "id_a",
     """
     # snapshot the pair pipeline ONCE — nodes and edges both derive from
     # it, and the upstream plan (LSH candidates + verify) is expensive
-    p = (pairs.selectExpr(f"{id_a} AS a", f"{id_b} AS b")
+    p = (pairs.selectExpr("id_a AS a", "id_b AS b")
          .localCheckpoint(eager=True))
     # node universe BEFORE dropping self-pairs: a (x, x) pair contributes
     # node x with component x, matching the WITH RECURSIVE oracle

@@ -23,6 +23,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from .. import spec
 from ..datagen import imgcodec
 from .dedup import dup_groups
 
@@ -114,11 +115,11 @@ def resize_images(df: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame:
                      _decode_image, thumb)
 
 
-def with_phash(df: DataFrame, bytes_col: str = "bytes",
-               fmt_col: str = "fmt", out_col: str = "phash") -> DataFrame:
-    """Derive the 64-bit perceptual hash from the binary image column
-    (functions/phash.average_hash over decoded pixels) — a raw crawl does
-    not arrive pre-stamped. Arrow-batched pandas UDF; undecodable rows
+def with_phash(df: DataFrame) -> DataFrame:
+    """Derive the 64-bit perceptual hash ``phash`` from the binary image
+    column ``bytes`` in format ``fmt`` (functions/phash.average_hash over
+    decoded pixels) — a raw crawl does not arrive pre-stamped.
+    Arrow-batched pandas UDF; undecodable rows
     get NULL (error-row semantics, F6). The synth generator stamps the
     SAME hash, so derived == stamped is a tested invariant."""
     import pyspark.sql.functions as F
@@ -135,20 +136,19 @@ def with_phash(df: DataFrame, bytes_col: str = "bytes",
                 out.append(None)
         return pd.Series(out, dtype="object")
 
-    return df.withColumn(out_col, _ph(F.col(bytes_col), F.col(fmt_col)))
+    return df.withColumn("phash", _ph(F.col("bytes"), F.col("fmt")))
 
 
 DUP_VERIFY_SCHEMA = ("phash long, image_id string, canonical_id string, "
                      "psnr_db double, pixel_dup boolean")
 
 
-def verify_dup_groups(df: DataFrame, psnr_min: float = 40.0,
-                      max_group: int = 1024) -> DataFrame:
+def verify_dup_groups(df: DataFrame) -> DataFrame:
     """Pixel-level verification of phash dup groups via grouped-map
     ``applyInPandas`` — a phash collision is only a CANDIDATE duplicate;
     the keep/drop decision needs the decoded-pixel invariant
-    (PSNR >= ``psnr_min``, BASELINE input_hint) against the group's min-id
-    canonical.
+    (PSNR >= ``spec.PSNR_MIN``, BASELINE input_hint) against the group's
+    min-id canonical.
 
     Binary-column hygiene note: this is the one operator that must
     co-locate image bytes by key, so it shuffles bytes — but only for
@@ -157,9 +157,10 @@ def verify_dup_groups(df: DataFrame, psnr_min: float = 40.0,
     crawl; an inner join whose strategy AQE picks), never the full
     table. A degenerate hot phash (solid-color/template images) would put
     every member's bytes into ONE Python worker, so groups larger than
-    ``max_group`` are excluded here and belong to the batch dedup path,
-    which already treats the whole group as duplicates without touching
-    pixels (same mega-bucket discipline as dedup.cap_buckets).
+    ``spec.MAX_DUP_GROUP`` are excluded here and belong to the batch
+    dedup path, which already treats the whole group as duplicates
+    without touching pixels (same mega-bucket discipline as
+    dedup.cap_buckets).
     Undecodable members surface as psnr_db NULL / pixel_dup false
     (error-row semantics, F6)."""
     import pyspark.sql.functions as F
@@ -168,7 +169,8 @@ def verify_dup_groups(df: DataFrame, psnr_min: float = 40.0,
     # scale (billions of rows at 10^12 images would OOM the driver under
     # a forced broadcast). AQE measures the materialized set at runtime
     # and broadcasts only when it is actually small.
-    multi = dup_groups(df).where(F.col("_n") <= max_group).select("phash")
+    multi = (dup_groups(df).where(F.col("_n") <= spec.MAX_DUP_GROUP)
+             .select("phash"))
     cand = df.select("phash", "image_id", "bytes", "fmt").join(multi, "phash")
 
     def gp(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -201,7 +203,7 @@ def verify_dup_groups(df: DataFrame, psnr_min: float = 40.0,
             else:
                 p = imgcodec.psnr(canon_px, px)
                 out["psnr_db"].append(p)
-                out["pixel_dup"].append(bool(p >= psnr_min))
+                out["pixel_dup"].append(bool(p >= spec.PSNR_MIN))
         return pd.DataFrame(out)
 
     return cand.groupBy("phash").applyInPandas(gp, schema=DUP_VERIFY_SCHEMA)
@@ -360,7 +362,8 @@ def encode_avi_rgb24(frames, fps: int = 4) -> bytes:
     return b"RIFF" + struct.pack("<I", len(payload)) + payload
 
 
-def video_frame_sample(df: DataFrame, every_s: float = 1.0) -> DataFrame:
+def video_frame_sample(df: DataFrame,
+                       every_s: float = spec.VIDEO_EVERY_S) -> DataFrame:
     """Frame sampling over the binary video column (mapInPandas, one row
     per sampled frame — a row-multiplying operator): uncompressed
     RIFF/AVI decodes with the pure-numpy parser above, frames are sampled

@@ -9,6 +9,8 @@ the exact re-rank; (b) IVF — a sample-trained spherical k-means coarse
 quantizer assigns every vector to a centroid list, and a query probes only
 the n_probe nearest lists (list id doubles as a partition column at
 warehouse scale, turning the probe into partition pruning).
+
+Every operator reads ``vec_id`` and its ``embedding`` column.
 """
 
 from __future__ import annotations
@@ -20,32 +22,38 @@ from pyspark.sql import functions as F
 
 from ..sqlgen import SPARK, dot
 
+# The seeds and IVF training shape, read by these operators and by the
+# registry's numpy twins (catalog_queries._lsh_candidate_mask and
+# _ivf_candidate_mask), which re-implement everything else.
+LSH_SEED = 97
+IVF_SEED = 131
+IVF_SAMPLE_N = 2048
+IVF_ITERS = 10
 
-def cosine_topk(df: DataFrame, query_vec, k: int = 10,
-                vec_col: str = "embedding",
-                id_col: str = "vec_id") -> DataFrame:
+
+def cosine_topk(df: DataFrame, query_vec, k: int = 10) -> DataFrame:
     """Brute-force cosine top-k vs one query vector. Native expressions;
     the top-k is a TakeOrderedAndProject (no full sort/shuffle)."""
     q = [float(x) for x in query_vec]
     qn = float(np.sqrt(np.dot(q, q)))
     qlit = "array(" + ", ".join(f"CAST({x!r} AS FLOAT)" for x in q) + ")"
     scored = df.selectExpr(
-        id_col,
-        f"{dot(vec_col, qlit, SPARK)} AS dp",
-        f"{dot(vec_col, vec_col, SPARK)} AS nn",
+        "vec_id",
+        f"{dot('embedding', qlit, SPARK)} AS dp",
+        f"{dot('embedding', 'embedding', SPARK)} AS nn",
     ).selectExpr(
-        id_col,
+        "vec_id",
         # NULLIF guards zero-norm junk vectors: 0/0 = NaN and Spark
         # sorts NaN ABOVE all real values in descending order, which
         # would put undefined-similarity rows at the top of the top-k;
         # NULL instead sorts last under desc (nulls-last default)
         f"dp / (SQRT(NULLIF(nn, CAST(0.0 AS DOUBLE))) "
         f"* CAST({qn!r} AS DOUBLE)) AS cos_sim")
-    return scored.orderBy(F.desc("cos_sim"), F.col(id_col)).limit(k)
+    return scored.orderBy(F.desc("cos_sim"), F.col("vec_id")).limit(k)
 
 
-def _planes(dim: int, n_planes: int, seed: int = 97) -> np.ndarray:
-    rng = np.random.default_rng(seed)
+def _planes(dim: int, n_planes: int) -> np.ndarray:
+    rng = np.random.default_rng(LSH_SEED)
     return rng.standard_normal((dim, n_planes)).astype(np.float64)
 
 
@@ -99,8 +107,7 @@ def _vector_udf(dim: int, score, out_type: str):
     return _udf
 
 
-def with_lsh_bucket(df: DataFrame, dim: int, n_planes: int = 16,
-                    vec_col: str = "embedding", seed: int = 97) -> DataFrame:
+def with_lsh_bucket(df: DataFrame, dim: int, n_planes: int = 16) -> DataFrame:
     """Append a LONG bucket = sign-bit signature of seeded hyperplanes.
     One matmul per Arrow batch. The column is int64 end to end: an int32
     signature silently wraps negative at n_planes >= 32 while the
@@ -108,44 +115,40 @@ def with_lsh_bucket(df: DataFrame, dim: int, n_planes: int = 16,
     grows 32 phantom bits and radius probes return nothing."""
     if not 1 <= n_planes <= 63:
         raise ValueError(f"n_planes must be in [1, 63], got {n_planes}")
-    planes = _planes(dim, n_planes, seed)
+    planes = _planes(dim, n_planes)
     weights = (1 << np.arange(n_planes)).astype(np.int64)
 
     def bucket(mat: np.ndarray) -> np.ndarray:
         return (((mat @ planes) > 0) @ weights).astype(np.int64)
 
     return df.withColumn("lsh_bucket",
-                         _vector_udf(dim, bucket, "long")(F.col(vec_col)))
+                         _vector_udf(dim, bucket, "long")(F.col("embedding")))
 
 
 def lsh_cosine_topk(df: DataFrame, query_vec, k: int = 10,
-                    n_planes: int = 16, hamming_radius: int = 2,
-                    vec_col: str = "embedding",
-                    id_col: str = "vec_id", seed: int = 97) -> DataFrame:
+                    n_planes: int = 16,
+                    hamming_radius: int = 2) -> DataFrame:
     """LSH-pruned cosine top-k: probe buckets within a Hamming radius of
     the query signature, exact cosine only on survivors."""
     q = np.asarray(list(query_vec), dtype=np.float64)
-    planes = _planes(len(q), n_planes, seed)
+    planes = _planes(len(q), n_planes)
     qbits = int(((q @ planes) > 0).astype(np.int64)
                 @ (1 << np.arange(n_planes)))
-    bucketed = with_lsh_bucket(df, len(q), n_planes, vec_col, seed)
+    bucketed = with_lsh_bucket(df, len(q), n_planes)
     xor = F.col("lsh_bucket").bitwiseXOR(F.lit(qbits))
     hamming = F.bit_count(xor)
     cand = bucketed.where(hamming <= F.lit(hamming_radius))
-    return cosine_topk(cand, q.tolist(), k, vec_col, id_col)
+    return cosine_topk(cand, q.tolist(), k)
 
 
-def ivf_train_centroids(df: DataFrame, n_centroids: int = 16,
-                        sample_n: int = 2048, iters: int = 10,
-                        vec_col: str = "embedding",
-                        id_col: str = "vec_id", seed: int = 131) -> np.ndarray:
+def ivf_train_centroids(df: DataFrame, n_centroids: int = 16) -> np.ndarray:
     """Deterministic coarse quantizer for IVF: spherical k-means on a
     bounded, id-ordered sample (standard IVF practice — the quantizer
     trains on a sample, never the full corpus, so the collect is O(sample)
     regardless of table size). Seeded init + fixed iteration count keeps
     the index reproducible across runs/retries."""
-    rows = (df.select(id_col, vec_col).orderBy(id_col)
-            .limit(sample_n).collect())
+    rows = (df.select("vec_id", "embedding").orderBy("vec_id")
+            .limit(IVF_SAMPLE_N).collect())
     vecs = [np.asarray(r[1], dtype=np.float64) for r in rows
             if r[1] is not None]
     if not vecs:
@@ -156,11 +159,10 @@ def ivf_train_centroids(df: DataFrame, n_centroids: int = 16,
         raise ValueError(
             "ivf_train_centroids: ragged embedding lengths in the "
             f"training sample: {sorted({v.shape for v in vecs})}")
-    return _kmeans_core(np.asarray(vecs), n_centroids, iters, seed)
+    return _kmeans_core(np.asarray(vecs), n_centroids)
 
 
-def _kmeans_core(mat: np.ndarray, n_centroids: int, iters: int,
-                 seed: int) -> np.ndarray:
+def _kmeans_core(mat: np.ndarray, n_centroids: int) -> np.ndarray:
     """Pure-numpy spherical k-means (the quantizer itself — shared by the
     Spark trainer above and the registry's numpy oracle twin, the same
     way spec constants are shared; what the twin re-implements
@@ -171,9 +173,9 @@ def _kmeans_core(mat: np.ndarray, n_centroids: int, iters: int,
     # supports (rng.choice(replace=False) would raise an opaque
     # 'larger sample than population'); every vector becomes a seed
     n_centroids = min(n_centroids, len(mat))
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(IVF_SEED)
     cent = mat[rng.choice(len(mat), size=n_centroids, replace=False)]
-    for _ in range(iters):
+    for _ in range(IVF_ITERS):
         assign = (mat @ cent.T).argmax(axis=1)
         for c in range(n_centroids):
             members = mat[assign == c]
@@ -183,8 +185,7 @@ def _kmeans_core(mat: np.ndarray, n_centroids: int, iters: int,
     return cent
 
 
-def with_ivf_list(df: DataFrame, centroids: np.ndarray,
-                  vec_col: str = "embedding") -> DataFrame:
+def with_ivf_list(df: DataFrame, centroids: np.ndarray) -> DataFrame:
     """Append ivf_list = argmax-cosine centroid id. One matmul per Arrow
     batch against the broadcast centroid matrix (executor-side numpy)."""
     cent = centroids.copy()
@@ -195,14 +196,11 @@ def with_ivf_list(df: DataFrame, centroids: np.ndarray,
         return (mat @ cent.T).argmax(axis=1).astype(np.int32)
 
     return df.withColumn("ivf_list", _vector_udf(
-        int(cent.shape[1]), assign, "int")(F.col(vec_col)))
+        int(cent.shape[1]), assign, "int")(F.col("embedding")))
 
 
 def ivf_cosine_topk(df: DataFrame, query_vec, k: int = 10,
-                    centroids: np.ndarray | None = None,
-                    n_centroids: int = 16, n_probe: int = 4,
-                    vec_col: str = "embedding",
-                    id_col: str = "vec_id") -> DataFrame:
+                    n_centroids: int = 16, n_probe: int = 4) -> DataFrame:
     """IVF ANN: partition vectors into centroid lists, probe only the
     n_probe lists nearest the query, exact cosine re-rank on survivors.
 
@@ -211,20 +209,17 @@ def ivf_cosine_topk(df: DataFrame, query_vec, k: int = 10,
     partitions (partition pruning via the IN filter below) instead of the
     full corpus; n_probe == n_centroids degenerates to exact brute force
     (tested invariant)."""
-    if centroids is None:
-        centroids = ivf_train_centroids(df, n_centroids,
-                                        vec_col=vec_col, id_col=id_col)
+    centroids = ivf_train_centroids(df, n_centroids)
     q = np.asarray(list(query_vec), dtype=np.float64)
     qn = q / max(float(np.linalg.norm(q)), 1e-12)
     probe = np.argsort(-(centroids @ qn))[:n_probe].tolist()
-    listed = with_ivf_list(df, centroids, vec_col)
+    listed = with_ivf_list(df, centroids)
     cand = listed.where(F.col("ivf_list").isin([int(p) for p in probe]))
-    return cosine_topk(cand, q.tolist(), k, vec_col, id_col)
+    return cosine_topk(cand, q.tolist(), k)
 
 
-def embedding_neardup_pairs(df: DataFrame, dim: int, threshold: float = 0.95,
-                            n_planes: int = 12, vec_col: str = "embedding",
-                            id_col: str = "vec_id") -> DataFrame:
+def embedding_neardup_pairs(df: DataFrame, dim: int,
+                            threshold: float = 0.95) -> DataFrame:
     """Embedding-cosine near-dup: same-bucket candidate pairs -> exact
     cosine >= threshold.
 
@@ -234,22 +229,20 @@ def embedding_neardup_pairs(df: DataFrame, dim: int, threshold: float = 0.95,
     per candidate pair on the wire. Vectors (with norms hoisted, so
     per-pair work is one dot product) re-attach BY ID after the pair set
     exists."""
-    b = with_lsh_bucket(df.select(id_col, vec_col), dim, n_planes, vec_col)
+    b = with_lsh_bucket(df.select("vec_id", "embedding"), dim, 12)
     # snapshot before the a/b self-join: slim feeds both aliases, and an
     # un-checkpointed pandas-UDF lineage re-executes the hyperplane
     # matmul + full-corpus Arrow transfer once per branch (the same
     # multi-branch landmine simhash_candidates documents)
-    slim = b.select(F.col(id_col).alias("_id"), "lsh_bucket") \
+    slim = b.select(F.col("vec_id").alias("_id"), "lsh_bucket") \
         .localCheckpoint(eager=True)
     a, c = slim.alias("a"), slim.alias("b")
     cand = (a.join(c, (F.col("a.lsh_bucket") == F.col("b.lsh_bucket"))
                    & (F.col("a._id") < F.col("b._id")))
             .select(F.col("a._id").alias("id_a"),
                     F.col("b._id").alias("id_b")))
-    pairs = (cand.join(_with_norm(df, "id_a", "va", "na", vec_col, id_col),
-                       "id_a")
-             .join(_with_norm(df, "id_b", "vb", "nb", vec_col, id_col),
-                   "id_b"))
+    pairs = (cand.join(_with_norm(df, "id_a", "va", "na"), "id_a")
+             .join(_with_norm(df, "id_b", "vb", "nb"), "id_b"))
     scored = pairs.selectExpr(
         "id_a", "id_b",
         # NULLIF: a zero-norm junk vector in a bucket pair makes
@@ -263,12 +256,12 @@ def embedding_neardup_pairs(df: DataFrame, dim: int, threshold: float = 0.95,
 
 
 def _with_norm(df: DataFrame, id_alias: str, vec_alias: str,
-               norm_alias: str, vec_col: str, id_col: str) -> DataFrame:
+               norm_alias: str) -> DataFrame:
     """(id, vec, norm) projection — norm hoisted BEFORE any join so the
     per-pair work downstream is one dot product, not three."""
     return df.selectExpr(
-        f"{id_col} AS {id_alias}", f"{vec_col} AS {vec_alias}",
-        f"SQRT({dot(vec_col, vec_col, SPARK)}) AS {norm_alias}")
+        f"vec_id AS {id_alias}", f"embedding AS {vec_alias}",
+        f"SQRT({dot('embedding', 'embedding', SPARK)}) AS {norm_alias}")
 
 
 def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
@@ -279,9 +272,7 @@ def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
             .where(F.col("_rn") <= k).drop("_rn"))
 
 
-def knn_join(corpus: DataFrame, queries: DataFrame, k: int = 3,
-             vec_col: str = "embedding",
-             id_col: str = "vec_id") -> DataFrame:
+def knn_join(corpus: DataFrame, queries: DataFrame, k: int = 3) -> DataFrame:
     """Batched k-NN join: for EVERY query row, its top-k cosine
     neighbors in the corpus — the training-pipeline shape (hard-negative
     mining, dedup-vs-reference-set) that single-probe cosine_topk cannot
@@ -294,8 +285,8 @@ def knn_join(corpus: DataFrame, queries: DataFrame, k: int = 3,
     Returns (qid, cid, cos_sim rounded to 5 — the dialect-portable
     compare convention of the cosine_top10 oracle).
     """
-    q = _with_norm(queries, "qid", "qe", "qn", vec_col, id_col)
-    c = _with_norm(corpus, "cid", "ce", "cn", vec_col, id_col)
+    q = _with_norm(queries, "qid", "qe", "qn")
+    c = _with_norm(corpus, "cid", "ce", "cn")
     scored = (c.crossJoin(F.broadcast(q))
               .selectExpr("qid", "cid",
                           f"ROUND({dot('ce', 'qe', SPARK)} / "
@@ -305,15 +296,13 @@ def knn_join(corpus: DataFrame, queries: DataFrame, k: int = 3,
 
 
 def knn_join_lsh(corpus: DataFrame, queries: DataFrame, k: int = 3,
-                 dim: int = 16, n_planes: int = 16, n_blocks: int = 4,
-                 vec_col: str = "embedding", id_col: str = "vec_id",
-                 seed: int = 97) -> DataFrame:
+                 dim: int = 16) -> DataFrame:
     """Scale path for the k-NN join: block-banded sign-LSH equi-join.
 
-    Both sides get an n_planes-bit signature (seeded hyperplanes, one
-    Arrow matmul), split into n_blocks key blocks; candidates are pairs
-    agreeing on AT LEAST ONE block — by pigeonhole this covers every
-    pair with signature Hamming distance <= n_blocks - 1 (tested), and
+    Both sides get a 16-bit signature (seeded hyperplanes, one Arrow
+    matmul), split into 4 key blocks; candidates are pairs agreeing on
+    AT LEAST ONE block — by pigeonhole this covers every pair with
+    signature Hamming distance <= 3 (tested), and
     random-hyperplane theory makes low-angle pairs likely to collide.
     The candidate join is a pure EQUI-join on (block, key): at 10^12
     rows it shuffles slim (id, block, key) rows and never compares
@@ -322,23 +311,24 @@ def knn_join_lsh(corpus: DataFrame, queries: DataFrame, k: int = 3,
     vectors rejoin by id AFTER candidate dedup (queries broadcast,
     corpus equi-join), so signatures and vectors never travel together.
     """
+    n_planes, n_blocks = 16, 4
     bits = n_planes // n_blocks
     mask = (1 << bits) - 1
 
     def blocks(df: DataFrame, out_id: str) -> DataFrame:
-        b = with_lsh_bucket(df, dim, n_planes, vec_col, seed)
+        b = with_lsh_bucket(df, dim, n_planes)
         keys = ", ".join(
             f"{i}, shiftright(lsh_bucket, {i * bits}) & {mask}"
             for i in range(n_blocks))
         return b.selectExpr(
-            f"{id_col} AS {out_id}",
+            f"vec_id AS {out_id}",
             f"stack({n_blocks}, {keys}) AS (block, key)")
 
     cand = (blocks(queries, "qid")
             .join(blocks(corpus, "cid"), ["block", "key"])
             .select("qid", "cid").distinct())
-    c = _with_norm(corpus, "cid", "ce", "cn", vec_col, id_col)
-    q = _with_norm(queries, "qid", "qe", "qn", vec_col, id_col)
+    c = _with_norm(corpus, "cid", "ce", "cn")
+    q = _with_norm(queries, "qid", "qe", "qn")
     scored = (cand.join(c, "cid").join(F.broadcast(q), "qid")
               .selectExpr("qid", "cid",
                           f"ROUND({dot('ce', 'qe', SPARK)} / "

@@ -183,22 +183,21 @@ SELECT row_id, n_en, n_es, n_de, n_fr, {guess} AS lang_guess FROM h
 """
 
 
-def _shingles(d: str, text_col: str = "text") -> str:
+def _shingles(d: str) -> str:
     """Word 3-gram shingles of the token stream."""
-    toks = sqlgen.tokens_expr(text_col, d)
+    toks = sqlgen.tokens_expr("text", d)
     return (f"SELECT doc_id AS row_id, toks, "
-            f"{sqlgen.shingle_array('toks', 3, d)} AS sh "
+            f"{sqlgen.shingle_array('toks', d)} AS sh "
             f"FROM (SELECT doc_id, {toks} AS toks FROM documents)")
 
 
-def _q_ngram_jaccard(d: str, shingle_src: str | None = None,
-                     max_posting: int = 32) -> str:
+def _q_ngram_jaccard(d: str, shingle_src: str | None = None) -> str:
     """Near-dup detection: 3-gram shingle Jaccard, top-20 pairs.
 
     Hot-shingle cap: a boilerplate shingle shared by m docs contributes
     m^2/2 rows to the posting-list self-join — quadratic in corpus size
     at 10^12 rows while carrying near-zero signal ("template text").
-    Shingles with posting count > ``max_posting`` are removed from the
+    Shingles with posting count > 32 are removed from the
     shingle UNIVERSE (both the intersection join and the per-doc sizes,
     so Jaccard stays a well-defined similarity over the filtered space).
     Both dialects render the same cap, so the oracle compare still holds;
@@ -208,7 +207,7 @@ def _q_ngram_jaccard(d: str, shingle_src: str | None = None,
     return f"""
 WITH s AS ({shingle_src or _shingles(d)}),
 e0 AS (SELECT row_id, {sqlgen.explode_col('sh', 'g', d)} FROM s),
-hot AS (SELECT g FROM e0 GROUP BY g HAVING COUNT(*) > {max_posting}),
+hot AS (SELECT g FROM e0 GROUP BY g HAVING COUNT(*) > 32),
 e AS (SELECT e0.row_id, e0.g FROM e0 LEFT JOIN hot ON e0.g = hot.g
       WHERE hot.g IS NULL),
 sz AS (SELECT row_id, CAST(COUNT(*) AS BIGINT) AS n FROM e GROUP BY row_id),
@@ -225,8 +224,7 @@ LIMIT 20
 """
 
 
-def _minhash_sig_ctes(d: str, n_bands: int = 4, n_rows: int = 4,
-                      shingle_src: str | None = None,
+def _minhash_sig_ctes(d: str, shingle_src: str | None = None,
                       sig_src: str | None = None) -> str:
     """With ``sig_src``, the whole shingle->hash->min pipeline collapses
     to ``sig AS ({sig_src})`` — the Spark side of the band-capped
@@ -237,14 +235,14 @@ def _minhash_sig_ctes(d: str, n_bands: int = 4, n_rows: int = 4,
     DuckDB oracle keeps the inline CTEs from the same builder."""
     if sig_src is not None:
         return f"sig AS ({sig_src})"
-    return _minhash_sig_ctes_inline(d, n_bands, n_rows, shingle_src)
+    return _minhash_sig_ctes_inline(d, shingle_src)
 
 
-def _minhash_sig_ctes_inline(d: str, n_bands: int = 4, n_rows: int = 4,
-                             shingle_src: str | None = None) -> str:
+def _minhash_sig_ctes_inline(d: str, shingle_src: str | None = None) -> str:
     """CTEs ``s`` (shingles) -> ``sig(row_id, band, mh)``.
 
-    Banded MinHash with ``n_rows`` rows per band (default b=4, r=4 —
+    Banded MinHash with sqlgen.MINHASH_BANDS bands of
+    sqlgen.MINHASH_ROWS rows (b=4, r=4 —
     candidate threshold (1/b)^(1/r) ~= 0.71, matched to the 0.8 Jaccard
     verify bar; r=1 admits candidates from s ~= 0.16, which explodes the
     candidate volume quadratically at 10^12 rows). The digests and band
@@ -261,6 +259,7 @@ def _minhash_sig_ctes_inline(d: str, n_bands: int = 4, n_rows: int = 4,
     the projection by both optimizers, re-evaluating the whole
     shingle+md5 expression a second time per branch (measured 10x
     slowdown in Spark)."""
+    n_bands, n_rows = sqlgen.MINHASH_BANDS, sqlgen.MINHASH_ROWS
     hashes = ", ".join(sqlgen.minhash_hash_exprs("sh", n_bands, n_rows, d))
     mins = ", ".join(sqlgen.minhash_band_exprs(n_bands, n_rows, d))
     unions = " UNION ALL ".join(
@@ -272,16 +271,15 @@ sig AS ({unions})"""
 
 
 def _q_minhash_bands(d: str, shingle_src: str | None = None,
-                     max_bucket: int = 32,
                      sig_src: str | None = None) -> str:
     """MinHash-LSH candidate pairs: 4 bands x 4 rows, band signature =
     concat of 4 md5-digest-slice minhashes (threshold ~0.71).
     (shingle -> minhash -> band -> bucket-join; deterministic via md5.)
 
     Band-bucket cap (same always-on discipline as _q_ngram_jaccard's
-    max_posting=32, rendered in BOTH dialects so the oracle compare
+    posting cap of 32, rendered in BOTH dialects so the oracle compare
     holds): a band bucket of m docs contributes m^2/2 candidate pairs,
-    and a bucket > max_bucket means >32 docs share a band signature —
+    and a bucket > 32 means >32 docs share a band signature —
     boilerplate, where pairwise candidates carry no signal. At sf0.01
     the hottest bucket is far below 32, so the cap never binds there;
     it exists for the 100x corpus. The operator twin with a
@@ -293,7 +291,7 @@ def _q_minhash_bands(d: str, shingle_src: str | None = None,
     simhash_candidates, and neither cap binds outside degenerate
     boilerplate buckets.
 
-    The bucket filter keeps only sizes in [2, max_bucket] (the
+    The bucket filter keeps only sizes in [2, 32] (the
     cap_buckets(min_bucket=2) pattern): a singleton band-bucket can
     never produce an a.row_id < b.row_id pair, so pruning it before the
     self-join is value-identical while removing the MAJORITY of the
@@ -304,7 +302,7 @@ def _q_minhash_bands(d: str, shingle_src: str | None = None,
     return f"""
 WITH {_minhash_sig_ctes(d, shingle_src=shingle_src, sig_src=sig_src)},
 okb AS (SELECT band, mh FROM sig GROUP BY band, mh
-        HAVING COUNT(*) BETWEEN 2 AND {max_bucket}),
+        HAVING COUNT(*) BETWEEN 2 AND 32),
 sigk AS (SELECT sig.row_id, sig.band, sig.mh FROM sig
          JOIN okb ON sig.band = okb.band AND sig.mh = okb.mh)
 SELECT DISTINCT a.row_id AS ra, b.row_id AS rb
@@ -504,10 +502,9 @@ FROM s LEFT JOIN dup ON s.row_id = dup.row_id
 """
 
 
-def _q_decontaminate(d: str, shingle_src: str | None = None,
-                     min_hits: int = 3) -> str:
+def _q_decontaminate(d: str, shingle_src: str | None = None) -> str:
     """Benchmark decontamination: flag corpus docs (doc_id >= 20) that
-    share >= min_hits distinct 3-gram shingles with a held-out benchmark
+    share >= 3 distinct 3-gram shingles with a held-out benchmark
     set (doc_id < 20) — the test-set-overlap removal step of a training
     pipeline (a doc quoting eval data must not be trained on). The
     benchmark shingle set is DISTINCT and bounded (|bench| x shingles),
@@ -524,7 +521,7 @@ hits AS (SELECT e.row_id, CAST(COUNT(DISTINCT e.g) AS BIGINT) AS n_overlap
          GROUP BY e.row_id)
 SELECT s.row_id,
        COALESCE(h.n_overlap, CAST(0 AS BIGINT)) AS n_overlap,
-       COALESCE(h.n_overlap, CAST(0 AS BIGINT)) >= {min_hits}
+       COALESCE(h.n_overlap, CAST(0 AS BIGINT)) >= 3
          AS contaminated
 FROM s LEFT JOIN hits h ON s.row_id = h.row_id
 WHERE s.row_id >= 20
@@ -700,9 +697,9 @@ GROUP BY event_type
 """
 
 
-def _q_sessionize_events(d: str, gap_minutes: int = 30) -> str:
+def _q_sessionize_events(d: str) -> str:
     """Gap-based sessionization: a user's events split into sessions
-    wherever consecutive events are more than gap_minutes apart (the
+    wherever consecutive events are more than 30 minutes apart (the
     classic LAG -> boundary flag -> running-SUM session id), rolled up
     to one row per (user, session). Both windows partition on user_id —
     ONE shuffle total, and at 10^12 events a user_id-bucketed layout
@@ -718,7 +715,7 @@ WITH w AS (
 f AS (
   SELECT event_id, user_id, ts,
          CASE WHEN prev_ts IS NULL
-                OR ts > prev_ts + INTERVAL {gap_minutes} MINUTES
+                OR ts > prev_ts + INTERVAL 30 MINUTES
               THEN 1 ELSE 0 END AS new_sess
   FROM w
 ),
@@ -1035,8 +1032,8 @@ GROUP BY status
 """
 
 
-def _q_stratified_sample(d: str, n_per_key: int = 20) -> str:
-    """Deterministic stratified sample: n docs per language, chosen by
+def _q_stratified_sample(d: str) -> str:
+    """Deterministic stratified sample: 20 docs per language, chosen by
     md5 order of the doc id — the per-language quota primitive of
     training-data curation (downsample hot languages, keep the tail).
     Hash-ordered instead of rand(): reproducible across engines, runs
@@ -1049,7 +1046,7 @@ WITH r AS (
          ROW_NUMBER() OVER (PARTITION BY lang ORDER BY {h}, doc_id) AS rn
   FROM documents
 )
-SELECT doc_id, lang FROM r WHERE rn <= {n_per_key}
+SELECT doc_id, lang FROM r WHERE rn <= 20
 """
 
 
@@ -1068,10 +1065,10 @@ FROM documents
 """
 
 
-def _q_pack_sequences(d: str, budget: int = 512) -> str:
+def _q_pack_sequences(d: str) -> str:
     """Sequence packing: assign docs (in deterministic doc_id order,
-    per language) to fixed-token-budget training packs — pack_id =
-    exclusive-prefix-sum(tokens) DIV budget. The window cumulative sum
+    per language) to 512-token training packs — pack_id =
+    exclusive-prefix-sum(tokens) DIV 512. The window cumulative sum
     is one shuffle on lang; at 10^12 rows packing runs per partition of
     a lang-bucketed layout. Whitespace token counts via the same
     tokens_expr the tok_stats entry uses."""
@@ -1085,7 +1082,7 @@ c AS (SELECT doc_id, lang, n_tok,
                       CAST(0 AS BIGINT)) AS prefix
       FROM t)
 SELECT doc_id, lang, n_tok,
-       CAST(FLOOR(prefix / CAST({budget} AS DOUBLE)) AS BIGINT) AS pack_id
+       CAST(FLOOR(prefix / CAST(512 AS DOUBLE)) AS BIGINT) AS pack_id
 FROM c
 """
 
@@ -1499,8 +1496,7 @@ def _synth_df(spark: SparkSession):
     so the bytes come off a file scan like any real input."""
     from ..datagen import synth
     path = synth.write_images_parquet(_bench_cache_dir(), _SYNTH_ROWS)
-    return spark.read.parquet(path).select(
-        "image_id", "bytes", "w", "h", "fmt", "caption", "phash")
+    return spark.read.parquet(path).select(*synth.IMAGES_SCHEMA.names)
 
 
 def _q_full_pipeline_images(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1574,7 +1570,7 @@ def _parity_sf_dir() -> str:
 
 
 # The other modules the numpy-twin expected tables are computed by,
-# relative to the package dir (the twins' own code in this module is
+# relative to the package dir (each twin's own code in this module is
 # keyed by _twin_sources).
 _TWIN_MODULES = ("spec.py", "rules/reference_impl.py",
                  "operators/similarity.py", "functions/langid.py",
@@ -1586,13 +1582,13 @@ def _source(fn: Callable) -> str:
     return inspect.getsource(fn)
 
 
-def _twin_sources() -> list[str]:
-    """The twin code of this module: every function that writes an
-    expected table (it calls ``_write_expected``) and every module-level
-    function or plain constant it reaches by name, transitively, in name
-    order, not descending into the key itself (_twin_key). Derived from
-    the code objects, so a registry SQL builder's edit leaves it
-    unchanged while a twin helper's edit does not."""
+def _twin_sources(writer: Callable) -> list[str]:
+    """The twin code of one expected table: *writer*, the function that
+    writes it, and every module-level function or plain constant it
+    reaches by name, transitively, in name order, not descending into
+    the key itself (_twin_key). Derived from the code objects, so an
+    edit to a registry SQL builder or to another table's twin leaves it
+    unchanged while an edit to this table's twin does not."""
     import types
     g = globals()
 
@@ -1605,8 +1601,7 @@ def _twin_sources() -> list[str]:
     def own(v) -> bool:
         return isinstance(v, types.FunctionType) and v.__module__ == __name__
 
-    todo = [f.__name__ for f in g.values()
-            if own(f) and "_write_expected" in set(names(f.__code__))]
+    todo = [writer.__name__]
     seen: dict[str, str] = {}
     while todo:
         n = todo.pop()
@@ -1622,11 +1617,11 @@ def _twin_sources() -> list[str]:
     return [seen[n] for n in sorted(seen)]
 
 
-def _twin_key(*tags: str) -> str:
+def _twin_key(writer: Callable, *tags: str) -> str:
     """Short sha256 over ``tags``, the model artifacts, the _TWIN_MODULES
-    sources and _twin_sources: the expected-table cache key. A changed
-    constant, artifact or twin yields a new file name, so a stale table
-    is never read back."""
+    sources and the _twin_sources of *writer*: the cache key of the
+    expected table *writer* writes. A changed constant, artifact or twin
+    yields a new file name, so a stale table is never read back."""
     import hashlib
     import os
 
@@ -1638,20 +1633,26 @@ def _twin_key(*tags: str) -> str:
                  + [os.path.join(pkg, m) for m in _TWIN_MODULES]):
         with open(path, "rb") as f:
             h.update(f.read())
-    for src in _twin_sources():
+    for src in _twin_sources(writer):
         h.update(src.encode())
     return h.hexdigest()[:16]
+
+
+# The function that writes each sf-keyed expected table.
+_EXPECTED_WRITERS = {"ann_lsh": "_ann_expected_path",
+                     "ann_ivf": "_ann_expected_path",
+                     "langid_udf": "_langid_udf_expected_path"}
 
 
 def _expected_cache(name: str) -> tuple[str, bool]:
     """(path, exists) for a numpy-twin expected table, keyed by the
     parity sf dir (the sf0.01 gate and an sf0.1 sweep never read each
-    other's values) and by _twin_key's dependencies."""
+    other's values) and by _twin_key's dependencies for its writer."""
     import os
     sf_tag = os.path.basename(os.path.normpath(_parity_sf_dir()))
+    key = _twin_key(globals()[_EXPECTED_WRITERS[name]], sf_tag)
     path = os.path.join(_bench_cache_dir(),
-                        f"expected_{name}_{sf_tag}_{_twin_key(sf_tag)}"
-                        f".parquet")
+                        f"expected_{name}_{sf_tag}_{key}.parquet")
     return path, os.path.exists(path)
 
 
@@ -1707,7 +1708,7 @@ def _lsh_candidate_mask(ids: np.ndarray, mat: np.ndarray, q: np.ndarray,
     at perturbed radii rather than a private copy."""
     from ..operators import similarity
 
-    planes = similarity._planes(mat.shape[1], 16, seed=97)
+    planes = similarity._planes(mat.shape[1], 16)
     weights = (1 << np.arange(16)).astype(np.int64)
     sigs = ((mat @ planes) > 0) @ weights
     qbits = int(((q @ planes) > 0) @ weights)
@@ -1724,8 +1725,8 @@ def _ivf_candidate_mask(ids: np.ndarray, mat: np.ndarray, q: np.ndarray,
 
     rest = ids != 0
     order = np.argsort(ids[rest], kind="stable")
-    sample = mat[rest][order][:2048]
-    cent = similarity._kmeans_core(sample, 16, iters=10, seed=131)
+    sample = mat[rest][order][:similarity.IVF_SAMPLE_N]
+    cent = similarity._kmeans_core(sample, 16)
     norm = mat / np.maximum(
         np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
     assign = (norm @ cent.T).argmax(axis=1)
@@ -2017,9 +2018,9 @@ def _q_dup_pixel_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup groups vs min-id canonical (operators/multimodal.py). psnr_db is
     finite-ized for the driver's hash (inf -> 999.0). DuckDB-oracled
     since round 5: the generator replays the group/canonical/PSNR ladder
-    on the SOURCE pixel arrays (synth._image_gt_columns — mirrors the
-    operator's psnr_min/max_group defaults), so a codec, grouping, or
-    psnr regression fails the compare."""
+    on the SOURCE pixel arrays (synth._image_gt_columns, which reads
+    the operator's spec.PSNR_MIN and spec.MAX_DUP_GROUP), so a codec,
+    grouping, or psnr regression fails the compare."""
     from pyspark.sql import functions as F
 
     from ..operators import multimodal
@@ -2051,8 +2052,8 @@ WHERE m.gt_in_dup_group
 def _qf_full_expected_path() -> str:
     """Numpy-reference expected-label table for the flagship oracle,
     written once beside the generate-once corpus (suffix keyed by
-    _twin_key, so a rule/spec constant or model artifact change writes a
-    new table).
+    _twin_key of this function, so a rule/spec constant, model artifact
+    or flagship twin change writes a new table).
 
     The rule battery / scrub / dedup columns come from
     rules/reference_impl (the INDEPENDENT numpy implementation — the
@@ -2075,7 +2076,8 @@ def _qf_full_expected_path() -> str:
     from . import pipeline as P
 
     imgs_path = synth.write_images_parquet(_bench_cache_dir(), _SYNTH_ROWS)
-    path = imgs_path.replace(".parquet", f"_qfexp_{_twin_key()}.parquet")
+    path = imgs_path.replace(
+        ".parquet", f"_qfexp_{_twin_key(_qf_full_expected_path)}.parquet")
     if os.path.exists(path):
         return path
     art = P.ensure_artifacts()
@@ -2173,7 +2175,7 @@ def _q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from ..operators import multimodal
-    out = multimodal.video_frame_sample(_synth_video_df(spark), every_s=1.0)
+    out = multimodal.video_frame_sample(_synth_video_df(spark))
     return out.select("video_id", "frame_idx", "ts_s",
                       F.length("bytes").alias("n_bytes"), "w", "h", "fmt")
 

@@ -39,8 +39,9 @@ DEFAULT_ARTIFACT_DIR = os.path.join(
     "artifacts")
 
 
-def apply_core_rules(df: DataFrame, text_col: str = "caption") -> DataFrame:
-    """Append score_*/status_*/quality_score/n_present/keep_core columns.
+def apply_core_rules(df: DataFrame) -> DataFrame:
+    """Append score_*/status_*/quality_score/n_present/keep_core columns
+    judged on ``caption``.
 
     Pure Column expressions rendered by sqlgen (same source as the DuckDB
     oracle); Catalyst collapses the staged selects into one projection
@@ -51,7 +52,7 @@ def apply_core_rules(df: DataFrame, text_col: str = "caption") -> DataFrame:
         raise ValueError(f"input columns clash with rule temps: {clash}")
     d = sqlgen.SPARK
     out = (df
-           .selectExpr("*", *sqlgen.base_exprs(d, text_col))
+           .selectExpr("*", *sqlgen.base_exprs(d, "caption"))
            .selectExpr("*", *sqlgen.count_exprs(d))
            .selectExpr("*", *sqlgen.score_exprs(d))
            .selectExpr("*", *sqlgen.final_exprs(d)))
@@ -59,10 +60,9 @@ def apply_core_rules(df: DataFrame, text_col: str = "caption") -> DataFrame:
     return out.drop(*_TEMP_COLS)
 
 
-def apply_scrub(df: DataFrame, text_col: str = "caption",
-                out_col: str = "scrubbed_caption") -> DataFrame:
+def apply_scrub(df: DataFrame) -> DataFrame:
     return df.withColumn(
-        out_col, F.expr(sqlgen.scrub_expr(text_col, sqlgen.SPARK)))
+        "scrubbed_caption", F.expr(sqlgen.scrub_expr("caption", sqlgen.SPARK)))
 
 
 def apply_langid_ppl(df: DataFrame, artifact_dir: str | None = None,

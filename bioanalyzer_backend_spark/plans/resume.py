@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.skew import stable_salt
-from ..sources.catalog import FORMAT, LocalSnapshotTable
+from ..sources.catalog import FORMAT, LocalSnapshotTable, _publish
 from . import pipeline as pipe
 from .audit import group_tallies
 
@@ -189,9 +189,7 @@ def stage_input(spark: SparkSession, images: DataFrame, stage_path: str,
             os.remove(stamp_path)
         tagged.write.mode("overwrite").partitionBy("part_id") \
             .parquet(stage_path)
-        with open(stamp_path + ".tmp", "w") as f:
-            json.dump(stamp, f)
-        os.replace(stamp_path + ".tmp", stamp_path)
+        _publish(stamp_path, json.dumps(stamp))
     # the known schema spares the read parquet's schema-inference job
     return spark.read.schema(tagged.schema).parquet(stage_path)
 

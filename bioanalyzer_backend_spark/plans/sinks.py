@@ -74,24 +74,24 @@ def xml_element(df: DataFrame, row_tag: str = "record",
     return df.withColumn("xml", F.concat(*parts))
 
 
-def write_xml(df: DataFrame, path: str, row_tag: str = "record",
-              cdata_cols: tuple[str, ...] = ("scrubbed_caption",),
-              cols: list[str] | None = None) -> None:
+def write_xml(df: DataFrame, path: str, row_tag: str = "record") -> None:
     """Distributed XML sink: one element per output line (K3)."""
-    xml_element(df, row_tag, cdata_cols, cols).select("xml").write.text(path)
+    xml_element(df, row_tag).select("xml").write.text(path)
 
 
-def rooted_xml_string(df: DataFrame, root_tag: str = "records",
-                      row_tag: str = "record",
-                      cdata_cols: tuple[str, ...] = ("scrubbed_caption",),
-                      cols: list[str] | None = None,
-                      limit: int = 10_000) -> str:
-    """Single rooted document for bounded extracts (the reference writes
-    whole files this way, cli.py:752-796); capped because collecting an
-    unbounded result to the driver is exactly what this engine avoids."""
-    _check_tag(root_tag)
-    rows = (xml_element(df.limit(limit), row_tag, cdata_cols, cols)
+# Row cap of a rooted document: collecting an unbounded result to the
+# driver is exactly what this engine avoids.
+ROOTED_XML_MAX_ROWS = 10_000
+
+
+def rooted_xml_string(df: DataFrame,
+                      cdata_cols: tuple[str, ...] = ("scrubbed_caption",)
+                      ) -> str:
+    """Single rooted ``<records>`` document of ``<record>`` elements for
+    bounded extracts (the reference writes whole files this way,
+    cli.py:752-796), capped at ROOTED_XML_MAX_ROWS rows."""
+    rows = (xml_element(df.limit(ROOTED_XML_MAX_ROWS), "record", cdata_cols)
             .select("xml").collect())
     body = "\n".join(r[0] for r in rows)
     return (f"<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n"
-            f"<{root_tag}>\n{body}\n</{root_tag}>")
+            f"<records>\n{body}\n</records>")

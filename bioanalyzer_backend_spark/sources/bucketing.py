@@ -21,13 +21,11 @@ from pyspark.sql import DataFrame
 
 
 def write_bucketed(df: DataFrame, table: str, key: str, n_buckets: int,
-                   path: str | None = None, sort: bool = True) -> None:
+                   path: str | None = None) -> None:
     """Persist *df* as a parquet table bucketed (and per-bucket sorted) by
     *key*. With *path* the table is external — the catalog entry carries
     the bucket spec; files live at *path*."""
-    w = df.write.format("parquet").bucketBy(n_buckets, key)
-    if sort:
-        w = w.sortBy(key)
+    w = df.write.format("parquet").bucketBy(n_buckets, key).sortBy(key)
     if path is not None:
         w = w.option("path", path)
     w.mode("overwrite").saveAsTable(table)

@@ -35,8 +35,21 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 FORMAT = 6
+COMMIT_LOCK_TIMEOUT_S = 60.0
 
 log = logging.getLogger(__name__)
+
+
+def _publish(path: str, text: str) -> None:
+    """Write *text* to *path* atomically: a tmp file, flushed and
+    fsynced, then ``os.replace`` — a reader sees the old file or the
+    whole new one, never a torn write."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
 
 
 class LocalSnapshotTable:
@@ -101,28 +114,17 @@ class LocalSnapshotTable:
                     "parent": cur["snapshot"] if cur else None,
                     "operation": operation, "files": sorted(files),
                     "summaries": summaries}
-        path = os.path.join(self.meta_dir, snap_id)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, path)
-        head_tmp = self._head_path() + ".tmp"
-        with open(head_tmp, "w") as f:
-            f.write(snap_id)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(head_tmp, self._head_path())   # the atomic publish
+        _publish(os.path.join(self.meta_dir, snap_id), json.dumps(manifest))
+        _publish(self._head_path(), snap_id)   # the atomic publish
         return snap_id
 
-    def _commit_lock(self, timeout_s: float = 60.0):
+    def _commit_lock(self):
         """Exclusive lock around the (sub-second) read-parent ->
         publish-HEAD section ONLY — slow work (Spark writes) must happen
         outside it, which is why merge/compact use optimistic retry
         instead of holding this across their rewrite: a live stream's
         per-batch appends must not wait behind a long compaction, nor
-        give up after ``timeout_s`` behind it.
+        give up after COMMIT_LOCK_TIMEOUT_S behind it.
 
         flock(LOCK_EX) on a persistent lock file: the kernel releases
         the lock when the holder's fd closes — including process death —
@@ -148,7 +150,7 @@ class LocalSnapshotTable:
         @contextlib.contextmanager
         def lock():
             fd = os.open(lock_path, os.O_CREAT | os.O_RDWR)
-            deadline = time.time() + timeout_s
+            deadline = time.time() + COMMIT_LOCK_TIMEOUT_S
             try:
                 while True:
                     try:
@@ -255,7 +257,7 @@ class LocalSnapshotTable:
         writer committed meanwhile, discard the orphan files and redo the
         rewrite against the new HEAD — never hold the lock across a Spark
         job (a live stream's appends would wait behind a long rewrite,
-        and time out behind it after _commit_lock's ``timeout_s``). The
+        and time out behind it after COMMIT_LOCK_TIMEOUT_S). The
         rewrite keeps the parent's summaries.
 
         A write-phase FAILURE is also retried when HEAD moved since the

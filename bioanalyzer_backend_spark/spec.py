@@ -367,6 +367,12 @@ LANGS: tuple[str, ...] = ("en", "es", "de", "fr", "zh", "ar")
 LANG_CONF_MIN = 0.30      # langid confidence gate
 PPL_MAX = 60.0            # byte-LM perplexity gate: real langs score ~10,
                           # symbol soup hits the smoothing floor (~256)
+GATE_TRAIN_SAMPLES = 3000  # captions per language each gate model trains on
+
+# Multimodal operator settings that the synth ground truth reads too.
+PSNR_MIN = 40.0           # verify_dup_groups: pixel dup iff PSNR >= this
+MAX_DUP_GROUP = 1024      # larger phash groups skip pixel verification
+VIDEO_EVERY_S = 1.0       # video_frame_sample's default sampling interval
 
 # Truncation budget before expensive UDF stages
 # (text_processing.py:127-146: 2000 tokens ~ 8000 chars).

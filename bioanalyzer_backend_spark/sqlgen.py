@@ -161,14 +161,14 @@ def epoch_us(e: str, d: str) -> str:
     return f"epoch_us({e})"
 
 
-def md5_hash32(e: str, d: str, start: int = 1) -> str:
-    """Deterministic 32-bit hash of a string expr: 8 hex chars of its md5
-    digest (at 1-based offset ``start``) as a BIGINT (dialect-portable
-    hash family for SimHash / rolling fingerprints — both engines agree
-    on md5; different offsets are independent hash functions)."""
+def md5_hash32(e: str, d: str) -> str:
+    """Deterministic 32-bit hash of a string expr: the first 8 hex chars
+    of its md5 digest as a BIGINT (dialect-portable hash family for
+    SimHash / rolling fingerprints — both engines agree on md5;
+    ``hex_hash32`` slices other offsets as independent hash functions)."""
     if d == SPARK:
-        return f"CAST(conv(substring(md5({e}), {start}, 8), 16, 10) AS BIGINT)"
-    return f"CAST('0x' || substring(md5({e}), {start}, 8) AS BIGINT)"
+        return f"CAST(conv(substring(md5({e}), 1, 8), 16, 10) AS BIGINT)"
+    return f"CAST('0x' || substring(md5({e}), 1, 8) AS BIGINT)"
 
 
 def hex_hash32(h: str, d: str, start: int = 1) -> str:
@@ -236,14 +236,20 @@ def tokens_expr(col: str, d: str) -> str:
     return arr_filter(trimmed, "x -> x != ''", d)
 
 
-def shingle_array(toks: str, n: int, d: str) -> str:
-    """Distinct word n-gram shingles of the token array *toks* — the ONE
+def shingle_array(toks: str, d: str) -> str:
+    """Distinct word 3-gram shingles of the token array *toks* — the ONE
     rendering the registry SQL and the dedup operators both build on."""
     parts = ", ".join(arr_get(toks, f"i + {j}" if j else "i", d)
-                      for j in range(n))
-    seq = int_seq("1", f"{arr_len(toks, d)} - {n - 1}", d)
+                      for j in range(3))
+    seq = int_seq("1", f"{arr_len(toks, d)} - 2", d)
     return arr_distinct(
         arr_transform(seq, f"i -> concat_ws(' ', {parts})", d), d)
+
+
+# Banded MinHash shape of the registry SQL and the dedup operator: b=4
+# bands of r=4 minhashes (candidate threshold (1/b)^(1/r) ~= 0.71).
+MINHASH_BANDS = 4
+MINHASH_ROWS = 4
 
 
 def minhash_hash_exprs(sh: str, n_bands: int, n_rows: int,
@@ -406,24 +412,28 @@ def final_exprs(d: str) -> list[str]:
 # the quality-core query (SQL-expressible slice of the pipeline)
 # --------------------------------------------------------------------------
 
-def quality_core_sql(d: str, table: str = "documents", id_col: str = "doc_id",
-                     text_col: str = "text") -> str:
+# Every registry builder reads the ``documents`` table: ``doc_id`` keys
+# each row and ``text`` is the document; most start from this base.
+_DOC_BASE = f"SELECT doc_id AS row_id, {lowtrim('text')} AS t FROM documents"
+
+
+def quality_core_sql(d: str) -> str:
     """Full rule battery -> scores, statuses, quality_score, keep.
 
     Semantics (reference file:line cites in spec.py):
       5 heuristic rules -> [0,1] scores -> 0.8/0.4 status bands (with the
       (0.7,0.8)->ABSENT quirk) -> weighted rollup -> keep/drop.
     """
-    base = ",\n         ".join(base_exprs(d, text_col))
+    base = ",\n         ".join(base_exprs(d, "text"))
     cnt = ",\n         ".join(count_exprs(d))
     scores = ",\n         ".join(score_exprs(d))
     fin = ",\n       ".join(final_exprs(d))
     score_cols = ", ".join(f"score_{r}" for r in spec.RULE_NAMES)
     return f"""
 WITH base AS (
-  SELECT {id_col} AS row_id,
+  SELECT doc_id AS row_id,
          {base}
-  FROM {table}
+  FROM documents
 ),
 cnt AS (
   SELECT row_id, t,
@@ -442,11 +452,10 @@ FROM scores
 """
 
 
-def scrub_sql(d: str, table: str = "documents", id_col: str = "doc_id",
-              text_col: str = "text") -> str:
+def scrub_sql(d: str) -> str:
     """PII/noise scrub projection (text_processing.py:110-125 analogue)."""
-    return (f"SELECT {id_col} AS row_id, {scrub_expr(text_col, d)} "
-            f"AS scrubbed FROM {table}")
+    return (f"SELECT doc_id AS row_id, {scrub_expr('text', d)} "
+            f"AS scrubbed FROM documents")
 
 
 # --------------------------------------------------------------------------
@@ -454,9 +463,7 @@ def scrub_sql(d: str, table: str = "documents", id_col: str = "doc_id",
 # :121-147 arithmetic — the literal formula, not an analogue).
 # --------------------------------------------------------------------------
 
-def field_confidence_sql(d: str, table: str = "documents",
-                         id_col: str = "doc_id",
-                         text_col: str = "text") -> str:
+def field_confidence_sql(d: str) -> str:
     """Best-category pattern confidence.
 
     Per category: n = patterns matching the text; if n > 0,
@@ -495,10 +502,10 @@ def field_confidence_sql(d: str, table: str = "documents",
         f"conf_{c} = best THEN {slit(c)}" for c in cats) + " END"
     return f"""
 WITH base AS (
-  SELECT {id_col} AS row_id,
-         {lowtrim(text_col)} AS t,
-         substring({lowtrim(text_col)}, 1, {spec.CONTENT_PREFIX_CHARS}) AS content
-  FROM {table}
+  SELECT doc_id AS row_id,
+         {lowtrim('text')} AS t,
+         substring({lowtrim('text')}, 1, {spec.CONTENT_PREFIX_CHARS}) AS content
+  FROM documents
 ),
 m AS (
   SELECT row_id,
@@ -532,9 +539,7 @@ FROM best
 # score = matched_categories / total_categories, one hit per category.
 # --------------------------------------------------------------------------
 
-def methods_coverage_sql(d: str, table: str = "documents",
-                         id_col: str = "doc_id",
-                         text_col: str = "text") -> str:
+def methods_coverage_sql(d: str) -> str:
     cats = list(spec.METHODS_CRITERIA)
     hits = []
     for c in cats:
@@ -545,7 +550,7 @@ def methods_coverage_sql(d: str, table: str = "documents",
     total = fmt(float(len(cats)))
     return f"""
 WITH base AS (
-  SELECT {id_col} AS row_id, {lowtrim(text_col)} AS t FROM {table}
+  {_DOC_BASE}
 ),
 cov AS (
   SELECT row_id, CAST({n} AS INT) AS n_matched FROM base
@@ -560,14 +565,12 @@ FROM cov
 # R6: ordered first-match extraction chain (fallback_extractor.py:115-133).
 # --------------------------------------------------------------------------
 
-def condition_extract_sql(d: str, table: str = "documents",
-                          id_col: str = "doc_id",
-                          text_col: str = "text") -> str:
+def condition_extract_sql(d: str) -> str:
     chain = ", ".join(rx_extract("t", p, 1, d)
                       for p in spec.CONDITION_PATTERNS)
-    return (f"SELECT {id_col} AS row_id, COALESCE({chain}) AS condition_hit "
-            f"FROM (SELECT {id_col}, {lowtrim(text_col)} AS t "
-            f"FROM {table}) s")
+    return (f"SELECT doc_id AS row_id, COALESCE({chain}) AS condition_hit "
+            f"FROM (SELECT doc_id, {lowtrim('text')} AS t "
+            f"FROM documents) s")
 
 
 # --------------------------------------------------------------------------
@@ -575,14 +578,13 @@ def condition_extract_sql(d: str, table: str = "documents",
 # confidence (gemini_qa.py:35-38).
 # --------------------------------------------------------------------------
 
-def factor_score_sql(d: str, table: str = "documents",
-                     id_col: str = "doc_id", text_col: str = "text") -> str:
+def factor_score_sql(d: str) -> str:
     terms = " + ".join(
         f"CAST(instr(t, {slit(w)}) > 0 AS INT)"
         for words in spec.FACTOR_LISTS.values() for w in words)
     return f"""
 WITH base AS (
-  SELECT {id_col} AS row_id, {lowtrim(text_col)} AS t FROM {table}
+  {_DOC_BASE}
 ),
 f AS (
   SELECT row_id, CAST({terms} AS INT) AS n_factors FROM base
@@ -611,12 +613,11 @@ ID_VALID_RE = r"^src[0-9]+$"
 ID_NUM_RE = r"^src([0-9]+)$"
 
 
-def id_valid_sql(d: str, table: str = "documents",
-                 id_col: str = "doc_id") -> str:
-    return (f"SELECT {id_col} AS row_id, source, "
+def id_valid_sql(d: str) -> str:
+    return (f"SELECT doc_id AS row_id, source, "
             f"{rx_matches('source', ID_VALID_RE, d)} AS id_valid, "
             f"CAST({rx_extract('source', ID_NUM_RE, 1, d)} AS INT) AS src_num "
-            f"FROM {table}")
+            f"FROM documents")
 
 
 # --------------------------------------------------------------------------
@@ -625,8 +626,7 @@ def id_valid_sql(d: str, table: str = "documents",
 # keywords present in the text (substring matching, list order kept).
 # --------------------------------------------------------------------------
 
-def found_terms_sql(d: str, table: str = "documents",
-                    id_col: str = "doc_id", text_col: str = "text") -> str:
+def found_terms_sql(d: str) -> str:
     cols = []
     for cat, kws in spec.METHODS_CRITERIA.items():
         arr = str_array(kws, d)
@@ -643,7 +643,7 @@ def found_terms_sql(d: str, table: str = "documents",
     inner = ",\n       ".join(cols)
     return f"""
 WITH base AS (
-  SELECT {id_col} AS row_id, {lowtrim(text_col)} AS t FROM {table}
+  {_DOC_BASE}
 ),
 f AS (
   SELECT row_id,
@@ -656,9 +656,7 @@ FROM f
 """
 
 
-def field_fallback_sql(d: str, table: str = "documents",
-                       id_col: str = "doc_id",
-                       text_col: str = "text") -> str:
+def field_fallback_sql(d: str) -> str:
     """Per-field fallback record (api_utils.py:32-73
     create_default_field_structure; bugsigdb_analyzer.py:147-152).
 
@@ -687,7 +685,7 @@ def field_fallback_sql(d: str, table: str = "documents",
     outs = ",\n       ".join(out_cols)
     return f"""
 WITH base AS (
-  SELECT {id_col} AS row_id, {lowtrim(text_col)} AS t FROM {table}
+  {_DOC_BASE}
 ),
 f AS (
   SELECT row_id,
@@ -723,9 +721,7 @@ def _normalize_case(raw: str,
             f"ELSE 'Other' END")
 
 
-def domain_normalize_sql(d: str, table: str = "documents",
-                         id_col: str = "doc_id",
-                         text_col: str = "text") -> str:
+def domain_normalize_sql(d: str) -> str:
     """Allowed-value domain normalization (app/utils/utils.py:87-117
     get_sequencing_types / get_body_sites enumerations, ported
     byte-exact into spec.SEQUENCING_TYPES / spec.BODY_SITES).
@@ -741,7 +737,7 @@ def domain_normalize_sql(d: str, table: str = "documents",
     raw_site = _first_match_chain(spec.BODY_SITE_CHAIN, d)
     return f"""
 WITH base AS (
-  SELECT {id_col} AS row_id, {lowtrim(text_col)} AS t FROM {table}
+  {_DOC_BASE}
 ),
 r AS (
   SELECT row_id,
@@ -757,14 +753,12 @@ FROM r
 """
 
 
-def finding_confidence_sql(d: str, table: str = "documents",
-                           id_col: str = "doc_id",
-                           text_col: str = "text") -> str:
+def finding_confidence_sql(d: str) -> str:
     terms = " + ".join(f"CAST(instr(t, {slit(w)}) > 0 AS INT)"
                        for w in spec.FINDING_MARKERS)
     return f"""
 WITH base AS (
-  SELECT {id_col} AS row_id, {lowtrim(text_col)} AS t FROM {table}
+  {_DOC_BASE}
 ),
 f AS (
   SELECT row_id, CAST({terms} AS INT) AS n_findings FROM base
@@ -791,8 +785,7 @@ def _contains(h: str, needle: str) -> str:
     return f"instr({h}, {slit(needle)}) > 0"
 
 
-def report_parse_sql(d: str, table: str = "documents",
-                     id_col: str = "doc_id", text_col: str = "text") -> str:
+def report_parse_sql(d: str) -> str:
     NL = "chr(10)"
 
     def found_join(kws: tuple[str, ...]) -> str:
@@ -867,12 +860,12 @@ def report_parse_sql(d: str, table: str = "documents",
                                      "(?m)^- ", d)
     n_reasons = f"CAST(COALESCE({arr_len(bullet_arr, d)}, 0) AS INT)"
     return f"""
-WITH q AS ({quality_core_sql(d, table, id_col, text_col)}),
+WITH q AS ({quality_core_sql(d)}),
 g AS (
   SELECT q.row_id,
          {rpt} AS rpt
-  FROM q JOIN (SELECT {id_col} AS row_id,
-                      {lowtrim(text_col)} AS t FROM {table}) dd
+  FROM q JOIN (SELECT doc_id AS row_id,
+                      {lowtrim('text')} AS t FROM documents) dd
          ON q.row_id = dd.row_id
 ),
 p AS (

@@ -41,10 +41,10 @@ from .ingest import start_sink
 # --------------------------------------------------------------------------
 
 
-def windowed_keep_stats(stream_df: DataFrame, ts_col: str = "ts",
+def windowed_keep_stats(stream_df: DataFrame,
                         window_dur: str = "2 minutes",
                         watermark: str = "5 minutes") -> DataFrame:
-    """Tumbling-window keep-rate per fmt over event time.
+    """Tumbling-window keep-rate per fmt over event time ``ts``.
 
     ``withWatermark`` bounds how long a window's partial aggregate stays
     in state waiting for late rows; rows later than the watermark are
@@ -52,8 +52,8 @@ def windowed_keep_stats(stream_df: DataFrame, ts_col: str = "ts",
     (plans/pipeline.apply_core_rules), so this is a pure Catalyst
     streaming-agg plan — no Python in the hot path.
     """
-    core = pipe.apply_core_rules(stream_df.withWatermark(ts_col, watermark))
-    win = F.window(F.col(ts_col), window_dur)
+    core = pipe.apply_core_rules(stream_df.withWatermark("ts", watermark))
+    win = F.window(F.col("ts"), window_dur)
     return (core
             .groupBy(win.alias("win"), F.col("fmt"))
             .agg(F.count("*").alias("n_rows"),
@@ -67,7 +67,6 @@ def windowed_keep_stats(stream_df: DataFrame, ts_col: str = "ts",
 def start_windowed_stats_stream(stream_df: DataFrame,
                                 results: LocalSnapshotTable,
                                 checkpoint_dir: str,
-                                ts_col: str = "ts",
                                 window_dur: str = "2 minutes",
                                 watermark: str = "5 minutes",
                                 available_now: bool = True):
@@ -76,7 +75,7 @@ def start_windowed_stats_stream(stream_df: DataFrame,
     the keyed-upsert semantics of the reference cache
     (cache_manager.py:100-111), so late rows revise their window row
     instead of duplicating it."""
-    stats = windowed_keep_stats(stream_df, ts_col, window_dur, watermark)
+    stats = windowed_keep_stats(stream_df, window_dur, watermark)
     stats = stats.withColumn(
         "wkey", F.concat_ws("|", F.col("window_start").cast("string"), "fmt"))
 

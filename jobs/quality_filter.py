@@ -63,8 +63,7 @@ def _load_input(spark: SparkSession, args) -> tuple:
         path = synth.write_images_parquet(
             os.path.join(args.warehouse, "_synth_input"),
             args.synth, seed=args.seed)
-        df = spark.read.parquet(path).select(
-            "image_id", "bytes", "w", "h", "fmt", "caption", "phash")
+        df = spark.read.parquet(path).select(*synth.IMAGES_SCHEMA.names)
         return df, f"synth:{args.synth}"
     from bioanalyzer_backend_spark.sources.catalog import open_table
     # route by FORM: any path-shaped input (absolute/relative/URI —

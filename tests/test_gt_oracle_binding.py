@@ -341,13 +341,13 @@ def test_expected_keys_follow_only_the_twin_code(monkeypatch):
     """The expected-table keys hash the twin code itself (derived from
     the twin builders' code objects), not the whole registry module: an
     edit to any ``_q_*`` Spark/SQL builder keeps every key, an edit to
-    the ANN re-rank twin re-keys the ANN tables."""
+    the ANN re-rank twin re-keys the ANN tables and only those."""
     from bioanalyzer_backend_spark.plans import catalog_queries as CQ
 
     def keys():
         return ([CQ._expected_cache(t)[0]
                  for t in ("ann_lsh", "ann_ivf", "langid_udf")]
-                + [CQ._twin_key()])
+                + [CQ._twin_key(CQ._qf_full_expected_path)])
 
     real = CQ._source
     base = keys()
@@ -361,6 +361,7 @@ def test_expected_keys_follow_only_the_twin_code(monkeypatch):
     edit(lambda name: name == "_ann_rounded_topk_np")
     edited = keys()
     assert edited[0] != base[0] and edited[1] != base[1]
+    assert edited[2:] == base[2:]        # langid_udf and the flagship
 
 
 # --------------------------------------------------------------------------
