@@ -14,6 +14,7 @@ dims) -> byte-identical parquet content. No wall-clock, no external data.
 from __future__ import annotations
 
 import os
+import uuid
 
 import numpy as np
 import pyarrow as pa
@@ -337,6 +338,22 @@ VIDEO_SCHEMA = pa.schema([
 _NON_RIFF_ERR = "ValueError: not a RIFF/WAVE file"
 
 
+def write_parquet_atomic(table: pa.Table, path: str, **kwargs) -> None:
+    """Publish *table* at *path* whole or not at all: write it to a tmp
+    name unique to this call beside *path*, then os.replace. A writer
+    killed mid-write leaves no partial file for a generate-once exists
+    check to serve later, and two processes building one file never
+    write into each other's tmp."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    try:
+        pq.write_table(table, tmp, **kwargs)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
 def write_audio_parquet(out_dir: str, n_rows: int, seed: int = 43) -> str:
     """Deterministic synthetic audio table (clip_id, bytes, fmt):
     mono PCM16 WAV sine+noise clips of varying rate/length, plus ~5%
@@ -352,7 +369,6 @@ def write_audio_parquet(out_dir: str, n_rows: int, seed: int = 43) -> str:
     field) diverges from gt and fails the compare. The pipeline column
     set (clip_id, bytes, fmt) is untouched; audio_features() projects
     (clip_id, bytes) so gt columns never reach the Spark path."""
-    os.makedirs(out_dir, exist_ok=True)
     path = os.path.join(out_dir, f"audio_n{n_rows}_s{seed}_g3.parquet")
     if os.path.exists(path):
         return path
@@ -396,7 +412,7 @@ def write_audio_parquet(out_dir: str, n_rows: int, seed: int = 43) -> str:
             gt_dur.append(t.size / rate)
             gt_rate.append(rate)
             gt_rms.append(float(np.sqrt(np.mean(pcm ** 2))))
-    pq.write_table(pa.table(
+    write_parquet_atomic(pa.table(
         {"clip_id": ids, "bytes": blobs, "fmt": fmts, "gt_ok": gt_ok,
          "gt_err": gt_err, "gt_duration_s": gt_dur,
          "gt_sample_rate": gt_rate, "gt_rms": gt_rms},
@@ -421,7 +437,6 @@ def write_video_parquet(out_dir: str, n_rows: int, seed: int = 44) -> str:
     parser/sampler/encoder regression diverges from gt and fails the
     compare."""
     from ..operators.multimodal import encode_avi_rgb24
-    os.makedirs(out_dir, exist_ok=True)
     path = os.path.join(out_dir, f"video_n{n_rows}_s{seed}_g3.parquet")
     if os.path.exists(path):
         return path
@@ -456,7 +471,7 @@ def write_video_parquet(out_dir: str, n_rows: int, seed: int = 44) -> str:
             gt_w.append(w)
             gt_h.append(h)
             gt_fb.append(54 + h * (3 * w + (4 - (3 * w) % 4) % 4))
-    pq.write_table(pa.table(
+    write_parquet_atomic(pa.table(
         {"video_id": ids, "bytes": blobs, "fmt": fmts, "gt_n_frames": gt_nf,
          "gt_spf": gt_spf, "gt_step": gt_step, "gt_w": gt_w, "gt_h": gt_h,
          "gt_frame_bytes": gt_fb},
@@ -476,7 +491,6 @@ def write_images_parquet(out_dir: str, n_rows: int, seed: int = 42,
     cache files by name instead of deleting them (CLAUDE.md:
     .bench_cache regeneration is slow; old files stay for any in-flight
     reader)."""
-    os.makedirs(out_dir, exist_ok=True)
     dtag = "x".join(str(d) for d in dims)
     path = os.path.join(out_dir,
                         f"images_n{n_rows}_s{seed}_d{dtag}_g4.parquet")
@@ -484,7 +498,7 @@ def write_images_parquet(out_dir: str, n_rows: int, seed: int = 42,
     if os.path.exists(path) and os.path.exists(meta_path):
         return path
     table, meta = generate(n_rows, seed=seed, dims=dims)
-    pq.write_table(pa.table(table, schema=IMAGES_SCHEMA), path,
-                   row_group_size=8192)
-    pq.write_table(pa.table(meta), meta_path)
+    write_parquet_atomic(pa.table(table, schema=IMAGES_SCHEMA), path,
+                         row_group_size=8192)
+    write_parquet_atomic(pa.table(meta), meta_path)
     return path

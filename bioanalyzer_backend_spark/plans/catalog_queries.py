@@ -10,6 +10,14 @@ and the approximate ANN paths) — since round 5 every entry carries an
 oracle; the analytic numpy/pytest oracles in tests/ stay as the
 independent gate for the UDF surfaces.
 
+Each caching pattern is said once. An intermediate several join
+branches read is a _STAGED entry a builder reads through _staged (a
+cached view on Spark, staged by _spark_sql because the SQL names it; an
+inline CTE on DuckDB). A numpy-twin expected table is
+_expected_path(writer, *tags), keyed by the code the writer reaches
+(_twin_key). The ANN and SimHash UDF entries come from one builder per
+family (_ann_entry at the _ANN settings, _simhash_pairs_entry).
+
 Registry contract (consumed by __spark_entry__):
     REGISTRY[name] = (spark_fn(spark, sf_dir) -> DataFrame, duck_sql)
 """
@@ -26,6 +34,7 @@ from .. import session as _session
 from .. import spec, sqlgen
 from ..session import register_testdata_views
 from ..sqlgen import DUCK, SPARK
+from .pipeline import DEFAULT_ARTIFACT_DIR
 
 # --------------------------------------------------------------------------
 # builders (dialect -> SQL). Reference operator ids from SURVEY.md section 2.
@@ -183,6 +192,19 @@ SELECT row_id, n_en, n_es, n_de, n_fr, {guess} AS lang_guess FROM h
 """
 
 
+def _staged(d: str, view: str) -> str:
+    """The CTE block a builder writes for the staged intermediate *view*
+    (a key of _STAGED). An intermediate read from several join branches
+    re-runs its whole pipeline per branch once Spark inlines the CTE, so
+    the Spark side reads it as a cached view, ``<cte> AS (SELECT * FROM
+    <view>)`` (at warehouse scale: a staged table) that _spark_sql stages
+    because the rendered SQL names it; DuckDB renders the same block
+    inline. Both dialects come from the one builder, so results stay
+    identical."""
+    cte, block = _STAGED[view]
+    return f"{cte} AS (SELECT * FROM {view})" if d == SPARK else block(d)
+
+
 def _shingles(d: str) -> str:
     """Word 3-gram shingles of the token stream."""
     toks = sqlgen.tokens_expr("text", d)
@@ -191,7 +213,7 @@ def _shingles(d: str) -> str:
             f"FROM (SELECT doc_id, {toks} AS toks FROM documents)")
 
 
-def _q_ngram_jaccard(d: str, shingle_src: str | None = None) -> str:
+def _q_ngram_jaccard(d: str) -> str:
     """Near-dup detection: 3-gram shingle Jaccard, top-20 pairs.
 
     Hot-shingle cap: a boilerplate shingle shared by m docs contributes
@@ -205,7 +227,7 @@ def _q_ngram_jaccard(d: str, shingle_src: str | None = None) -> str:
     the cap exists for the 100x corpus. The operator twin with a
     dropped-bucket report is operators/dedup.jaccard_verify."""
     return f"""
-WITH s AS ({shingle_src or _shingles(d)}),
+WITH {_staged(d, "shingles_v")},
 e0 AS (SELECT row_id, {sqlgen.explode_col('sh', 'g', d)} FROM s),
 hot AS (SELECT g FROM e0 GROUP BY g HAVING COUNT(*) > 32),
 e AS (SELECT e0.row_id, e0.g FROM e0 LEFT JOIN hot ON e0.g = hot.g
@@ -224,22 +246,8 @@ LIMIT 20
 """
 
 
-def _minhash_sig_ctes(d: str, shingle_src: str | None = None,
-                      sig_src: str | None = None) -> str:
-    """With ``sig_src``, the whole shingle->hash->min pipeline collapses
-    to ``sig AS ({sig_src})`` — the Spark side of the band-capped
-    candidates entry materializes the signature table ONCE (a cached
-    view locally; a staged table at warehouse scale) because the capped
-    query references ``sig`` from three branches (bucket counts,
-    anti-join probe, self-join) and Spark inlines CTEs per branch. The
-    DuckDB oracle keeps the inline CTEs from the same builder."""
-    if sig_src is not None:
-        return f"sig AS ({sig_src})"
-    return _minhash_sig_ctes_inline(d, shingle_src)
-
-
-def _minhash_sig_ctes_inline(d: str, shingle_src: str | None = None) -> str:
-    """CTEs ``s`` (shingles) -> ``sig(row_id, band, mh)``.
+def _minhash_sig_ctes(d: str) -> str:
+    """CTEs ``s`` (the staged shingles) -> ``sig(row_id, band, mh)``.
 
     Banded MinHash with sqlgen.MINHASH_BANDS bands of
     sqlgen.MINHASH_ROWS rows (b=4, r=4 —
@@ -264,14 +272,13 @@ def _minhash_sig_ctes_inline(d: str, shingle_src: str | None = None) -> str:
     mins = ", ".join(sqlgen.minhash_band_exprs(n_bands, n_rows, d))
     unions = " UNION ALL ".join(
         f"SELECT row_id, {b} AS band, mh{b} AS mh FROM m" for b in range(n_bands))
-    return f"""s AS ({shingle_src or _shingles(d)}),
+    return f"""{_staged(d, "shingles_v")},
 hh AS (SELECT row_id, {hashes} FROM s),
 m AS (SELECT row_id, {mins} FROM hh),
 sig AS ({unions})"""
 
 
-def _q_minhash_bands(d: str, shingle_src: str | None = None,
-                     sig_src: str | None = None) -> str:
+def _q_minhash_bands(d: str) -> str:
     """MinHash-LSH candidate pairs: 4 bands x 4 rows, band signature =
     concat of 4 md5-digest-slice minhashes (threshold ~0.71).
     (shingle -> minhash -> band -> bucket-join; deterministic via md5.)
@@ -298,9 +305,13 @@ def _q_minhash_bands(d: str, shingle_src: str | None = None,
     joined rows (measured at sf0.1: 18,299 of 20,000 band-signature
     rows are singletons — banded minhashes over distinct docs rarely
     collide, which is the point of banding). Rendered identically in
-    both dialects."""
+    both dialects.
+
+    The signatures are staged whole (_staged): the capped query reads
+    ``sig`` from three branches (bucket counts, bucket filter,
+    self-join)."""
     return f"""
-WITH {_minhash_sig_ctes(d, shingle_src=shingle_src, sig_src=sig_src)},
+WITH {_staged(d, "minhash_sig_v")},
 okb AS (SELECT band, mh FROM sig GROUP BY band, mh
         HAVING COUNT(*) BETWEEN 2 AND 32),
 sigk AS (SELECT sig.row_id, sig.band, sig.mh FROM sig
@@ -467,11 +478,11 @@ ORDER BY cos_sim DESC, id_a, id_b
 """
 
 
-def _neardup_ctes(d: str, shingle_src: str | None = None) -> str:
+def _neardup_ctes(d: str) -> str:
     """Shared CTE block: shingles -> minhash sig -> candidates ->
     Jaccard-verified pairs ``vp(pa, pb)`` (>= 0.8), plus ``s`` (one row
     per doc) for join-back."""
-    return f"""{_minhash_sig_ctes(d, shingle_src=shingle_src)},
+    return f"""{_minhash_sig_ctes(d)},
 ex AS (SELECT row_id, {sqlgen.explode_col('sh', 'g', d)} FROM s),
 cand AS (SELECT DISTINCT a.row_id AS ra, b.row_id AS rb
          FROM sig a JOIN sig b
@@ -488,13 +499,13 @@ vp AS (SELECT v.ra AS pa, v.rb AS pb
        WHERE CAST(v.i AS DOUBLE) / (sa.n + sb.n - v.i) >= {sqlgen.fmt(0.8)})"""
 
 
-def _q_neardup_dedup(d: str, shingle_src: str | None = None) -> str:
+def _q_neardup_dedup(d: str) -> str:
     """End-to-end near-dedup: MinHash-LSH candidates -> exact Jaccard
     verify (>=0.8) -> per-doc is_neardup flag (dup = verified partner with
     smaller id). The full shingle->minhash->band->bucket-join->verify
     pipeline as one plan."""
     return f"""
-WITH {_neardup_ctes(d, shingle_src)},
+WITH {_neardup_ctes(d)},
 dup AS (SELECT DISTINCT pb AS row_id FROM vp)
 SELECT s.row_id,
        CASE WHEN dup.row_id IS NOT NULL THEN TRUE ELSE FALSE END AS is_neardup
@@ -502,7 +513,7 @@ FROM s LEFT JOIN dup ON s.row_id = dup.row_id
 """
 
 
-def _q_decontaminate(d: str, shingle_src: str | None = None) -> str:
+def _q_decontaminate(d: str) -> str:
     """Benchmark decontamination: flag corpus docs (doc_id >= 20) that
     share >= 3 distinct 3-gram shingles with a held-out benchmark
     set (doc_id < 20) — the test-set-overlap removal step of a training
@@ -512,7 +523,7 @@ def _q_decontaminate(d: str, shingle_src: str | None = None) -> str:
     per-doc distinct-hit count is one groupBy on slim (row_id, shingle)
     rows."""
     return f"""
-WITH s AS ({shingle_src or _shingles(d)}),
+WITH {_staged(d, "shingles_v")},
 e AS (SELECT row_id, {sqlgen.explode_col('sh', 'g', d)} FROM s),
 bench AS (SELECT DISTINCT g FROM e WHERE row_id < 20),
 hits AS (SELECT e.row_id, CAST(COUNT(DISTINCT e.g) AS BIGINT) AS n_overlap
@@ -528,16 +539,16 @@ WHERE s.row_id >= 20
 """
 
 
-def _q_verified_pairs(d: str, shingle_src: str | None = None) -> str:
+def _q_verified_pairs(d: str) -> str:
     """Jaccard-verified near-dup pairs as (id_a, id_b) — the edge set
     the transitive-dedup entry feeds into connected components."""
     return f"""
-WITH {_neardup_ctes(d, shingle_src)}
+WITH {_neardup_ctes(d)}
 SELECT pa AS id_a, pb AS id_b FROM vp
 """
 
 
-def _q_dedup_transitive(d: str, shingle_src: str | None = None) -> str:
+def _q_dedup_transitive(d: str) -> str:
     """Transitive near-dedup over documents: verified MinHash pairs ->
     connected components (WITH RECURSIVE min-label closure) -> per-doc
     component id + keep flag (keep = untouched doc or the component's
@@ -546,7 +557,7 @@ def _q_dedup_transitive(d: str, shingle_src: str | None = None) -> str:
     version. Spark side: the SAME pair SQL feeding the iterative
     operators/dedup.dup_components."""
     return f"""
-WITH RECURSIVE {_neardup_ctes(d, shingle_src)},
+WITH RECURSIVE {_neardup_ctes(d)},
 ed AS (SELECT pa AS src, pb AS dst FROM vp
        UNION ALL SELECT pb, pa FROM vp),
 reach(id, label) AS (
@@ -1188,10 +1199,10 @@ FROM r
 """
 
 
-def _q_tfidf_tf_inline(d: str) -> str:
+def _tfidf_tf(d: str) -> str:
     """The per-(doc, term) term-frequency aggregate the TF-IDF entry
-    builds on (standalone so the Spark side can stage it as a cached
-    view — it feeds BOTH the df rollup and the scoring join)."""
+    builds on (staged: it feeds BOTH the df rollup and the scoring
+    join)."""
     toks = sqlgen.tokens_expr("text", d)
     return f"""
 WITH b AS (SELECT doc_id AS row_id, {toks} AS toks FROM documents),
@@ -1200,7 +1211,23 @@ SELECT row_id, g, CAST(COUNT(*) AS BIGINT) AS tf
 FROM e GROUP BY row_id, g"""
 
 
-def _q_tfidf_top_terms(d: str, tf_src: str | None = None) -> str:
+# The staged intermediates (_staged): cached view -> (the CTE name
+# builders read it by, its inline CTE block). The signature block reads
+# the staged shingles, so staging minhash_sig_v stages shingles_v first.
+_STAGED: dict[str, tuple[str, Callable[[str], str]]] = {
+    "shingles_v": ("s", lambda d: f"s AS ({_shingles(d)})"),
+    "minhash_sig_v": ("sig", _minhash_sig_ctes),
+    "tfidf_tf_v": ("tf", lambda d: f"tf AS ({_tfidf_tf(d)})"),
+}
+
+
+def _view_sql(view: str) -> str:
+    """The Spark SQL staged as *view*: its inline CTE block, whole."""
+    cte, block = _STAGED[view]
+    return f"WITH {block(SPARK)} SELECT * FROM {cte}"
+
+
+def _q_tfidf_top_terms(d: str) -> str:
     """Per-document keyword extraction: top-3 terms by TF-IDF
     (tf x ln(N/df)) — the corpus-statistics text-analysis primitive
     (doc tagging, topic balance audits) a curation pipeline runs beside
@@ -1210,7 +1237,7 @@ def _q_tfidf_top_terms(d: str, tf_src: str | None = None) -> str:
     rerank).
 
     Scale shape at 10^12 rows: tf = one groupBy(doc, term) with
-    map-side combine, STAGED once on the Spark side (``tf_src``) since
+    map-side combine, staged once on the Spark side (_staged) since
     two branches consume it; df = one agg over the staged tf; the tf-df
     join is on term (df is vocabulary-sized — AQE broadcasts a bounded
     vocabulary, shuffles an unbounded one); top-k is one window shuffle
@@ -1218,7 +1245,7 @@ def _q_tfidf_top_terms(d: str, tf_src: str | None = None) -> str:
     collect."""
     w = "ROUND(CAST(tf.tf AS DOUBLE) * LN(nn.n / CAST(df.df AS DOUBLE)), 5)"
     return f"""
-WITH tf AS ({tf_src or _q_tfidf_tf_inline(d)}),
+WITH {_staged(d, "tfidf_tf_v")},
 df AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY g),
 nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM documents),
 s AS (SELECT tf.row_id, tf.g AS term, {w} AS tfidf
@@ -1520,42 +1547,43 @@ def _q_langid_udf_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "lang", "lang_conf", "ppl")
 
 
-def _q_ann_lsh_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN scale path: sign-LSH bucketed cosine top-10 (query = vec_id 0).
-    Probes only buckets within Hamming radius 4 of the query signature,
-    exact cosine re-rank on survivors (operators/similarity.py).
-    DuckDB-oracled since round 5 against a numpy twin that shares only
-    the hyperplane matrix and re-implements probe + re-rank
-    (_ann_expected_path); output uses the same rounded-rerank
-    convention as the exact-mode entries (k-boundary rounding ties)."""
-    from pyspark.sql import functions as F
-
-    from ..operators import similarity
-    register_testdata_views(spark, sf_dir)
-    emb = spark.table("embeddings")
-    q = emb.where(F.col("vec_id") == 0).select("embedding").head()[0]
-    scored = similarity.lsh_cosine_topk(
-        emb.where("vec_id != 0"), q, k=1 << 30,
-        n_planes=16, hamming_radius=4)
-    return _ann_exact_rerank(scored)
+# The approximate ANN settings, said once: kind -> (width, probe), i.e.
+# sign-LSH hyperplanes and probed Hamming radius, IVF centroid lists and
+# probed lists. The entries run the operators at them (_ann_entry) and
+# the numpy twins read them (_lsh/_ivf_candidate_mask, _ann_twin).
+_ANN = {"lsh": (16, 4), "ivf": (16, 4)}
 
 
-def _q_ann_ivf_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN scale path (b): IVF — sample-trained coarse quantizer, probe
-    the 4 nearest of 16 centroid lists, exact cosine re-rank on survivors
-    (operators/similarity.py ivf_cosine_topk). DuckDB-oracled since
-    round 5 against a numpy twin that shares only the quantizer and
-    re-implements assignment + probe + re-rank (_ann_expected_path);
-    rounded-rerank output convention like the exact-mode entries."""
-    from pyspark.sql import functions as F
+def _ann_entry(kind: str, exact: bool) -> Callable[[SparkSession, str],
+                                                   DataFrame]:
+    """Spark side of ``ann_<kind>_top10`` / ``ann_<kind>_exact_top10``:
+    cosine top-10 of query vec_id 0 with exact cosine re-rank on the
+    survivors (operators/similarity.py). ``lsh`` probes the sign-LSH
+    buckets within the Hamming radius of the query signature; ``ivf``
+    probes the lists of a sample-trained coarse quantizer nearest the
+    query. Output follows the rounded-rerank convention
+    (_ann_exact_rerank: k-boundary rounding ties).
 
-    from ..operators import similarity
-    register_testdata_views(spark, sf_dir)
-    emb = spark.table("embeddings")
-    q = emb.where(F.col("vec_id") == 0).select("embedding").head()[0]
-    scored = similarity.ivf_cosine_topk(
-        emb.where("vec_id != 0"), q, k=1 << 30, n_centroids=16, n_probe=4)
-    return _ann_exact_rerank(scored)
+    At the _ANN settings the entry is approximate, DuckDB-oracled since
+    round 5 against a numpy twin (_ann_twin) that shares only the
+    hyperplane matrix or the quantizer and re-implements probe and
+    re-rank. ``exact`` probes every bucket or list (radius = planes,
+    probe = lists): the plan degenerates to brute force, so the
+    cosine_top10 SQL is its oracle and the probe ≡ brute-force
+    equivalence (proven in tests/test_ops_extra.py) is driver-visible."""
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from pyspark.sql import functions as F
+
+        from ..operators import similarity
+        register_testdata_views(spark, sf_dir)
+        emb = spark.table("embeddings")
+        q = emb.where(F.col("vec_id") == 0).select("embedding").head()[0]
+        topk = (similarity.lsh_cosine_topk if kind == "lsh"
+                else similarity.ivf_cosine_topk)
+        width, probe = _ANN[kind]
+        return _ann_exact_rerank(topk(emb.where("vec_id != 0"), q, 1 << 30,
+                                      width, width if exact else probe))
+    return fn
 
 
 def _parity_sf_dir() -> str:
@@ -1569,99 +1597,111 @@ def _parity_sf_dir() -> str:
                           "/root/testdata/sf0.01")
 
 
-# The other modules the numpy-twin expected tables are computed by,
-# relative to the package dir (each twin's own code in this module is
-# keyed by _twin_sources).
-_TWIN_MODULES = ("spec.py", "rules/reference_impl.py",
-                 "operators/similarity.py", "functions/langid.py",
-                 "functions/perplexity.py")
-
-
-def _source(fn: Callable) -> str:
-    """The source text of *fn*: what _twin_sources keys on."""
-    return inspect.getsource(fn)
+def _source(obj) -> str:
+    """The source text of a function or module: what _twin_sources keys
+    on."""
+    return inspect.getsource(obj)
 
 
 def _twin_sources(writer: Callable) -> list[str]:
-    """The twin code of one expected table: *writer*, the function that
-    writes it, and every module-level function or plain constant it
-    reaches by name, transitively, in name order, not descending into
-    the key itself (_twin_key). Derived from the code objects, so an
-    edit to a registry SQL builder or to another table's twin leaves it
-    unchanged while an edit to this table's twin does not."""
+    """The twin code of one expected table, in name order: *writer*, the
+    function that computes it; every function or plain constant of this
+    module it reaches by name, transitively, not descending into the key
+    itself (_twin_key); every package module those functions import; and
+    the package modules each of those imports in turn. Derived from the
+    source, so an edit to a registry SQL builder, or to a helper or
+    module only another table's twin reads, leaves it unchanged while an
+    edit to this table's twin does not."""
+    import ast
+    import importlib.util
     import types
+
     g = globals()
+    pkg = __name__.split(".")[0]
 
-    def names(code: types.CodeType):
-        yield from code.co_names
-        for c in code.co_consts:
-            if isinstance(c, types.CodeType):
-                yield from names(c)
+    def imports(nodes, package: str):
+        for n in nodes:
+            if isinstance(n, ast.ImportFrom) and n.level:
+                base = importlib.util.resolve_name(
+                    "." * n.level + (n.module or ""), package)
+                for a in n.names:
+                    try:        # ``from <package> import <module>``
+                        yield importlib.import_module(f"{base}.{a.name}")
+                    except ImportError:   # ``from <module> import <name>``
+                        yield importlib.import_module(base)
 
-    def own(v) -> bool:
-        return isinstance(v, types.FunctionType) and v.__module__ == __name__
-
-    todo = [writer.__name__]
+    todo: list = [(writer.__name__, writer)]
     seen: dict[str, str] = {}
     while todo:
-        n = todo.pop()
-        if n in seen or n == "_twin_key":
+        name, v = todo.pop()
+        if isinstance(v, types.ModuleType):
+            name = v.__name__
+        if name in seen or v is _twin_key:
             continue
-        v = g[n]
-        if own(v):
-            seen[n] = _source(v)
-            todo += [m for m in names(v.__code__)
-                     if m in g and not m.startswith("__")]
-        elif isinstance(v, (bool, int, float, str, tuple)):
-            seen[n] = repr(v)
+        if isinstance(v, types.ModuleType) and name.split(".")[0] == pkg:
+            seen[name] = _source(v)
+            todo += [(None, m) for m in imports(ast.parse(seen[name]).body,
+                                                v.__package__)]
+        elif isinstance(v, types.FunctionType) and v.__module__ == __name__:
+            seen[name] = _source(v)
+            tree = ast.parse(seen[name])
+            todo += [(n.id, g[n.id]) for n in ast.walk(tree)
+                     if isinstance(n, ast.Name) and n.id in g
+                     and not n.id.startswith("__")]
+            todo += [(None, m) for m in imports(ast.walk(tree), __package__)]
+        elif isinstance(v, (bool, int, float, str, tuple, dict)):
+            seen[name] = repr(v)
     return [seen[n] for n in sorted(seen)]
 
 
 def _twin_key(writer: Callable, *tags: str) -> str:
-    """Short sha256 over ``tags``, the model artifacts, the _TWIN_MODULES
-    sources and the _twin_sources of *writer*: the cache key of the
-    expected table *writer* writes. A changed constant, artifact or twin
-    yields a new file name, so a stale table is never read back."""
+    """Short sha256 over *tags*, the model artifacts and the
+    _twin_sources of *writer*: the cache key of the expected table
+    ``writer(*tags)``. A changed tag, constant, artifact, module or twin
+    yields a new key, so a stale table is never read back."""
     import hashlib
     import os
 
     from . import pipeline as P
     art = P.ensure_artifacts()
-    pkg = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     h = hashlib.sha256("\0".join(tags).encode())
-    for path in ([os.path.join(art, a) for a in ("langid.npz", "lm.npz")]
-                 + [os.path.join(pkg, m) for m in _TWIN_MODULES]):
-        with open(path, "rb") as f:
+    for a in ("langid.npz", "lm.npz"):
+        with open(os.path.join(art, a), "rb") as f:
             h.update(f.read())
     for src in _twin_sources(writer):
         h.update(src.encode())
     return h.hexdigest()[:16]
 
 
-# The function that writes each sf-keyed expected table.
-_EXPECTED_WRITERS = {"ann_lsh": "_ann_expected_path",
-                     "ann_ivf": "_ann_expected_path",
-                     "langid_udf": "_langid_udf_expected_path"}
-
-
-def _expected_cache(name: str) -> tuple[str, bool]:
-    """(path, exists) for a numpy-twin expected table, keyed by the
-    parity sf dir (the sf0.01 gate and an sf0.1 sweep never read each
-    other's values) and by _twin_key's dependencies for its writer."""
+def _expected_path(writer: Callable[..., "pd.DataFrame"],
+                   *tags: str) -> str:
+    """The numpy-twin expected table ``writer(*tags)`` as a parquet file
+    in the bench cache, named by the writer, its tags (a path tag by its
+    basename) and _twin_key(writer, *tags). The writer runs only on a
+    miss and the file is published atomically, so a reader sees a whole
+    table or none and a stale one is never read back. A writer reads
+    nothing but its tags (the parity sf dir is one), the code
+    _twin_sources reaches and the model artifacts."""
     import os
-    sf_tag = os.path.basename(os.path.normpath(_parity_sf_dir()))
-    key = _twin_key(globals()[_EXPECTED_WRITERS[name]], sf_tag)
-    path = os.path.join(_bench_cache_dir(),
-                        f"expected_{name}_{sf_tag}_{key}.parquet")
-    return path, os.path.exists(path)
+
+    import pyarrow as pa
+
+    from ..datagen import synth
+    name = "_".join(["expected", writer.__name__.strip("_"),
+                     *map(os.path.basename, tags), _twin_key(writer, *tags)])
+    path = os.path.join(_bench_cache_dir(), name + ".parquet")
+    if not os.path.exists(path):
+        synth.write_parquet_atomic(
+            pa.Table.from_pandas(writer(*tags), preserve_index=False), path)
+    return path
 
 
-def _load_embeddings_np():
-    """(vec_ids int64, mat float64 (n, dim)) from the parity-dir
-    embeddings parquet, float32-exact-widened like Arrow->Python->Spark."""
+def _load_embeddings_np(sf_dir: str):
+    """(vec_ids int64, mat float64 (n, dim)) from the sf_dir embeddings
+    parquet, float32-exact-widened like Arrow->Python->Spark."""
     import pyarrow.parquet as pq
 
-    t = pq.read_table(_parity_sf_dir() + "/embeddings.parquet",
+    t = pq.read_table(sf_dir + "/embeddings.parquet",
                       columns=["vec_id", "embedding"])
     ids = np.asarray(t.column("vec_id").to_pylist(), dtype=np.int64)
     rows = t.column("embedding").to_pylist()
@@ -1708,8 +1748,9 @@ def _lsh_candidate_mask(ids: np.ndarray, mat: np.ndarray, q: np.ndarray,
     at perturbed radii rather than a private copy."""
     from ..operators import similarity
 
-    planes = similarity._planes(mat.shape[1], 16)
-    weights = (1 << np.arange(16)).astype(np.int64)
+    n_planes = _ANN["lsh"][0]
+    planes = similarity._planes(mat.shape[1], n_planes)
+    weights = (1 << np.arange(n_planes)).astype(np.int64)
     sigs = ((mat @ planes) > 0) @ weights
     qbits = int(((q @ planes) > 0) @ weights)
     hamming = np.array([bin(int(s) ^ qbits).count("1") for s in sigs])
@@ -1726,7 +1767,7 @@ def _ivf_candidate_mask(ids: np.ndarray, mat: np.ndarray, q: np.ndarray,
     rest = ids != 0
     order = np.argsort(ids[rest], kind="stable")
     sample = mat[rest][order][:similarity.IVF_SAMPLE_N]
-    cent = similarity._kmeans_core(sample, 16)
+    cent = similarity._kmeans_core(sample, _ANN["ivf"][0])
     norm = mat / np.maximum(
         np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
     assign = (norm @ cent.T).argmax(axis=1)
@@ -1735,71 +1776,55 @@ def _ivf_candidate_mask(ids: np.ndarray, mat: np.ndarray, q: np.ndarray,
     return rest & np.isin(assign, list(probe))
 
 
-def _write_expected(path: str, pdf) -> None:
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tmp = path + ".tmp"
-    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), tmp)
-    os.replace(tmp, path)
-
-
-def _ann_expected_path(tag: str) -> str:
-    """Numpy twin of the approximate ANN entry *tag* (``ann_lsh`` or
-    ``ann_ivf``; query = vec_id 0): its candidate set is
-    _lsh_candidate_mask at the registered radius 4 or
-    _ivf_candidate_mask at the registered n_probe 4 (the first shares
-    only the hyperplane matrix, the second only the quantizer —
-    algorithm parameters, like spec constants), and the cosine plus
-    rounded re-rank are re-implemented independently of the Spark plan
-    (pandas-UDF matmul + bit_count / list assignment + HOF fold +
-    TakeOrdered). A weight regression, int wrap, radius or probe
-    off-by-one, assignment bug or NULLIF loss diverges."""
-    path, ok = _expected_cache(tag)
-    if ok:
-        return path
-    ids, mat = _load_embeddings_np()
+def _ann_twin(kind: str, sf_dir: str) -> "pd.DataFrame":
+    """Numpy twin of the approximate entry ``ann_<kind>_top10`` over the
+    sf_dir embeddings (query = vec_id 0): its candidate set is
+    _lsh_candidate_mask at the _ANN radius or _ivf_candidate_mask at the
+    _ANN probe (the first shares only the hyperplane matrix, the second
+    only the quantizer — algorithm parameters, like spec constants), and
+    the cosine plus rounded re-rank are re-implemented independently of
+    the Spark plan (pandas-UDF matmul + bit_count / list assignment +
+    HOF fold + TakeOrdered). A weight regression, int wrap, radius or
+    probe off-by-one, assignment bug or NULLIF loss diverges."""
+    ids, mat = _load_embeddings_np(sf_dir)
     q = mat[ids == 0][0]
-    keep = (_lsh_candidate_mask(ids, mat, q, radius=4) if tag == "ann_lsh"
-            else _ivf_candidate_mask(ids, mat, q, n_probe=4))
-    _write_expected(path, _ann_rounded_topk_np(ids, mat, q, keep))
-    return path
+    mask = _lsh_candidate_mask if kind == "lsh" else _ivf_candidate_mask
+    return _ann_rounded_topk_np(ids, mat, q,
+                                mask(ids, mat, q, _ANN[kind][1]))
 
 
-def _langid_udf_expected_path() -> str:
-    """Numpy twin of _q_langid_udf_documents: the same numpy scorers the
-    fused gate UDF wraps, run driver-side over the parity-dir documents
-    table with the pipeline's truncation — like the flagship's lang/ppl
-    columns, this compare pins the distribution plumbing (truncation,
-    NULL fill, Arrow transfer, per-batch invariance); the models' own
-    oracles are the analytic pytest gates."""
+def _gate_scores_np(texts: "pd.Series") -> dict[str, np.ndarray]:
+    """lang, lang_conf and ppl of *texts* from the numpy scorers the
+    fused gate UDF wraps, after apply_langid_ppl's truncation
+    (spec.TRUNCATE_CHARS; NULL scores as ""). A compare against these
+    columns pins the distribution plumbing (truncation, NULL fill, Arrow
+    transfer, per-batch invariance, fused-gate wiring), not the models:
+    their own oracles are the analytic pytest gates
+    (tests/test_langid_ppl.py)."""
     import os
 
+    from ..functions import langid, perplexity
+    texts = [x[:spec.TRUNCATE_CHARS] for x in texts.fillna("")]
+    logp, langs = langid.load_model(
+        os.path.join(DEFAULT_ARTIFACT_DIR, "langid.npz"))
+    lang, conf = langid.predict_batch(texts, logp, langs)
+    lm = perplexity.load_model(os.path.join(DEFAULT_ARTIFACT_DIR, "lm.npz"))
+    return {"lang": lang,
+            "lang_conf": np.asarray(conf, dtype=np.float64),
+            "ppl": np.asarray(perplexity.ppl_batch(texts, lm),
+                              dtype=np.float64)}
+
+
+def _langid_udf_twin(sf_dir: str) -> "pd.DataFrame":
+    """Numpy twin of _q_langid_udf_documents: _gate_scores_np over the
+    sf_dir documents table."""
     import pandas as pd
     import pyarrow.parquet as pq
 
-    from ..functions import langid, perplexity
-    from . import pipeline as P
-
-    path, ok = _expected_cache("langid_udf")
-    if ok:
-        return path
-    art = P.ensure_artifacts()
-    t = pq.read_table(_parity_sf_dir() + "/documents.parquet",
+    t = pq.read_table(sf_dir + "/documents.parquet",
                       columns=["doc_id", "text"]).to_pandas()
-    texts = [x[:spec.TRUNCATE_CHARS] for x in t["text"].fillna("")]
-    logp, langs = langid.load_model(os.path.join(art, "langid.npz"))
-    lang, conf = langid.predict_batch(texts, logp, langs)
-    lm = perplexity.load_model(os.path.join(art, "lm.npz"))
-    ppl = perplexity.ppl_batch(texts, lm)
-    _write_expected(path, pd.DataFrame({
-        "doc_id": t["doc_id"].to_numpy(),
-        "lang": list(lang),
-        "lang_conf": np.asarray(conf, dtype=np.float64),
-        "ppl": np.asarray(ppl, dtype=np.float64)}))
-    return path
+    return pd.DataFrame({"doc_id": t["doc_id"].to_numpy(),
+                         **_gate_scores_np(t["text"])})
 
 
 def _read_expected_sql(path: str) -> str:
@@ -1822,24 +1847,6 @@ def _ann_exact_rerank(scored: DataFrame) -> DataFrame:
             .orderBy(F.desc("cos_sim"), "vec_id").limit(10))
 
 
-def _q_ann_lsh_exact_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH ANN in EXACT mode (hamming_radius = n_planes admits every
-    bucket): the bucketed plan degenerates to brute force, so the
-    cosine_top10 oracle SQL is its ground truth — the driver's value-hash
-    compare makes the radius-probe ≡ brute-force equivalence (proven in
-    tests/test_ops_extra.py) driver-visible."""
-    from pyspark.sql import functions as F
-
-    from ..operators import similarity
-    register_testdata_views(spark, sf_dir)
-    emb = spark.table("embeddings")
-    q = emb.where(F.col("vec_id") == 0).select("embedding").head()[0]
-    scored = similarity.lsh_cosine_topk(
-        emb.where("vec_id != 0"), q, k=1 << 30,
-        n_planes=16, hamming_radius=16)
-    return _ann_exact_rerank(scored)
-
-
 def _q_dedup_transitive_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark side of dedup_transitive_documents: verified pairs from the
     cached-shingle MinHash pipeline -> iterative dup_components ->
@@ -1847,9 +1854,7 @@ def _q_dedup_transitive_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from ..operators import dedup as dd
-    _materialize_shingles(spark, sf_dir)
-    pairs = spark.sql(_q_verified_pairs(SPARK,
-                                        shingle_src=MAT_SHINGLE_SRC))
+    pairs = _spark_sql(spark, sf_dir, _q_verified_pairs(SPARK))
     comp = dd.dup_components(pairs).withColumnRenamed("id", "row_id")
     docs = spark.table("documents").select(F.col("doc_id").alias("row_id"))
     return (docs.join(comp, "row_id", "left")
@@ -1866,8 +1871,7 @@ def _q_dup_components_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin is a WITH RECURSIVE closure — an iterative DataFrame algorithm
     made driver-oracle-checkable."""
     from ..operators import dedup as dd
-    register_testdata_views(spark, sf_dir)
-    pairs = spark.sql(_q_embedding_neardup(SPARK))
+    pairs = _spark_sql(spark, sf_dir, _q_embedding_neardup(SPARK))
     # cast at the ORACLE boundary only: dup_components keeps the id's
     # native type (a blanket BIGINT cast inside the operator silently
     # NULLed string-id components — round-2 advice); vec_id is integral,
@@ -1887,21 +1891,6 @@ def _q_knn_join_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
                                emb.where("vec_id < 20"), k=3)
 
 
-def _q_ann_ivf_exact_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN in EXACT mode (n_probe = n_centroids probes every list):
-    same driver-visible equivalence proof as the LSH exact entry."""
-    from pyspark.sql import functions as F
-
-    from ..operators import similarity
-    register_testdata_views(spark, sf_dir)
-    emb = spark.table("embeddings")
-    q = emb.where(F.col("vec_id") == 0).select("embedding").head()[0]
-    scored = similarity.ivf_cosine_topk(
-        emb.where("vec_id != 0"), q, k=1 << 30,
-        n_centroids=16, n_probe=16)
-    return _ann_exact_rerank(scored)
-
-
 def _q_simhash64_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vectorized 64-bit SimHash pandas UDF over documents; oracled by
     the _q_simhash64 SQL fold twin in DuckDB (same md5-slice family)."""
@@ -1915,43 +1904,35 @@ def _q_simhash64_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("row_id", F.col("simhash").alias("simhash64"))
 
 
-def _q_simhash_pairs_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup candidates over documents: pandas-UDF signatures,
-    16-bit block bucketing (Hamming<=3 guaranteed by pigeonhole), exact
-    Hamming verify <= 3. Oracled end-to-end by the _q_simhash_pairs SQL
-    twin (signatures + bucketing + verify all reproduced in DuckDB)."""
-    from pyspark.sql import functions as F
+def _simhash_pairs_entry(**candidates) -> Callable[[SparkSession, str],
+                                                   DataFrame]:
+    """Spark side of a SimHash near-dup pair entry over documents:
+    pandas-UDF signatures -> dedup.simhash_candidates(**candidates) ->
+    exact Hamming verify <= 3, oracled end-to-end by the _q_simhash_pairs
+    SQL twin (signatures + bucketing + verify all reproduced in DuckDB).
 
-    from ..operators import dedup
-    register_testdata_views(spark, sf_dir)
-    df = spark.table("documents").select("doc_id", "text")
-    pairs = dedup.simhash_candidates(df, text_col="text", id_col="doc_id")
-    ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return (pairs.withColumn("hamming", ham.cast("int"))
-            .where(F.col("hamming") <= 3)
-            .select("id_a", "id_b", "hamming"))
+    simhash_pairs_documents runs the operator's defaults: 16-bit block
+    bucketing (Hamming<=3 guaranteed by pigeonhole) under the mega-bucket
+    cap, against the capped twin. simhash_pairs_wide_documents runs WIDE
+    keys (Manku-style permuted prefixes: C(6,3)=20 tables of ~32-bit
+    three-block keys — the 10^12-row candidate-generation path, where
+    16-bit buckets would hold ~10^7 rows each) against the UNCAPPED
+    4-block twin: both schemes are complete for Hamming<=3 by pigeonhole,
+    so after exact verify the outputs are provably the same pair set —
+    the driver's value-hash compare makes wide-key recall driver-visible."""
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from pyspark.sql import functions as F
 
-
-def _q_simhash_pairs_wide_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WIDE-key SimHash candidates (Manku-style permuted prefixes:
-    C(6,3)=20 tables of ~32-bit three-block keys — the 10^12-row
-    candidate-generation path, where 16-bit buckets would hold ~10^7
-    rows each). Oracled by the UNCAPPED 4-block SQL twin: both schemes
-    are complete for Hamming<=3 by pigeonhole, so after exact verify the
-    outputs are provably the same pair set — the driver's value-hash
-    compare makes wide-key recall driver-visible."""
-    from pyspark.sql import functions as F
-
-    from ..operators import dedup
-    register_testdata_views(spark, sf_dir)
-    df = spark.table("documents").select("doc_id", "text")
-    pairs = dedup.simhash_candidates(df, text_col="text", id_col="doc_id",
-                                     n_blocks=6, agree_blocks=3,
-                                     max_bucket=None)
-    ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return (pairs.withColumn("hamming", ham.cast("int"))
-            .where(F.col("hamming") <= 3)
-            .select("id_a", "id_b", "hamming"))
+        from ..operators import dedup
+        register_testdata_views(spark, sf_dir)
+        df = spark.table("documents").select("doc_id", "text")
+        pairs = dedup.simhash_candidates(df, text_col="text",
+                                         id_col="doc_id", **candidates)
+        ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
+        return (pairs.withColumn("hamming", ham.cast("int"))
+                .where(F.col("hamming") <= 3)
+                .select("id_a", "id_b", "hamming"))
+    return fn
 
 
 def _q_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2049,61 +2030,41 @@ WHERE m.gt_in_dup_group
 """
 
 
-def _qf_full_expected_path() -> str:
-    """Numpy-reference expected-label table for the flagship oracle,
-    written once beside the generate-once corpus (suffix keyed by
-    _twin_key of this function, so a rule/spec constant, model artifact
-    or flagship twin change writes a new table).
+def _qf_full_twin() -> "pd.DataFrame":
+    """Numpy-reference expected-label table for the flagship oracle.
 
     The rule battery / scrub / dedup columns come from
     rules/reference_impl (the INDEPENDENT numpy implementation — the
     same binding layer the qf_core/qf_scrub oracles and the
     test_rules_units mutation meta-tests prove out); lang/lang_conf/ppl
-    come from the same numpy scorers the fused gate UDF wraps, so for
-    those three columns the compare pins the distribution plumbing
-    (caption truncation, Arrow transfer, fused-gate wiring, final-keep
-    composition) rather than model independence — the models' own
-    oracles are the analytic pytest gates (tests/test_langid_ppl.py).
-    Same accounting as the north-rule pytest (test_pipeline_oracle)."""
-    import os
-
+    come from _gate_scores_np, so for those three columns (and the
+    final-keep composition) the compare pins the distribution plumbing
+    rather than model independence. Same accounting as the north-rule
+    pytest (test_pipeline_oracle)."""
     import pandas as pd
     import pyarrow.parquet as pq
 
     from ..datagen import synth
-    from ..functions import langid, perplexity
+    from ..functions import langid
     from ..rules import reference_impl as ri
-    from . import pipeline as P
 
-    imgs_path = synth.write_images_parquet(_bench_cache_dir(), _SYNTH_ROWS)
-    path = imgs_path.replace(
-        ".parquet", f"_qfexp_{_twin_key(_qf_full_expected_path)}.parquet")
-    if os.path.exists(path):
-        return path
-    art = P.ensure_artifacts()
     imgs = pq.read_table(
-        imgs_path, columns=["image_id", "caption", "phash"]).to_pandas()
+        synth.write_images_parquet(_bench_cache_dir(), _SYNTH_ROWS),
+        columns=["image_id", "caption", "phash"]).to_pandas()
     exp = ri.expected_labels(imgs)
-    # mirror apply_langid_ppl's pre-UDF truncation (spec.TRUNCATE_CHARS)
-    texts = [c[:spec.TRUNCATE_CHARS] for c in imgs["caption"].fillna("")]
-    logp, langs = langid.load_model(os.path.join(art, "langid.npz"))
-    lang, conf = langid.predict_batch(texts, logp, langs)
-    lm = perplexity.load_model(os.path.join(art, "lm.npz"))
-    ppl = perplexity.ppl_batch(texts, lm)
+    gates = _gate_scores_np(imgs["caption"])
     keep_core = exp["keep"].to_numpy(dtype=bool)
-    _write_expected(path, pd.DataFrame({
+    return pd.DataFrame({
         "image_id": exp["image_id"].tolist(),
-        "lang": list(lang),
-        "lang_conf": np.asarray(conf, dtype=np.float64),
-        "ppl": np.asarray(ppl, dtype=np.float64),
+        **gates,
         "quality_score": exp["quality_score"].to_numpy(dtype=np.float64),
         "n_present": exp["n_present"].to_numpy(dtype=np.int32),
         "keep_core": keep_core,
-        "keep": keep_core & (lang != langid.UNKNOWN) & (ppl <= spec.PPL_MAX),
+        "keep": (keep_core & (gates["lang"] != langid.UNKNOWN)
+                 & (gates["ppl"] <= spec.PPL_MAX)),
         "is_dup": exp["is_dup"].to_numpy(dtype=bool),
         "scrubbed_caption": exp["scrubbed_caption"].tolist(),
-    }))
-    return path
+    })
 
 
 def _qf_full_images_oracle() -> str:
@@ -2116,7 +2077,7 @@ def _qf_full_images_oracle() -> str:
     return f"""
 SELECT image_id, lang, lang_conf, ppl, quality_score, n_present,
        keep_core, keep, is_dup, scrubbed_caption
-FROM read_parquet('{_qf_full_expected_path()}')
+FROM read_parquet('{_expected_path(_qf_full_twin)}')
 """
 
 
@@ -2212,8 +2173,7 @@ def _q_keep_by_lang_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from ..operators.skew import salted_sum_agg
-    register_testdata_views(spark, sf_dir)
-    core = spark.sql(sqlgen.quality_core_sql(SPARK))
+    core = _spark_sql(spark, sf_dir, sqlgen.quality_core_sql(SPARK))
     docs = spark.table("documents").select("doc_id", "lang")
     joined = core.join(docs, core.row_id == docs.doc_id).select(
         "row_id", "lang", "keep", "n_present")
@@ -2233,30 +2193,21 @@ def _q_keep_by_lang_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 # public registry
 # --------------------------------------------------------------------------
 
-def _mk_spark_fn(builder: Callable[[str], str]):
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_testdata_views(spark, sf_dir)
-        return spark.sql(builder(SPARK))
-    return fn
-
-
-MAT_SHINGLE_SRC = "SELECT * FROM shingles_v"
-
-# Per-view (applicationId -> sf_dir) memos for the cached intermediate
-# views below. Several registry entries consume each view; without the
+# Per-view (applicationId -> sf_dir) memos for the staged views
+# (_STAGED). Several registry entries consume each view; without the
 # memo each one re-created and re-cached it, re-running the expensive
 # upstream pass per entry — the dominant cost of the sf0.01 sweep.
-_MAT_VIEW_FOR: dict[str, dict[str, str]] = {}
+_STAGED_FOR: dict[str, dict[str, str]] = {}
 
 
-def _invalidate_mat_views(spark: SparkSession) -> None:
+def _invalidate_staged(spark: SparkSession) -> None:
     """session.invalidate_testdata_views hook: uncache + drop every
-    derived materialized view this session holds and forget its memo —
-    a derived cached view (shingles_v/minhash_sig_v/tfidf_tf_v) that
-    outlives a base-view replacement would otherwise lazily recompute
-    from the impostor view after cache eviction (round-3 advice)."""
+    staged view this session holds and forget its memo — a derived
+    cached view that outlives a base-view replacement would otherwise
+    lazily recompute from the impostor view after cache eviction
+    (round-3 advice)."""
     app_id = spark.sparkContext.applicationId
-    for name, memo in _MAT_VIEW_FOR.items():
+    for name, memo in _STAGED_FOR.items():
         if memo.pop(app_id, None) is not None:
             try:
                 spark.catalog.uncacheTable(name)
@@ -2265,7 +2216,7 @@ def _invalidate_mat_views(spark: SparkSession) -> None:
             spark.catalog.dropTempView(name)
 
 
-_session.on_view_invalidation(_invalidate_mat_views)
+_session.on_view_invalidation(_invalidate_staged)
 
 
 def _materialize_view(spark: SparkSession, sf_dir: str, name: str,
@@ -2277,7 +2228,7 @@ def _materialize_view(spark: SparkSession, sf_dir: str, name: str,
     term frequencies) of a curation pipeline. Idempotent per
     (session, sf_dir); a vanished view or a new sf_dir re-materializes,
     uncaching the stale cache entry first."""
-    memo = _MAT_VIEW_FOR.setdefault(name, {})
+    memo = _STAGED_FOR.setdefault(name, {})
     app_id = spark.sparkContext.applicationId
     if memo.get(app_id) == sf_dir and spark.catalog.tableExists(name):
         return
@@ -2292,66 +2243,28 @@ def _materialize_view(spark: SparkSession, sf_dir: str, name: str,
     memo[app_id] = sf_dir
 
 
-def _materialize_shingles(spark: SparkSession, sf_dir: str) -> None:
-    _materialize_view(spark, sf_dir, "shingles_v", _shingles(SPARK))
+def _stage_views(spark: SparkSession, sf_dir: str, sql: str) -> None:
+    """Stage every _STAGED view *sql* reads, each after the views its
+    own SQL reads."""
+    for view in _STAGED:
+        if f"FROM {view}" in sql:
+            view_sql = _view_sql(view)
+            _stage_views(spark, sf_dir, view_sql)
+            _materialize_view(spark, sf_dir, view, view_sql)
 
 
-def _mk_spark_fn_mat_shingles(builder: Callable[..., str]):
+def _spark_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
+    """Run Spark *sql* over the sf_dir testdata views and the staged
+    views it reads."""
+    register_testdata_views(spark, sf_dir)
+    _stage_views(spark, sf_dir, sql)
+    return spark.sql(sql)
+
+
+def _mk_spark_fn(builder: Callable[[str], str]):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _materialize_shingles(spark, sf_dir)
-        return spark.sql(builder(SPARK, shingle_src=MAT_SHINGLE_SRC))
+        return _spark_sql(spark, sf_dir, builder(SPARK))
     return fn
-
-
-MAT_SIG_SRC = "SELECT * FROM minhash_sig_v"
-
-
-def _materialize_minhash_sig(spark: SparkSession, sf_dir: str) -> None:
-    """The banded-MinHash signature view on top of the cached shingle
-    view — the band-capped candidates query references ``sig`` from
-    three join branches (bucket counts, anti-join probe, self-join)."""
-    _materialize_shingles(spark, sf_dir)
-    _materialize_view(
-        spark, sf_dir, "minhash_sig_v",
-        f"WITH {_minhash_sig_ctes_inline(SPARK, shingle_src=MAT_SHINGLE_SRC)} "
-        f"SELECT * FROM sig")
-
-
-def _mk_spark_fn_mat_sig(builder: Callable[..., str]):
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _materialize_minhash_sig(spark, sf_dir)
-        return spark.sql(builder(SPARK, sig_src=MAT_SIG_SRC))
-    return fn
-
-
-MAT_TF_SRC = "SELECT * FROM tfidf_tf_v"
-
-
-def _mk_spark_fn_mat_tf(builder: Callable[..., str]):
-    """Spark side of the TF-IDF entry: the per-(doc, term) tf aggregate
-    feeds BOTH the df rollup and the scoring join; inlined per branch it
-    re-runs tokenize+explode+groupBy twice. Materialized once (at
-    warehouse scale: the staged term-frequency table every corpus-stat
-    consumer shares); DuckDB keeps the inline CTEs from the builder."""
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _materialize_view(spark, sf_dir, "tfidf_tf_v",
-                          _q_tfidf_tf_inline(SPARK))
-        return spark.sql(builder(SPARK, tf_src=MAT_TF_SRC))
-    return fn
-
-
-# Near-dup and TF-IDF queries reference an expensive intermediate (the
-# shingle set, the MinHash signatures, the term frequencies) from several
-# join branches; inlining it re-runs its pipeline once per branch. The
-# Spark path materializes it ONCE as a cached view (at warehouse scale: a
-# staged table) and passes the view to the builder's ``*_src`` keyword;
-# the DuckDB oracle keeps the inline CTEs, and both render from the same
-# builder so results stay identical. The first keyword a builder takes,
-# in this order, picks its view: a signature builder also takes
-# ``shingle_src``, and the signature view sits on the shingle view.
-_MAT_SPARK_FNS = (("sig_src", _mk_spark_fn_mat_sig),
-                  ("tf_src", _mk_spark_fn_mat_tf),
-                  ("shingle_src", _mk_spark_fn_mat_shingles))
 
 
 def registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]]:
@@ -2369,10 +2282,7 @@ def registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]
     break the runs-DuckDB-first contract.)"""
     reg: dict[str, tuple] = {}
     for name, builder in _SQL_BUILDERS.items():
-        params = inspect.signature(builder).parameters
-        mk = next((mk for src, mk in _MAT_SPARK_FNS if src in params),
-                  _mk_spark_fn)
-        reg[name] = (mk(builder), builder(DUCK))
+        reg[name] = (_mk_spark_fn(builder), builder(DUCK))
     # Salted two-phase agg vs the plain-groupBy oracle SQL: result parity
     # IS the skew-defusal equivalence proof.
     reg["keep_by_lang_salted"] = (_q_keep_by_lang_salted,
@@ -2381,16 +2291,14 @@ def registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]
     # makes the UDF itself driver-oracled (signature family = md5 slices
     # in both implementations).
     reg["simhash64_documents"] = (_q_simhash64_udf, _q_simhash64(DUCK))
-    reg["simhash_pairs_documents"] = (_q_simhash_pairs_udf,
+    reg["simhash_pairs_documents"] = (_simhash_pairs_entry(),
                                       _q_simhash_pairs(DUCK))
     # Wide-key (6-block / 3-agree) candidate generation vs the UNCAPPED
     # 4-block twin: both complete for Hamming<=3, so verified outputs
-    # are the same set (see _q_simhash_pairs_wide_udf docstring).
+    # are the same set (see _simhash_pairs_entry docstring).
     reg["simhash_pairs_wide_documents"] = (
-        _q_simhash_pairs_wide_udf, _q_simhash_pairs(DUCK, capped=False))
-    # Exact-mode ANN (full Hamming radius / probe-all): the approximate
-    # plans degenerate to brute force, so the brute-force cosine SQL is
-    # their oracle — approx ≡ exact equivalence becomes driver-visible.
+        _simhash_pairs_entry(n_blocks=6, agree_blocks=3, max_bucket=None),
+        _q_simhash_pairs(DUCK, capped=False))
     # Batched k-NN join: the Spark side is the DataFrame operator
     # (broadcast nested loop + per-query window top-k), the oracle the
     # brute-force SQL twin.
@@ -2400,10 +2308,12 @@ def registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]
                                         _q_dup_components(DUCK))
     reg["dedup_transitive_documents"] = (_q_dedup_transitive_spark,
                                          _q_dedup_transitive(DUCK))
-    reg["ann_lsh_exact_top10"] = (_q_ann_lsh_exact_top10,
-                                  _q_cosine_topk(DUCK))
-    reg["ann_ivf_exact_top10"] = (_q_ann_ivf_exact_top10,
-                                  _q_cosine_topk(DUCK))
+    # Exact-mode ANN (full Hamming radius / probe-all): the approximate
+    # plans degenerate to brute force, so the brute-force cosine SQL is
+    # their oracle — approx ≡ exact equivalence becomes driver-visible.
+    for kind in _ANN:
+        reg[f"ann_{kind}_exact_top10"] = (_ann_entry(kind, exact=True),
+                                          _q_cosine_topk(DUCK))
     # Multimodal audio/video vs generator ground truth (round-5 verdict
     # item 1): feature extraction and frame sampling become driver-oracled
     # instead of rows-only.
@@ -2420,18 +2330,19 @@ def registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]
                                       _dup_pixel_verify_oracle())
     # Flagship vs the numpy-reference expected-label table: keep/drop,
     # scrub, dedup, scores AND the langid/ppl gate composition become
-    # driver-oracled value-exactly (see _qf_full_expected_path docstring
+    # driver-oracled value-exactly (see _qf_full_twin docstring
     # for what each column's compare does and does not bind).
     reg["qf_full_images"] = (_q_full_pipeline_images,
                              _qf_full_images_oracle())
     # Numpy-twin expected tables: the langid/ppl gate UDF on the
     # documents table and the two APPROXIMATE ANN paths (their
     # exact-mode twins above remain).
+    sf_dir = _parity_sf_dir()
     reg["langid_udf_documents"] = (_q_langid_udf_documents,
-                                   _read_expected_sql(
-                                       _langid_udf_expected_path()))
-    reg["ann_lsh_top10"] = (_q_ann_lsh_top10,
-                            _read_expected_sql(_ann_expected_path("ann_lsh")))
-    reg["ann_ivf_top10"] = (_q_ann_ivf_top10,
-                            _read_expected_sql(_ann_expected_path("ann_ivf")))
+                                   _read_expected_sql(_expected_path(
+                                       _langid_udf_twin, sf_dir)))
+    for kind in _ANN:
+        reg[f"ann_{kind}_top10"] = (_ann_entry(kind, exact=False),
+                                    _read_expected_sql(_expected_path(
+                                        _ann_twin, kind, sf_dir)))
     return reg

@@ -75,13 +75,13 @@ def build_session(app_name: str = "bioanalyzer-spark",
 _VIEWS_FOR: dict[str, str] = {}
 
 # Invalidation hooks: modules that memoize DERIVED state on top of the
-# testdata views (catalog_queries' cached shingles_v/minhash_sig_v/
-# tfidf_tf_v temp views) register a callback here so one
-# invalidate_testdata_views call flushes the whole derivation chain —
-# otherwise a derived cached view surviving a base-view replacement
-# would lazily recompute from the impostor view (round-3 advice,
-# catalog_queries.py:1689). Registered via a hook, not a direct import,
-# because catalog_queries imports this module.
+# testdata views (catalog_queries' staged views, one per _STAGED entry)
+# register a callback here so one invalidate_testdata_views call flushes
+# the whole derivation chain — otherwise a derived cached view surviving
+# a base-view replacement would lazily recompute from the impostor view
+# (round-3 advice; catalog_queries._invalidate_staged). Registered via a
+# hook, not a direct import, because catalog_queries imports this
+# module.
 _INVALIDATION_HOOKS: list = []
 
 

@@ -1,9 +1,11 @@
 """Print one sha256 per rendered registry SQL string.
 
-Covers every ``catalog_queries._SQL_BUILDERS`` entry in both dialects,
-plus the SQL of the two cached Spark views the near-dup entries read
-(``shingles_v`` and ``minhash_sig_v``). A renderer refactor that must
-not change any SQL shows it by diffing this output before and after:
+Covers every ``catalog_queries._SQL_BUILDERS`` entry in both dialects:
+the Spark SQL is what the entry runs (a staged intermediate reads as
+its cached view), the DuckDB SQL its oracle. Then the Spark SQL of every
+staged view (``catalog_queries._STAGED``) those entries read. A
+renderer refactor that must not change any SQL shows it by diffing this
+output before and after:
 
     python scripts/render_sql.py > before.txt   # on the parent commit
     python scripts/render_sql.py > after.txt    # on the change
@@ -24,11 +26,8 @@ def rendered() -> list[tuple[str, str, str]]:
     out = [(d, name, builder(d))
            for name, builder in cq._SQL_BUILDERS.items()
            for d in (cq.SPARK, cq.DUCK)]
-    sig = cq._minhash_sig_ctes_inline(cq.SPARK,
-                                      shingle_src=cq.MAT_SHINGLE_SRC)
-    out.append((cq.SPARK, "view:shingles_v", cq._shingles(cq.SPARK)))
-    out.append((cq.SPARK, "view:minhash_sig_v",
-                f"WITH {sig} SELECT * FROM sig"))
+    out += [(cq.SPARK, f"view:{view}", cq._view_sql(view))
+            for view in cq._STAGED]
     return out
 
 

@@ -282,7 +282,7 @@ def _lsh_top10(radius: int):
     copy, so a twin change is what this test validates."""
     from bioanalyzer_backend_spark.plans import catalog_queries as CQ
 
-    ids, mat = CQ._load_embeddings_np()
+    ids, mat = CQ._load_embeddings_np(CQ._parity_sf_dir())
     q = mat[ids == 0][0]
     keep = CQ._lsh_candidate_mask(ids, mat, q, radius)
     return CQ._ann_rounded_topk_np(ids, mat, q, keep)["vec_id"].tolist()
@@ -291,7 +291,7 @@ def _lsh_top10(radius: int):
 def _ivf_top10(n_probe: int):
     from bioanalyzer_backend_spark.plans import catalog_queries as CQ
 
-    ids, mat = CQ._load_embeddings_np()
+    ids, mat = CQ._load_embeddings_np(CQ._parity_sf_dir())
     q = mat[ids == 0][0]
     keep = CQ._ivf_candidate_mask(ids, mat, q, n_probe)
     return CQ._ann_rounded_topk_np(ids, mat, q, keep)["vec_id"].tolist()
@@ -319,49 +319,96 @@ def test_expected_cache_keyed_by_parity_dir(monkeypatch, tmp_path):
     """The numpy-twin expected tables are keyed by the parity sf dir so
     the sf0.01 driver gate and the sf0.1 dev sweep never read each
     other's values — and by the bytes of what the twins are computed
-    from, so a changed dependency never reads back a stale table."""
+    from, so a changed dependency never reads back a stale table. The
+    writer runs only on a miss."""
+    import os
+
     from bioanalyzer_backend_spark.plans import catalog_queries as CQ
 
-    p1, _ = CQ._expected_cache("ann_lsh")
-    monkeypatch.setenv("SPARK_GRAFT_PARITY_SF_DIR", "/root/testdata/sf0.1")
-    p2, _ = CQ._expected_cache("ann_lsh")
-    assert p1 != p2 and "sf0.1" in p2 and "sf0.01" in p1
+    monkeypatch.setattr(CQ, "_bench_cache_dir", lambda: str(tmp_path))
+    sf001 = CQ._parity_sf_dir()
+    sf0001 = os.path.join(os.path.dirname(sf001), "sf0.001")
+    p1 = CQ._expected_path(CQ._ann_twin, "lsh", sf001)
+    p2 = CQ._expected_path(CQ._ann_twin, "lsh", sf0001)
+    assert p1 != p2 and "sf0.001" in p2 and "sf0.01" in p1
+    assert os.path.exists(p1) and os.path.exists(p2)
+    mtime = os.stat(p2).st_mtime_ns
+    assert CQ._expected_path(CQ._ann_twin, "lsh", sf0001) == p2
+    assert os.stat(p2).st_mtime_ns == mtime          # a hit writes nothing
 
+    # a package module the twin imports (operators/similarity.py) read
+    # from a file the test edits
     dep = tmp_path / "dep.py"
     dep.write_text("X = 1\n")
-    monkeypatch.setattr(CQ, "_TWIN_MODULES", CQ._TWIN_MODULES + (str(dep),))
-    p3, _ = CQ._expected_cache("ann_lsh")
-    assert p3 == CQ._expected_cache("ann_lsh")[0]    # stable when unchanged
+    real = CQ._source
+    monkeypatch.setattr(CQ, "_source", lambda obj: dep.read_text() if (
+        obj.__name__.endswith(".similarity")) else real(obj))
+    p3 = CQ._twin_key(CQ._ann_twin, "lsh", sf0001)
+    assert p3 == CQ._twin_key(CQ._ann_twin, "lsh", sf0001)  # stable
     dep.write_text("X = 2\n")
-    p4, _ = CQ._expected_cache("ann_lsh")
-    assert len({p2, p3, p4}) == 3 and "sf0.1" in p4
+    p4 = CQ._twin_key(CQ._ann_twin, "lsh", sf0001)
+    assert len({p2.rsplit("_", 1)[1][:-len(".parquet")], p3, p4}) == 3
 
 
 def test_expected_keys_follow_only_the_twin_code(monkeypatch):
-    """The expected-table keys hash the twin code itself (derived from
-    the twin builders' code objects), not the whole registry module: an
-    edit to any ``_q_*`` Spark/SQL builder keeps every key, an edit to
-    the ANN re-rank twin re-keys the ANN tables and only those."""
+    """The expected-table keys hash the twin code itself (the functions
+    each writer reaches by name and the package modules they import),
+    not the whole registry module: an edit to any ``_q_*`` Spark/SQL
+    builder keeps every key, an edit to the ANN re-rank twin or to
+    operators/similarity.py re-keys the ANN tables and only those, and
+    an edit to functions/langid.py re-keys the langid_udf and flagship
+    tables and only those."""
     from bioanalyzer_backend_spark.plans import catalog_queries as CQ
 
+    sf = CQ._parity_sf_dir()
+
     def keys():
-        return ([CQ._expected_cache(t)[0]
-                 for t in ("ann_lsh", "ann_ivf", "langid_udf")]
-                + [CQ._twin_key(CQ._qf_full_expected_path)])
+        return [CQ._twin_key(CQ._ann_twin, "lsh", sf),
+                CQ._twin_key(CQ._ann_twin, "ivf", sf),
+                CQ._twin_key(CQ._langid_udf_twin, sf),
+                CQ._twin_key(CQ._qf_full_twin)]
 
     real = CQ._source
     base = keys()
 
     def edit(pred):
-        monkeypatch.setattr(CQ, "_source", lambda fn: real(fn) + (
-            "# edited\n" if pred(fn.__name__) else ""))
+        monkeypatch.setattr(CQ, "_source", lambda obj: real(obj) + (
+            "# edited\n" if pred(obj.__name__) else ""))
 
     edit(lambda name: name.startswith("_q_"))
     assert keys() == base
-    edit(lambda name: name == "_ann_rounded_topk_np")
+    for edited_name in ("_ann_rounded_topk_np", ".operators.similarity"):
+        edit(lambda name: name.endswith(edited_name))
+        edited = keys()
+        assert edited[0] != base[0] and edited[1] != base[1]
+        assert edited[2:] == base[2:]    # langid_udf and the flagship
+    edit(lambda name: name.endswith(".functions.langid"))
     edited = keys()
-    assert edited[0] != base[0] and edited[1] != base[1]
-    assert edited[2:] == base[2:]        # langid_udf and the flagship
+    assert edited[:2] == base[:2]        # the ANN tables
+    assert edited[2] != base[2] and edited[3] != base[3]
+
+
+def test_synth_writers_publish_whole_files(monkeypatch, tmp_path):
+    """A generate-once writer killed mid-write (here: a write that fails
+    after writing part of the file) leaves nothing its exists check
+    serves later: the next call regenerates a readable file."""
+    import pyarrow.parquet as pq
+
+    real = pq.write_table
+
+    def torn(table, where, **kwargs):
+        with open(where, "wb") as f:
+            f.write(b"PAR1 torn")
+        raise OSError("disk gone mid-write")
+
+    for write in (synth.write_audio_parquet, synth.write_video_parquet,
+                  synth.write_images_parquet):
+        monkeypatch.setattr(pq, "write_table", torn)
+        with pytest.raises(OSError):
+            write(str(tmp_path), 24)
+        monkeypatch.setattr(pq, "write_table", real)
+        assert pq.read_table(write(str(tmp_path), 24)).num_rows == 24
+    assert not [p for p in tmp_path.iterdir() if p.name.endswith(".tmp")]
 
 
 # --------------------------------------------------------------------------

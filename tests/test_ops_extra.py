@@ -728,8 +728,8 @@ def test_minhash_operator_matches_sql_twin(spark):
                                       text_col="text", id_col="doc_id",
                                       max_bucket=32)
     got = {(r.id_a, r.id_b) for r in op.collect()}
-    want = {(r.ra, r.rb) for r in spark.sql(cq._q_minhash_bands(SPARK))
-            .collect()}
+    want = {(r.ra, r.rb) for r in cq._spark_sql(
+        spark, cq._parity_sf_dir(), cq._q_minhash_bands(SPARK)).collect()}
     assert want and got == want
 
 
@@ -1143,14 +1143,33 @@ def test_invalidation_hook_drops_cached_derived_views(spark):
 
     from .conftest import SF001
     register_testdata_views(spark, SF001)
-    cq._materialize_shingles(spark, SF001)
+    cq._stage_views(spark, SF001, "SELECT * FROM shingles_v")
     assert spark.catalog.tableExists("shingles_v")
     app = spark.sparkContext.applicationId
-    assert cq._MAT_VIEW_FOR["shingles_v"].get(app) == SF001
+    assert cq._STAGED_FOR["shingles_v"].get(app) == SF001
     invalidate_testdata_views(spark)
     assert not spark.catalog.tableExists("shingles_v")
-    assert app not in cq._MAT_VIEW_FOR["shingles_v"]
+    assert app not in cq._STAGED_FOR["shingles_v"]
     # re-registration + re-materialization works from scratch
     register_testdata_views(spark, SF001)
-    cq._materialize_shingles(spark, SF001)
+    cq._stage_views(spark, SF001, "SELECT * FROM shingles_v")
     assert spark.catalog.tableExists("shingles_v")
+
+
+def test_staged_entries_stage_their_own_views(spark):
+    """A registry entry whose Spark SQL reads a staged view stages it
+    (and the views that view reads) itself: after an invalidation drops
+    every staged view, the MinHash-band and TF-IDF entries run with no
+    manual staging."""
+    import __spark_entry__ as E
+    from bioanalyzer_backend_spark.session import invalidate_testdata_views
+
+    from .conftest import SF01
+    invalidate_testdata_views(spark)
+    assert not any(spark.catalog.tableExists(v)
+                   for v in ("shingles_v", "minhash_sig_v", "tfidf_tf_v"))
+    q = E.queries()
+    assert q["minhash_lsh_pairs"](spark, SF01).count() > 0
+    assert q["tfidf_top_terms_documents"](spark, SF01).count() > 0
+    assert all(spark.catalog.tableExists(v)
+               for v in ("shingles_v", "minhash_sig_v", "tfidf_tf_v"))
